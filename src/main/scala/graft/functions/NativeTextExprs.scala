@@ -224,78 +224,6 @@ object NativeText {
     }
     max.toDouble / n.toDouble
   }
-
-  /** Character-mass n-gram repetition statistics (the Gopher filter
-    * battery's repetition signals, "Scaling Language Models" Rae et al.
-    * 2021, Table A1): with gram char mass = occurrences(g) · len(g)
-    * (len of the joined "w1 … wn" substring — exactly its span in the
-    * single-space corpus),
-    *
-    *  - `dup = false`: mass of the MOST FREQUENT n-gram / len(doc)
-    *    ("fraction of characters in the top n-gram", n ∈ 2..4);
-    *  - `dup = true`: total mass of all n-grams occurring ≥ 2 times /
-    *    len(doc) ("fraction of characters in duplicated n-grams",
-    *    n ∈ 5..10; all occurrences counted, the NeMo-Curator/Dolma
-    *    reading of the rule).
-    *
-    * Grams are keyed by `((polyHash(gram)·31 + len) mod P) · 2²⁰ + len`
-    * — the length packs INTO the key so that if two distinct grams ever
-    * collided in the hash, every implementation (this loop, the HOF
-    * twin, the DuckDB oracle — all keying the same way) would merge
-    * them IDENTICALLY instead of diverging. One pass per row; 0.0 for
-    * texts with fewer than n tokens.
-    *
-    * The statistic is NOT clamped to [0, 1]: every occurrence's full
-    * char span counts, so OVERLAPPING occurrences double-count
-    * characters and a highly repetitive doc ("a a a a" under bigrams)
-    * can report a "fraction" above 1.0. Both engines, the HOF twin and
-    * the oracle agree on this reading (it is the NeMo-Curator/Dolma
-    * one, and filter thresholds sit ≤ 0.2 where overlap inflation is
-    * immaterial), but treat the column as a repetition SCORE, not a
-    * true coverage fraction — non-overlapping coverage would need an
-    * interval-union pass per gram. */
-  def ngramCharFrac(s: String, n: Int, dup: Boolean): Double = {
-    if (s.isEmpty) return 0.0
-    val toks = splitSpaces(s)
-    val m = toks.length - n + 1
-    if (m <= 0) return 0.0
-    // key -> (count, gramLen) — gramLen is a pure function of the key's
-    // gram, stored at first sight
-    val stats = new java.util.HashMap[java.lang.Long, Array[Long]](m * 2)
-    var i = 0
-    while (i < m) {
-      var acc = 0L
-      var len = n - 1 // the n-1 joining spaces
-      var j = 0
-      while (j < n) {
-        val t = toks(i + j)
-        if (j > 0) acc = (acc * 31L + ' ') % P
-        var c = 0
-        while (c < t.length) { acc = (acc * 31L + t.charAt(c)) % P; c += 1 }
-        len += t.length
-        j += 1
-      }
-      // low 20 bits pack min(len, 2^20-1): a >1M-char gram (the
-      // pathological doc repetition filters exist for) must merge
-      // IDENTICALLY here, in the HOF twin, and in the DuckDB oracle —
-      // an unclamped len would wrap into the hash bits and diverge
-      val key = ((acc * 31L + len) % P) * (1L << 20) +
-        math.min(len, (1 << 20) - 1)
-      val e = stats.get(key)
-      if (e == null) stats.put(key, Array(1L, len.toLong)) else e(0) += 1L
-      i += 1
-    }
-    var top = 0L
-    var dupMass = 0L
-    val it = stats.values().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val mass = e(0) * e(1)
-      if (mass > top) top = mass
-      if (e(0) >= 2L) dupMass += mass
-    }
-    (if (dup) dupMass else top).toDouble / s.length.toDouble
-  }
 }
 
 /** `polyHash(text)` as one compiled loop, fused into WSCG. */
@@ -421,22 +349,4 @@ case class JaccardShinglesExpr(left: Expression, right: Expression)
     defineCodeGen(ctx, ev, (a, b) => s"graft.functions.NativeText.jaccard($a, $b)")
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardShinglesExpr =
     copy(left = newLeft, right = newRight)
-}
-
-/** Character-mass n-gram repetition fraction
-  * ([[NativeText.ngramCharFrac]]): one compiled pass + hash-count per
-  * row, fused into WSCG (scan-side scalar, same shape as
-  * [[TopBigramFracExpr]]). The HOF twin is O(n²) per row and exists
-  * only as the parity-test specification. */
-case class NgramCharFracExpr(child: Expression, n: Int, dup: Boolean)
-    extends UnaryExpression {
-  require(n >= 1, "n must be >= 1")
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    NativeText.ngramCharFrac(input.asInstanceOf[UTF8String].toString, n, dup)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.NativeText.ngramCharFrac($c.toString(), $n, $dup)")
-  override protected def withNewChildInternal(newChild: Expression): NgramCharFracExpr =
-    copy(child = newChild)
 }

@@ -257,19 +257,31 @@ object TextFunctions {
 
   /** Gopher "fraction of characters in the most frequent n-gram":
     * char mass (occurrences · gram length) of the top n-gram over the
-    * doc's char length. Native expression ([[NgramCharFracExpr]]). */
+    * doc's char length: the Gopher kernel ([[GopherKernel]]) run for
+    * this one n. [[graft.operators.GopherRules]] reads all nine
+    * fractions and the quality statistics from ONE kernel pass per row
+    * instead. Gram and doc lengths count UTF-16 units, while the
+    * battery's mean token length counts code points; the two agree on
+    * BMP text. */
   def topNgramCharFrac(text: Column, n: Int): Column =
-    ncol(NgramCharFracExpr(nexpr(text), n, dup = false))
+    gopher(text, GopherOut.NgramFrac(n, dup = false))
 
   /** Gopher "fraction of characters in duplicated n-grams": total char
     * mass of n-grams occurring ≥ 2 times over the doc's char length
-    * (all occurrences counted). Native ([[NgramCharFracExpr]]). */
+    * (all occurrences counted). Same kernel and length convention as
+    * [[topNgramCharFrac]]. */
   def dupNgramCharFrac(text: Column, n: Int): Column =
-    ncol(NgramCharFracExpr(nexpr(text), n, dup = true))
+    gopher(text, GopherOut.NgramFrac(n, dup = true))
+
+  /** The Gopher battery over `text` in one pass per row
+    * ([[GopherExpr]]): `out` selects one n-gram fraction, a rule-family
+    * verdict, or every statistic as a struct. Null for null text. */
+  def gopher(text: Column, out: GopherOut): Column =
+    ncol(GopherExpr(nexpr(text), out))
 
   /** Declarative twin of [[topNgramCharFrac]]/[[dupNgramCharFrac]] —
     * O(n²) per row, parity-test specification only. Grams key on
-    * `(polyHash·31 + len) mod P` exactly like the native loop (and the
+    * `(polyHash·31 + len) mod P` exactly like [[GopherKernel]] (and the
     * DuckDB oracle), so hash collisions — if one ever fired — would
     * merge identically everywhere. */
   def ngramCharFracHof(text: Column, n: Int, dup: Boolean): Column =
@@ -279,7 +291,7 @@ object TextFunctions {
       // key packs (hashKey << 20 | min(len, 2^20-1)) so the lambda can
       // recover the gram length without a second shingle pass; the
       // clamp keeps >1M-char grams from wrapping into the hash bits,
-      // identically to the native loop and the DuckDB oracle
+      // identically to the kernel and the DuckDB oracle
       val masses = transform(array_distinct(ks), k =>
         struct(size(filter(ks, y => y === k)).cast("long").as("cnt"),
           pmod(k, lit(1L << 20)).as("len")))

@@ -2,16 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import graft.functions.{GopherKernel, GopherOut, TextFunctions}
 
 /** The Gopher quality-filter rule battery ("Scaling Language Models:
   * Methods, Analysis & Insights from Training Gopher", Rae et al. 2021,
-  * Table A1) — the canonical document-level pretraining filter, as one
-  * wide deterministic projection:
+  * Table A1) — the canonical document-level pretraining filter:
   *
   *  - word count within [minWords, maxWords];
-  *  - mean word length within [3, 10];
-  *  - ≥ 80% of words contain at least one alphabetic character;
+  *  - mean word length within [3, 10] (code points, like Spark's
+  *    `length`);
+  *  - ≥ 80% of words contain at least one `a-z` letter;
   *  - at least 2 distinct "required" stopwords present (the Gopher
   *    stopword-presence rule, with this library's English function-word
   *    list standing in for Gopher's {the, be, to, of, and, that, have,
@@ -25,65 +25,47 @@ import graft.functions.TextFunctions
   * [a-z ] text, so those rules are identically-true and deliberately
   * omitted rather than carried as dead columns.
   *
+  * One pass for all statistics: every rule reads the same compiled
+  * kernel ([[graft.functions.GopherKernel]]), which tokenizes each row
+  * once and derives the quality statistics and all nine n-gram
+  * fractions from that tokenization. The n-gram fractions are char-MASS
+  * fractions (occurrences · gram length / doc length, the
+  * NeMo-Curator/Dolma reading), with lengths in UTF-16 units; the mean
+  * word length counts code points. The two agree on BMP text. The
+  * DuckDB oracle restates every statistic from list primitives.
+  *
   * Scale shape: a pure NARROW projection — no shuffle, no join, no
-  * aggregate; every statistic is a single compiled pass per row
-  * ([[graft.functions.NgramCharFracExpr]] et al.), so the filter
+  * aggregate; the kernel runs inside whole-stage codegen, so the filter
   * streams through executors at scan speed however large the corpus.
-  * The n-gram fractions are char-MASS fractions (occurrences · gram
-  * length / doc length), the NeMo-Curator/Dolma reading of the rule;
-  * the DuckDB oracle restates every statistic from list primitives.
   */
 object GopherRules {
 
   /** (n, threshold) for the top-n-gram char-fraction rules. */
-  val topNgramMax: Seq[(Int, Double)] =
-    Seq(2 -> 0.20, 3 -> 0.18, 4 -> 0.16)
+  val topNgramMax: Seq[(Int, Double)] = GopherKernel.topNgramMax
 
   /** (n, threshold) for the duplicated-n-gram char-fraction rules. */
-  val dupNgramMax: Seq[(Int, Double)] =
-    Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12, 9 -> 0.11, 10 -> 0.10)
+  val dupNgramMax: Seq[(Int, Double)] = GopherKernel.dupNgramMax
 
   /** The quality-family verdict (word count / word shape / alpha words
     * / stopword presence) as a tri-state column (null for null text). */
   def passQuality(t: Column, minWords: Long = 50L,
       maxWords: Long = 100000L): Column =
-    // the token array is BOUND once per row (r22): HOF lambdas get no
-    // CSE, so the direct form re-ran split(text) per reference — the
-    // size bound, the mean-length fold, the alpha-word numerator AND
-    // denominator, plus once per stopword inside the presence lambda
-    // (~12 O(len) splits per row on the pl3/pl5/pl6/pl7/pl10/x15 gate
-    // path). Every statistic below is the same expression over the
-    // bound array — same values, same tri-state null behavior.
-    TextFunctions.bind(TextFunctions.tokens(t), ts =>
-      passQualityOf(ts, minWords, maxWords))
-
-  /** [[passQuality]] over an ALREADY-tokenized array — shared with
-    * [[report]], whose projection stages the token array once for all
-    * its statistics. Same expression trees, same tri-state nulls. */
-  private def passQualityOf(ts: Column, minWords: Long,
-      maxWords: Long): Column =
-    size(ts).cast("long").between(minWords, maxWords) &&
-      TextFunctions.meanTokenLenOf(ts).between(3.0, 10.0) &&
-      (size(filter(ts, w => w.rlike("[a-z]"))).cast("double") /
-        size(ts).cast("double") >= 0.8) &&
-      (size(filter(
-        array(TextFunctions.stopwords.toMap.apply("en").map(lit): _*),
-        sw => array_contains(ts, sw))).cast("long") >= 2L)
+    TextFunctions.gopher(t, GopherOut.Verdict(quality = true, repetition = false,
+      minWords, maxWords))
 
   /** The repetition-family verdict (all 9 n-gram char-mass rules) as a
     * tri-state column (null for null text). */
   def passRepetition(t: Column): Column =
-    (topNgramMax.map { case (n, thr) =>
-      (TextFunctions.topNgramCharFrac(t, n) <= thr): Column } ++
-      dupNgramMax.map { case (n, thr) =>
-        (TextFunctions.dupNgramCharFrac(t, n) <= thr): Column })
-      .reduce(_ && _)
+    TextFunctions.gopher(t, GopherOut.Verdict(quality = false, repetition = true,
+      0L, 0L))
 
   /** The overall keep gate as a single boolean column (false for null
     * text) — the composable form pipeline filters use without carrying
-    * the full report. */
+    * the full report. One kernel call per row; a row stops at its first
+    * failing rule. */
   def keep(t: Column, minWords: Long = 50L, maxWords: Long = 100000L): Column =
-    coalesce(passQuality(t, minWords, maxWords) && passRepetition(t), lit(false))
+    coalesce(TextFunctions.gopher(t, GopherOut.Verdict(quality = true,
+      repetition = true, minWords, maxWords)), lit(false))
 
   /** Per-document rule report: every statistic, the two rule-family
     * verdicts, and the overall keep flag. Null texts fail everything
@@ -95,44 +77,23 @@ object GopherRules {
     */
   def report(df: DataFrame, idCol: String, textCol: String,
       minWords: Long = 50L, maxWords: Long = 100000L): DataFrame = {
-    val t = col(textCol)
-    // stage the token array as a REAL projected column consumed by
-    // every token statistic below (r22): the direct `tokens(t)` form
-    // re-split the text once per reference — the count, the length
-    // fold, both alpha-word sides, each of the 7 stopword probes, and
-    // again inside the quality verdict. A multi-use non-cheap alias is
-    // not re-inlined by CollapseProject, so the split runs once per
-    // row; every statistic is the same expression over the staged
-    // array — same values, same nulls.
-    val tsCol = "__gr_ts"
-    val ts = col(tsCol)
-    val nTok = size(ts).cast("long")
-    val meanLen = TextFunctions.meanTokenLenOf(ts)
-    val alphaWords =
-      size(filter(ts, w => w.rlike("[a-z]"))).cast("double") /
-        size(ts).cast("double")
-    val stopHits = size(filter(
-      array(TextFunctions.stopwords.toMap.apply("en").map(lit): _*),
-      sw => array_contains(ts, sw))).cast("long")
-    val tops = topNgramMax.map { case (n, _) =>
-      n -> TextFunctions.topNgramCharFrac(t, n) }
-    val dups = dupNgramMax.map { case (n, _) =>
-      n -> TextFunctions.dupNgramCharFrac(t, n) }
-
-    val passQ = passQualityOf(ts, minWords, maxWords)
-    val passR = passRepetition(t)
-
-    df.select(col("*"), TextFunctions.tokens(t).as(tsCol)).select(
-      (Seq(col(idCol),
-        nTok.as("n_tokens"),
-        meanLen.as("mean_tok_len"),
-        alphaWords.as("alpha_word_frac"),
-        stopHits.as("stop_hits")) ++
-        tops.map { case (n, c) => c.as(s"top${n}gram_frac") } ++
-        dups.map { case (n, c) => c.as(s"dup${n}gram_frac") } ++
-        Seq(
-          coalesce(passQ, lit(false)).as("pass_quality"),
-          coalesce(passR, lit(false)).as("pass_repetition"),
-          coalesce(passQ && passR, lit(false)).as("keep"))): _*)
+    // the kernel's struct is staged as a REAL projected column: a
+    // multi-use non-cheap alias is not re-inlined by CollapseProject,
+    // so the kernel runs once per row and every output column is a
+    // field read
+    val stCol = "__gr_stats"
+    val st = col(stCol)
+    val passQ = st.getField("pass_quality")
+    val passR = st.getField("pass_repetition")
+    val stats = GopherKernel.statsType.fieldNames
+      .filterNot(n => n == "pass_quality" || n == "pass_repetition")
+    df.select(col("*"),
+      TextFunctions.gopher(col(textCol), GopherOut.Stats(minWords, maxWords)).as(stCol))
+      .select(
+        (col(idCol) +: stats.toSeq.map(n => st.getField(n).as(n))) ++
+          Seq(
+            coalesce(passQ, lit(false)).as("pass_quality"),
+            coalesce(passR, lit(false)).as("pass_repetition"),
+            coalesce(passQ && passR, lit(false)).as("keep")): _*)
   }
 }

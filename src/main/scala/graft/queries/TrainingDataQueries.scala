@@ -2102,7 +2102,7 @@ object TrainingDataQueries extends QueryModule {
 
   /** n-gram keys for the Gopher char-mass rules over a `ts` token-list
     * column: gram strings → `((ph·31 + len) mod P)·2²⁰ + len`, the exact
-    * key of [[graft.functions.NativeText.ngramCharFrac]] (length packed
+    * key of [[graft.functions.GopherKernel]] (length packed
     * into the key so collisions — if any — merge identically in both
     * engines). */
   private def ngramKeysSql(n: Int): String =

@@ -258,9 +258,12 @@ object StreamingRun {
     val prevNd = s.conf.getOption(ndKey)
     val prevCk = s.conf.getOption(CkFileKey)
     val prevSm = s.conf.getOption(SessLocalKey)
-    s.conf.set(spKey, drainStatePartitions(s).toString)
-    s.conf.set(CkFileKey, drainChecksum(s))
-    s.conf.set(SessLocalKey, drainSessionLocalMerge(s))
+    // validate every spark.graft.* value before the first set: a throw
+    // here must leave the session's confs untouched
+    val (sp, ck, sm) = (drainStatePartitions(s), drainChecksum(s), drainSessionLocalMerge(s))
+    s.conf.set(spKey, sp.toString)
+    s.conf.set(CkFileKey, ck)
+    s.conf.set(SessLocalKey, sm)
     noDataBatches.foreach(v => s.conf.set(ndKey, v.toString))
     var q: StreamingQuery = null
     try {
@@ -817,8 +820,11 @@ object StreamingRun {
     val spKey = "spark.sql.shuffle.partitions"
     val prevSp = s.conf.getOption(spKey)
     val prevCk = s.conf.getOption(CkFileKey)
-    s.conf.set(spKey, drainStatePartitions(s).toString)
-    s.conf.set(CkFileKey, drainChecksum(s))
+    // validate every spark.graft.* value before the first set: a throw
+    // here must leave the session's confs untouched
+    val (sp, ck) = (drainStatePartitions(s), drainChecksum(s))
+    s.conf.set(spKey, sp.toString)
+    s.conf.set(CkFileKey, ck)
     var q: StreamingQuery = null
     // outDir holds per-batch data parquet — it must not survive ANY
     // failure path (drain error, retention breach, empty protocol),
@@ -1112,9 +1118,12 @@ object StreamingRun {
     val prevNd = s.conf.getOption(ndKey)
     val prevCk = s.conf.getOption(CkFileKey)
     val prevSm = s.conf.getOption(SessLocalKey)
-    s.conf.set(spKey, drainStatePartitions(s).toString)
-    s.conf.set(CkFileKey, drainChecksum(s))
-    s.conf.set(SessLocalKey, drainSessionLocalMerge(s))
+    // validate every spark.graft.* value before the first set: a throw
+    // here must leave the session's confs untouched
+    val (sp, ck, sm) = (drainStatePartitions(s), drainChecksum(s), drainSessionLocalMerge(s))
+    s.conf.set(spKey, sp.toString)
+    s.conf.set(CkFileKey, ck)
+    s.conf.set(SessLocalKey, sm)
     noDataBatches.foreach(v => s.conf.set(ndKey, v.toString))
     var q: StreamingQuery = null
     try {

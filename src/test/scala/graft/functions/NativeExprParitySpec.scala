@@ -43,18 +43,74 @@ class NativeExprParitySpec extends SparkTestBase {
     assert(df.filter(!(col("n") <=> col("h"))).count() == 0)
   }
 
-  test("native ngramCharFrac ≡ HOF twin (top + dup, n ∈ {2, 5, 10})") {
-    val checks = for {
-      n <- Seq(2, 5, 10)
-      dup <- Seq(false, true)
-    } yield (T.topNgramCharFrac(col("text"), n), // native top unused when dup
-      if (dup) T.dupNgramCharFrac(col("text"), n) else T.topNgramCharFrac(col("text"), n),
-      T.ngramCharFracHof(col("text"), n, dup))
-    val df = corpus.select(checks.zipWithIndex.flatMap { case ((_, nat, hof), i) =>
+  /** Seeded documents around the gate's thresholds: stopword, empty
+    * (multi-space) and CJK tokens, repeated phrases. */
+  private def gateDocs(n: Int, seed: Int): Seq[String] = {
+    val vocab = Seq("the", "a", "of", "and", "to", "in", "is", "data",
+      "model", "train", "text", "alpha", "beta", "x", "", "token", "zeta",
+      "的", "ok", "quality", "filter", "corpus", "z9", "42")
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map { _ =>
+      val len = 40 + rnd.nextInt(90)
+      val phrase = Seq.fill(2 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size)))
+      val repeat = rnd.nextInt(4) // 0: no planted phrase
+      val toks = Seq.fill(len)(vocab(rnd.nextInt(vocab.size))) ++
+        Seq.fill(repeat)(phrase).flatten
+      val doc = rnd.shuffle(toks.grouped(3).toSeq).flatten.mkString(" ")
+      if (rnd.nextInt(10) == 0) s" $doc " else doc
+    }
+  }
+
+  test("native n-gram fractions ≡ HOF twin (top + dup, n = 2..10)") {
+    val extra = Seq("  ", " a b a b ", "a  b  a  b  a  b", "的 是 的 是 的 是")
+    val df0 = corpus.union((extra ++ gateDocs(200, 801)).toDF("text"))
+    val checks = for { n <- 2 to 10; dup <- Seq(false, true) } yield
+      ((if (dup) T.dupNgramCharFrac(col("text"), n) else T.topNgramCharFrac(col("text"), n)),
+        T.ngramCharFracHof(col("text"), n, dup))
+    val df = df0.select(checks.zipWithIndex.flatMap { case ((nat, hof), i) =>
       Seq(nat.as(s"n$i"), hof.as(s"h$i")) }: _*)
     val bad = df.filter(checks.indices.map(i =>
       !(col(s"n$i") <=> col(s"h$i"))).reduce(_ || _)).count()
     assert(bad == 0)
+    // null text: every fraction is null (the report's null-stats contract)
+    val nul = Seq(null: String).toDF("text")
+      .select(checks.map(_._1): _*).head()
+    assert(checks.indices.forall(nul.isNullAt))
+  }
+
+  test("Gopher keep ≡ coalesce(quality twin ∧ repetition twin, false)") {
+    import graft.operators.GopherRules
+    // 𝒜ab: 3 code points, 4 UTF-16 units — mean word length counts
+    // code points (2.98), so this doc fails the [3, 10] rule; in UTF-16
+    // units (3.95) it would pass
+    val astral = (Seq("the", "of") ++ Seq.fill(58)("𝒜ab")).mkString(" ")
+    val edges = Seq(null, "", "   ", " leading and trailing ", "a b", astral,
+      (Seq("the", "of") ++ (1 to 58).map(i => f"word$i%02d")).mkString(" "),
+      (Seq("the", "of") ++ (1 to 58).map(i => f"word$i%02d")).mkString("  "))
+    val docs = corpus.union((edges ++ gateDocs(400, 802)).toDF("text"))
+      .select(col("text"),
+        GopherRules.keep(col("text")).as("nk"), GopherTwins.keep(col("text")).as("hk"),
+        GopherRules.passQuality(col("text")).as("nq"),
+        GopherTwins.passQuality(col("text")).as("hq"),
+        GopherRules.passRepetition(col("text")).as("nr"),
+        GopherTwins.passRepetition(col("text")).as("hr"))
+      .cache()
+    try {
+      // the family verdicts are tri-state; the HOF n-gram twin reads a
+      // null text as 0.0, so families are compared on non-null text
+      val bad = docs.filter(!(col("nk") <=> col("hk")) || (col("text").isNotNull &&
+        !(col("nq") <=> col("hq") && col("nr") <=> col("hr"))))
+        .select("text").collect().map(_.getString(0))
+      assert(bad.isEmpty, bad.take(3).mkString(" | "))
+      val nul = docs.filter(col("text").isNull).select("nk", "nq", "nr").head()
+      assert(!nul.getBoolean(0) && nul.isNullAt(1) && nul.isNullAt(2))
+      // the battery is exercised on both sides of every family
+      val kept = docs.filter(col("nk")).count()
+      assert(kept > 0 && kept < docs.count(), s"$kept kept")
+      assert(docs.filter(col("nq") && !col("nr")).count() > 0)
+      assert(docs.filter(!col("nq") && col("nr")).count() > 0)
+      assert(docs.filter(col("text") === astral).select("nq").head().getBoolean(0) == false)
+    } finally docs.unpersist()
   }
 
   test("native jaccard ≡ HOF twin (incl. empty-set edge)") {

@@ -329,6 +329,14 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!p.contains("Exchange"), p)
   }
 
+  test("x15_gopher_rules: one compiled Gopher kernel per row, no HOF lambda") {
+    val p = plan("x15_gopher_rules")
+    assert("gopher\\(".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("lambdafunction"), p)
+    // the kernel's projection is fused into whole-stage codegen
+    assert(p.linesIterator.exists(l => l.contains("gopher(") && l.contains("*(")), p)
+  }
+
   test("sp2_sample: rank<=k pushes below the sort as a WindowGroupLimit (hot-stratum safety)") {
     // without the group limit a hot stratum is fully sorted on one
     // reducer; with it every map task keeps only perStratum rows per

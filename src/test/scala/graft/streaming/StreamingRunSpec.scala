@@ -1034,6 +1034,33 @@ class StreamingRunSpec extends SparkTestBase {
     }
   }
 
+  test("an invalid spark.graft.* drain setting throws before any session conf changes") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition")
+    def confs = keys.map(spark.conf.getOption)
+    // a value no drain uses, so a leaked drain setting shows
+    val prevSp = spark.conf.get(keys.head)
+    spark.conf.set(keys.head, "3")
+    val before = confs
+    // one entry per drain primitive: memory sink, foreachBatch, parquet sink
+    val drains: Seq[(String, () => Any)] = Seq(
+      "drainComplete" -> (() => StreamingRun.drainComplete(spark,
+        StreamingRun.eventsStream(spark, sfDir).groupBy(col("event_type")).count())),
+      "emissionLatency" -> (() => StreamingRun.emissionLatency(spark, sfDir)),
+      "tumblingDailyWatermarkedRestored" ->
+        (() => StreamingRun.tumblingDailyWatermarkedRestored(spark, sfDir)))
+    spark.conf.set("spark.graft.drainCheckpointChecksum", "maybe")
+    try drains.foreach { case (name, drain) =>
+      val e = intercept[IllegalArgumentException](drain())
+      assert(e.getMessage.contains("drainCheckpointChecksum"), s"$name: ${e.getMessage}")
+      assert(confs == before, s"$name leaked a drain conf")
+    } finally {
+      spark.conf.unset("spark.graft.drainCheckpointChecksum")
+      spark.conf.set(keys.head, prevSp)
+    }
+  }
+
   test("w1_streaming result equals the batch w1_tumbling plan exactly") {
     val streaming = graft.queries.EventTimeQueries
       .defs("w1_streaming")(spark, sfDir)
