@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api.Application
 
 /** Machine-checkable health verdicts for the bench's
   * `block_volume_scaling` canaries. Each modality's 1×→10× growth has a
@@ -511,7 +512,7 @@ object Bench {
   /** Force every output column to be computed: hash each row across all
     * columns, sum the hashes. One cheap partial-agg on top of the query's
     * own plan; nothing is prunable. */
-  private def checksum(df: DataFrame): Unit = {
+  private[graft] def checksum(df: DataFrame): Unit = {
     // double sum: immune to ANSI long-overflow on summed hashes
     df.select(xxhash64(df.columns.map(c => col(c).cast("string")): _*)
         .cast("double").as("h"))
@@ -561,14 +562,11 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // local[n,2]: one task retry allowed (production maxFailures=4) —
-    // required by the w24 fault-injection row; every retry, injected or
-    // not, is ledgered by TaskFailureTracker.
+    val sfDir = Harness.sfDir
+    // Every retry, injected or not, is ledgered by TaskFailureTracker.
     // NOTE (r21): the RocksDB provider conf is NOT set session-wide any
     // more — it is scoped to the streaming THROUGHPUT legs below (see
-    // the conf.set right before them). Session-wide RocksDB made every
+    // the conf scope around them). Session-wide RocksDB made every
     // default-provider oracle drain (k12/k13/w18/w22/… — rows whose
     // documented contract is the session-default HDFSBackedStateStore,
     // in deliberate contrast to the k14/k15/w21/w23 rows that pin
@@ -577,12 +575,7 @@ object Bench {
     // provider contrast the query set exists to show. Rows that NEED
     // RocksDB pin it themselves (withStateProvider / TWS), proven by
     // their green correctness under Verify's default-provider session.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     // the previous committed record is the working-tree artifact — read
@@ -715,6 +708,7 @@ object Bench {
         .foreach(r => scala.util.Try(r.unpersist(blocking = true)))
       System.gc()
     }
+    val rocksDb = Application.backendConfs("rocksdb")
     val streamingStart = offNow()
     var streamRps: Option[Double] = None
     val streaming =
@@ -726,25 +720,19 @@ object Bench {
           // per-batch delta, not a full snapshot per partition per
           // batch). The oracle rows above run the provider their
           // contract documents; these legs keep their historical
-          // RocksDB protocol. Left set for the rest of the run: the
-          // remaining sections (state curve — which flips changelog
-          // itself and restores, block volumes, end calibration) are
-          // either leg-protocol or batch-only.
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")
-          spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-            "changelogCheckpointing.enabled", "true")
-          // leg 1 (historical comparability): 5-wave feed-and-wait
-          val w = streamingLeg(spark, total = 500000, waves = Some(5))
-          // leg 2 (PRIMARY): pre-staged AvailableNow — engine-only.
-          // 5 repeats: each run is ~5 s, and the median of 5 holds
-          // still under the ±25% scheduling/GC graininess that a 5 s
-          // 32-thread job cannot amortize away
-          val a = streamingLeg(spark, total = 500000, waves = None,
-            repeats = 5, warmups = 3, dropFirst = true)
-          streamRps = Some(a.median.rps)
-          s""","streaming":${w.json},"streaming_availablenow":${a.json}"""
+          // RocksDB protocol.
+          Application.withConfs(spark, rocksDb) {
+            // leg 1 (historical comparability): 5-wave feed-and-wait
+            val w = streamingLeg(spark, total = 500000, waves = Some(5))
+            // leg 2 (PRIMARY): pre-staged AvailableNow — engine-only.
+            // 5 repeats: each run is ~5 s, and the median of 5 holds
+            // still under the ±25% scheduling/GC graininess that a 5 s
+            // 32-thread job cannot amortize away
+            val a = streamingLeg(spark, total = 500000, waves = None,
+              repeats = 5, warmups = 3, dropFirst = true)
+            streamRps = Some(a.median.rps)
+            s""","streaming":${w.json},"streaming_availablenow":${a.json}"""
+          }
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] streaming leg FAILED: $e")
@@ -755,7 +743,7 @@ object Bench {
     // (the r13 open question): the wave protocol re-measured at 1× and
     // 4× state (state rows ≈ waves·windows·keys; keys 100 → 400) with
     // RocksDB changelog checkpointing ON and OFF. The r14 order-robust
-    // probe (StreamKnobProbe, two-pass reversed, 6 runs/cell) showed
+    // knob probe (two-pass reversed, 6 runs/cell) showed
     // changelog ON wins at BOTH sizes (1×: 39.9k vs 30.9k median rps,
     // cumulative stateCommit 166 s vs 272 s; 4×: 43.3k vs 38.1k,
     // 147 s vs 215 s) — ON stays the default, and the wave leg's
@@ -769,45 +757,28 @@ object Bench {
         try {
           taskFailures.current = "state_size_curve"
           // the curve's changelog ON/OFF contrast is only meaningful
-          // under the RocksDB provider; set it EXPLICITLY here instead
-          // of relying on the streaming-legs block's residue, so a
-          // reorder or early exception there cannot silently turn both
-          // cells into identical HDFS-provider runs (ADVICE r21). The
-          // protocol is unchanged — the legs already left this value.
-          val provKey = "spark.sql.streaming.stateStore.providerClass"
-          val priorProv = spark.conf.getOption(provKey)
-          spark.conf.set(provKey,
-            "org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")
-          val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-            "changelogCheckpointing.enabled"
-          val prior = spark.conf.getOption(clKey)
+          // under the RocksDB provider, which every run here sets itself
+          // (ADVICE r21: never rely on another section's residue)
           // one untimed keys-400 run so the first 4×-state timed cell
           // doesn't pay the larger state's cold step
-          streamingBench(spark, 500000, Some(5), 400L)
+          Application.withConfs(spark, rocksDb) {
+            streamingBench(spark, 500000, Some(5), 400L)
+          }
           def cell(keys: Long, changelog: Boolean): String = {
-            spark.conf.set(clKey, changelog.toString)
-            val runs = (1 to 3).map { _ =>
-              gcSettle()
-              streamingBench(spark, 500000, Some(5), keys)
+            // the later changelog pair overrides rocksDb's
+            val runs = Application.withConfs(spark,
+                rocksDb :+ (Application.ChangelogKey -> changelog.toString)) {
+              (1 to 3).map { _ =>
+                gcSettle()
+                streamingBench(spark, 500000, Some(5), keys)
+              }
             }
             s""""keys${keys}_changelog_${if (changelog) "on" else "off"}":""" +
               LegSummary(runs).json
           }
-          try {
-            val cells = Seq(cell(100L, true), cell(100L, false),
-              cell(400L, true), cell(400L, false)).mkString(",")
-            s""","state_size_curve":{"protocol":"wave5_500k_rows","cells":{$cells}}"""
-          } finally {
-            prior match {
-              case Some(v) => spark.conf.set(clKey, v)
-              case None    => spark.conf.unset(clKey)
-            }
-            priorProv match {
-              case Some(v) => spark.conf.set(provKey, v)
-              case None    => spark.conf.unset(provKey)
-            }
-          }
+          val cells = Seq(cell(100L, true), cell(100L, false),
+            cell(400L, true), cell(400L, false)).mkString(",")
+          s""","state_size_curve":{"protocol":"wave5_500k_rows","cells":{$cells}}"""
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] state-size curve FAILED: $e")
@@ -1073,110 +1044,6 @@ object Bench {
       compact = compactLine(nShow)
     }
     println(compact)
-    spark.stop()
-  }
-}
-
-/** Reproducible RocksDB knob probe over the AvailableNow leg (the
-  * primary streaming metric): for each knob setting, 3 in-process runs
-  * through [[Bench.streamingLeg]]; one JSON line per setting on stdout.
-  * This is how the configured defaults in [[Bench]] were chosen — run
-  * it with `sbt "runMain graft.StreamKnobProbe"` to re-derive them.
-  * Not part of the driver protocol; writes no artifact.
-  */
-object StreamKnobProbe {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val pre = "spark.sql.streaming.stateStore.rocksdb."
-    // every knob here is a public spark.sql.streaming.stateStore.rocksdb
-    // conf, read per query start — safe to flip between runs in-session
-    // write_buffer_64mb and bounded_memory_2g were probed in round 7 and
-    // dropped: medians within noise of baseline or slower, no
-    // order-robust effect at bench-size state
-    val knobs: Seq[(String, Map[String, String])] = Seq(
-      "baseline_changelog_on" -> Map(),
-      "changelog_off" -> Map(s"${pre}changelogCheckpointing.enabled" -> "false"),
-      "compact_on_commit" -> Map(s"${pre}compactOnCommit" -> "true"),
-      // r22 wave-leg stateCommit-ceiling matrix (VERDICT r21 task 7):
-      // skip the get-before-put row counting inside every state update
-      "track_rows_off" -> Map(s"${pre}trackTotalNumberOfRows" -> "false"),
-      // stretch the changelog→snapshot compaction interval (default 10
-      // deltas) so maintenance snapshots run rarer under the wave cadence
-      "min_deltas_50" ->
-        Map("spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "50"),
-      // widen maintenance parallelism (default 1 thread serializes the
-      // per-partition snapshot/cleanup work behind the commit path)
-      "maintenance_threads_4" ->
-        Map("spark.sql.streaming.stateStore.numStateStoreMaintenanceThreads" -> "4"),
-      // re-probe bounded block-cache memory ON THE WAVE LEG (r7 probed it
-      // on AvailableNow only and dropped it)
-      "bounded_memory_2g" -> Map(
-        s"${pre}boundedMemoryUsage" -> "true",
-        s"${pre}maxMemoryUsageMB" -> "2048"))
-    // Two global warm-up runs, then TWO passes over the matrix — forward
-    // and reversed — per-knob runs combined across passes. The JVM keeps
-    // warming for minutes into a streaming workload (observed: a single
-    // forward pass ranks knobs almost purely by position), so a knob's
-    // effect is only credible if it survives order reversal.
-    // SPARK_GRAFT_PROBE_KNOBS (comma list) / SPARK_GRAFT_PROBE_REPS
-    // narrow the matrix for focused experiments; every individual run is
-    // printed (not just the summary) so outlier runs keep their breakdown.
-    val knobFilter = sys.env.get("SPARK_GRAFT_PROBE_KNOBS").map(_.split(",").toSet)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
-    // 500k staged rows is the heap ceiling: MemoryStream holds the
-    // staged blocks as driver objects and every task deserializes them,
-    // so 2M rows OOMs the default 8g heap — scale tests belong on a
-    // real source, not MemoryStream
-    val probeTotal = sys.env.getOrElse("SPARK_GRAFT_PROBE_TOTAL", "500000").toInt
-    // SPARK_GRAFT_PROBE_KEYS scales state size (state rows ≈ total/1000
-    // × keys) without touching the staged row count — the knob the
-    // 2-4×-state changelog re-probe turns
-    val probeKeys = sys.env.getOrElse("SPARK_GRAFT_PROBE_KEYS", "100").toLong
-    // SPARK_GRAFT_PROBE_WAVES=n probes the wave (feed-and-wait, n
-    // synchronous drains) protocol instead of AvailableNow — the leg
-    // whose stateCommit-per-microbatch cost the changelog knob targets
-    val probeWaves = sys.env.get("SPARK_GRAFT_PROBE_WAVES").map(_.toInt)
-    val active = knobs.filter { case (n, _) => knobFilter.forall(_.contains(n)) }
-    Bench.streamingBench(spark, probeTotal, probeWaves, probeKeys)
-    Bench.streamingBench(spark, probeTotal, probeWaves, probeKeys)
-    val collected = scala.collection.mutable.Map[String, Vector[Bench.StreamResult]]()
-      .withDefaultValue(Vector.empty)
-    for (pass <- Seq(active, active.reverse); (name, conf) <- pass) {
-      // RESTORE the session's prior value afterwards, never unset: a
-      // knob key the builder pinned (changelogCheckpointing=true) would
-      // otherwise fall back to the provider DEFAULT (false) once the
-      // first leg that touches it finishes — every later leg, including
-      // "baseline_changelog_on" in the reversed pass, would silently
-      // measure changelog-OFF while labeled on, corrupting the exact
-      // order-robust comparison the two-pass design exists for.
-      val prior = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try
-        (1 to reps).foreach { i =>
-          val r = Bench.streamingBench(spark, probeTotal, probeWaves, probeKeys)
-          println(s"""{"knob":"$name","run":$i,"result":${r.json}}""")
-          collected(name) :+= r
-        }
-      catch {
-        case e: Throwable =>
-          println(s"""{"knob":"$name","error":"${e.getClass.getSimpleName}"}""")
-      } finally prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-    for ((name, _) <- knobs if collected(name).nonEmpty)
-      println(s"""{"knob":"$name","availablenow":${Bench.LegSummary(collected(name)).json}}""")
     spark.stop()
   }
 }

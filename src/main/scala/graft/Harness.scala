@@ -1,0 +1,31 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import graft.api.{AppConf, Application}
+
+/** The session the harness mains ([[Bench]], [[Verify]], [[IndexBench]],
+  * [[Probe]]) and the test base run on, and the environment they read:
+  * each variable is read here, once. */
+object Harness {
+
+  /** `$SPARK_GRAFT_CPUS` (default 4): local task slots and shuffle
+    * partitions. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  /** `$SPARK_GRAFT_SF_DIR`: the testdata scale factor Bench and Probe
+    * read (default `~/testdata/sf0.1`, the bench scale). */
+  val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    s"${sys.props("user.home")}/testdata/sf0.1")
+
+  /** The harness session conf for `n` slots: `local[n,2]` allows one
+    * task retry (production clusters run `spark.task.maxFailures=4`;
+    * the w24/w26 rows inject a task fault that must be retried, not
+    * fail the query), n shuffle partitions, and Spark's default
+    * HDFS-backed state store — rows that need RocksDB pin it
+    * themselves. UTC and the UI switch are [[Application.session]]
+    * constants. */
+  def conf(n: Int): AppConf = AppConf(master = s"local[$n,2]",
+    parallelism = n, stateBackend = "hdfs")
+
+  def session(n: Int = cpus): SparkSession = Application.session(conf(n))
+}

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Encoders, SparkSession}
+import graft.api.Application
 
 /** Value analog of the reference's `SmallStruct`
   * (`/root/reference/arcon/benches/hash_table.rs:42-60`). */
@@ -148,15 +149,7 @@ object IndexBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val rng = new java.util.Random(42)
@@ -184,9 +177,11 @@ object IndexBench {
       largeInit, s => s.copy(x1 = s.x1 + 1))(largeEnc)
     legs("local_map_large_hot") = localMapRmw[LargeState](hot,
       largeInit, s => s.copy(x1 = s.x1 + 1))(largeEnc)
-    legs("tws_value_rmw") = twsLeg(spark, uni, "value")
-    legs("tws_map_small_uniform") = twsLeg(spark, uni, "map")
-    legs("tws_map_small_hot") = twsLeg(spark, hot, "map")
+    Application.withConfs(spark, Application.backendConfs("rocksdb")) {
+      legs("tws_value_rmw") = twsLeg(spark, uni, "value")
+      legs("tws_map_small_uniform") = twsLeg(spark, uni, "map")
+      legs("tws_map_small_hot") = twsLeg(spark, hot, "map")
+    }
 
     val json = legs.map { case (k, l) => "\"" + k + "\":" + l.json }
       .mkString("""{"metric":"index_bench","legs":{""", ",", "}}")

@@ -1,35 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // local[n,2]: allow ONE task retry — production clusters run
-    // spark.task.maxFailures=4, local mode defaults to 1, and the w24
-    // exactly-once row injects a task fault that MUST be retried, not
-    // fail the query. Scheduling is otherwise identical; a real (non-
-    // injected) failure now retries once and surfaces in the bench
-    // ledger instead of killing the run.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
-    // The scratch drains write checkpoints without checksum sidecars
-    // (StreamingRun.drainChecksum); the state-store READER then warns
-    // once per state file that no sidecar exists before reading the
-    // file normally — hundreds of identical benign lines per full
-    // verify run. Quiet exactly that logger; real errors still print.
-    scala.util.Try(
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "ChecksumCheckpointFileManager",
-        org.apache.logging.log4j.Level.ERROR))
+    dropMissingChecksumWarnings()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name filter for local iteration (the
     // driver sets nothing and always dumps the full set). Loud, and
@@ -71,5 +49,37 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** The scratch drains write checkpoints without checksum sidecars
+    * (`StreamingRun.drainChecksum`); the state-store READER then warns
+    * once per state file that no sidecar exists before reading the file
+    * normally — hundreds of identical benign lines per full verify run.
+    * A message filter on that logger drops exactly that line; every
+    * other message from it still prints. */
+  private[graft] def dropMissingChecksumWarnings(): Unit = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    import org.apache.logging.log4j.core.filter.StringMatchFilter
+    val name = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "ChecksumCheckpointFileManager"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    // level null: inherit the parent's level; additive: log through the
+    // parent's appenders
+    val lc = cfg.getLoggerConfig(name) match {
+      case own if own.getName == name => own
+      case _ =>
+        val own = new LoggerConfig(name, null, true)
+        cfg.addLogger(name, own)
+        own
+    }
+    lc.addFilter(StringMatchFilter.newBuilder()
+      .setMatchString("No checksum file found")
+      .setOnMatch(Filter.Result.DENY)
+      .setOnMismatch(Filter.Result.NEUTRAL)
+      .build())
+    ctx.updateLoggers()
   }
 }

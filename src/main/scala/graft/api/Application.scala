@@ -27,7 +27,7 @@ case class AppConf(
     /** Shuffle/state parallelism — the `max_key` shard-count analog. */
     parallelism: Int = Runtime.getRuntime.availableProcessors(),
     /** "rocksdb" (≙ arcon Rocks backend) or "hdfs" (≙ Sled: the simple
-      * default store). */
+      * default store); any other value is rejected. */
     stateBackend: String = "rocksdb",
     /** Micro-batch cadence — the epoch interval (reference default 25 s). */
     epochInterval: String = "25 seconds",
@@ -35,20 +35,72 @@ case class AppConf(
 
 object Application {
 
-  def session(conf: AppConf): SparkSession = {
-    val b = SparkSession.builder()
-      .master(conf.master)
-      .appName(conf.appName)
-      .config("spark.sql.shuffle.partitions", conf.parallelism)
-      .config("spark.sql.session.timeZone", "UTC")
-    val withBackend = conf.stateBackend match {
-      case "rocksdb" => b
-        .config("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      case _ => b // HDFS-backed default provider
+  val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  val ChangelogKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** The RocksDB state-store provider class — the provider a production
+    * streaming deployment actually runs (bounded executor heap: state
+    * lives off-heap/on-disk per partition). */
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The confs that select state-store `provider`. The RocksDB provider
+    * always comes with changelog checkpointing, so a checkpoint ships
+    * per-epoch deltas instead of full snapshots and carries the delta
+    * stream the change-feed reader needs. */
+  def providerConfs(provider: String): Seq[(String, String)] =
+    (ProviderKey -> provider) +:
+      (if (provider == RocksDbProvider) Seq(ChangelogKey -> "true") else Nil)
+
+  /** The confs for an [[AppConf.stateBackend]] value: `rocksdb` selects
+    * [[RocksDbProvider]], `hdfs` keeps Spark's default provider. */
+  def backendConfs(backend: String): Seq[(String, String)] = {
+    require(backend == "rocksdb" || backend == "hdfs",
+      s"AppConf.stateBackend must be \"rocksdb\" or \"hdfs\", got '$backend'")
+    if (backend == "rocksdb") providerConfs(RocksDbProvider) else Nil
+  }
+
+  /** Every setting [[session]] gives the builder. Sessions run in UTC
+    * with the web UI off. */
+  def sessionConfs(conf: AppConf): Seq[(String, String)] = Seq(
+    "spark.master" -> conf.master,
+    "spark.app.name" -> conf.appName,
+    "spark.sql.shuffle.partitions" -> conf.parallelism.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false") ++ backendConfs(conf.stateBackend)
+
+  /** The one session factory: every `SparkSession` in this repository is
+    * built here. */
+  def session(conf: AppConf): SparkSession =
+    sessionConfs(conf).foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+
+  /** Run `body` with each `kvs` pair set on the session, then put every
+    * key back as it was. The restore contract:
+    *  - every key's prior value, or its absence, is captured before the
+    *    first set;
+    *  - the sets run inside the `try`, so a set that throws (a static
+    *    SQL conf, say) still restores the keys set before it;
+    *  - in `finally`, each key that was set gets its prior value back,
+    *    or is unset if it had none — whether `body` returned or threw.
+    * A later pair for the same key wins inside the scope. Compute and
+    * validate the pairs before calling: the scope only restores. */
+  def withConfs[T](s: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
+    // getAll holds only the keys explicitly set; getOption would report
+    // a registered conf's default, and restoring that would leave the
+    // key set
+    val set = s.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> set.get(k) }
+    var applied = 0
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v); applied += 1 }
+      body
+    } finally prior.take(applied).foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
-    withBackend.getOrCreate()
   }
 
   /** Terminal for a streaming pipeline: start it on the epoch-interval

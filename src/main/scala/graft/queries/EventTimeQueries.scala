@@ -187,19 +187,19 @@ object EventTimeQueries extends QueryModule {
       graft.streaming.StreamingRun.tumblingDailyWatermarkedRestored(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
         dropMod = wmDropMod,
-        provider = Some(graft.streaming.StreamingRun.RocksDbProvider))),
+        provider = Some(graft.api.Application.RocksDbProvider))),
 
     "k14_snapshot_catalog_rocksdb" -> ((s, d) =>
       graft.streaming.StreamingRun.snapshotCatalog(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
         dropMod = wmDropMod,
-        provider = Some(graft.streaming.StreamingRun.RocksDbProvider))),
+        provider = Some(graft.api.Application.RocksDbProvider))),
 
     "k15_change_feed_rocksdb" -> ((s, d) =>
       graft.streaming.StreamingRun.stateChangeFeed(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
         dropMod = wmDropMod,
-        provider = Some(graft.streaming.StreamingRun.RocksDbProvider))),
+        provider = Some(graft.api.Application.RocksDbProvider))),
 
     // W16: SESSION windows in APPEND mode under the same staged
     // advancing watermark — MergingSessions eviction under the driver

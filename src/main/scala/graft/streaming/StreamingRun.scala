@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import graft.api.Application
 
 /** Drive a windowed aggregation through the ACTUAL Structured Streaming
   * execution path — file streaming source, `StateStoreSaveExec`, memory
@@ -213,7 +214,7 @@ object StreamingRun {
     val ckpt = Scratch.dir("graft-stream-ckpt")
     // the checkpoint is single-use (unique sink name per call): remove
     // it so repeated bench/verify invocations don't accumulate temp dirs
-    try runToMemorySink(s, plan, mode, name, ckpt.toString, inspect)
+    try drive(s, plan, ckpt.toString, memorySink(mode, name))(inspect)
     finally deleteTree(ckpt)
     s.table(name)
   }
@@ -236,67 +237,59 @@ object StreamingRun {
     ()
   }
 
-  /** The one streaming-drive primitive every oracle drain shares: start
-    * `plan` into a named memory sink on `ckpt` under
-    * `Trigger.AvailableNow`, block until drained, always stop the query
-    * and restore the session's shuffle-partition setting (state
-    * partitions are sized to the drain's keyed-state volume — see
-    * [[drainStatePartitions]]; the conf is read at stream START and only
-    * affects THIS query's state layout). `noDataBatches` optionally pins
+  /** A drain's sink setup: output mode, format and sink options. */
+  private[streaming] type Sink = DataStreamWriter[Row] => DataStreamWriter[Row]
+
+  private[streaming] def memorySink(mode: String, name: String): Sink =
+    _.outputMode(mode).format("memory").queryName(name)
+
+  /** A parquet file sink (append mode — the only mode file sinks
+    * support). Unlike the memory sink it participates in recovery: its
+    * `_spark_metadata` commit log is checkpoint-coupled. */
+  private[streaming] def parquetSink(outDir: String): Sink =
+    _.outputMode("append").format("parquet").option("path", outDir)
+
+  /** The session confs a drain runs under, each `spark.graft.*` input
+    * validated here: the state partition count (see
+    * [[drainStatePartitions]]; read at stream START, it only shapes THIS
+    * query's state layout), checkpoint checksums and map-side session
+    * merging. `noDataBatches` optionally pins
     * `spark.sql.streaming.noDataMicroBatches.enabled` for this run only
     * (the restore protocol stops run 1 WITHOUT the trailing no-data
-    * batch so the recovered watermark is the one a crash would leave).
-    * start() sits INSIDE the try: a streaming-plan analysis error at
-    * start must still restore the session confs, or every later batch
-    * query in the session runs at the drain's 8 partitions. */
-  private def runToMemorySink(s: SparkSession, plan: DataFrame, mode: String,
-      name: String, ckpt: String, inspect: StreamingQuery => Unit,
-      noDataBatches: Option[Boolean] = None): Unit = {
-    val spKey = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevSp = s.conf.getOption(spKey)
-    val prevNd = s.conf.getOption(ndKey)
-    val prevCk = s.conf.getOption(CkFileKey)
-    val prevSm = s.conf.getOption(SessLocalKey)
-    // validate every spark.graft.* value before the first set: a throw
-    // here must leave the session's confs untouched
-    val (sp, ck, sm) = (drainStatePartitions(s), drainChecksum(s), drainSessionLocalMerge(s))
-    s.conf.set(spKey, sp.toString)
-    s.conf.set(CkFileKey, ck)
-    s.conf.set(SessLocalKey, sm)
-    noDataBatches.foreach(v => s.conf.set(ndKey, v.toString))
-    var q: StreamingQuery = null
-    try {
-      q = plan.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      inspect(q)
-    } finally {
-      if (q != null) q.stop()
-      releaseStateStores()
-      prevSp match {
-        case Some(p) => s.conf.set(spKey, p)
-        case None => s.conf.unset(spKey)
-      }
-      prevCk match {
-        case Some(p) => s.conf.set(CkFileKey, p)
-        case None => s.conf.unset(CkFileKey)
-      }
-      prevSm match {
-        case Some(p) => s.conf.set(SessLocalKey, p)
-        case None => s.conf.unset(SessLocalKey)
-      }
-      if (noDataBatches.isDefined) prevNd match {
-        case Some(p) => s.conf.set(ndKey, p)
-        case None => s.conf.unset(ndKey)
+    * batch so the recovered watermark is the one a crash would leave). */
+  private def drainConfs(s: SparkSession,
+      noDataBatches: Option[Boolean]): Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> drainStatePartitions(s).toString,
+      CkFileKey -> drainChecksum(s),
+      SessLocalKey -> drainSessionLocalMerge(s)) ++
+      noDataBatches.map("spark.sql.streaming.noDataMicroBatches.enabled" -> _.toString)
+
+  /** The one streaming-drive primitive every drain shares: start `plan`
+    * through `sink` on checkpoint `ckpt` (which may be a previous run's
+    * — the restore protocol resumes it) under `Trigger.AvailableNow`,
+    * block until drained, hand the finished query to `inspect`, and
+    * always stop the query and unload its state stores. The drain confs
+    * are computed — so a bad `spark.graft.*` value throws — before the
+    * conf scope opens, and the scope restores them however the drain
+    * ends: neither a rejected setting, nor an analysis error at
+    * `start()`, nor a failed batch leaves a session conf changed. */
+  private[streaming] def drive(s: SparkSession, plan: DataFrame, ckpt: String,
+      sink: Sink, noDataBatches: Option[Boolean] = None)(
+      inspect: StreamingQuery => Unit): Unit =
+    Application.withConfs(s, drainConfs(s, noDataBatches)) {
+      var q: StreamingQuery = null
+      try {
+        q = sink(plan.writeStream)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        inspect(q)
+      } finally {
+        if (q != null) q.stop()
+        releaseStateStores()
       }
     }
-  }
 
   /** QUERYABLE STATE: run the tumbling daily aggregation through the
     * streaming path, keep its checkpoint, and read the operator's STATE
@@ -346,7 +339,7 @@ object StreamingRun {
     val name = "graft_state_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
     try {
-      runToMemorySink(s, plan, mode, name, ckpt.toString, inspect)
+      drive(s, plan, ckpt.toString, memorySink(mode, name))(inspect)
       Snapshots.stateAt(s, ckpt.toString, batchId)
         .select(col("key.window.start").as("window_start"),
           col("key.event_type").as("event_type"),
@@ -361,46 +354,18 @@ object StreamingRun {
     }
   }
 
-  /** The RocksDB state-store provider class — the provider a production
-    * streaming deployment actually runs (bounded executor heap: state
-    * lives off-heap/on-disk per partition, with changelog checkpointing
-    * shipping per-epoch deltas instead of full snapshots). */
-  val RocksDbProvider: String =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Run `body` with the streaming state-store provider overridden —
-    * and, when the override is RocksDB, with CHANGELOG CHECKPOINTING
-    * enabled, so the checkpoint carries the per-epoch delta stream
-    * `readChangeFeed` reads (the combination a production deployment
-    * would serve state queries from). Session confs are restored after,
-    * so surrounding Verify/Bench rows keep the default provider. The
+  /** Run `body` with the streaming state-store provider overridden
+    * ([[Application.providerConfs]]: RocksDB comes with changelog
+    * checkpointing, so the checkpoint carries the per-epoch delta stream
+    * `readChangeFeed` reads). Session confs are restored after, so
+    * surrounding Verify/Bench rows keep the default provider. The
     * override must wrap BOTH the drain and the statestore reads: the
     * reader resolves the provider from the session conf, and reading an
     * HDFS-format checkpoint through the RocksDB provider (or vice
     * versa) fails. */
   private def withStateProvider[T](s: SparkSession,
-      provider: Option[String])(body: => T): T = provider match {
-    case None => body
-    case Some(p) =>
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val clogKey =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prevProv = s.conf.getOption(provKey)
-      val prevClog = s.conf.getOption(clogKey)
-      s.conf.set(provKey, p)
-      if (p == RocksDbProvider) s.conf.set(clogKey, "true")
-      try body
-      finally {
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-        if (p == RocksDbProvider) prevClog match {
-          case Some(v) => s.conf.set(clogKey, v)
-          case None => s.conf.unset(clogKey)
-        }
-      }
-  }
+      provider: Option[String])(body: => T): T =
+    provider.fold(body)(p => Application.withConfs(s, Application.providerConfs(p))(body))
 
   /** The staged watermarked tumbling-daily aggregation — ONE plan
     * definition shared by w15 (emitted output), k10 (held final state),
@@ -506,8 +471,8 @@ object StreamingRun {
     val name = "graft_state_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
     try {
-      runToMemorySink(s, watermarkedTumblingPlan(s, staged, delayDays),
-        "append", name, ckpt.toString, inspect)
+      drive(s, watermarkedTumblingPlan(s, staged, delayDays),
+        ckpt.toString, memorySink("append", name))(inspect)
       val commits = Snapshots.committedBatches(s, ckpt.toString)
       require(commits.nonEmpty && commits.max == nFiles.toLong,
         s"expected versions 0..$nFiles ($nFiles data batches + the " +
@@ -557,8 +522,8 @@ object StreamingRun {
     val name = "graft_state_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
     try {
-      runToMemorySink(s, watermarkedTumblingPlan(s, staged, delayDays),
-        "append", name, ckpt.toString, inspect)
+      drive(s, watermarkedTumblingPlan(s, staged, delayDays),
+        ckpt.toString, memorySink("append", name))(inspect)
       Snapshots.changeFeed(s, ckpt.toString)
         .select(col("batch_id"), col("change_type"),
           col("key.window.start").as("window_start"),
@@ -817,54 +782,28 @@ object StreamingRun {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
     val outDir = Scratch.dir("graft-latency-out")
     val ckpt = Scratch.dir("graft-latency-ckpt")
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = s.conf.getOption(spKey)
-    val prevCk = s.conf.getOption(CkFileKey)
-    // validate every spark.graft.* value before the first set: a throw
-    // here must leave the session's confs untouched
-    val (sp, ck) = (drainStatePartitions(s), drainChecksum(s))
-    s.conf.set(spKey, sp.toString)
-    s.conf.set(CkFileKey, ck)
-    var q: StreamingQuery = null
     // outDir holds per-batch data parquet — it must not survive ANY
     // failure path (drain error, retention breach, empty protocol),
     // so the whole drain-and-read rides one finally
     val lat =
       try {
-        val wmByBatch =
-          try {
-            q = watermarkedTumblingPlan(s, staged, delayDays).writeStream
-              .outputMode("append")
+        var wmByBatch = Map.empty[Long, Long]
+        try drive(s, watermarkedTumblingPlan(s, staged, delayDays),
+            ckpt.toString, _.outputMode("append")
               .foreachBatch { (df: DataFrame, bid: Long) =>
                 df.select(col("window.end").as("wend"), col("event_type"))
                   .withColumn("batch_id", lit(bid))
                   .write.mode("append").parquet(outDir.toString)
-              }
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-            // the engine's own per-batch eviction watermark (ISO-8601
-            // UTC in the progress event) — batch 0 reports the epoch
-            // zero watermark, which never emits, so parse failures on
-            // it are moot but handled anyway
-            q.recentProgress.toSeq.map { p =>
-              p.batchId -> java.time.Instant.parse(
-                p.eventTime.get("watermark")).toEpochMilli
-            }.toMap
-          } finally {
-            if (q != null) q.stop()
-            releaseStateStores()
-            prevSp match {
-              case Some(p) => s.conf.set(spKey, p)
-              case None => s.conf.unset(spKey)
-            }
-            prevCk match {
-              case Some(p) => s.conf.set(CkFileKey, p)
-              case None => s.conf.unset(CkFileKey)
-            }
-            deleteTree(ckpt)
-          }
+              }) { q =>
+          // the engine's own per-batch eviction watermark (ISO-8601
+          // UTC in the progress event) — batch 0 reports the epoch
+          // zero watermark, which never emits, so parse failures on
+          // it are moot but handled anyway
+          wmByBatch = q.recentProgress.toSeq.map { p =>
+            p.batchId -> java.time.Instant.parse(
+              p.eventTime.get("watermark")).toEpochMilli
+          }.toMap
+        } finally deleteTree(ckpt)
         val wmExpr = wmByBatch.foldLeft(lit(null).cast("long")) {
           case (acc, (bid, wm)) =>
             when(col("batch_id") === bid, lit(wm)).otherwise(acc)
@@ -1077,12 +1016,11 @@ object StreamingRun {
     }
     try {
       (0 until runOneFiles).foreach(reveal1)
-      runToParquetSink(s, planOf(reveal.toString),
-        out.toString, ckpt.toString, _ => (),
-        noDataBatches = noDataBatchesRun1)
+      drive(s, planOf(reveal.toString), ckpt.toString,
+        parquetSink(out.toString), noDataBatchesRun1)(_ => ())
       (runOneFiles until totalFiles).foreach(reveal1)
-      runToParquetSink(s, planOf(reveal.toString),
-        out.toString, ckpt.toString,
+      drive(s, planOf(reveal.toString), ckpt.toString,
+        parquetSink(out.toString))(
         q => {
           val progresses = q.recentProgress
           require(progresses.nonEmpty &&
@@ -1101,60 +1039,6 @@ object StreamingRun {
       deleteTree(ckpt)
       deleteTree(reveal)
       deleteTree(out)
-    }
-  }
-
-  /** [[runToMemorySink]]'s durable twin: drive `plan` into a parquet
-    * file sink (append mode — the only mode file sinks support) under
-    * `Trigger.AvailableNow` on `ckpt`, which may be a PREVIOUS run's
-    * checkpoint — the file sink participates in recovery, the memory
-    * sink does not. */
-  private def runToParquetSink(s: SparkSession, plan: DataFrame,
-      outDir: String, ckpt: String, inspect: StreamingQuery => Unit,
-      noDataBatches: Option[Boolean] = None): Unit = {
-    val spKey = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevSp = s.conf.getOption(spKey)
-    val prevNd = s.conf.getOption(ndKey)
-    val prevCk = s.conf.getOption(CkFileKey)
-    val prevSm = s.conf.getOption(SessLocalKey)
-    // validate every spark.graft.* value before the first set: a throw
-    // here must leave the session's confs untouched
-    val (sp, ck, sm) = (drainStatePartitions(s), drainChecksum(s), drainSessionLocalMerge(s))
-    s.conf.set(spKey, sp.toString)
-    s.conf.set(CkFileKey, ck)
-    s.conf.set(SessLocalKey, sm)
-    noDataBatches.foreach(v => s.conf.set(ndKey, v.toString))
-    var q: StreamingQuery = null
-    try {
-      q = plan.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      inspect(q)
-    } finally {
-      if (q != null) q.stop()
-      releaseStateStores()
-      prevSp match {
-        case Some(p) => s.conf.set(spKey, p)
-        case None => s.conf.unset(spKey)
-      }
-      prevCk match {
-        case Some(p) => s.conf.set(CkFileKey, p)
-        case None => s.conf.unset(CkFileKey)
-      }
-      prevSm match {
-        case Some(p) => s.conf.set(SessLocalKey, p)
-        case None => s.conf.unset(SessLocalKey)
-      }
-      if (noDataBatches.isDefined) prevNd match {
-        case Some(p) => s.conf.set(ndKey, p)
-        case None => s.conf.unset(ndKey)
-      }
     }
   }
 
@@ -2118,11 +2002,8 @@ object StreamingRun {
     import org.apache.spark.sql.Encoders
     import graft.api.{IndexState, ValueIndex}
     import graft.operators.{IndexOperator, TimerContext}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Application.withConfs(s,
+        Seq(Application.ProviderKey -> Application.RocksDbProvider)) {
       val ds = eventsStream(s, dir)
         .select(col("user_id"), col("event_id"))
         .as[(Long, Long)](Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
@@ -2145,9 +2026,6 @@ object StreamingRun {
         .groupBy(col("_1").as("user_id"))
         .agg(max(col("_2")).as("n_events"),
           max_by(col("_3"), col("_2")).as("sum_ids"))
-    } finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -2257,7 +2135,7 @@ object StreamingRun {
       nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
       dropMod: Int = 89,
       inspectRestored: StreamingQuery => Unit = _ => ()): DataFrame =
-      withStateProvider(s, Some(RocksDbProvider)) {
+      withStateProvider(s, Some(Application.RocksDbProvider)) {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
     twsTimerReadout(runRestored(s, staged,
       dir2 => twsTimerPlan(s, dir2, delayDays),
@@ -2272,7 +2150,7 @@ object StreamingRun {
       nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
       dropMod: Int = 89,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
-      withStateProvider(s, Some(RocksDbProvider)) {
+      withStateProvider(s, Some(Application.RocksDbProvider)) {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
     twsTimerReadout(drainAppend(s, twsTimerPlan(s, staged, delayDays),
       inspect))

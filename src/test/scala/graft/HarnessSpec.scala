@@ -1,0 +1,43 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+class HarnessSpec extends AnyFunSuite {
+
+  test("src/main builds sessions and unsets confs only in graft.api.Application") {
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath.toString)
+    val factory = root.resolve("scala/graft/api/Application.scala")
+    val forbidden = """SparkSession\.builder|\.conf\.unset\(""".r
+    val walk = java.nio.file.Files.walk(root)
+    val offenders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != factory)
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if forbidden.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("Verify's log filter drops only the missing-checksum line") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.impl.Log4jLogEvent
+    import org.apache.logging.log4j.message.SimpleMessage
+    val name = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "ChecksumCheckpointFileManager"
+    Verify.dropMissingChecksumWarnings()
+    val lc = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getConfiguration.getLoggerConfig(name)
+    assert(lc.getName == name)
+    def filtered(msg: String): Boolean = lc.isFiltered(Log4jLogEvent.newBuilder()
+      .setLoggerName(name).setLevel(Level.WARN)
+      .setMessage(new SimpleMessage(msg)).build())
+    assert(filtered("No checksum file found for /ckpt/1.delta, hence no checksum verification."))
+    assert(!filtered("Checksum verification failed for /ckpt/1.delta"))
+  }
+}

@@ -11,16 +11,9 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    // local[4,2]: one task retry allowed, matching Verify/Bench — the
-    // w24 fault-injection specs need the injected failure retried, not
-    // fatal (local default maxFailures=1).
-    val s = SparkSession.builder()
-      .master("local[4,2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the harness session at 4 slots, whatever $SPARK_GRAFT_CPUS says:
+    // its one task retry is what the w24 fault-injection specs need
+    val s = Harness.session(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

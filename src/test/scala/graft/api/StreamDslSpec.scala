@@ -82,13 +82,63 @@ class StreamDslSpec extends SparkTestBase {
   }
 
   test("application conf maps to session settings; run() is the app terminal (ApplicationConf analog)") {
-    // session() must honor parallelism + backend mapping on the shared
-    // local session's settings model — build a throwaway conf and check
-    // the derived values, then drive run() on a bounded stream.
+    // the pairs session() hands the builder, per backend
+    val common = Map("spark.master" -> "local[3]", "spark.app.name" -> "graft",
+      "spark.sql.shuffle.partitions" -> "6",
+      "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false")
+    def derived(backend: String) = Application.sessionConfs(AppConf(
+      master = "local[3]", parallelism = 6, stateBackend = backend)).toMap
+    assert(derived("hdfs") == common)
+    assert(derived("rocksdb") == common ++ Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
+    // the harness session is built from the same mapping
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
     val conf = AppConf(parallelism = 4, stateBackend = "hdfs", epochInterval = "1 seconds")
-    assert(conf.parallelism == 4)
     val s = Stream.fromCollection(spark, (0L until 10L))
     assert(Application.run(s, conf).isEmpty) // bounded: executed + discarded
+  }
+
+  test("an unknown state backend is rejected before any session is built") {
+    val e = intercept[IllegalArgumentException](
+      Application.session(AppConf(stateBackend = "rocksDB")))
+    assert(e.getMessage.contains("stateBackend") && e.getMessage.contains("rocksDB"),
+      e.getMessage)
+  }
+
+  test("withConfs restores every key when a later set throws") {
+    val (a, b, c) = ("spark.graft.test.a", "spark.graft.test.b", "spark.graft.test.c")
+    spark.conf.set(a, "before")
+    try {
+      // a static SQL conf cannot be set on a running session
+      intercept[Exception](Application.withConfs(spark, Seq(a -> "1", b -> "2",
+        "spark.sql.warehouse.dir" -> "elsewhere", c -> "3"))(fail("body ran")))
+      assert(spark.conf.getOption(a).contains("before"))
+      assert(spark.conf.getOption(b).isEmpty && spark.conf.getOption(c).isEmpty)
+    } finally spark.conf.unset(a)
+  }
+
+  test("withConfs restores every key when the body throws") {
+    val (a, b) = ("spark.graft.test.a", "spark.graft.test.b")
+    // a registered conf reads as its default while unset; it must come
+    // back unset, not set to that default
+    val registered = "spark.sql.cbo.enabled"
+    assert(!spark.conf.getAll.contains(registered))
+    spark.conf.set(a, "before")
+    try {
+      val e = intercept[IllegalStateException](Application.withConfs(spark,
+          Seq(a -> "1", b -> "2", a -> "3", registered -> "true")) {
+          assert(spark.conf.get(a) == "3" && spark.conf.get(b) == "2")
+          throw new IllegalStateException("body")
+        })
+      assert(e.getMessage == "body")
+      assert(spark.conf.getOption(a).contains("before"))
+      assert(spark.conf.getOption(b).isEmpty)
+      assert(!spark.conf.getAll.contains(registered))
+    } finally spark.conf.unset(a)
   }
 
   test("keyed partitioning: all elements of a key land in one partition (channel/strategy/keyed.rs:148-225)") {

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 import graft.SparkTestBase
-import graft.api.{IndexState, SourceConf, Stream, ValueIndex, AppenderIndex}
+import graft.api.{Application, IndexState, SourceConf, Stream, ValueIndex, AppenderIndex}
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -51,11 +51,9 @@ class IndexOperatorSpec extends SparkTestBase {
   }
 
   test("streaming: transformWithState with state variables and native timers") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
-    try {
+    Application.withConfs(spark,
+        Seq(Application.ProviderKey -> Application.RocksDbProvider)) {
       val input = MemoryStream[(Timestamp, Int, Long)]
       val op = new IndexOperator[Int, (Timestamp, Int, Long), (Int, Long)] {
         @transient private var buf: AppenderIndex[Long] = _
@@ -89,11 +87,6 @@ class IndexOperatorSpec extends SparkTestBase {
         // first timer (4s) drains 15; second (5s) drains the empty buffer
         assert(rows == Seq((1, 0L), (1, 15L)))
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

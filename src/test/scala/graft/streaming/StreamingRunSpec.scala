@@ -1061,6 +1061,33 @@ class StreamingRunSpec extends SparkTestBase {
     }
   }
 
+  test("a drain that fails at start() leaves every session conf unchanged") {
+    // complete mode on a plan with no aggregation (and on any file sink)
+    // is rejected at start()
+    val plan = StreamingRun.eventsStream(spark, sfDir).select(col("event_type"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-leak")
+    val sinks: Seq[(String, StreamingRun.Sink)] = Seq(
+      "memory" -> StreamingRun.memorySink("complete", "graft_leak_probe"),
+      "parquet" -> (_.outputMode("complete").format("parquet")
+        .option("path", tmp.resolve("out").toString)),
+      "foreachBatch" -> (_.outputMode("complete")
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) => () }))
+    def startFails(drain: => Any): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](drain)
+      assert(e.getMessage.contains("[STREAMING_OUTPUT_MODE."), e.getMessage)
+    }
+    val before = spark.conf.getAll
+    try {
+      sinks.foreach { case (name, sink) =>
+        startFails(StreamingRun.drive(spark, plan,
+          tmp.resolve(name).toString, sink)(_ => ()))
+        assert(spark.conf.getAll == before, s"the $name drain leaked a conf")
+      }
+      startFails(StreamingRun.drainComplete(spark, plan))
+      assert(spark.conf.getAll == before, "drainComplete leaked a conf")
+    } finally StreamingRun.deleteTree(tmp)
+  }
+
   test("w1_streaming result equals the batch w1_tumbling plan exactly") {
     val streaming = graft.queries.EventTimeQueries
       .defs("w1_streaming")(spark, sfDir)
