@@ -563,6 +563,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.sfDir
+    val only = Harness.only
     // Every retry, injected or not, is ledgered by TaskFailureTracker.
     // NOTE (r21): the RocksDB provider conf is NOT set session-wide any
     // more — it is scoped to the streaming THROUGHPUT legs below (see
@@ -618,8 +619,6 @@ object Bench {
     def offNow(): Double =
       math.rint((System.nanoTime() - benchT0) / 1e9 * 100) / 100
 
-    // Optional comma-separated query-name filter for local iteration.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // (min, median, max) of the 3 warm runs: the median is the tracked
     // number, the dispersion is the per-cell trust signal — a cell whose

@@ -17,6 +17,30 @@ object Harness {
   val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
     s"${sys.props("user.home")}/testdata/sf0.1")
 
+  /** `$SPARK_GRAFT_ONLY`: an optional comma-separated query-name filter
+    * for local iteration of [[Bench]] and [[Verify]] (None: every
+    * query). See [[onlyOf]]. */
+  lazy val only: Option[Set[String]] =
+    onlyOf(sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.queries.keySet)
+
+  /** Parse a query-name filter against the `known` names. Loud, and
+    * fail-fast on unknown names: a stale filter leaking into a bench or
+    * verification environment must not silently produce a partial,
+    * clean-looking result. */
+  private[graft] def onlyOf(filter: Option[String],
+      known: Set[String]): Option[Set[String]] =
+    filter.map { f =>
+      val names = f.split(",").toSet
+      val unknown = names -- known
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names unknown queries: " +
+        unknown.toSeq.sorted.mkString(","))
+      val skipped = (known -- names).toSeq.sorted
+      System.err.println(s"SPARK_GRAFT_ONLY active: running " +
+        s"${names.toSeq.sorted.mkString(",")}; SKIPPING ${skipped.size} " +
+        s"queries: ${skipped.mkString(",")}")
+      names
+    }
+
   /** The harness session conf for `n` slots: `local[n,2]` allows one
     * task retry (production clusters run `spark.task.maxFailures=4`;
     * the w24/w26 rows inject a task fault that must be retried, not

@@ -5,25 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val only = Harness.only
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     dropMissingChecksumWarnings()
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated name filter for local iteration (the
-    // driver sets nothing and always dumps the full set). Loud, and
-    // fail-fast on unknown names: a stale filter leaking into a
-    // verification environment must not silently produce a partial,
-    // clean-looking dump.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
-      val skipped = (SparkEntry.queries.keySet -- names).toSeq.sorted
-      System.err.println(s"[verify] SPARK_GRAFT_ONLY active: running " +
-        s"${names.toSeq.sorted.mkString(",")}; SKIPPING ${skipped.size} " +
-        s"queries: ${skipped.mkString(",")}")
-    }
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>

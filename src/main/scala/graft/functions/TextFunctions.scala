@@ -39,14 +39,9 @@ object TextFunctions {
     * acc*31 + codepoint (mod P). Cross-engine reproducible (unlike
     * murmur3/xxhash whose seeds differ between engines); the scale path
     * for pure fingerprinting is [[fingerprint64]]. Native expression
-    * ([[PolyHashExpr]]); [[polyHashHof]] is the declarative twin it is
-    * parity-tested against. */
+    * ([[PolyHashExpr]]), parity-tested against its declarative twin in
+    * the test support's `HofTwins`. */
   def polyHash(s: Column): Column = ncol(PolyHashExpr(nexpr(s)))
-
-  /** Declarative (HOF) formulation of [[polyHash]] — the executable
-    * specification the native expression is tested against. */
-  def polyHashHof(s: Column): Column =
-    aggregate(split(s, ""), lit(0L), (acc, c) => (acc * 31L + ascii(c)) % P)
 
   /** 64-bit xxhash fingerprint — the cheap at-scale dedup key. */
   def fingerprint64(text: Column): Column = xxhash64(text)
@@ -147,25 +142,6 @@ object TextFunctions {
     * codegen'd. */
   def aHash61(media: Column): Column = ncol(AHash61Expr(nexpr(media)))
 
-  /** Low-half fold of the simhash token hash ([[NativeText.M2]]/
-    * [[NativeText.P2]]), declarative form. */
-  def polyHash2Hof(s: Column): Column =
-    aggregate(split(s, ""), lit(0L),
-      (acc, c) => (acc * NativeText.M2 + ascii(c)) % NativeText.P2)
-
-  /** Declarative twin of [[simHash]]: each token hashed once ([[bind]]
-    * materializes the hash array), then 61 bit-count passes over the
-    * materialized longs. Parity-tested against the native expression. */
-  def simHashHof(text: Column): Column =
-    bind(transform(tokens(text),
-      t => polyHashHof(t) * lit(NativeText.P2 + 1L) + polyHash2Hof(t)), { hs =>
-      val n = size(hs)
-      (0 until 61).map { j =>
-        val onesJ = size(filter(hs, h => shiftright(h, j).bitwiseAND(lit(1L)) === 1L))
-        when(onesJ * 2 > n, lit(1L << j)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    })
-
   /** Word k-shingles as strings ("w1 w2 ... wk" joined). Guarded for
     * texts shorter than k tokens (Spark's sequence(1, 0) would count
     * DOWN, not produce an empty array). */
@@ -181,10 +157,6 @@ object TextFunctions {
     * Jaccard input. Native expression ([[ShingleHashesExpr]]). */
   def shingleHashes(text: Column, k: Int): Column =
     ncol(ShingleHashesExpr(nexpr(text), k))
-
-  /** Declarative twin of [[shingleHashes]], parity-tested. */
-  def shingleHashesHof(text: Column, k: Int): Column =
-    array_distinct(transform(shingles(text, k), s => polyHashHof(s)))
 
   /** MinHash signature from a shingle-hash array: element i = min over
     * shingle hashes h of (a_i*h + b_i) mod P with a_i = 2i+1,
@@ -208,29 +180,6 @@ object TextFunctions {
   def minHashBandKeys(text: Column, k: Int, numHashes: Int, bands: Int): Column =
     ncol(MinHashBandKeysExpr(nexpr(text), k, numHashes, bands))
 
-  /** Declarative twin of [[minHashBandKeys]] (takes the shingle-hash
-    * array): [[bind]] materializes the hashes, a single `aggregate`
-    * folds the `numHashes` running minima (array accumulator), and the
-    * aggregate's `finish` lambda derives the per-band poly-fold keys
-    * from the materialized signature — each stage evaluates exactly once
-    * per row regardless of CollapseProject. Parity-tested against the
-    * native expression. */
-  def minHashBandKeysHof(shExpr: Column, numHashes: Int, bands: Int): Column = {
-    val rows = numHashes / bands
-    bind(shExpr, sh =>
-      when(size(sh) > 0,
-        aggregate(
-          sh,
-          array_repeat(lit(Long.MaxValue), numHashes),
-          (acc, h) => array((0 until numHashes).map(i =>
-            least(element_at(acc, i + 1),
-              (h * (2L * i + 1L) + (7919L * i + 13L)) % P)): _*),
-          sig => transform(sequence(lit(0), lit(bands - 1)), b =>
-            aggregate(slice(sig, b * rows + lit(1), lit(rows)), lit(0L),
-              (acc, v) => (acc * 31L + v) % P))))
-        .otherwise(lit(null).cast("array<bigint>")))
-  }
-
   /** Fraction of tokens that are repeats of an earlier token
     * (1 − distinct/total) — the Gopher-style duplicate-token repetition
     * signal. Exact double division of integer counts. */
@@ -244,16 +193,6 @@ object TextFunctions {
     * degenerate repetition). Native expression ([[TopBigramFracExpr]]:
     * one compiled pass per row). */
   def topBigramFrac(text: Column): Column = ncol(TopBigramFracExpr(nexpr(text)))
-
-  /** Declarative twin of [[topBigramFrac]] — O(n²) per row, parity-test
-    * specification only. */
-  def topBigramFracHof(text: Column): Column =
-    bind(transform(shingles(text, 2), s => polyHashHof(s)), { bg =>
-      when(size(bg) === 0, lit(0.0)).otherwise(
-        aggregate(array_distinct(bg), lit(0),
-          (m, x) => greatest(m, size(filter(bg, y => y === x))))
-          .cast("double") / size(bg).cast("double"))
-    })
 
   /** Gopher "fraction of characters in the most frequent n-gram":
     * char mass (occurrences · gram length) of the top n-gram over the
@@ -279,45 +218,10 @@ object TextFunctions {
   def gopher(text: Column, out: GopherOut): Column =
     ncol(GopherExpr(nexpr(text), out))
 
-  /** Declarative twin of [[topNgramCharFrac]]/[[dupNgramCharFrac]] —
-    * O(n²) per row, parity-test specification only. Grams key on
-    * `(polyHash·31 + len) mod P` exactly like [[GopherKernel]] (and the
-    * DuckDB oracle), so hash collisions — if one ever fired — would
-    * merge identically everywhere. */
-  def ngramCharFracHof(text: Column, n: Int, dup: Boolean): Column =
-    bind(transform(shingles(text, n),
-      s => (polyHashHof(s) * 31L + length(s)) % P * lit(1L << 20) +
-        least(length(s).cast("long"), lit((1L << 20) - 1))), { ks =>
-      // key packs (hashKey << 20 | min(len, 2^20-1)) so the lambda can
-      // recover the gram length without a second shingle pass; the
-      // clamp keeps >1M-char grams from wrapping into the hash bits,
-      // identically to the kernel and the DuckDB oracle
-      val masses = transform(array_distinct(ks), k =>
-        struct(size(filter(ks, y => y === k)).cast("long").as("cnt"),
-          pmod(k, lit(1L << 20)).as("len")))
-      val sel =
-        if (dup)
-          aggregate(masses, lit(0L),
-            (acc, m) => acc + when(m.getField("cnt") >= 2L,
-              m.getField("cnt") * m.getField("len")).otherwise(0L))
-        else
-          aggregate(masses, lit(0L),
-            (acc, m) => greatest(acc, m.getField("cnt") * m.getField("len")))
-      when(length(text) === 0 || size(ks) === 0, lit(0.0))
-        .otherwise(sel.cast("double") / length(text).cast("double"))
-    })
-
   /** Set Jaccard similarity of two hash arrays (duplicates inside either
     * input are deduplicated, matching the HOF twin's `array_intersect`/
     * `array_distinct` semantics; set sizes are exact ints, the division
     * exact double math). Native expression ([[JaccardShinglesExpr]]). */
   def jaccardShingles(aHashes: Column, bHashes: Column): Column =
     ncol(JaccardShinglesExpr(nexpr(aHashes), nexpr(bHashes)))
-
-  /** Declarative twin of [[jaccardShingles]], parity-tested. */
-  def jaccardShinglesHof(aHashes: Column, bHashes: Column): Column = {
-    val inter = size(array_intersect(aHashes, bHashes)).cast("double")
-    val uni = size(array_distinct(concat(aHashes, bHashes))).cast("double")
-    when(uni === 0.0, lit(0.0)).otherwise(inter / uni)
-  }
 }

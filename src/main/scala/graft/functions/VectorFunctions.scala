@@ -36,10 +36,6 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column =
     ncol(CosineExpr(nexpr(a), nexpr(b)))
 
-  /** Declarative twin of [[cosine]], parity-tested. */
-  def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
-
   /** Squared L2 distance, ordered fold. */
   def l2Sq(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => {
@@ -78,10 +74,4 @@ object VectorFunctions {
     */
   def lshSignature(a: Column, nPlanes: Int, dim: Int): Column =
     ncol(LshSignatureExpr(nexpr(a), nPlanes, dim))
-
-  /** Declarative twin of [[lshSignature]], parity-tested. */
-  def lshSignatureHof(a: Column, nPlanes: Int, dim: Int): Column =
-    (0 until nPlanes).map { p =>
-      hyperplaneBit(a, p, dim) * lit(1L << p)
-    }.reduce(_ + _)
 }

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * (millions of rows at 100 TB, not billions). Each round is two small
   * jobs over the staged histogram: a pair-count aggregation and a
   * one-row top-1 collect (scalar model selection, the same bounded
-  * driver-side pattern as [[Dedup.clusters]]' Σ-convergence check),
+  * driver-side pattern as the Σ-convergence check of
+  * [[Dedup.clusters]]' distributed loop),
   * then the merge applies as a narrow per-row array fold. Rounds are
   * staged through local/reliable checkpoints like every iterative
   * operator here, so lineage stays flat.

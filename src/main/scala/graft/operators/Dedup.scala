@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 
@@ -1217,68 +1218,75 @@ object Dedup {
     * gets its cluster's minimum doc id as `cluster_id` (the canonical
     * "keeper"), turning pairwise dedup output into per-cluster keep/drop
     * decisions — the step after [[minHashLsh]]/[[simHashDup]] in a real
-    * pipeline.
+    * pipeline. Isolated docs (no edges) are not emitted; callers
+    * left-join and coalesce to self. A pair with a null id names no
+    * document and is no edge.
     *
-    * Iterative min-label propagation: labels flow along edges until
-    * fixpoint; iterations = component diameter (near-dup clusters are
-    * shallow — duplicates of a common source — so this is a handful of
-    * bounded shuffles, each keyed on doc id). Isolated docs (no edges)
-    * are not emitted; callers left-join and coalesce to self.
+    * The pairs are staged once — one job, which also counts them — and
+    * the edge count (2·|pairs|) picks one of two paths:
     *
-    * Lineage is truncated per iteration. Default `reliable = false`
-    * uses `localCheckpoint` (executor block storage — fast, but an
-    * executor loss mid-iteration is unrecoverable because the lineage
-    * is gone). For long multi-TB runs pass `reliable = true` to stage
-    * each iteration through the reliable checkpoint directory
-    * (`SparkContext.setCheckpointDir` must be set to a fault-tolerant
-    * FS) so the job survives executor loss — the classic
-    * speed-vs-resilience trade of iterative Spark.
+    *  - **Driver pass** (at most [[DriverMaxEdges]] = 4M edges):
+    *    collect the pairs, solve them on the driver over primitive
+    *    arrays ([[solveOnDriver]]) and ship the labels back through
+    *    `sparkContext.parallelize` — two jobs in all, whatever the
+    *    graph's depth. Driver memory peaks near 150 bytes per pair
+    *    (≈ 300 MB at the bound), the order of the label frontier the
+    *    distributed loop used to build and broadcast from the driver
+    *    every round at the same size.
+    *  - **Distributed min-label propagation** (above the bound, which
+    *    scales unbounded): labels flow along the edge list in staged
+    *    rounds until a round changes no label; each round is a few
+    *    shuffles keyed on doc id plus one checkpoint and one Σ-labels
+    *    collect, its driver barrier.
     *
-    * `maxIters` is the same fail-loudly contract as the pair-budget
-    * guards: it bounds edge-list HOPS (one hop = one propagation step
-    * along every edge; since r22 a graph still unconverged after two
-    * 1-hop rounds — proven deeper than the common shallow near-dup
-    * component — switches to two chained lazy hops per staged round,
-    * halving the per-depth checkpoint + convergence-collect barriers).
-    * Near-dup clusters are shallow (duplicates of a common source —
-    * single digits), so a graph still unconverged after `maxIters`
-    * hops is a pathology (an adversarial chain, or pairs that aren't
-    * near-dup output) and aborts with the hop count instead of
-    * shuffling for a week.
+    * Both paths return the same rows and schema and report the same
+    * round count ([[clustersWithIters]]), and both enforce `maxIters`
+    * identically: it bounds edge-list HOPS (one hop = one propagation
+    * step along every edge). Near-dup clusters are shallow (duplicates
+    * of a common source — single digits), so a graph still unconverged
+    * after `maxIters` hops is a pathology (an adversarial chain, or
+    * pairs that aren't near-dup output) and aborts with the hop count
+    * instead of shuffling for a week — on the driver path too, where
+    * the depth costs nothing, so an input's fate never depends on
+    * which side of the bound it falls.
     *
     * NOTE the default therefore BOUNDS COMPONENT DIAMETER AT 50: a
     * caller using this as general-purpose connected components over an
     * arbitrary graph (long paths are legal there, not a pathology) must
     * pass an explicit larger `maxIters` — the in-repo call sites (dd6,
-    * pl2) all feed near-dup pair lists, where the default is the
-    * intended guard (ADVICE r10). */
+    * pl2, sp3) all feed near-dup pair lists, where the default is the
+    * intended guard (ADVICE r10).
+    *
+    * Staging uses `localCheckpoint` by default (executor block storage —
+    * fast, but an executor loss mid-run is unrecoverable because the
+    * lineage is gone). For long multi-TB runs pass `reliable = true` to
+    * stage through the reliable checkpoint directory
+    * (`SparkContext.setCheckpointDir` must be set to a fault-tolerant
+    * FS) so the job survives executor loss — the classic
+    * speed-vs-resilience trade of iterative Spark. */
   def clusters(pairs: DataFrame, aCol: String, bCol: String,
       reliable: Boolean = false, maxIters: Int = 50): DataFrame =
     clustersWithIters(pairs, aCol, bCol, reliable, maxIters)._1
 
-  /** Edge-count bound under which [[clusters]] BROADCASTS the label
-    * frontier instead of shuffling it each round. Near-dup output is
-    * sparse relative to the corpus at every scale (a 100 TB run with
-    * percent-level duplication still yields |pairs| ≪ |docs|), so the
-    * frontier — at most 2·|edges| (doc_id, cluster_id) longs — usually
-    * fits an executor broadcast with room to spare; staging through
-    * local/reliable checkpoints erases size stats, so the planner can
-    * never discover this on its own and every round would pay exchanges
-    * + sorts on a few-thousand-row frontier. 4M edges ≈ 64 MB of
-    * broadcast — comfortably under executor memory, far under Spark's
-    * 8 GB broadcast cap. Past the bound the loop falls back to the
-    * shuffled sort-merge shape, which scales unbounded. */
-  private val BroadcastFrontierMaxEdges = 4L << 20
+  /** Edge-count bound at or under which [[clusters]] solves on the
+    * driver. Near-dup output is sparse relative to the corpus at every
+    * scale (a 100 TB run with percent-level duplication still yields
+    * |pairs| ≪ |docs|), so this covers the common case; past it the
+    * distributed loop takes over. */
+  private[operators] val DriverMaxEdges = 4L << 20
 
-  /** [[clusters]] plus the number of STAGED propagation rounds actually
-    * run — with the 1-hop-seeded init, two 1-hop opening rounds, and
-    * two hops per round after that, a diameter-`d` component (d ≥ 3)
-    * needs `2 + ceil((d − 3) / 2)` rounds to reach its far end plus one
-    * round to observe the fixpoint; d ≤ 2 graphs keep the r21 1-hop
-    * round counts bit-for-bit. The chain-cluster tests pin both. */
+  /** [[clusters]] plus the number of STAGED propagation rounds the
+    * distributed loop runs — on the driver path, the number it would
+    * run. With the 1-hop-seeded init, two 1-hop opening rounds and two
+    * hops per round after that (r22), a graph of depth D (the largest
+    * BFS distance from a component's minimum id) converges in the
+    * first round r whose preceding hops H_r = 0, 1, 2, 4, 6, … reach
+    * D − 1, i.e. r + 1 rounds; it aborts iff H_r ≥ `maxIters`. The
+    * chain-cluster tests pin both on both paths. `driverMaxEdges` is
+    * the test seam that forces the distributed path. */
   private[operators] def clustersWithIters(pairs: DataFrame, aCol: String,
-      bCol: String, reliable: Boolean = false,
-      maxIters: Int = 50): (DataFrame, Int) = {
+      bCol: String, reliable: Boolean = false, maxIters: Int = 50,
+      driverMaxEdges: Long = DriverMaxEdges): (DataFrame, Int) = {
     // min-label propagation and the Σ-labels convergence check both
     // need an integral id: min() on strings would pick lexicographic
     // canonical ids, but sum() coerces strings to DOUBLE and the
@@ -1288,111 +1296,190 @@ object Dedup {
     // them to 64-bit, e.g. xxhash64, before clustering).
     Seq(aCol, bCol).foreach { c =>
       val dt = pairs.schema(c).dataType
-      require(Seq("ByteType", "ShortType", "IntegerType", "LongType")
-        .contains(dt.toString.replace("$", "")),
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
         s"clusters requires integral ids for min-label propagation and " +
           s"the exact Σ-labels convergence check; '$c' is $dt — hash " +
           "non-numeric ids to 64-bit (xxhash64) first")
     }
     def stage(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint() else df.localCheckpoint()
-    // Both edge directions via ONE generator over ONE evaluation of
-    // `pairs` — the callers hand this an UNMATERIALIZED pair pipeline
-    // (dd6/pl2/sp3: the entire minHashLsh DAG), and the previous
-    // `pairs UNION pairs.swapped` evaluated that pipeline once per
-    // union branch inside the staging job (exchange reuse recovers the
-    // shuffles but not the band-verify work above them). r21, guide
-    // §1.2 "don't compute things you throw away".
-    val edges = stage(
-      pairs.select(explode(array(
-          struct(col(aCol).as("a"), col(bCol).as("b")),
-          struct(col(bCol).as("a"), col(aCol).as("b"))))
-          .as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b")))
-    // coalesce: sum() is NULL on an empty frame (no near-dup pairs at
-    // all — clean corpus / high threshold) and that must converge to an
-    // empty result, not NPE. Σ fits a Long while N·max(doc_id) < 2^63 —
-    // beyond that, swap in a change-count convergence check.
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("cluster_id")), lit(0L))).collect()(0).getLong(0)
-    // The staged (cached) edge list is one cheap job to count, and the
-    // count picks the per-round join strategy: checkpoint staging erases
-    // size stats, so without the explicit hint the planner would pay
-    // exchange + sort on BOTH sides of every round's join even when the
-    // frontier is a few thousand rows (the common case — near-dup pairs
-    // are sparse relative to the corpus at every scale). |labels| ≤
-    // 2·|edges|, so the edge count bounds the broadcast size; past
-    // [[BroadcastFrontierMaxEdges]] the loop keeps the shuffled
-    // sort-merge shape, which scales unbounded.
-    val broadcastFrontier = edges.count() <= BroadcastFrontierMaxEdges
-    def frontier(labels: DataFrame): DataFrame =
-      if (broadcastFrontier) broadcast(labels) else labels
-    // 1-hop-seeded init (r21): each node starts at the min over its
-    // CLOSED neighborhood — the same one groupBy over the staged edge
-    // list the old identity init paid for its distinct(), but it banks
-    // the first propagation round, so the loop below runs max(1, d)
-    // rounds instead of d + 1 (one fewer full edge-list shuffle at any
-    // scale; the fixpoint — component-min labels — is unchanged).
-    var labels = stage(
-      edges.groupBy(col("a"))
-        .agg(min(col("b")).as("mb"))
-        .select(col("a").as("doc_id"),
-          least(col("a"), col("mb")).as("cluster_id")))
-    // Labels only ever DECREASE (min propagation), so Σ(cluster_id)
-    // strictly decreases on any change — a single cheap aggregate over
-    // the just-materialized labels replaces a per-iteration change join.
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iters = 0
-    // ONE min-label hop — labels flow one edge, folded with the current
-    // labels (closed neighborhood). LAZY, so a staged round can chain
-    // two of them. The frontier side is RENAMED before the join: the
-    // second hop's input lineage already contains the edge scan, and
-    // distinct key names keep the self-join unambiguous by construction.
-    def hop(ls: DataFrame): DataFrame =
-      edges
-        .join(frontier(ls.select(col("doc_id").as("__b"), col("cluster_id"))),
-          col("b") === col("__b"))
-        .select(col("a").as("doc_id"), col("cluster_id"))
-        .union(ls)
-        .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
-    var hopsDone = 0
-    while (!converged) {
-      // maxIters bounds edge-list HOPS (one hop = one propagation step
-      // along every edge), so the documented diameter bound is
-      // unchanged by the adaptive round unrolling below.
-      if (hopsDone >= maxIters)
-        throw new IllegalStateException(
-          s"clusters: min-label propagation has not converged after " +
-            s"$maxIters edge-list hops ($iters rounds). Near-dup " +
-            "components are shallow; a diameter this large means the " +
-            "pair list is not near-dup output (adversarial chain / " +
-            "wrong input) — raise maxIters only if that is intentional.")
-      // DEPTH-ADAPTIVE rounds (r22): each staged round pays one
-      // localCheckpoint write + one Σ-labels collect + a full driver
-      // job barrier, so chaining two lazy hops per round halves those
-      // per-depth costs — but a hop is a full edge-list join, and the
-      // COMMON near-dup component is an all-pairs group of diameter
-      // 1–2 (LSH emits every in-group pair) that converges within two
-      // rounds, where a second chained hop is pure wasted join work.
-      // So: the first two rounds run ONE hop (bit-identical cost to the
-      // shallow common case), and only a graph still unconverged after
-      // them — proven deeper than the 1-hop-seeded init + 2 hops can
-      // close — switches to TWO hops per round (the first hop's
-      // aggregate exchange is reused between its two consumers inside
-      // the round). The fixpoint is invariant either way: labels
-      // decrease monotonically, so Σ equal across a round proves no
-      // change in ANY of its hops.
-      val twoHop = iters >= 2
-      val prop = stage(if (twoHop) hop(hop(labels)) else hop(labels))
-      hopsDone += (if (twoHop) 2 else 1)
-      val s = labelSum(prop)
-      converged = s == prevSum
-      prevSum = s
-      labels = prop
-      iters += 1
+    // The callers hand this an UNMATERIALIZED pair pipeline (dd6/pl2/
+    // sp3: the entire minHashLsh DAG): staging evaluates it exactly
+    // once, and the row count rides the same job as an observed metric
+    // instead of costing a count job of its own.
+    val counted = Observation()
+    val staged = stage(pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+      .observe(counted, count(lit(1)).as("n")))
+    // Both edge directions via one generator over the staged pairs: a
+    // narrow pass over executor blocks, re-read by each hop below.
+    val edges = staged.select(explode(array(
+        struct(col("a"), col("b")), struct(col("b").as("a"), col("a").as("b"))))
+        .as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"))
+
+    // The staged-round schedule, shared by both paths so they agree on
+    // round counts and on the abort. `round(hopsBefore, hops)` runs (or,
+    // on the driver path, replays) one round of `hops` hops and reports
+    // whether it changed no label. DEPTH-ADAPTIVE rounds (r22): each
+    // staged round pays one checkpoint write + one Σ-labels collect + a
+    // full driver job barrier, so chaining two hops per round halves
+    // those per-depth costs — but a hop is a full edge-list join, and
+    // the COMMON near-dup component is an all-pairs group of diameter
+    // 1–2 (LSH emits every in-group pair) that converges within two
+    // rounds, where a second chained hop is wasted join work. So the
+    // first two rounds run ONE hop and later rounds TWO.
+    def rounds(round: (Int, Int) => Boolean): Int = {
+      var iters = 0
+      var hopsDone = 0
+      var converged = false
+      while (!converged) {
+        if (hopsDone >= maxIters)
+          throw new IllegalStateException(
+            s"clusters: min-label propagation has not converged after " +
+              s"$maxIters edge-list hops ($iters rounds). Near-dup " +
+              "components are shallow; a diameter this large means the " +
+              "pair list is not near-dup output (adversarial chain / " +
+              "wrong input) — raise maxIters only if that is intentional.")
+        val hops = if (iters >= 2) 2 else 1
+        converged = round(hopsDone, hops)
+        hopsDone += hops
+        iters += 1
+      }
+      iters
     }
-    (labels, iters)
+
+    if (2 * counted.get("n").asInstanceOf[Long] <= driverMaxEdges) {
+      val (ids, roots, depth) = solveOnDriver(
+        staged.select(col("a").cast("long"), col("b").cast("long"))
+          .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+          .collect())
+      // labels after the init hop plus `before` hops span distance
+      // 1 + before from each component minimum; a round changes no
+      // label once that covers the depth
+      val iters = rounds((before, _) => 1 + before >= depth)
+      // the loop's id type: the wider of the two columns
+      val idType = edges.schema("a").dataType
+      val asId: Long => Any = idType match {
+        case ByteType => _.toByte
+        case ShortType => _.toShort
+        case IntegerType => _.toInt
+        case _ => identity
+      }
+      // primitive slices of ≤ 1M labels cross to the executors, which
+      // build the rows; cluster_id is nullable like the loop's min()
+      val slices = ids.grouped(1 << 20).zip(roots.grouped(1 << 20)).toSeq
+      val rows = pairs.sparkSession.sparkContext
+        .parallelize(slices, math.max(1, slices.size))
+        .flatMap { case (is, rs) =>
+          is.indices.iterator.map(j => Row(asId(is(j)), asId(rs(j))))
+        }
+      val labels = pairs.sparkSession.createDataFrame(rows, StructType(Seq(
+        StructField("doc_id", idType, nullable = false),
+        StructField("cluster_id", idType, nullable = true))))
+      (labels, iters)
+    } else {
+      // Σ(cluster_id) as an exact DECIMAL(38,0) (the [[blockVolume]]
+      // discipline): a Long Σ overflows once |ids|·N passes 2^63 — three
+      // xxhash64-sized ids suffice — and ANSI mode then throws. coalesce:
+      // the sum is NULL on an empty frame (no near-dup pairs at all) and
+      // that must converge to an empty result, not NPE.
+      def labelSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)"))).collect()(0).getDecimal(0)
+      // 1-hop-seeded init (r21): each node starts at the min over its
+      // CLOSED neighborhood — one groupBy over the edge list that banks
+      // the first propagation round, so the loop runs max(1, d) rounds
+      // instead of d + 1.
+      var labels = stage(
+        edges.groupBy(col("a"))
+          .agg(min(col("b")).as("mb"))
+          .select(col("a").as("doc_id"),
+            least(col("a"), col("mb")).as("cluster_id")))
+      // Labels only ever DECREASE (min propagation), so Σ(cluster_id)
+      // strictly decreases on any change — a single cheap aggregate over
+      // the just-materialized labels replaces a per-iteration change join,
+      // and Σ equal across a round proves no change in ANY of its hops.
+      var prevSum = labelSum(labels)
+      // ONE min-label hop — labels flow one edge, folded with the current
+      // labels (closed neighborhood). LAZY, so a staged round can chain
+      // two of them. The frontier side is RENAMED before the join: the
+      // second hop's input lineage already contains the edge scan, and
+      // distinct key names keep the self-join unambiguous by construction.
+      def hop(ls: DataFrame): DataFrame =
+        edges
+          .join(ls.select(col("doc_id").as("__b"), col("cluster_id")),
+            col("b") === col("__b"))
+          .select(col("a").as("doc_id"), col("cluster_id"))
+          .union(ls)
+          .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
+      val iters = rounds { (_, hops) =>
+        val prop = stage(if (hops == 2) hop(hop(labels)) else hop(labels))
+        val s = labelSum(prop)
+        val unchanged = s == prevSum
+        prevSum = s
+        labels = prop
+        unchanged
+      }
+      (labels, iters)
+    }
+  }
+
+  /** Connected components of an undirected edge list on the driver,
+    * over primitive arrays only: the sorted distinct ids, each one's
+    * component minimum, and the depth D — the largest BFS distance from
+    * a component's minimum to one of its nodes. Nodes are visited in
+    * ascending id order and every unvisited node starts a BFS, so each
+    * BFS starts at its component's minimum: one O(V + E) pass yields
+    * the min-root labels a union-find would, plus the depth the
+    * `maxIters` contract needs, which a union-find cannot give. */
+  private def solveOnDriver(
+      pairs: Array[(Long, Long)]): (Array[Long], Array[Long], Int) = {
+    // endpoints 2e and 2e + 1 are edge e's two ends, so endpoint p's
+    // other end is p ^ 1
+    val ends = new Array[Long](2 * pairs.length)
+    for (e <- pairs.indices) {
+      ends(2 * e) = pairs(e)._1
+      ends(2 * e + 1) = pairs(e)._2
+    }
+    val ids = java.util.Arrays.stream(ends).sorted().distinct().toArray
+    val node = ends.map(java.util.Arrays.binarySearch(ids, _))
+    // CSR adjacency: node v's neighbours are adj(off(v) until off(v + 1))
+    val off = new Array[Int](ids.length + 1)
+    node.foreach(v => off(v + 1) += 1)
+    for (v <- ids.indices) off(v + 1) += off(v)
+    val next = off.clone()
+    val adj = new Array[Int](ends.length)
+    for (p <- ends.indices) {
+      adj(next(node(p))) = node(p ^ 1)
+      next(node(p)) += 1
+    }
+    val root = Array.fill(ids.length)(-1)
+    val dist = new Array[Int](ids.length)
+    val queue = new Array[Int](ids.length) // each node is queued once
+    var head = 0
+    var tail = 0
+    var depth = 0
+    for (s <- ids.indices if root(s) < 0) {
+      root(s) = s
+      queue(tail) = s
+      tail += 1
+      while (head < tail) {
+        val v = queue(head)
+        head += 1
+        depth = math.max(depth, dist(v))
+        for (k <- off(v) until off(v + 1)) {
+          val w = adj(k)
+          if (root(w) < 0) {
+            root(w) = s
+            dist(w) = dist(v) + 1
+            queue(tail) = w
+            tail += 1
+          }
+        }
+      }
+    }
+    (ids, root.map(ids(_)), depth)
   }
 
   /** Embedding near-duplicates: pairs with cosine ≥ threshold, candidates

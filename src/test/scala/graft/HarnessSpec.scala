@@ -40,4 +40,19 @@ class HarnessSpec extends AnyFunSuite {
     assert(filtered("No checksum file found for /ckpt/1.delta, hence no checksum verification."))
     assert(!filtered("Checksum verification failed for /ckpt/1.delta"))
   }
+
+  test("SPARK_GRAFT_ONLY: unset runs everything; known names filter loudly; an unknown name fails fast") {
+    val known = Set("q1", "q2", "q3")
+    assert(Harness.onlyOf(None, known).isEmpty)
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val picked = try Harness.onlyOf(Some("q1,q3"), known)
+      finally System.setErr(saved)
+    assert(picked.contains(Set("q1", "q3")))
+    assert(err.toString.contains("SKIPPING 1 queries: q2"), err.toString)
+    val e = intercept[IllegalArgumentException](
+      Harness.onlyOf(Some("q1,stale_name"), known))
+    assert(e.getMessage.contains("unknown queries: stale_name"), e.getMessage)
+  }
 }

@@ -8,7 +8,7 @@ import graft.operators.GopherRules
   * specification [[GopherKernel]] is parity-tested against. Every
   * statistic is the Spark-SQL expression it replaced: the token array
   * is [[TextFunctions.bind]]-bound once, the n-gram rules use
-  * [[TextFunctions.ngramCharFracHof]]. */
+  * [[HofTwins.ngramCharFracHof]]. */
 object GopherTwins {
 
   /** Quality family: word count, mean word length, alpha-word share,
@@ -26,9 +26,9 @@ object GopherTwins {
   /** Repetition family: the nine n-gram char-mass rules. */
   def passRepetition(t: Column): Column =
     (GopherRules.topNgramMax.map { case (n, thr) =>
-      TextFunctions.ngramCharFracHof(t, n, dup = false) <= thr } ++
+      HofTwins.ngramCharFracHof(t, n, dup = false) <= thr } ++
       GopherRules.dupNgramMax.map { case (n, thr) =>
-        TextFunctions.ngramCharFracHof(t, n, dup = true) <= thr })
+        HofTwins.ngramCharFracHof(t, n, dup = true) <= thr })
       .reduce(_ && _)
 
   /** The keep gate: false for null text. */

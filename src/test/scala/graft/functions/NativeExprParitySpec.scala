@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.functions.{HofTwins => H, TextFunctions => T, VectorFunctions => V}
 
 /** The native Catalyst expressions must be bit-identical to their
   * declarative HOF twins — the twins are the executable specification
@@ -25,12 +25,12 @@ class NativeExprParitySpec extends SparkTestBase {
 
   test("native text expressions ≡ HOF twins (polyHash/simHash/shingles/bandKeys)") {
     val df = corpus.select(
-      T.polyHash(col("text")).as("n1"), T.polyHashHof(col("text")).as("h1"),
-      T.simHash(col("text")).as("n2"), T.simHashHof(col("text")).as("h2"),
+      T.polyHash(col("text")).as("n1"), H.polyHashHof(col("text")).as("h1"),
+      T.simHash(col("text")).as("n2"), H.simHashHof(col("text")).as("h2"),
       T.shingleHashes(col("text"), 3).as("n3"),
-      T.shingleHashesHof(col("text"), 3).as("h3"),
+      H.shingleHashesHof(col("text"), 3).as("h3"),
       T.minHashBandKeys(col("text"), 3, 32, 8).as("n4"),
-      T.minHashBandKeysHof(T.shingleHashesHof(col("text"), 3), 32, 8).as("h4"))
+      H.minHashBandKeysHof(H.shingleHashesHof(col("text"), 3), 32, 8).as("h4"))
     val bad = df.filter(!(col("n1") <=> col("h1") && col("n2") <=> col("h2") &&
       col("n3") <=> col("h3") && col("n4") <=> col("h4"))).count()
     assert(bad == 0)
@@ -39,7 +39,7 @@ class NativeExprParitySpec extends SparkTestBase {
   test("native topBigramFrac ≡ HOF twin (incl. <2-token and repeat edges)") {
     val df = corpus.select(
       T.topBigramFrac(col("text")).as("n"),
-      T.topBigramFracHof(col("text")).as("h"))
+      H.topBigramFracHof(col("text")).as("h"))
     assert(df.filter(!(col("n") <=> col("h"))).count() == 0)
   }
 
@@ -66,7 +66,7 @@ class NativeExprParitySpec extends SparkTestBase {
     val df0 = corpus.union((extra ++ gateDocs(200, 801)).toDF("text"))
     val checks = for { n <- 2 to 10; dup <- Seq(false, true) } yield
       ((if (dup) T.dupNgramCharFrac(col("text"), n) else T.topNgramCharFrac(col("text"), n)),
-        T.ngramCharFracHof(col("text"), n, dup))
+        H.ngramCharFracHof(col("text"), n, dup))
     val df = df0.select(checks.zipWithIndex.flatMap { case ((nat, hof), i) =>
       Seq(nat.as(s"n$i"), hof.as(s"h$i")) }: _*)
     val bad = df.filter(checks.indices.map(i =>
@@ -119,7 +119,7 @@ class NativeExprParitySpec extends SparkTestBase {
         T.shingleHashes(col("b.text"), 3).as("sb"))
     val bad = pairs.filter(
       !(T.jaccardShingles(col("sa"), col("sb")) <=>
-        T.jaccardShinglesHof(col("sa"), col("sb")))).count()
+        H.jaccardShinglesHof(col("sa"), col("sb")))).count()
     assert(bad == 0)
   }
 
@@ -160,8 +160,8 @@ class NativeExprParitySpec extends SparkTestBase {
     val pairs = emb.as("a").crossJoin(emb.limit(7).as("b"))
       .select(col("a.embedding").as("va"), col("b.embedding").as("vb"))
     val bad = pairs.filter(
-      !(V.cosine(col("va"), col("vb")) <=> V.cosineHof(col("va"), col("vb")) &&
-        V.lshSignature(col("va"), 8, 64) <=> V.lshSignatureHof(col("va"), 8, 64)))
+      !(V.cosine(col("va"), col("vb")) <=> H.cosineHof(col("va"), col("vb")) &&
+        V.lshSignature(col("va"), 8, 64) <=> H.lshSignatureHof(col("va"), 8, 64)))
       .count()
     assert(bad == 0)
   }

@@ -261,9 +261,53 @@ class DedupSpec extends SparkTestBase {
 
   // ---- connected components ----
 
+  /** Both [[Dedup.clusters]] paths: the driver pass at its production
+    * bound, and the distributed loop forced through the edge-bound
+    * seam. Every clusters test below runs on both. */
+  private val clusterPaths = Seq(
+    "driver" -> Dedup.DriverMaxEdges, "distributed" -> -1L)
+
+  private def clustersOn(bound: Long, pairs: org.apache.spark.sql.DataFrame,
+      reliable: Boolean = false, maxIters: Int = 50) =
+    Dedup.clustersWithIters(pairs, "doc_a", "doc_b", reliable, maxIters, bound)
+
+  /** Spark jobs started by `body` on this thread: a listener counts the
+    * jobs tagged with a local property, and a tagged sentinel job after
+    * the body proves every earlier job start has been delivered. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobs"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case "body" => n.incrementAndGet()
+          case "sentinel" => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      val v = try body finally sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (v, n.get)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("clusters: empty pair input converges to an empty result (no NPE)") {
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(Dedup.clusters(empty, "doc_a", "doc_b").count() == 0)
+    for ((path, bound) <- clusterPaths) {
+      val (labels, iters) = clustersOn(bound, empty)
+      assert(labels.count() == 0 && iters == 1, path)
+    }
   }
 
   test("clusters: chain-shaped cluster labels in depth-adaptive rounds, reliable checkpointing") {
@@ -273,18 +317,21 @@ class DedupSpec extends SparkTestBase {
     // 2, 3 — the shallow common case never pays a wasted second hop);
     // the still-unconverged graph then switches to TWO hops per round
     // (r22): round 3 covers hops 4-5 (reaches the far end), round 4
-    // observes the fixpoint — 4 rounds total.
+    // observes the fixpoint — 4 rounds total. The driver pass reports
+    // the same count.
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
       .toDF("doc_a", "doc_b")
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString)
-    for (reliable <- Seq(false, true)) {
-      val (labels, iters) =
-        Dedup.clustersWithIters(chain, "doc_a", "doc_b", reliable = reliable)
+    val itersByPath = for ((path, bound) <- clusterPaths;
+        reliable <- Seq(false, true)) yield {
+      val (labels, iters) = clustersOn(bound, chain, reliable = reliable)
       val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == (1L to 6L).map((_, 1L)).toSet, s"reliable=$reliable")
-      assert(iters == 4, s"reliable=$reliable: expected 2 + ceil((5-3)/2) + 1 = 4 rounds, got $iters")
+      assert(got == (1L to 6L).map((_, 1L)).toSet, s"$path reliable=$reliable")
+      assert(iters == 4, s"$path reliable=$reliable: expected 2 + ceil((5-3)/2) + 1 = 4 rounds, got $iters")
+      iters
     }
+    assert(itersByPath.distinct.size == 1, itersByPath)
   }
 
   test("clusters: star-shaped (diameter <= 2) components keep the single-hop round counts") {
@@ -295,10 +342,14 @@ class DedupSpec extends SparkTestBase {
     // shallow graphs never pay a wasted second edge-list join
     val star = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L))
       .toDF("doc_a", "doc_b")
-    val (labels, iters) = Dedup.clustersWithIters(star, "doc_a", "doc_b")
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
-    assert(iters == 1, s"expected the single observing round, got $iters")
+    val itersByPath = for ((path, bound) <- clusterPaths) yield {
+      val (labels, iters) = clustersOn(bound, star)
+      val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)), path)
+      assert(iters == 1, s"$path: expected the single observing round, got $iters")
+      iters
+    }
+    assert(itersByPath.distinct.size == 1, itersByPath)
   }
 
   test("clusters equals pure-Scala union-find on random pair lists") {
@@ -311,7 +362,7 @@ class DedupSpec extends SparkTestBase {
         b <- Gen.choose(0L, n.toLong - 1) if a != b
       } yield (a, b))
     } yield pairs
-    val prop = Prop.forAll(genPairs) { pairList =>
+    val prop = Prop.forAll(genPairs, Gen.oneOf(false, true)) { (pairList, intIds) =>
       // referee: path-compressed union-find, label = component min
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -324,11 +375,19 @@ class DedupSpec extends SparkTestBase {
       }
       pairList.foreach { case (a, b) => union(a, b) }
       val want = parent.keys.map(x => (x, find(x))).toSet
-      val got = Dedup.clusters(
-          pairList.toDF("doc_a", "doc_b"), "doc_a", "doc_b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val ok = got == want
-      if (!ok) println(s"pairs=$pairList got=$got want=$want")
+      val df =
+        if (intIds) pairList.map { case (a, b) => (a.toInt, b.toInt) }.toDF("doc_a", "doc_b")
+        else pairList.toDF("doc_a", "doc_b")
+      val runs = clusterPaths.map { case (_, bound) => clustersOn(bound, df) }
+      val got = runs.map { case (labels, _) => labels.collect().map(r =>
+        (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSet }
+      val schemas = runs.map(_._1.schema)
+      val ok = got.forall(_ == want) && schemas.distinct.size == 1 &&
+        schemas.head.map(_.dataType.typeName).distinct ==
+          Seq(if (intIds) "integer" else "long") &&
+        runs.map(_._2).distinct.size == 1
+      if (!ok) println(s"pairs=$pairList intIds=$intIds got=$got want=$want " +
+        s"schemas=$schemas iters=${runs.map(_._2)}")
       ok
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
@@ -341,18 +400,25 @@ class DedupSpec extends SparkTestBase {
     // opt in with an explicit budget. Pin both halves of that contract:
     // a 61-node path (diameter 60, needs 60 rounds) must abort under
     // the default with the documented message, and the SAME graph must
-    // converge when the caller raises the budget.
+    // converge when the caller raises the budget. Both paths, with the
+    // same message and round count.
     val chain = (1L to 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val e = intercept[IllegalStateException] {
       Dedup.clusters(chain, "doc_a", "doc_b").collect()
     }
     assert(e.getMessage.contains("50 edge-list hops"), e.getMessage)
     assert(e.getMessage.contains("raise maxIters"), e.getMessage)
-    val (labels, iters) = Dedup.clustersWithIters(
-      chain, "doc_a", "doc_b", maxIters = Int.MaxValue)
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == (1L to 61L).map((_, 1L)).toSet)
-    assert(iters == 32, s"expected 2 + ceil((60-3)/2) + 1 = 32 rounds, got $iters")
+    val byPath = for ((path, bound) <- clusterPaths) yield {
+      val e = intercept[IllegalStateException](clustersOn(bound, chain))
+      assert(e.getMessage.contains("50 edge-list hops"), s"$path: ${e.getMessage}")
+      assert(e.getMessage.contains("raise maxIters"), s"$path: ${e.getMessage}")
+      val (labels, iters) = clustersOn(bound, chain, maxIters = Int.MaxValue)
+      val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == (1L to 61L).map((_, 1L)).toSet, path)
+      assert(iters == 32, s"$path: expected 2 + ceil((60-3)/2) + 1 = 32 rounds, got $iters")
+      (e.getMessage, iters)
+    }
+    assert(byPath.distinct.size == 1, byPath)
   }
 
   test("clusters: a graph deeper than maxIters aborts loudly instead of shuffling on") {
@@ -365,6 +431,38 @@ class DedupSpec extends SparkTestBase {
       Dedup.clusters(chain, "doc_a", "doc_b", maxIters = 2).collect()
     }
     assert(e.getMessage.contains("2 edge-list hops"))
+    val messages = for ((path, bound) <- clusterPaths) yield {
+      val e = intercept[IllegalStateException](clustersOn(bound, chain, maxIters = 2))
+      assert(e.getMessage.contains("2 edge-list hops"), path)
+      e.getMessage
+    }
+    assert(messages.distinct.size == 1, messages)
+  }
+
+  test("clusters: 64-bit ids (negative, near Long.MaxValue) converge on both paths (exact label-sum check)") {
+    // xxhash64-style ids: a Long Σ over these labels overflows (ANSI
+    // mode throws ARITHMETIC_OVERFLOW); the DECIMAL(38,0) Σ does not
+    val (max, min, x) = (Long.MaxValue, Long.MinValue, 4000000000000000000L)
+    val pairs = Seq((max - 2, max - 1), (max - 1, max), (min, -5L), (-5L, 7L),
+      (x, x + 1), (x + 1, x + 2)).toDF("doc_a", "doc_b")
+    val want = Set((max - 2, max - 2), (max - 1, max - 2), (max, max - 2),
+      (min, min), (-5L, min), (7L, min), (x, x), (x + 1, x), (x + 2, x))
+    for ((path, bound) <- clusterPaths) {
+      val (labels, iters) = clustersOn(bound, pairs)
+      assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want, path)
+      assert(iters == 2, s"$path: depth-2 components need one propagating round + one observing, got $iters")
+    }
+  }
+
+  test("clusters: a small graph is solved in at most 3 Spark jobs, whatever its depth") {
+    // the driver pass: stage + count (one job), collect (one job) — no
+    // per-round checkpoint/Σ-collect barriers; a 30-chain would need
+    // 17 distributed rounds
+    val chain = (1L to 30L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val ((labels, iters), jobs) = jobsOf(Dedup.clustersWithIters(chain, "doc_a", "doc_b"))
+    assert(iters == 17)
+    assert(jobs <= 3, s"clusters ran $jobs jobs on a 30-edge graph")
+    assert(labels.collect().map(_.getLong(1)).toSet == Set(1L))
   }
 
   // ---- multi-probe LSH recall ----
