@@ -114,12 +114,14 @@ object CanaryHealth {
 
 /** Benchmark main — BASELINE.md §3 protocol: per query, one untimed
   * warm-up then the median of 3 warm runs. The measured action is a
-  * full-column checksum (xxhash64 over every output column, summed), so
-  * Catalyst cannot prune computed columns the way a bare `count()` lets
-  * it. Failures are recorded loudly in an `errors` field (never as fake
-  * timings). TWO outputs: the FULL artifact (query dispersion, sentinel,
-  * streaming legs, block volumes, run order + start offsets, notes) goes
-  * to `bench_result.json`; stdout gets a COMPACT one-line summary:
+  * full-column digest ([[checksum]]: xxhash64 over every output column,
+  * an order-independent sum per row), so Catalyst cannot prune computed
+  * columns the way a bare `count()` lets it, and every timed run carries
+  * its answer. Failures are recorded loudly in an `errors` field (never
+  * as fake timings). TWO outputs: the FULL artifact (query dispersion
+  * and digests, sentinel, the streaming leg, block volumes, run order +
+  * start offsets) goes to `bench_result.json`; stdout gets a COMPACT
+  * one-line summary ([[compactLine]]):
   * total, warn flag, primary streaming rps, error count, and the
   * SLOWEST-10 query medians only. The split exists because the driver
   * captures the LAST ~2000 chars of stdout INCLUDING sbt's trailer
@@ -147,12 +149,17 @@ object CanaryHealth {
   *    `query_times`, offenders in `dispersed_queries`). A contaminated
   *    run self-identifies — cell-level — instead of silently becoming
   *    the round's record.
-  *  - STREAMING REPEATS: each streaming leg runs 3× in-process with a
-  *    fresh checkpoint each time; the artifact reports every run plus
+  *  - STREAMING REPEATS: the one streaming leg ([[streamingLeg]],
+  *    `streaming_availablenow`: all input pre-staged, one AvailableNow
+  *    drain, the engine alone) runs at least 3 untimed warm-ups, then 6
+  *    in-process runs with a fresh checkpoint each, dropping the first
+  *    by protocol; the artifact reports the other 5 plus
   *    min/median/max and the max/min spread. `records_per_sec` is the
-  *    median, the tracked number. `streaming_availablenow` is the
-  *    PRIMARY streaming metric (it pre-stages all input and measures the
-  *    engine alone); the wave leg stays for historical comparability.
+  *    median, the tracked `stream_rps`.
+  *  - DIGESTS: `query_times` carries each cell's digest; a cell whose
+  *    warm-up and timed runs disagree is listed in
+  *    `nondeterministic_queries` (informational: float aggregates may
+  *    differ in their last bits across shuffle-fetch orders).
   *  - BLOCK VOLUMES: every blocked-pairwise query's exact pair count at
   *    this scale factor (Σ c·(c−1)/2 over its blocking histogram) is in
   *    `block_volume`, so quadratic creep is visible in the artifact.
@@ -282,22 +289,15 @@ object Bench {
     * latency bound — BASELINE §3's StreamingQueryProgress latency). */
   private[graft] case class StreamResult(rows: Long, sec: Double, rps: Double,
       batches: Long, wallSec: Double, breakdownMs: Map[String, Long],
-      latencyMs: Map[String, Long]) {
-    private def obj(m: Map[String, Long]): String =
-      m.toSeq.sortBy(-_._2).map { case (k, v) =>
-        "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def json: String =
-      s"""{"rows":$rows,"sec":$sec,"records_per_sec":$rps,"batches":$batches,"wall_sec":$wallSec,"batch_latency_ms":${obj(latencyMs)},"breakdown_ms":${obj(breakdownMs)}}"""
-  }
+      latencyMs: Map[String, Long])
 
-  /** Three in-process repeats of one leg. The median run's fields keep
-    * their historical names so round-over-round comparison still works;
+  /** The kept runs of the leg. The median run's fields keep their
+    * historical names so round-over-round comparison still works;
     * min/max/spread expose whether the number deserves trust (the r5→r6
-    * wave leg swung 2.6× run-to-run and was graded as if it meant
+    * leg swung 2.6× run-to-run and was graded as if it meant
     * something). */
   private[graft] case class LegSummary(runs: Seq[StreamResult],
-      discardedRps: Seq[Double] = Nil,
-      coldFirstRps: Option[Double] = None) {
+      coldFirstRps: Double, discardedRps: Seq[Double] = Nil) {
     private val byRps = runs.sortBy(_.rps)
     def median: StreamResult = byRps(runs.size / 2)
     def json: String = {
@@ -315,9 +315,9 @@ object Bench {
       val disc =
         (if (discardedRps.isEmpty) ""
          else s""","discarded_leg_rps":${discardedRps.mkString("[", ",", "]")}""") +
-        // the protocol-dropped cold first run (dropFirst legs): always
-        // shipped so the discard stays auditable round-over-round
-        coldFirstRps.map(r => s""","discarded_cold_first_rps":$r""").getOrElse("")
+        // the protocol-dropped cold first run: always shipped so the
+        // discard stays auditable round-over-round
+        s""","discarded_cold_first_rps":$coldFirstRps"""
       s"""{"rows":${m.rows},"sec":${m.sec},"records_per_sec":${m.rps},""" +
         s""""batches":${m.batches},"wall_sec":${m.wallSec},""" +
         s""""rps_runs":$all,"rps_min":$mn,"rps_median":${m.rps},"rps_max":$mx,""" +
@@ -326,24 +326,24 @@ object Bench {
     }
   }
 
+  /** The leg's rows per run, its timed runs (after the dropped first),
+    * and its floor of untimed warm-ups. 5 timed runs: each run takes
+    * seconds, and the median of 5 holds still under the ±25%
+    * scheduling/GC graininess a run that short cannot amortize away. */
+  private val LegRows = 500000
+  private val LegRepeats = 5
+  private val LegWarmups = 3
+
   /** Streaming throughput through a tumbling-window sum per key on the
-    * RocksDB store, checkpointed to local disk — two protocols over the
-    * SAME pipeline:
-    *
-    *  - `waves = Some(n)`: the historical feed-and-wait protocol (n
-    *    synchronous `processAllAvailable` waves). Comparable with prior
-    *    rounds, but it measures the harness as much as the engine: each
-    *    wave pays a full drain barrier, and the driver-side `addData`
-    *    materialization sits inside the measured window.
-    *  - `waves = None`: ALL data is staged into the MemoryStream before
-    *    the query starts, then one `Trigger.AvailableNow` run drains it.
-    *    Feed cost is excluded by construction; what remains is the
-    *    engine: planning, source getBatch, the windowed-agg batch run,
-    *    state-store update/commit, offset-log commits — reported in
-    *    `breakdown_ms` from the engine's own progress metrics.
+    * RocksDB store, checkpointed to local disk: ALL data is staged into
+    * the MemoryStream before the query starts, then one
+    * `Trigger.AvailableNow` run drains it. Feed cost is excluded by
+    * construction; what remains is the engine: planning, source
+    * getBatch, the windowed-agg batch run, state-store update/commit,
+    * offset-log commits — reported in `breakdown_ms` from the engine's
+    * own progress metrics.
     */
-  private[graft] def streamingBench(spark: SparkSession, total: Int,
-      waves: Option[Int], keyMod: Long = 100L): StreamResult = {
+  private[graft] def streamingBench(spark: SparkSession): StreamResult = {
     import java.sql.Timestamp
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -364,60 +364,33 @@ object Bench {
     // library; tmpfs keeps the full commit code path (changelog write,
     // snapshot, version files) while removing the local-disk lottery.
     val ckptDir = graft.streaming.Scratch.dir("graft-bench-ckpt")
-    val ckpt = ckptDir.toString
     def mkData(base: Long, n: Int): Seq[(Timestamp, Long, Long)] =
       (0 until n).map { i =>
         val t = (base + i) * 10L // 10 ms apart -> ~100 windows/key/chunk
-        // keyMod scales STATE SIZE independently of row count: state
-        // rows ≈ windows × keys = (total/1000) × keyMod, so keyMod
-        // 100→400 is a 4× state-size probe under the same feed (the
-        // MemoryStream heap ceiling pins total; state must scale some
-        // other way)
-        (new Timestamp(t), (base + i) % keyMod, 1L)
+        (new Timestamp(t), (base + i) % 100L, 1L)
       }
     val wall0 = System.nanoTime()
     try {
-      waves match {
-        case Some(chunks) =>
-          val q = agg.writeStream.outputMode("append").format("noop")
-            .option("checkpointLocation", ckpt).start()
-          try {
-            val perChunk = total / chunks
-            var c = 0
-            while (c < chunks) {
-              // last chunk carries the remainder so exactly `total` rows
-              // feed (an under-feed leaves the drain wait spinning its
-              // full deadline on every run)
-              val n = if (c == chunks - 1) total - perChunk * (chunks - 1)
-                      else perChunk
-              input.addData(mkData(c.toLong * perChunk, n))
-              q.processAllAvailable()
-              c += 1
-            }
-          } finally q.stop()
-        case None =>
-          // stage everything first, in blocks (MemoryStream offsets are
-          // per addData call), THEN start: the engine runs flat-out
-          val blocks = 10
-          val perBlock = total / blocks
-          (0 until blocks).foreach { b =>
-            val n = if (b == blocks - 1) total - perBlock * (blocks - 1)
-                    else perBlock
-            input.addData(mkData(b.toLong * perBlock, n))
-          }
-          val q = agg.writeStream.outputMode("append").format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+      // stage everything first, in blocks (MemoryStream offsets are per
+      // addData call), THEN start: the engine runs flat-out
+      val blocks = 10
+      val perBlock = LegRows / blocks
+      (0 until blocks).foreach { b =>
+        val n = if (b == blocks - 1) LegRows - perBlock * (blocks - 1)
+                else perBlock
+        input.addData(mkData(b.toLong * perBlock, n))
       }
+      agg.writeStream.outputMode("append").format("noop")
+        .option("checkpointLocation", ckptDir.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
     } finally {
       // drain BEFORE detaching: progress events are posted async, and a
       // removed listener never receives the tail batch's event — the
       // primary streaming metrics would silently undercount it (and the
       // old post-remove wait could only ever time out)
       val deadline = System.nanoTime() + 5000000000L
-      while (m.totalRows < total && System.nanoTime() < deadline)
+      while (m.totalRows < LegRows && System.nanoTime() < deadline)
         Thread.sleep(50)
       graft.streaming.Measure.remove(spark, m)
     }
@@ -432,21 +405,11 @@ object Bench {
       org.apache.spark.sql.execution.streaming.state.StateStore.stop())
     // the per-run checkpoint (RocksDB SSTs + changelogs) is dead after
     // the run — delete so repeats don't accumulate in /tmp
-    scala.util.Try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    graft.streaming.StreamingRun.deleteTree(ckptDir)
     StreamResult(m.totalRows, m.totalSeconds, m.recordsPerSec,
       m.totalBatches, wallSec, m.durationBreakdownMs, m.batchLatencyMs)
   }
 
-  /** `warmups` UNTIMED runs then `repeats` measured runs — same
-    * protocol as the batch queries. The warm-up is what makes the spread
-    * honest: cold streaming runs pay RocksDB JNI load, codegen, and
-    * shuffle-infra warmup (observed: 37k→54k→81k rec/s monotone across
-    * three cold runs; the big-batch AvailableNow shape keeps climbing
-    * for ~4 runs), which is JVM amortization, not engine variance. */
   /** JMH-style inter-iteration hygiene: force collection of the
     * previous run's garbage (each run strands ~40 MB of MemoryStream
     * blocks + listener events) OUTSIDE the next measured window. Without
@@ -454,40 +417,43 @@ object Bench {
     * (observed: one 30.9k rec/s run in a leg of 77-114k). */
   private def gcSettle(): Unit = { System.gc(); Thread.sleep(200) }
 
-  private[graft] def streamingLeg(spark: SparkSession, total: Int,
-      waves: Option[Int], repeats: Int = 3, warmups: Int = 1,
-      dropFirst: Boolean = false): LegSummary = {
-    // `warmups` is the FLOOR: keep running untimed until the last two
-    // warm-up runs agree within 15% (cap warmups+4), so a JVM that is
+  /** [[LegWarmups]] UNTIMED runs then [[LegRepeats]] + 1 measured runs
+    * — the batch queries' protocol. The warm-up is what makes the
+    * spread honest: cold streaming runs pay RocksDB JNI load, codegen,
+    * and shuffle-infra warmup (observed: 37k→54k→81k rec/s monotone
+    * across three cold runs; the big-batch AvailableNow shape keeps
+    * climbing for ~4 runs), which is JVM amortization, not engine
+    * variance. */
+  private[graft] def streamingLeg(spark: SparkSession): LegSummary = {
+    // LegWarmups is the FLOOR: keep running untimed until the last two
+    // warm-up runs agree within 15% (cap LegWarmups+4), so a JVM that is
     // still climbing (observed: monotone 14k→67k rec/s across 5 "timed"
     // runs on a cold session) spends its ramp outside the measured
     // window instead of inflating rps_spread.
     var prev = 0.0
-    var cur = streamingBench(spark, total, waves).rps
+    var cur = streamingBench(spark).rps
     var n = 1
-    while (n < warmups + 4 &&
-        (n < warmups || math.abs(cur - prev) > 0.15 * cur)) {
+    while (n < LegWarmups + 4 &&
+        (n < LegWarmups || math.abs(cur - prev) > 0.15 * cur)) {
       prev = cur
-      cur = streamingBench(spark, total, waves).rps
+      cur = streamingBench(spark).rps
       n += 1
     }
-    // `dropFirst`: measure repeats+1 runs and UNCONDITIONALLY discard
-    // run 1, recording its rps. The warm-up above runs the identical
-    // leg, yet a first-touch session has still shown run 1 at ~half
-    // the plateau (r13 driver run: 51.8k vs ~100k for runs 2-5 —
-    // residual provider/page-cache state the convergence test can
-    // declare "agreed" on while the timed path still has one cold
-    // step left). Dropping run 1 BY PROTOCOL is selection-effect-free
-    // (the discard does not depend on the value; the value ships in
+    // measure LegRepeats+1 runs and UNCONDITIONALLY discard run 1,
+    // recording its rps. The warm-up above runs the identical leg, yet
+    // a first-touch session has still shown run 1 at ~half the plateau
+    // (an r13 record: 51.8k vs ~100k for runs 2-5 — residual
+    // provider/page-cache state the convergence test can declare
+    // "agreed" on while the timed path still has one cold step left).
+    // Dropping run 1 BY PROTOCOL is selection-effect-free (the discard
+    // does not depend on the value; the value ships in
     // discarded_cold_first_rps), unlike dropping it only when slow.
     def leg(): LegSummary = {
-      val runs = (1 to (if (dropFirst) repeats + 1 else repeats)).map { _ =>
+      val runs = (0 to LegRepeats).map { _ =>
         gcSettle()
-        streamingBench(spark, total, waves)
+        streamingBench(spark)
       }
-      if (dropFirst)
-        LegSummary(runs.tail, coldFirstRps = Some(runs.head.rps))
-      else LegSummary(runs)
+      LegSummary(runs.tail, coldFirstRps = runs.head.rps)
     }
     // same transient-stall policy as the batch cells: a leg whose
     // max/min rps exceeds 2x caught a host stall in one of its runs —
@@ -509,16 +475,16 @@ object Bench {
     }
   }
 
-  /** Force every output column to be computed: hash each row across all
-    * columns, sum the hashes. One cheap partial-agg on top of the query's
-    * own plan; nothing is prunable. */
-  private[graft] def checksum(df: DataFrame): Unit = {
-    // double sum: immune to ANSI long-overflow on summed hashes
+  /** Force every output column to be computed and fold the answer into
+    * one digest: hash each row across all columns, sum the hashes' low
+    * 32 bits as a long. One cheap partial-agg on top of the query's own
+    * plan; nothing is prunable. The integer sum is independent of row
+    * order and partitioning, cannot overflow below 2³¹ rows, and reads
+    * 0 on empty output. */
+  private[graft] def checksum(df: DataFrame): Long =
     df.select(xxhash64(df.columns.map(c => col(c).cast("string")): _*)
-        .cast("double").as("h"))
-      .agg(sum(col("h"))).collect()
-    ()
-  }
+        .bitwiseAND(lit(0xFFFFFFFFL)).as("h"))
+      .agg(coalesce(sum(col("h")), lit(0L))).collect()(0).getLong(0)
 
   // ---- contention sentinel ----
 
@@ -566,8 +532,8 @@ object Bench {
     val only = Harness.only
     // Every retry, injected or not, is ledgered by TaskFailureTracker.
     // NOTE (r21): the RocksDB provider conf is NOT set session-wide any
-    // more — it is scoped to the streaming THROUGHPUT legs below (see
-    // the conf scope around them). Session-wide RocksDB made every
+    // more — it is scoped to the streaming THROUGHPUT leg below (see
+    // the conf scope around it). Session-wide RocksDB made every
     // default-provider oracle drain (k12/k13/w18/w22/… — rows whose
     // documented contract is the session-default HDFSBackedStateStore,
     // in deliberate contrast to the k14/k15/w21/w23 rows that pin
@@ -620,30 +586,34 @@ object Bench {
       math.rint((System.nanoTime() - benchT0) / 1e9 * 100) / 100
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // (min, median, max) of the 3 warm runs: the median is the tracked
-    // number, the dispersion is the per-cell trust signal — a cell whose
-    // max/min exceeds 2 was measured under interference (adjudicated
-    // examples: dd4 r7/r8 ~10x, x2/o1 r9 ~5x) and flags the artifact.
+    // cells whose warm-up and timed runs returned different digests, over
+    // every pass (informational: never sets warn)
+    val nondeterministic = scala.collection.mutable.LinkedHashSet[String]()
+    // (min, median, max) of the 3 warm runs plus the answer's digest: the
+    // median is the tracked number, the dispersion is the per-cell trust
+    // signal — a cell whose max/min exceeds 2 was measured under
+    // interference (adjudicated examples: dd4 r7/r8 ~10x, x2/o1 r9 ~5x)
+    // and flags the artifact.
     def measureOne(name: String,
         fn: (org.apache.spark.sql.SparkSession, String) => DataFrame)
-        : Option[(Double, Double, Double)] =
+        : Option[Cell] =
       try {
         taskFailures.current = name
-        checksum(fn(spark, sfDir)) // warm-up: JVM/codegen/file-cache
-        val times = (1 to 3).map { _ =>
+        val digest = checksum(fn(spark, sfDir)) // warm-up: JVM/codegen/file-cache
+        val runs = (1 to 3).map { _ =>
           val t0 = System.nanoTime()
-          checksum(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        Some((times(0), times(1), times(2)))
+          val d = checksum(fn(spark, sfDir))
+          ((System.nanoTime() - t0) / 1e9, d)
+        }
+        if (runs.exists(_._2 != digest)) nondeterministic += name
+        val times = runs.map(_._1).sorted
+        Some(Cell(times(0), times(1), times(2), digest))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] FAILED $name: $e")
           errors(name) = e.getClass.getSimpleName
           None
       }
-    def spreadOf(v: (Double, Double, Double)): Double =
-      if (v._1 > 0) v._3 / v._1 else 0.0
     val startSec = scala.collection.mutable.LinkedHashMap[String, Double]()
     val runOrder = scala.collection.mutable.ArrayBuffer[String]()
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -665,40 +635,37 @@ object Bench {
     // first_pass_times, whether or not the re-measure replaced it —
     // round-over-round comparison can then detect systematic selection
     // effects in the keep-the-cleaner policy (ADVICE r10)
-    val firstPassTimes =
-      scala.collection.mutable.LinkedHashMap[String, (Double, Double, Double)]()
+    val firstPassTimes = scala.collection.mutable.LinkedHashMap[String, Cell]()
     val remeasureStartSec =
       scala.collection.mutable.LinkedHashMap[String, Double]()
     val results = firstPass.map { case (name, v) =>
-      if (spreadOf(v) > 2.0) {
+      if (v.spread > 2.0) {
         remeasured += name
         firstPassTimes(name) = v
         remeasureStartSec(name) = offNow()
         val fn = SparkEntry.queries(name)
         measureOne(name, fn) match {
-          case Some(v2) if spreadOf(v2) < spreadOf(v) => name -> v2
+          case Some(v2) if v2.spread < v.spread => name -> v2
           case _ => name -> v
         }
       } else name -> v
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v._2 }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.median }
       .mkString("{", ",", "}")
     val qtimes = results.map { case (k, v) =>
-      val spread = if (v._1 > 0) v._3 / v._1 else 0.0
-      s""""$k":{"min":${v._1},"median":${v._2},"max":${v._3},"spread":$spread,"start_sec":${startSec.getOrElse(k, -1.0)}}"""
+      s""""$k":{"min":${v.min},"median":${v.median},"max":${v.max},"spread":${v.spread},"start_sec":${startSec.getOrElse(k, -1.0)},"digest":${v.digest}}"""
     }.mkString("{", ",", "}")
-    val dispersed = results.collect {
-      case (k, v) if v._1 > 0 && v._3 / v._1 > 2.0 => k }
+    val dispersed = results.collect { case (k, v) if v.spread > 2.0 => k }
     val es = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2._2).sum
-    // Release batch-section residue before the streaming legs: the query
+    val total = results.map(_._2.median).sum
+    // Release batch-section residue before the streaming leg: the query
     // repeats leave localCheckpoint RDDs (the dd9/dd11/x14/x16/pl1/pl3
     // stage boundaries) and cached relations pinned in the block
     // manager, and that heap pressure lands inside the streaming window
     // (observed: AvailableNow runs decaying 99k→63k rec/s across the 5
     // repeats once the round-13 queries joined the batch set). The
-    // streaming legs must measure the engine, not the batch section's
+    // streaming leg must measure the engine, not the batch section's
     // shadow. Safe: every checkpointed DataFrame is dead after its
     // timed runs, and the block-volume section builds fresh plans.
     if (only.isEmpty) {
@@ -707,81 +674,26 @@ object Bench {
         .foreach(r => scala.util.Try(r.unpersist(blocking = true)))
       System.gc()
     }
-    val rocksDb = Application.backendConfs("rocksdb")
     val streamingStart = offNow()
     var streamRps: Option[Double] = None
     val streaming =
       if (only.isEmpty)
         try {
           taskFailures.current = "streaming_legs"
-          // RocksDB + changelog for the throughput legs and the state
-          // curve ONLY (production micro-batch cadence commits the
-          // per-batch delta, not a full snapshot per partition per
-          // batch). The oracle rows above run the provider their
-          // contract documents; these legs keep their historical
-          // RocksDB protocol.
-          Application.withConfs(spark, rocksDb) {
-            // leg 1 (historical comparability): 5-wave feed-and-wait
-            val w = streamingLeg(spark, total = 500000, waves = Some(5))
-            // leg 2 (PRIMARY): pre-staged AvailableNow — engine-only.
-            // 5 repeats: each run is ~5 s, and the median of 5 holds
-            // still under the ±25% scheduling/GC graininess that a 5 s
-            // 32-thread job cannot amortize away
-            val a = streamingLeg(spark, total = 500000, waves = None,
-              repeats = 5, warmups = 3, dropFirst = true)
+          // RocksDB + changelog for the throughput leg ONLY (production
+          // micro-batch cadence commits the per-batch delta, not a full
+          // snapshot per partition per batch). The oracle rows above run
+          // the provider their contract documents; this leg keeps its
+          // historical RocksDB protocol.
+          Application.withConfs(spark, Application.backendConfs("rocksdb")) {
+            val a = streamingLeg(spark)
             streamRps = Some(a.median.rps)
-            s""","streaming":${w.json},"streaming_availablenow":${a.json}"""
+            s""","streaming_availablenow":${a.json}"""
           }
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] streaming leg FAILED: $e")
-            s""","streaming":{"error":"${e.getClass.getSimpleName}"}"""
-        }
-      else ""
-    // Two-point STATE-SIZE curve for the wave leg's stateCommit bound
-    // (the r13 open question): the wave protocol re-measured at 1× and
-    // 4× state (state rows ≈ waves·windows·keys; keys 100 → 400) with
-    // RocksDB changelog checkpointing ON and OFF. The r14 order-robust
-    // knob probe (two-pass reversed, 6 runs/cell) showed
-    // changelog ON wins at BOTH sizes (1×: 39.9k vs 30.9k median rps,
-    // cumulative stateCommit 166 s vs 272 s; 4×: 43.3k vs 38.1k,
-    // 147 s vs 215 s) — ON stays the default, and the wave leg's
-    // remaining gap to AvailableNow is the per-microbatch state commit
-    // whose cost scales with state under EITHER strategy, not a knob
-    // left on the table. This section keeps that receipt in every
-    // round's artifact so a regression in either cell is visible.
-    val stateCurveStart = offNow()
-    val stateCurve =
-      if (only.isEmpty)
-        try {
-          taskFailures.current = "state_size_curve"
-          // the curve's changelog ON/OFF contrast is only meaningful
-          // under the RocksDB provider, which every run here sets itself
-          // (ADVICE r21: never rely on another section's residue)
-          // one untimed keys-400 run so the first 4×-state timed cell
-          // doesn't pay the larger state's cold step
-          Application.withConfs(spark, rocksDb) {
-            streamingBench(spark, 500000, Some(5), 400L)
-          }
-          def cell(keys: Long, changelog: Boolean): String = {
-            // the later changelog pair overrides rocksDb's
-            val runs = Application.withConfs(spark,
-                rocksDb :+ (Application.ChangelogKey -> changelog.toString)) {
-              (1 to 3).map { _ =>
-                gcSettle()
-                streamingBench(spark, 500000, Some(5), keys)
-              }
-            }
-            s""""keys${keys}_changelog_${if (changelog) "on" else "off"}":""" +
-              LegSummary(runs).json
-          }
-          val cells = Seq(cell(100L, true), cell(100L, false),
-            cell(400L, true), cell(400L, false)).mkString(",")
-          s""","state_size_curve":{"protocol":"wave5_500k_rows","cells":{$cells}}"""
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] state-size curve FAILED: $e")
-            ""
+            s""","streaming_availablenow":{"error":"${e.getClass.getSimpleName}"}"""
         }
       else ""
     // blocked-pairwise pair volumes at this SF (quadratic-creep canary),
@@ -882,23 +794,28 @@ object Bench {
         s"loadavg start ${loadStart.head} on $cores cores, dispersed " +
         s"queries [${dispersed.mkString(",")}] — numbers in this " +
         "artifact are suspect; re-run on a quiet machine")
+    if (nondeterministic.nonEmpty)
+      System.err.println(s"[bench] digests disagree across runs of " +
+        s"[${nondeterministic.mkString(",")}] (informational)")
     val fpt = firstPassTimes.map { case (k, v) =>
-      s""""$k":{"min":${v._1},"median":${v._2},"max":${v._3}}"""
+      s""""$k":{"min":${v.min},"median":${v.median},"max":${v.max}}"""
     }.mkString("{", ",", "}")
+    def strs(xs: Iterable[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val sentinel =
       s""","query_times":$qtimes,""" +
+        s""""nondeterministic_queries":${strs(nondeterministic)},""" +
         s""""sentinel":{"loadavg_start":${loadStart.mkString("[", ",", "]")},""" +
         s""""loadavg_end":${loadEnd.mkString("[", ",", "]")},""" +
         s""""calib_start_sec":$calibStart,"calib_end_sec":$calibEnd,""" +
         s""""calib_drift":$drift,"machine_cores":$cores,""" +
-        s""""dispersed_queries":${dispersed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""remeasured_queries":${remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""dispersed_queries":${strs(dispersed)},""" +
+        s""""remeasured_queries":${strs(remeasured)},""" +
         s""""first_pass_times":$fpt,""" +
-        s""""run_order":${runOrder.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""run_order":${strs(runOrder)},""" +
         s""""remeasure_start_sec":${remeasureStartSec.map { case (k, v) =>
           "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
         s""""section_start_sec":{"batch":0.0,"streaming":$streamingStart,""" +
-        s""""state_size_curve":$stateCurveStart,""" +
         s""""block_volume":$blockVolStart,"calib_end":$calibEndStart},""" +
         s""""contention_warning":$contended}""" +
         s""","task_failures":${taskFailures.json}""" +
@@ -911,9 +828,9 @@ object Bench {
     val perfRegs = prevRecord match {
       case Some((prevMedians, prevWarn)) if only.isEmpty =>
         val regressed = results.collect {
-          case (k, v) if prevMedians.get(k).exists(isRegression(_, v._2)) =>
+          case (k, v) if prevMedians.get(k).exists(isRegression(_, v.median)) =>
             val p = prevMedians(k)
-            f""""$k":{"prev":$p%.3f,"now":${v._2}%.3f,"ratio":${v._2 / p}%.2f}"""
+            f""""$k":{"prev":$p%.3f,"now":${v.median}%.3f,"ratio":${v.median / p}%.2f}"""
         }
         if (regressed.nonEmpty)
           System.err.println(s"[bench] PERF REGRESSION vs previous " +
@@ -923,126 +840,63 @@ object Bench {
       case _ => ""
     }
 
-    // standing notes the artifact should carry (cost trades + env
-    // limits). The streaming / block-volume narratives are emitted ONLY
-    // when those sections actually ran — a SPARK_GRAFT_ONLY spot run
-    // must not carry a full-run story (and marks itself "filtered").
-    // Notes stay TERSE: the artifact is one JSON line, and the driver's
-    // round capture truncated r9's line mid-notes (ADVICE r9) — every
-    // narrative below is one sentence, the full story lives in git.
-    val sentinelNote =
-      (if (contended) "CONTENTION WARNING: load/drift/dispersion " +
-        "detected - treat every number here as suspect and re-run. " else "") +
-      "sentinel: r6-r9 records were contamination-adjudicated; this run " +
-      "flags itself on symmetric 1.3x calib drift, loadavg_start>1.0, " +
-      "or any query's max/min>2 across its 3 runs (query_times). Cells " +
-      "hit by a transient stall are re-measured once post-run " +
-      "(remeasured_queries, original triples kept in first_pass_times); " +
-      "dispersed_queries lists cells whose FINAL measurement still " +
-      "exceeds 2x. task_failures ledgers every retried/failed task by " +
-      "(query, failure class) - the clean-record bar is EMPTY (a retry " +
-      "contaminates its cell's timing and may name a lost-block " +
-      "recompute hazard); task_failures_injected ledgers the w24/w26 " +
-      "rows' DELIBERATE InjectedTaskFault retries, expected non-empty " +
-      "for exactly those queries; perf_regressions machine-checks " +
-      "carried cells vs the previous committed record (>1.5x AND " +
-      ">0.3s), same-SF baselines only. "
-    val streamingNote = if (only.isEmpty)
-      "streaming_availablenow (median of 5 in-process runs, untimed " +
-      "warm-ups, tmpfs checkpoints, providers unloaded between runs) is " +
-      "the PRIMARY streaming metric - engine-only; the 5-wave leg is " +
-      "historical-comparability only (harness-bound). RocksDB+changelog " +
-      "stays default: knob probe showed no order-robust win, and 100TB " +
-      "keyed state cannot re-snapshot per batch. " else ""
-    val blockNote = if (only.isEmpty)
-      "block_volume = exact candidate pairs per blocked query at this " +
-      "SF; block_volume_scaling = the same blocking on a 10x perturbed " +
-      "self-union, with the measured pairs growth exponent (~1 spreads " +
-      "with the corpus, ~2 is in-block quadratic creep - expected for " +
-      "dd4's near-constant-cardinality (lang,source,len_band) blocking, " +
-      "which is why dd4 carries maxPairsPerBlock and the unbounded path " +
-      "is dd2/dd3). The scaled corpus gives EVERY doc ~9 near-copies, " +
-      "so dd2's per-document banding shows the inherent pairs contract " +
-      "(copy pairs are true candidates); dd3's distinct-signature " +
-      "banding is the scheme-creep measure and stays ~1 on the same " +
-      "corpus - the r10 compaction fix, proven empirically. dd4 is not " +
-      "comparable with r6-, dd3 not with r9-. dd14 (batch x prior band " +
-      "join, both sides scaled) and sim9 (multiprobe bucket self-join, " +
-      "totalPairs includes the N self-matches) saturate BOTH totalPairs " +
-      "and max_block on the self-union by the same planted-copy " +
-      "contract (copies share buckets by construction, so the hot " +
-      "bucket's two sides each scale with copies); dd14's scheme " +
-      "receipt is its own _realistic row (salted sparse-dup prior, " +
-      "batch = planted re-crawls + re-salted novel docs, ~1.0 " +
-      "exponent) and sim9's is its own _realistic row - " +
-      "organic 10x growth (subsample " +
-      "vs full table) with the production nPlanes knob scaled " +
-      "8 -> 12, measured exponent ~1.47, residual above 1 = multiprobe " +
-      "fanout (13/9) + the corpus's cluster mass (near-identical " +
-      "vectors share a bucket at any plane count; mitigation is " +
-      "upstream compaction dd5/dd9, not more planes). Each entry " +
-      "carries a machine-checked health verdict (ok / " +
-      "expected-saturated / regressed / degenerate) from the declared " +
-      "per-canary rule (CanaryHealth, spec-pinned) - any 'regressed' " +
-      "is a real scheme change, not a re-adjudication call. " else ""
-    val dd3Note =
-      "dd3 r10 changes: token hash widened to fill all 61 signature " +
-      "bits (the old fold left bits 30-60 zero - whole corpus in one " +
-      "Manku bucket) and identical signatures compact before banding " +
-      "(hamming-0 pairs emit from membership, only DISTINCT sigs band, " +
-      "corpus shuffles once into two reused exchanges); pair counts " +
-      "differ from r9. "
-    val dd9Note =
-      "dd9 r12 changes: overgrown cells split by one level of in-cell " +
-      "k-means on mean-centered residuals before the pairwise pass - " +
-      "10x pairs exponent 1.62 -> 1.02, max cell 46 -> 76 at 10x (was " +
-      "300 -> 2162). The split's extra pass is the price of the " +
-      "bounded scale curve; the r12 single-evaluation materialization " +
-      "(assignment/residual/split localCheckpoints) absorbs most of it " +
-      "(clean r13 median ~3.6s vs r10's 3.4s pre-split); wall times " +
-      "not comparable with r11-. "
-    val notes = sentinelNote + streamingNote + blockNote + dd3Note + dd9Note +
-      "kafka e2e: permanent-partial (FINAL, r7) - no spark-sql-kafka " +
-      "jar and no egress in this container; wrappers and wire " +
-      "projections are broker-less tested and bind to the standard " +
-      "connector unchanged on a real cluster."
+    val notes =
+      if (contended) "CONTENTION WARNING: load/drift/dispersion detected - " +
+        "treat every number here as suspect and re-run."
+      else ""
     val filtered = if (only.isEmpty) "" else ""","filtered":true"""
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es$streaming$stateCurve$blockVol$sentinel$perfRegs$filtered,"sf":"$sfDir","notes":"$notes"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es$streaming$blockVol$sentinel$perfRegs$filtered,"sf":"$sfDir","notes":"$notes"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_result.json"), fullJson)
-    // Compact stdout line (see class doc for why ≤ 1600 chars): total,
-    // warn flag, primary streaming rps, error COUNT (+ first few names),
-    // and the slowest-10 query medians — NOT all queries; the all-query
-    // line plus sbt's ~300-char trailer overflowed the driver's
-    // 2000-char tail capture every round since r4. Stdout medians are
-    // display-only (2 decimals); comparisons read bench_result.json.
+    println(compactLine(results.map { case (k, v) => k -> v.median }, total,
+      errors.keys.toSeq, streamRps, filtered = only.nonEmpty,
+      warn = contended, sfDir))
+    spark.stop()
+  }
+
+  /** One bench cell: the (min, median, max) seconds of its 3 timed runs
+    * and the digest ([[checksum]]) of its warm-up run. */
+  private[graft] final case class Cell(min: Double, median: Double,
+      max: Double, digest: Long) {
+    def spread: Double = if (min > 0) max / min else 0.0
+  }
+
+  /** The compact stdout line (see the object doc for why ≤ 1600 chars):
+    * total, warn flag, primary streaming rps, error COUNT (+ first few
+    * names), and the slowest-10 query medians — NOT all queries; the
+    * all-query line plus sbt's ~300-char trailer overflowed a 2000-char
+    * stdout tail capture every round since r4. Stdout medians are
+    * display-only (2 decimals); comparisons read bench_result.json. */
+  private[graft] def compactLine(medians: Seq[(String, Double)],
+      total: Double, errorNames: Seq[String], streamRps: Option[Double],
+      filtered: Boolean, warn: Boolean, sfDir: String): String = {
     def short(v: Double): String = {
       val s = "%.2f".formatLocal(java.util.Locale.ROOT, v)
       val t = s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
       if (t.isEmpty || t == "-") "0" else t
     }
-    val bySlowest = results.sortBy(-_._2._2)
+    val bySlowest = medians.sortBy(-_._2)
     val errShort =
-      if (errors.isEmpty) s""","errors_n":0"""
-      else s""","errors_n":${errors.size},"errors_first":${errors.keys.take(5)
+      if (errorNames.isEmpty) s""","errors_n":0"""
+      else s""","errors_n":${errorNames.size},"errors_first":${errorNames.take(5)
         .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     val rpsShort = streamRps.map(r => s""","stream_rps":${r.toLong}""").getOrElse("")
-    def compactLine(n: Int): String = {
+    val filteredShort = if (filtered) ""","filtered":true""" else ""
+    def line(n: Int): String = {
       val qsShort = bySlowest.take(n)
-        .map { case (k, v) => "\"" + k + "\":" + short(v._2) }
+        .map { case (k, v) => "\"" + k + "\":" + short(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${short(total)},"unit":"sec","queries":$qsShort,"queries_run":${results.size},"slowest_n":$n$errShort$rpsShort$filtered,"warn":$contended,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${short(total)},"unit":"sec","queries":$qsShort,"queries_run":${medians.size},"slowest_n":$n$errShort$rpsShort$filteredShort,"warn":$warn,"sf":"$sfDir"}"""
     }
     // trim loop, not a warning: the bound holds by construction even if
     // query names grow or a pathological run floods errors_first
     var nShow = math.min(10, bySlowest.size)
-    var compact = compactLine(nShow)
+    var compact = line(nShow)
     while (compact.length > 1600 && nShow > 0) {
       nShow -= 1
-      compact = compactLine(nShow)
+      compact = line(nShow)
     }
-    println(compact)
-    spark.stop()
+    compact
   }
 }

@@ -9,8 +9,8 @@ import graft.api.{AppConf, Application}
 object Harness {
 
   /** `$SPARK_GRAFT_CPUS` (default 4): local task slots and shuffle
-    * partitions. */
-  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+    * partitions. See [[cpusOf]]. */
+  val cpus: Int = cpusOf(sys.env.get("SPARK_GRAFT_CPUS"))
 
   /** `$SPARK_GRAFT_SF_DIR`: the testdata scale factor Bench and Probe
     * read (default `~/testdata/sf0.1`, the bench scale). */
@@ -40,6 +40,15 @@ object Harness {
         s"queries: ${skipped.mkString(",")}")
       names
     }
+
+  /** Parse a slot count (default 4). A typo or a non-positive value
+    * fails naming the variable, before Spark ever sees `local[0,2]`. */
+  private[graft] def cpusOf(raw: Option[String]): Int = raw.fold(4) { r =>
+    val n = r.trim.toIntOption
+    require(n.exists(_ > 0),
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$r'")
+    n.get
+  }
 
   /** The harness session conf for `n` slots: `local[n,2]` allows one
     * task retry (production clusters run `spark.task.maxFailures=4`;

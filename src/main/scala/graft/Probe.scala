@@ -20,13 +20,15 @@ import graft.api.Application
   *    ALTERNATING the variants within one JVM so slow JIT/host drift
   *    hits both sides equally: one untimed warm pair, then `reps`
   *    A-then-B pairs and a final reversed pair; prints per-variant
-  *    min/median and every run's wall seconds.
+  *    min/median, every run's wall seconds and the distinct digests
+  *    ([[Bench.checksum]]) — two digests mean the variant changed the
+  *    answer or the cell is not deterministic.
   *  - `profile` splits each run's wall time into build (the query
   *    function: eager driver work — streaming cells drain here), plan
   *    (analysis + optimization + physical planning, serial driver work
   *    the bench cell pays on every repeat) and execute, one warm run
-  *    plus `reps`. `$SPARK_GRAFT_PROBE_JOBS=1` adds per-stage task
-  *    counts and per-job wall time.
+  *    plus `reps`, each with its digest. `$SPARK_GRAFT_PROBE_JOBS=1`
+  *    adds per-stage task counts and per-job wall time.
   *  - `drain` prints, for every micro-batch of a STREAMING cell, the
   *    engine's phase split (addBatch, queryPlanning, walCommit +
   *    commitOffsets, getBatch + latestOffset) and each stateful
@@ -81,26 +83,28 @@ object Probe {
       }.toSeq
     args.queries.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def run(b: Boolean): Double = {
+      def run(b: Boolean): (Double, Long) = {
         val t0 = System.nanoTime()
-        Application.withConfs(spark, if (b) confs else Nil) {
+        val d = Application.withConfs(spark, if (b) confs else Nil) {
           Bench.checksum(fn(spark, Harness.sfDir))
         }
-        secs(t0)
+        (secs(t0), d)
       }
       run(false); run(true) // one untimed warm pair
       val order = (1 to args.reps.getOrElse(3)).flatMap(_ => Seq(false, true)) ++
         Seq(true, false)
       val times = order.map(b => b -> run(b))
       def f(b: Boolean) = {
-        val xs = times.collect { case (`b`, t) => t }.sorted
+        val xs = times.collect { case (`b`, (t, _)) => t }.sorted
+        val ds = times.collect { case (`b`, (_, d)) => d }.distinct
         // true median: each variant collects reps+1 samples (an even
         // count), and the upper-middle element biased the A/B medians
         // decisions are read from (ADVICE r21)
         val med =
           if (xs.size % 2 == 1) xs(xs.size / 2)
           else (xs(xs.size / 2 - 1) + xs(xs.size / 2)) / 2.0
-        f"min=${xs.head}%.2f med=$med%.2f all=[${xs.map(x => f"$x%.2f").mkString(",")}]"
+        f"min=${xs.head}%.2f med=$med%.2f all=[${xs.map(x => f"$x%.2f").mkString(",")}]" +
+          s" digest=${ds.mkString("/")}"
       }
       println(s"[$name] A(default) ${f(false)}")
       println(s"[$name] B(confs)   ${f(true)}")
@@ -135,10 +139,10 @@ object Probe {
         df.queryExecution.executedPlan
         val tPlan = secs(t1) * 1e3
         val t2 = System.nanoTime()
-        Bench.checksum(df)
+        val digest = Bench.checksum(df)
         val tExec = secs(t2) * 1e3
         val tag = if (i == 0) "warm" else s"r$i"
-        println(f"[$name%-28s $tag%4s] build=$tBuild%8.1fms plan=$tPlan%8.1fms exec=$tExec%8.1fms")
+        println(f"[$name%-28s $tag%4s] build=$tBuild%8.1fms plan=$tPlan%8.1fms exec=$tExec%8.1fms digest=$digest")
       }
     }
   }

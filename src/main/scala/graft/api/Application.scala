@@ -36,7 +36,7 @@ case class AppConf(
 object Application {
 
   val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  val ChangelogKey =
+  private val ChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
   /** The RocksDB state-store provider class — the provider a production

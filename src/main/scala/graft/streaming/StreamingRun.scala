@@ -1361,7 +1361,7 @@ object StreamingRun {
 
   /** Best-effort recursive delete (reverse walk order: children first);
     * silently tolerates a missing or concurrently-removed path. */
-  private[streaming] def deleteTree(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
     scala.util.Try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Dedup.BlockVolume
+import org.apache.spark.sql.functions.lit
 
 /** Pins the block_volume_scaling health machinery: every emitted canary
   * must carry a declared expected-shape rule (adding a canary without
@@ -118,6 +119,44 @@ class BenchCanarySpec extends SparkTestBase {
     assert(Bench.parsePrevRecord(rec, "x").nonEmpty)
     assert(Bench.parsePrevRecord(rec, "y").isEmpty)
     assert(Bench.parsePrevRecord(rec).nonEmpty) // no sf given: legacy path
+  }
+
+  test("checksum: one Long digest per answer, blind to row order and partitioning") {
+    import spark.implicits._
+    val rows = (1 to 200).map(i => (i.toLong, s"s$i", i * 0.5))
+    def digest(rs: Seq[(Long, String, Double)], parts: Int): Long =
+      Bench.checksum(spark.sparkContext.parallelize(rs, parts)
+        .toDF("a", "b", "c"))
+    val d = digest(rows, 1)
+    assert(d > 0L)
+    assert(digest(rows, 7) == d)
+    assert(digest(new scala.util.Random(7).shuffle(rows), 7) == d)
+    // one changed value changes the digest
+    assert(digest(rows.updated(17, (18L, "s18", 9.25)), 1) != d)
+    // empty output reads 0, not null
+    assert(Bench.checksum(rows.toDF("a", "b", "c").filter(lit(false))) == 0L)
+    // extreme values raise no ANSI overflow: each row adds < 2^32
+    val extremes = Seq.fill(100)(Seq(Long.MaxValue, Long.MinValue)).flatten
+    val e = Bench.checksum(spark.sparkContext.parallelize(extremes, 7).toDF("x"))
+    assert(e > 0L && e < extremes.size * (1L << 32), e)
+  }
+
+  test("compactLine: 152 results and 152 errors stay one JSON line of at most 1600 chars") {
+    val names = (1 to 152).map(i => f"q$i%03d_" + "x" * 34) // 39 chars
+    val line = Bench.compactLine(
+      names.zipWithIndex.map { case (n, i) => n -> i * 1.25 }, total = 1234.5,
+      errorNames = names, streamRps = Some(98765.4), filtered = false,
+      warn = true, sfDir = "/testdata/sf0.1")
+    assert(line.length <= 1600, line.length)
+    assert(!line.contains("\n"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    Seq("queries", "errors_n", "warn", "stream_rps", "sf")
+      .foreach(k => assert(json.has(k), s"$k missing from $line"))
+    assert(json.get("queries").size > 0)
+    assert(json.get("errors_n").asInt == 152)
+    assert(json.get("warn").asBoolean)
+    assert(json.get("stream_rps").asLong == 98765L)
+    assert(json.get("sf").asText == "/testdata/sf0.1")
   }
 
   test("TaskFailureTracker: empty ledger on a clean run, keyed counts otherwise") {

@@ -55,4 +55,13 @@ class HarnessSpec extends AnyFunSuite {
       Harness.onlyOf(Some("q1,stale_name"), known))
     assert(e.getMessage.contains("unknown queries: stale_name"), e.getMessage)
   }
+
+  test("SPARK_GRAFT_CPUS: unset means 4, a positive integer is trimmed, anything else fails naming the variable") {
+    assert(Harness.cpusOf(None) == 4)
+    assert(Harness.cpusOf(Some(" 8 ")) == 8)
+    Seq("x", "0", "-2").foreach { raw =>
+      val e = intercept[IllegalArgumentException](Harness.cpusOf(Some(raw)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
 }
