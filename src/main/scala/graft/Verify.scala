@@ -38,7 +38,7 @@ object Verify {
   }
 
   /** The scratch drains write checkpoints without checksum sidecars
-    * (`StreamingRun.drainChecksum`); the state-store READER then warns
+    * (`StreamingRun.DrainConfs`); the state-store READER then warns
     * once per state file that no sidecar exists before reading the file
     * normally — hundreds of identical benign lines per full verify run.
     * A message filter on that logger drops exactly that line; every

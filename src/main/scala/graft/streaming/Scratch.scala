@@ -20,7 +20,7 @@ package graft.streaming
   *
   * Scope: single-use dirs only — each is deleted by its creator at the
   * end of the call. The content-addressed staged-input caches
-  * (stageEventsOrdered etc.) stay in java.io.tmpdir: they persist
+  * (`StreamingRun.stage`) stay in java.io.tmpdir: they persist
   * across invocations and are read-mostly (page-cached after first
   * read), so tmpfs placement would spend memory for no measured win. */
 private[graft] object Scratch {

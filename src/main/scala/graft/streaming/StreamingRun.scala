@@ -94,98 +94,18 @@ object StreamingRun {
     else df.withColumns(ntz.map(n => n -> col(n).cast(TimestampType)).toMap)
   }
 
-  /** State-store partition count for the bounded oracle drains. A
-    * streaming query instantiates (and commits, every micro-batch) one
-    * state store per shuffle partition, so the partition count is THE
-    * state-sizing knob — and it is pinned into the checkpoint at first
-    * start, so it must be chosen for the KEYED-STATE volume, not
-    * inherited from the batch session's scan parallelism. The drains
-    * here hold ≤ a few hundred thousand state rows (measured: 32
-    * inherited partitions spend 1.8× the wall time of 8 on identical
-    * 600 k-row input — pure per-store fixed cost); a production
-    * deployment with TB-scale keyed state sets this high once at
-    * provisioning and the same plans run unchanged. r21: surfaced as
-    * the session conf `spark.graft.drainStatePartitions` (read at
-    * drain start) so provisioning sets it without a rebuild and the
-    * knob probes A/B in one session; the local default drops 8 → 4 on
-    * the alternating-variant probe receipt — ties for the single-store
-    * drains, and a consistent ~1.3× for w17's stream-stream join,
-    * whose symmetric exec commits FOUR stores per partition per batch
-    * (min 5.29 s vs 7.59 s, median 6.43 vs 8.33, same session). r22:
-    * re-probed 4-vs-8 on a QUIET 32-core window (loadavg 0.05 — the
-    * r21 driver artifact had flagged w17/w22/w25 regressions under its
-    * own contention warning): 4 ≤ 8 on every probed drain and
-    * decisively better on w17 (median 5.57 s vs 7.04 s), so 4 stays
-    * the local default. */
-  private val DrainPartitionsKey = "spark.graft.drainStatePartitions"
-  private def drainStatePartitions(s: SparkSession): Int =
-    s.conf.getOption(DrainPartitionsKey) match {
-      case None => 4
-      case Some(raw) =>
-        // validate HERE, not via a bare .toInt deep inside the drain: a
-        // typo'd or non-positive value would otherwise surface as a raw
-        // NumberFormatException (or an invalid 0/negative shuffle
-        // partition count) far from the setting site (ADVICE r21)
-        val n = scala.util.Try(raw.trim.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"$DrainPartitionsKey must be a positive integer, got '$raw'"))
-        require(n > 0, s"$DrainPartitionsKey must be > 0, got $n")
-        n
-    }
-
-  /** Checkpoint-file checksum sidecars for the scratch drains. Spark
-    * 4.1 writes (and verifies on read) a checksum sidecar for every
-    * checkpoint file (`spark.sql.streaming.checkpoint.fileChecksum
-    * .enabled`, default true — integrity protection for DURABLE
-    * checkpoints). The oracle drains checkpoint to single-use tmpfs
-    * scratch dirs deleted seconds after the drain ([[Scratch]]), where
-    * the sidecar doubles the file creates/renames per state commit and
-    * adds a checksum pass per write and per restore-read to protect
-    * files with no life beyond the cell — measured on the
-    * alternating-variant one-JVM probe as 3–12% of whole-cell wall
-    * time (largest on w17, whose symmetric join commits four stores
-    * per partition per batch). Deployments with durable checkpoints
-    * keep the session default; `spark.graft.drainCheckpointChecksum
-    * =true` restores the sidecars for the drains too. Restores and
-    * state-store reads are unaffected either way: a file without a
-    * sidecar is read without verification (the pre-4.1 layout). */
-  private val DrainChecksumKey = "spark.graft.drainCheckpointChecksum"
-  private val CkFileKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-  private def drainChecksum(s: SparkSession): String =
-    s.conf.getOption(DrainChecksumKey) match {
-      case None => "false"
-      case Some(raw) =>
-        val t = raw.trim.toLowerCase
-        require(t == "true" || t == "false",
-          s"$DrainChecksumKey must be true or false, got '$raw'")
-        t
-    }
-
-  /** Map-side session merging for the session-window drains (w9, w16,
-    * w22): `spark.sql.streaming.sessionWindow.merge.sessions.in.local
-    * .partition` (default false) pre-merges each partition's sessions
-    * BEFORE the keyed exchange — partial aggregation before the
-    * shuffle (fewer, wider rows cross the network; at 100 TB the
-    * exchange carries pre-merged sessions instead of every event).
-    * Merging is associative and the post-shuffle merge is unchanged,
-    * so emitted sessions are identical; the alternating-variant probe
-    * measured −3% to −15% whole-cell wall time (w9 2.06→1.76 s,
-    * w16 4.03→3.54 s, w22 4.08→3.97 s medians) and no regression on
-    * non-session drains (the conf is a no-op without a session
-    * window). `spark.graft.drainSessionLocalMerge=false` restores the
-    * engine default. */
-  private val DrainSessKey = "spark.graft.drainSessionLocalMerge"
-  private val SessLocalKey =
-    "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition"
-  private def drainSessionLocalMerge(s: SparkSession): String =
-    s.conf.getOption(DrainSessKey) match {
-      case None => "true"
-      case Some(raw) =>
-        val t = raw.trim.toLowerCase
-        require(t == "true" || t == "false",
-          s"$DrainSessKey must be true or false, got '$raw'")
-        t
-    }
+  /** The session confs every drain runs under. The partition count is
+    * pinned into a checkpoint at first start, so it is sized for the
+    * drains' keyed state (≤ a few hundred thousand rows), not inherited
+    * from the session's scan parallelism; a deployment with TB-scale
+    * state derives it from its state volume. */
+  private val DrainConfs = Seq(
+    // one state store per partition, committed every batch: 4 ≤ 8 on all drains (r22)
+    "spark.sql.shuffle.partitions" -> "4",
+    // scratch checkpoints need no checksum sidecars: 3–12% of cell wall (r21)
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    // map-side session pre-merge, same sessions out: −3% to −15% on w9/w16/w22
+    "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true")
 
   /** Run `plan` (a streaming aggregation) to completion under
     * `Trigger.AvailableNow` in complete mode into a memory sink; block
@@ -249,34 +169,22 @@ object StreamingRun {
   private[streaming] def parquetSink(outDir: String): Sink =
     _.outputMode("append").format("parquet").option("path", outDir)
 
-  /** The session confs a drain runs under, each `spark.graft.*` input
-    * validated here: the state partition count (see
-    * [[drainStatePartitions]]; read at stream START, it only shapes THIS
-    * query's state layout), checkpoint checksums and map-side session
-    * merging. `noDataBatches` optionally pins
-    * `spark.sql.streaming.noDataMicroBatches.enabled` for this run only
-    * (the restore protocol stops run 1 WITHOUT the trailing no-data
-    * batch so the recovered watermark is the one a crash would leave). */
-  private def drainConfs(s: SparkSession,
-      noDataBatches: Option[Boolean]): Seq[(String, String)] =
-    Seq("spark.sql.shuffle.partitions" -> drainStatePartitions(s).toString,
-      CkFileKey -> drainChecksum(s),
-      SessLocalKey -> drainSessionLocalMerge(s)) ++
-      noDataBatches.map("spark.sql.streaming.noDataMicroBatches.enabled" -> _.toString)
-
   /** The one streaming-drive primitive every drain shares: start `plan`
     * through `sink` on checkpoint `ckpt` (which may be a previous run's
     * — the restore protocol resumes it) under `Trigger.AvailableNow`,
     * block until drained, hand the finished query to `inspect`, and
-    * always stop the query and unload its state stores. The drain confs
-    * are computed — so a bad `spark.graft.*` value throws — before the
-    * conf scope opens, and the scope restores them however the drain
-    * ends: neither a rejected setting, nor an analysis error at
-    * `start()`, nor a failed batch leaves a session conf changed. */
+    * always stop the query and unload its state stores. `noDataBatches`
+    * optionally pins `spark.sql.streaming.noDataMicroBatches.enabled`
+    * for this run only (the restore protocol stops run 1 WITHOUT the
+    * trailing no-data batch so the recovered watermark is the one a
+    * crash would leave). The conf scope restores [[DrainConfs]] however
+    * the drain ends: neither an analysis error at `start()` nor a failed
+    * batch leaves a session conf changed. */
   private[streaming] def drive(s: SparkSession, plan: DataFrame, ckpt: String,
       sink: Sink, noDataBatches: Option[Boolean] = None)(
       inspect: StreamingQuery => Unit): Unit =
-    Application.withConfs(s, drainConfs(s, noDataBatches)) {
+    Application.withConfs(s, DrainConfs ++ noDataBatches.map(
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> _.toString)) {
       var q: StreamingQuery = null
       try {
         q = sink(plan.writeStream)
@@ -317,35 +225,27 @@ object StreamingRun {
         .agg(count(lit(1)).as("n"),
           sum(floor(col("value") * lit(1e6)).cast("long"))
             .as("sum_value_micros")),
-      mode = "complete", batchId = None, inspect = inspect)
+      "complete", inspect)(windowBuffers(s, None))
 
-  /** Drain a streaming-aggregation `plan` into a throwaway memory sink,
-    * then read the operator's state store back as a DataFrame through
-    * Spark's statestore data source (SPARK-45511) — optionally at a
-    * specific committed `batchId` (time travel; None = last committed).
-    * The ONE drive/read/cleanup path shared by k9 (last state), k10
-    * (held watermark state) and k11 (mid-protocol state) — advisor r17:
-    * the drain block was previously duplicated per method, and the kept
+  /** Drain a stateful `plan` into a throwaway memory sink, then `read`
+    * the operator's state back from the drained checkpoint through
+    * Spark's statestore data source (SPARK-45511). The ONE
+    * drive/read/cleanup path shared by k9–k15 — advisor r17: the drain
+    * block was previously duplicated per method, and the kept
     * checkpoints leaked. The checkpoint IS the table being read, so it
-    * must outlive the streaming query — but not the call: the projected
-    * state read is eagerly `localCheckpoint`ed (state rows are
-    * #windows × #keys, bounded by the window calendar — driver-safe by
+    * must outlive the streaming query — but not the call: the state read
+    * is eagerly `localCheckpoint`ed (every read here is sized by the
+    * window calendar × keys or by the epoch count — driver-safe by
     * construction) and the checkpoint dir deleted immediately after, so
     * bench/verify repeats leave /tmp flat. */
   private def drainToState(s: SparkSession, plan: DataFrame, mode: String,
-      batchId: Option[Long],
-      inspect: StreamingQuery => Unit): DataFrame = {
+      inspect: StreamingQuery => Unit)(read: String => DataFrame): DataFrame = {
     val ckpt = Scratch.dir("graft-stream-state")
     val name = "graft_state_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
     try {
       drive(s, plan, ckpt.toString, memorySink(mode, name))(inspect)
-      Snapshots.stateAt(s, ckpt.toString, batchId)
-        .select(col("key.window.start").as("window_start"),
-          col("key.event_type").as("event_type"),
-          col("value.count").as("n"),
-          col("value.sum").as("sum_value_micros"))
-        .localCheckpoint()
+      read(ckpt.toString).localCheckpoint()
     } finally {
       releaseStateStores() // the statestore READER's providers
       deleteTree(ckpt)
@@ -353,6 +253,17 @@ object StreamingRun {
       ()
     }
   }
+
+  /** The tumbling-daily aggregation's state buffers at `batchId` (None =
+    * last committed) as (window_start, event_type, n, sum_value_micros)
+    * — the k9/k10/k11 read. */
+  private def windowBuffers(s: SparkSession, batchId: Option[Long])(
+      ckpt: String): DataFrame =
+    Snapshots.stateAt(s, ckpt, batchId)
+      .select(col("key.window.start").as("window_start"),
+        col("key.event_type").as("event_type"),
+        col("value.count").as("n"),
+        col("value.sum").as("sum_value_micros"))
 
   /** Run `body` with the streaming state-store provider overridden
     * ([[Application.providerConfs]]: RocksDB comes with changelog
@@ -367,6 +278,14 @@ object StreamingRun {
       provider: Option[String])(body: => T): T =
     provider.fold(body)(p => Application.withConfs(s, Application.providerConfs(p))(body))
 
+  /** A staged drop directory ([[stage]]) as a file stream that delivers
+    * ONE file per micro-batch, in mtime order — the replayable, ordered
+    * source every staged row drives. File streaming sources need a
+    * declared schema; the batch read that supplies it is metadata-only. */
+  private[streaming] def stagedStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+
   /** The staged watermarked tumbling-daily aggregation — ONE plan
     * definition shared by w15 (emitted output), k10 (held final state),
     * k11 (time-travel state) and w18 (restore): any plan edit lands in
@@ -374,16 +293,13 @@ object StreamingRun {
     * prefix contracts break loudly in their specs instead of silently
     * desynchronizing (advisor r17). */
   private def watermarkedTumblingPlan(s: SparkSession, stagedDir: String,
-      delayDays: Int): DataFrame = {
-    val schema = s.read.parquet(stagedDir).schema // metadata-only
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+      delayDays: Int): DataFrame =
+    stagedStream(s, stagedDir)
       .withWatermark("ts", s"$delayDays days")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * lit(1e6)).cast("long"))
           .as("sum_value_micros"))
-  }
 
   /** [[queryableState]] composed with the w15 watermark protocol: run
     * the staged APPEND-mode watermarked aggregation
@@ -402,8 +318,8 @@ object StreamingRun {
       dropMod: Int = 89,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays),
-      mode = "append", batchId = None, inspect = inspect)
+    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
+      inspect)(windowBuffers(s, None))
   }
 
   /** TIME-TRAVEL state read — [[watermarkHeldState]] at a MID-PROTOCOL
@@ -432,8 +348,8 @@ object StreamingRun {
       dropMod: Int = 89, batchId: Long = 2L,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays),
-      mode = "append", batchId = Some(batchId), inspect = inspect)
+    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
+      inspect)(windowBuffers(s, Some(batchId)))
   }
 
   /** The SNAPSHOT CATALOG (k12) — every committed state version of the
@@ -467,13 +383,9 @@ object StreamingRun {
       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
       withStateProvider(s, provider) {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    val ckpt = Scratch.dir("graft-stream-state")
-    val name = "graft_state_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    try {
-      drive(s, watermarkedTumblingPlan(s, staged, delayDays),
-        ckpt.toString, memorySink("append", name))(inspect)
-      val commits = Snapshots.committedBatches(s, ckpt.toString)
+    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
+        inspect) { ckpt =>
+      val commits = Snapshots.committedBatches(s, ckpt)
       require(commits.nonEmpty && commits.max == nFiles.toLong,
         s"expected versions 0..$nFiles ($nFiles data batches + the " +
           s"trailing no-data eviction batch), found max " +
@@ -481,19 +393,14 @@ object StreamingRun {
           "the no-data batch the append-mode eviction contract relies " +
           "on did not run")
       (0L to commits.max).map { k =>
-        Snapshots.stateAt(s, ckpt.toString, Some(k))
+        Snapshots.stateAt(s, ckpt, Some(k))
           .agg(count(lit(1)).as("n_buffers"),
             coalesce(sum(col("value.count")), lit(0L)).as("n_rows"),
             coalesce(sum(col("value.sum")), lit(0L))
               .as("sum_value_micros"))
           .select(lit(k).as("batch_id"), col("n_buffers"),
             col("n_rows"), col("sum_value_micros"))
-      }.reduce(_ unionAll _).localCheckpoint()
-    } finally {
-      releaseStateStores() // the statestore READER's providers
-      deleteTree(ckpt)
-      scala.util.Try(s.catalog.dropTempView(name))
-      ()
+      }.reduce(_ unionAll _)
     }
   }
 
@@ -518,24 +425,14 @@ object StreamingRun {
       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
       withStateProvider(s, provider) {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    val ckpt = Scratch.dir("graft-stream-state")
-    val name = "graft_state_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    try {
-      drive(s, watermarkedTumblingPlan(s, staged, delayDays),
-        ckpt.toString, memorySink("append", name))(inspect)
-      Snapshots.changeFeed(s, ckpt.toString)
+    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
+        inspect) { ckpt =>
+      Snapshots.changeFeed(s, ckpt)
         .select(col("batch_id"), col("change_type"),
           col("key.window.start").as("window_start"),
           col("key.event_type").as("event_type"),
           col("value.count").as("n"),
           col("value.sum").as("sum_value_micros"))
-        .localCheckpoint()
-    } finally {
-      releaseStateStores() // the statestore READER's providers
-      deleteTree(ckpt)
-      scala.util.Try(s.catalog.dropTempView(name))
-      ()
     }
   }
 
@@ -649,10 +546,8 @@ object StreamingRun {
       numHashes: Int = 32, bands: Int = 8,
       threshold: Double = graft.operators.Dedup.IngestGateThreshold,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import graft.functions.TextFunctions.{jaccardShingles, minHashBandKeys, shingleHashes}
+    import graft.functions.TextFunctions.{minHashBandKeys, shingleHashes}
     require(numHashes % bands == 0, "bands must divide numHashes")
-    def clean(df: DataFrame) =
-      df.filter(col(textCol).isNotNull && col(idCol).isNotNull)
     // the BATCH side keeps null-text docs: their band-key array is null,
     // posexplode_outer emits the one null-band row, the null key matches
     // no index row, and the verdict is keep = true — the same fate the
@@ -666,32 +561,9 @@ object StreamingRun {
         posexplode_outer(
           minHashBandKeys(col(textCol), shingleK, numHashes, bands))
           .as(Seq("band", "band_key")))
-    val cleanPrior = clean(prior)
-    // the prior's two static tables are MATERIALIZED once before the
-    // stream starts (localCheckpoint — the pl10/pl8 stage-boundary
-    // discipline, r22): a stream-static join re-executes the static
-    // subplan EVERY micro-batch, so without the boundary each of the
-    // 5-6 micro-batches (x4 protocol runs under the bench) re-hashed
-    // the whole prior corpus's band keys AND shingle sets — and did so
-    // at the drain's state-partition count rather than the session's
-    // scan parallelism (the conf swap happens at stream start; the
-    // checkpoint job here still runs at session width). This is the
-    // scaladoc's production claim — the gate keeps its index + signature
-    // store materialized between days — made true in the plan.
-    val priorIndex = cleanPrior.select(col(idCol).as("pid"), posexplode(
-        minHashBandKeys(col(textCol), shingleK, numHashes, bands))
-        .as(Seq("band", "band_key")))
-      .select(col("band"), col("band_key"), col("pid"))
-      .localCheckpoint()
-    val priorSh = cleanPrior.select(col(idCol).as("pid"),
-      shingleHashes(col(textCol), shingleK).as("psh"))
-      .localCheckpoint()
-    val verdict = bandRows
-      .join(priorIndex, Seq("band", "band_key"), "left_outer")
-      .join(priorSh, Seq("pid"), "left_outer")
-      .select(col("bid"), col("pid"),
-        when(col("pid").isNotNull,
-          jaccardShingles(col("bsh"), col("psh"))).as("jaccard"))
+    val verdict = gateAgainstPrior(bandRows, prior, idCol, textCol,
+        shingleK, numHashes, bands)
+      .select(col("bid"), col("pid"), col("jaccard"))
       .groupBy(col("bid").as(idCol))
       .agg(max_by(struct(col("pid").as("dup_of"), col("jaccard")),
         when(col("jaccard") >= threshold,
@@ -699,6 +571,38 @@ object StreamingRun {
     drainComplete(s, verdict, inspect)
       .select(col(idCol), col("best").isNull.as("keep"),
         col("best.dup_of").as("dup_of"), col("best.jaccard").as("jaccard"))
+  }
+
+  /** The dd14 gate's probe, shared by [[ingestGate]] and
+    * [[curationPipeline]]: stream-side `bandRows` (band, band_key, bsh)
+    * left-joined to the prior's band index, then to its shingle sets,
+    * with the candidate's `jaccard` (null where no band matched). The
+    * prior's two static tables are MATERIALIZED once before the stream
+    * starts (localCheckpoint — the pl8 stage-boundary discipline, r22):
+    * a stream-static join re-executes the static subplan EVERY
+    * micro-batch, so without the boundary every staged drop re-hashed
+    * the whole prior corpus's band keys and shingle sets (measured
+    * ~6.1 s on pl10: the dominant per-batch cost), and at the drain's
+    * state-partition count rather than the session's scan parallelism.
+    * This is the production claim — the gate keeps its index + signature
+    * store materialized between days — made true in the plan. */
+  private def gateAgainstPrior(bandRows: DataFrame, prior: DataFrame,
+      idCol: String, textCol: String, shingleK: Int, numHashes: Int,
+      bands: Int): DataFrame = {
+    import graft.functions.TextFunctions.{jaccardShingles, minHashBandKeys, shingleHashes}
+    val clean = prior.filter(col(textCol).isNotNull && col(idCol).isNotNull)
+    val index = clean.select(col(idCol).as("pid"), posexplode(
+        minHashBandKeys(col(textCol), shingleK, numHashes, bands))
+        .as(Seq("band", "band_key")))
+      .select(col("band"), col("band_key"), col("pid"))
+      .localCheckpoint()
+    val shingles = clean.select(col(idCol).as("pid"),
+      shingleHashes(col(textCol), shingleK).as("psh"))
+      .localCheckpoint()
+    bandRows.join(index, Seq("band", "band_key"), "left_outer")
+      .join(shingles, Seq("pid"), "left_outer")
+      .withColumn("jaccard",
+        when(col("pid").isNotNull, jaccardShingles(col("bsh"), col("psh"))))
   }
 
   /** w1's tumbling daily aggregation in APPEND mode under a REAL
@@ -1011,8 +915,8 @@ object StreamingRun {
     val ckpt = Scratch.dir("graft-stream-restore-ckpt")
     val out = Scratch.dir("graft-stream-restore-out")
     def reveal1(k: Int): Unit = {
-      val fn = f"b$k%03d.parquet"
-      Files.createSymbolicLink(reveal.resolve(fn), Paths.get(staged, fn))
+      Files.createSymbolicLink(reveal.resolve(stagedFile(k)),
+        Paths.get(staged, stagedFile(k)))
     }
     try {
       (0 until runOneFiles).foreach(reveal1)
@@ -1083,11 +987,6 @@ object StreamingRun {
       nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
       dropMod: Int = 89, gapMinutes: Int = 30,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    // the flat-oracle exactness proof needs gap ≪ delay (an accepted
-    // straggler's distance to any evicted session's end is ≥ the delay;
-    // it must exceed the merge gap by a wide margin) — fail loud if a
-    // caller erodes that geometry rather than silently desynchronizing
-    // the oracle
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
     sessionReadout(
       drainAppend(s, sessionPlan(s, staged, delayDays, gapMinutes), inspect))
@@ -1107,9 +1006,7 @@ object StreamingRun {
       s"sessionWatermarked's flat oracle requires gap << delay " +
         s"(got gap ${gapMinutes}m vs delay ${delayDays}d); see the " +
         "scaladoc's exactness argument")
-    val schema = s.read.parquet(stagedDir).schema // metadata-only
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+    stagedStream(s, stagedDir)
       .withWatermark("ts", s"$delayDays days")
       .groupBy(col("user_id"),
         session_window(col("ts"), s"$gapMinutes minutes"))
@@ -1211,15 +1108,12 @@ object StreamingRun {
       dropMod: Int = 89, windowHours: Int = 12,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    val schema = s.read.parquet(staged).schema // metadata-only
     // each side through the DSL's withPerSideWatermark — the API
     // contract for the executed per-side tracker (the event-type filter
     // lands below the watermark node, so each side advances on its own
     // rows and the global watermark is the min of the two)
     def side(pred: org.apache.spark.sql.Column) =
-      new graft.api.Stream(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged),
+      new graft.api.Stream(stagedStream(s, staged),
         graft.api.SourceConf[org.apache.spark.sql.Row]())
         .withPerSideWatermark("ts", s"$delayDays days", pred).ds
     val views = side(col("event_type") === "view")
@@ -1256,79 +1150,75 @@ object StreamingRun {
             pmod(col("event_id"), lit(dropMod)) === 0, 3).otherwise(0))
   }
 
-  /** Stage the events table as `nFiles` single-parquet files in batch
-    * order ([[watermarkBatchIndex]]), with strictly increasing
-    * modification times so FileStreamSource delivers them in exactly
-    * this order. Staged once per (source fingerprint, nFiles, bumpMod,
-    * dropMod) and reused — same caching discipline as [[tableStream]]'s
-    * symlink dir, but keyed on the CONTENT of the source table
-    * (name/size/mtime of every parquet under `dir`), so regenerating
-    * the events table in place invalidates the cache instead of
-    * silently replaying stale data against a fresh oracle. The build is
-    * concurrency-safe: each builder stages into a process-private temp
-    * dir and publishes with ONE atomic rename — a concurrent reader
-    * either sees the complete published dir or none; a lost race just
-    * adopts the winner's dir. The ntile needs a global sort: test
-    * scaffolding only, never a production path.
-    *
-    * Every staged file is asserted NON-EMPTY: the oracle's SPARK-40925
-    * one-batch filter-lag replay frames over batches that produced a
-    * watermark row, so an empty file (a micro-batch that advances the
-    * batch counter but not the watermark) would silently desynchronize
-    * the replay from the exec by one batch. */
+  /** Stage the events table as `nFiles` files in batch order
+    * ([[watermarkBatchIndex]]) — the input of every staged watermark
+    * row but w19 (w15–w26, k10–k15).
+    * The ntile needs a global sort: test scaffolding only. */
   private[streaming] def stageEventsOrdered(s: SparkSession, dir: String,
       nFiles: Int, bumpMod: Int, dropMod: Int): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     require(nFiles > 4, "need nFiles > 4 so the +3 straggler set exists")
-    // the staged projection — part of the cache tag, so widening it
+    // the staged projection — part of the cache key, so widening it
     // (w16 added user_id for the session drain) invalidates stale dirs
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val fp = sourceFingerprint(dir)
+    stage(s, "events", dir, Seq(nFiles, bumpMod, dropMod, cols.mkString(",")),
+        nFiles)(
+      graft.Tables.events(s, dir).select(cols.map(col): _*)
+        .withColumn("__b", watermarkBatchIndex(nFiles, bumpMod, dropMod)))
+  }
+
+  /** The staged file name of batch `k` — what the file source delivers
+    * as micro-batch k, and what the restore protocol reveals. */
+  private[streaming] def stagedFile(k: Int): String = f"b$k%03d.parquet"
+
+  /** The ONE stager behind every replayable, ordered source: write
+    * `rows` as `nBatches` single-parquet files, file k ([[stagedFile]])
+    * holding the rows whose `__b` is k (`__b` dropped), with strictly
+    * increasing modification times so FileStreamSource delivers them in
+    * exactly this order. Staged once per (`kind`, `dir`, source
+    * fingerprint, `key`) and reused: the fingerprint
+    * ([[sourceFingerprint]]) follows the CONTENT of the source table, so
+    * regenerating it in place invalidates the cache instead of silently
+    * replaying stale data against a fresh oracle, and `key` carries the
+    * kind's parameters and projected columns. `rows` is built only on a
+    * miss: ONE sort checkpoint, then one filtered write per file, into a
+    * process-private build dir published with ONE atomic rename
+    * ([[publishStaged]]) — a concurrent reader sees the complete dir or
+    * none.
+    *
+    * Every staged file is asserted NON-EMPTY: the oracles replay
+    * per-batch watermarks and drop assignments, so an empty file (a
+    * micro-batch that advances the batch counter but not the watermark)
+    * would silently desynchronize the replay from the exec by one batch. */
+  private def stage(s: SparkSession, kind: String, dir: String,
+      key: Seq[Any], nBatches: Int)(rows: => DataFrame): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
     val tag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(
-        s"$dir|$fp|$nFiles|$bumpMod|$dropMod|${cols.mkString(",")}"))
+        (Seq(kind, dir, sourceFingerprint(dir)) ++ key).mkString("|")))
     val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-wm-$tag")
+      s"graft-stream-$kind-$tag")
     if (Files.exists(root.resolve("_STAGED"))) return root.toString
-    // build in a private dir; publish with one atomic rename
-    val build = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-wm-$tag.build-${java.lang.ProcessHandle.current().pid()}")
-    Files.createDirectories(build)
-    val ev = graft.Tables.events(s, dir)
-      .select(cols.map(col): _*)
-      .withColumn("__b", watermarkBatchIndex(nFiles, bumpMod, dropMod))
-      .localCheckpoint() // one sort, nFiles filtered writes below
+    val build = Paths.get(s"$root.build-${java.lang.ProcessHandle.current().pid()}")
     val tmp = build.resolve("tmp")
-    (0 until nFiles).foreach { k =>
-      val batch = ev.filter(col("__b") === k).drop("__b")
+    Files.createDirectories(build)
+    val sorted = rows.localCheckpoint() // one sort, nBatches filtered writes
+    (0 until nBatches).foreach { k =>
+      val batch = sorted.filter(col("__b") === k).drop("__b")
         .coalesce(1).localCheckpoint()
-      require(!batch.isEmpty, s"staged watermark batch $k is empty — " +
-        "an empty micro-batch advances the batch counter without a " +
-        "watermark row and desynchronizes the oracle's filter-lag replay")
-      writeStagedFile(batch, tmp, build, k)
+      require(!batch.isEmpty, s"staged $kind batch $k is empty — an empty " +
+        "micro-batch desynchronizes the oracle's per-batch replay")
+      batch.write.mode("overwrite").parquet(tmp.toString)
+      val part = scala.util.Using.resource(Files.list(tmp))(_.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get)
+      val dst = build.resolve(stagedFile(k))
+      Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
     }
     deleteTree(tmp)
     publishStaged(build, root)
     root.toString
-  }
-
-  /** Write one already-coalesced staged batch as `build/bKKK.parquet`
-    * with a strictly increasing mtime (the file source's delivery
-    * order), via a scratch write under `tmp`. */
-  private def writeStagedFile(batch: DataFrame, tmp: java.nio.file.Path,
-      build: java.nio.file.Path, k: Int): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    batch.write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).iterator()
-    var src: java.nio.file.Path = null
-    while (part.hasNext) {
-      val p = part.next()
-      if (p.getFileName.toString.endsWith(".parquet")) src = p
-    }
-    val dst = build.resolve(f"b$k%03d.parquet")
-    Files.move(src, dst, StandardCopyOption.REPLACE_EXISTING)
-    Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
   }
 
   /** Publish a fully-built staging dir: mark `build` complete
@@ -1390,51 +1280,29 @@ object StreamingRun {
     * never an intra-batch race and the per-row replay is exact. The
     * oracle replays per key: first accepted occurrence emits; a second
     * accepted occurrence emits iff the first's expiry fell behind its
-    * batch's eviction watermark. Same fingerprint-keyed cache + atomic
-    * publish as [[stageEventsOrdered]]. */
+    * batch's eviction watermark. */
   private[graft] def stageDedupOrdered(s: SparkSession, dir: String,
       nFiles: Int, nearMod: Int, farMod: Int): String = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.expressions.Window
     require(nFiles > 4, "need nFiles > 4 so the far retransmissions exist")
-    val fp = sourceFingerprint(dir)
-    val tag = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        s"dedup|$dir|$fp|$nFiles|$nearMod|$farMod|event_id,ts"))
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-dd-$tag")
-    if (Files.exists(root.resolve("_STAGED"))) return root.toString
-    val build = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-dd-$tag.build-${java.lang.ProcessHandle.current().pid()}")
-    Files.createDirectories(build)
-    val base = graft.Tables.events(s, dir)
-      .select(col("event_id"), col("ts"))
-      .withColumn("b0", ntile(nFiles).over(Window.orderBy(col("event_id"))) - 1)
-    val near = base
-      .filter(col("event_id") % nearMod === 0 && col("b0") <= nFiles - 2)
-      .select(col("event_id"),
-        (col("ts") + expr("INTERVAL 1 DAY")).as("ts"),
-        (col("b0") + 1).as("__b"))
-    val far = base
-      .filter(col("event_id") % farMod === 0 &&
-        col("event_id") % nearMod =!= 0 && col("b0") <= nFiles - 4)
-      .select(col("event_id"),
-        (col("ts") + expr("INTERVAL 5 DAY")).as("ts"),
-        (col("b0") + 3).as("__b"))
-    val rows = base.select(col("event_id"), col("ts"), col("b0").as("__b"))
-      .union(near).union(far)
-      .localCheckpoint() // one sort, nFiles filtered writes below
-    val tmp = build.resolve("tmp")
-    (0 until nFiles).foreach { k =>
-      val batch = rows.filter(col("__b") === k).drop("__b")
-        .coalesce(1).localCheckpoint()
-      require(!batch.isEmpty, s"staged dedup batch $k is empty — an " +
-        "empty micro-batch desynchronizes the oracle's watermark replay")
-      writeStagedFile(batch, tmp, build, k)
+    stage(s, "dedup", dir, Seq(nFiles, nearMod, farMod, "event_id,ts"), nFiles) {
+      val base = graft.Tables.events(s, dir)
+        .select(col("event_id"), col("ts"))
+        .withColumn("b0", ntile(nFiles).over(Window.orderBy(col("event_id"))) - 1)
+      val near = base
+        .filter(col("event_id") % nearMod === 0 && col("b0") <= nFiles - 2)
+        .select(col("event_id"),
+          (col("ts") + expr("INTERVAL 1 DAY")).as("ts"),
+          (col("b0") + 1).as("__b"))
+      val far = base
+        .filter(col("event_id") % farMod === 0 &&
+          col("event_id") % nearMod =!= 0 && col("b0") <= nFiles - 4)
+        .select(col("event_id"),
+          (col("ts") + expr("INTERVAL 5 DAY")).as("ts"),
+          (col("b0") + 3).as("__b"))
+      base.select(col("event_id"), col("ts"), col("b0").as("__b"))
+        .union(near).union(far)
     }
-    deleteTree(tmp)
-    publishStaged(build, root)
-    root.toString
   }
 
   /** W19: streaming dedup with BOUNDED state —
@@ -1469,9 +1337,7 @@ object StreamingRun {
       farMod: Int = 11,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val staged = stageDedupOrdered(s, dir, nFiles, nearMod, farMod)
-    val schema = s.read.parquet(staged).schema // metadata-only
-    val plan = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    val plan = stagedStream(s, staged)
       .withWatermark("ts", s"$delayDays days")
       .dropDuplicatesWithinWatermark("event_id")
     drainAppend(s, plan, inspect)
@@ -1484,60 +1350,35 @@ object StreamingRun {
     * the global watermark back; far above any real or derived doc id. */
   private[streaming] val CurationSentinelId = 130000000L
 
-  /** Epoch seconds of the staged crawl-drop arrival times: file k
-    * arrives at noon UTC of day k from 2020-01-01 (the noon offset
-    * keeps every arrival strictly inside its day window). */
-  private[streaming] def curationArrivalSec(k: Int): Long =
-    1577880000L + 86400L * k
+  /** The staged crawl-drop arrival time of day `k`: noon UTC of day k
+    * from 2020-01-01 (the noon offset keeps every arrival strictly
+    * inside its day window). */
+  private def curationArrival(k: org.apache.spark.sql.Column) =
+    timestamp_seconds(lit(1577880000L) + lit(86400L) * k)
 
   /** Stage the documents table as `nFiles` single-parquet crawl drops
     * by doc_id ntile — file k carrying `arrival_ts` = day k noon — plus
-    * ONE far-future sentinel row (day 1000) in a final file. The
+    * ONE far-future sentinel row (day 1000) as a final file. The
     * sentinel's only job is to advance the watermark past every real
     * day so the append-mode curation windows flush (a bounded stream's
     * watermark otherwise never passes the last day); its own windows
     * are held in state forever and never emitted, so it is invisible in
     * the output — the day-close punctuation a production feed gets from
-    * the next day's first arrival. Same fingerprint-keyed cache +
-    * atomic-publish discipline as [[stageEventsOrdered]]. */
+    * the next day's first arrival. */
   private[graft] def stageDocsOrdered(s: SparkSession, dir: String,
       nFiles: Int): String = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.expressions.Window
-    val fp = sourceFingerprint(dir)
-    val tag = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        s"docs|$dir|$fp|$nFiles|doc_id,text,source,arrival_ts"))
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-docs-$tag")
-    if (Files.exists(root.resolve("_STAGED"))) return root.toString
-    val build = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-docs-$tag.build-${java.lang.ProcessHandle.current().pid()}")
-    Files.createDirectories(build)
-    val docs = graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .withColumn("__b", ntile(nFiles).over(Window.orderBy(col("doc_id"))) - 1)
-      .localCheckpoint() // one sort, nFiles filtered writes below
-    val tmp = build.resolve("tmp")
-    (0 until nFiles).foreach { k =>
-      val batch = docs.filter(col("__b") === k).drop("__b")
-        .withColumn("arrival_ts",
-          timestamp_seconds(lit(curationArrivalSec(k))))
-        .coalesce(1).localCheckpoint()
-      require(!batch.isEmpty, s"staged curation drop $k is empty — an " +
-        "empty micro-batch desynchronizes the oracle's ntile replay")
-      writeStagedFile(batch, tmp, build, k)
+    stage(s, "docs", dir, Seq(nFiles, "doc_id,text,source,arrival_ts"),
+        nFiles + 1) {
+      val sentinel = s.range(1).select(lit(CurationSentinelId).as("doc_id"),
+        lit("sentinel close of feed").as("text"), lit("sentinel").as("source"),
+        lit(nFiles).as("__b"), curationArrival(lit(1000)).as("arrival_ts"))
+      graft.Tables.documents(s, dir)
+        .select(col("doc_id"), col("text"), col("source"))
+        .withColumn("__b", ntile(nFiles).over(Window.orderBy(col("doc_id"))) - 1)
+        .withColumn("arrival_ts", curationArrival(col("__b")))
+        .union(sentinel)
     }
-    val sentinel = s.range(1)
-      .select(lit(CurationSentinelId).as("doc_id"),
-        lit("sentinel close of feed").as("text"),
-        lit("sentinel").as("source"),
-        timestamp_seconds(lit(curationArrivalSec(1000))).as("arrival_ts"))
-      .coalesce(1).localCheckpoint()
-    writeStagedFile(sentinel, tmp, build, nFiles)
-    deleteTree(tmp)
-    publishStaged(build, root)
-    root.toString
   }
 
   /** The STREAMING curation pipeline (pl10) — the LLM-data operators
@@ -1582,16 +1423,14 @@ object StreamingRun {
       shingleK: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import graft.functions.TextFunctions.{jaccardShingles, minHashBandKeys, shingleHashes}
+    import graft.functions.TextFunctions.{minHashBandKeys, shingleHashes}
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val schema = s.read.parquet(stagedDir).schema // metadata-only
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
     // watermark ABOVE the derivation union: one tracker fed by every
     // derived row (declaring it on the source would let Catalyst push
     // the derivation filters below the watermark node and split the
     // tracker per branch — the w17 per-side behavior, unwanted here)
-    val batch = deriveBatch(stream).withWatermark("arrival_ts", "1 hour")
+    val batch = deriveBatch(stagedStream(s, stagedDir))
+      .withWatermark("arrival_ts", "1 hour")
     val bandRows = batch.filter(col("doc_id").isNotNull)
       .select(col("arrival_ts"), col("source"), gopherKeep.as("gq"),
         col("doc_id").as("bid"),
@@ -1599,30 +1438,10 @@ object StreamingRun {
         posexplode_outer(
           minHashBandKeys(col("text"), shingleK, numHashes, bands))
           .as(Seq("band", "band_key")))
-    val cleanPrior = prior.filter(col("text").isNotNull && col("doc_id").isNotNull)
-    // the prior's two static tables are MATERIALIZED once before the
-    // stream starts (localCheckpoint — the pl8 stage-boundary
-    // discipline): a stream-static join re-executes the static subplan
-    // EVERY micro-batch, and without the boundary each of the staged
-    // drops would re-hash the whole prior corpus's shingles and band
-    // keys (measured: ~6.1 s → the index is the dominant per-batch
-    // cost at 6 batches). This is literally the scaladoc's production
-    // claim — the gate keeps its index materialized between days —
-    // made true in the plan.
-    val priorIndex = cleanPrior.select(col("doc_id").as("pid"), posexplode(
-        minHashBandKeys(col("text"), shingleK, numHashes, bands))
-        .as(Seq("band", "band_key")))
-      .select(col("band"), col("band_key"), col("pid"))
-      .localCheckpoint()
-    val priorSh = cleanPrior.select(col("doc_id").as("pid"),
-      shingleHashes(col("text"), shingleK).as("psh"))
-      .localCheckpoint()
-    val verdicts = bandRows
-      .join(priorIndex, Seq("band", "band_key"), "left_outer")
-      .join(priorSh, Seq("pid"), "left_outer")
+    val verdicts = gateAgainstPrior(bandRows, prior, "doc_id", "text",
+        shingleK, numHashes, bands)
       .select(col("arrival_ts"), col("source"), col("gq"), col("bid"),
-        when(col("pid").isNotNull,
-          jaccardShingles(col("bsh"), col("psh"))).as("jaccard"))
+        col("jaccard"))
     val perDoc = verdicts
       .groupBy(window(col("arrival_ts"), "1 day"), col("bid"))
       .agg(any_value(col("source")).as("source"),
@@ -1707,9 +1526,7 @@ object StreamingRun {
       budget: Long): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import s.implicits._
-    val schema = s.read.parquet(stagedDir).schema // metadata-only
-    val docs = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+    val docs = stagedStream(s, stagedDir)
       .filter(col("doc_id").isNotNull && col("text").isNotNull &&
         col("doc_id") < CurationSentinelId)
       .select(col("doc_id"), col("source"),
@@ -1779,36 +1596,13 @@ object StreamingRun {
   /** Stage the embeddings table as `nFiles` single-parquet ingest drops
     * by vec_id ntile — the pl13 ANN-ingest protocol (no sentinel: the
     * cell-census aggregation runs in complete mode, which needs no
-    * watermark punctuation). Same fingerprint-keyed cache +
-    * atomic-publish discipline as [[stageDocsOrdered]]. */
+    * watermark punctuation). */
   private[graft] def stageEmbOrdered(s: SparkSession, dir: String,
       nFiles: Int): String = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.expressions.Window
-    val fp = sourceFingerprint(dir)
-    val tag = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        s"emb|$dir|$fp|$nFiles|vec_id,embedding"))
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-emb-$tag")
-    if (Files.exists(root.resolve("_STAGED"))) return root.toString
-    val build = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-emb-$tag.build-${java.lang.ProcessHandle.current().pid()}")
-    Files.createDirectories(build)
-    val emb = graft.Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("__b", ntile(nFiles).over(Window.orderBy(col("vec_id"))) - 1)
-      .localCheckpoint() // one sort, nFiles filtered writes below
-    val tmp = build.resolve("tmp")
-    (0 until nFiles).foreach { k =>
-      val batch = emb.filter(col("__b") === k).drop("__b")
-        .coalesce(1).localCheckpoint()
-      require(!batch.isEmpty, s"staged embedding drop $k is empty")
-      writeStagedFile(batch, tmp, build, k)
-    }
-    deleteTree(tmp)
-    publishStaged(build, root)
-    root.toString
+    stage(s, "emb", dir, Seq(nFiles, "vec_id,embedding"), nFiles)(
+      graft.Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+        .withColumn("__b", ntile(nFiles).over(Window.orderBy(col("vec_id"))) - 1))
   }
 
   /** PL13: STREAMING ANN-INDEX INGEST — the retrieval index's coarse
@@ -1864,9 +1658,7 @@ object StreamingRun {
     val centArr = array(cents.map { case (cell, v) =>
       struct(lit(cell).as("cell"), typedLit(v).as("centroid"))
     }: _*)
-    val schema = s.read.parquet(staged).schema // metadata-only
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    stagedStream(s, staged)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       .withColumn("cell",
         aggregate(centArr,
@@ -2048,9 +1840,7 @@ object StreamingRun {
     import org.apache.spark.sql.Encoders
     import graft.api.{IndexState, ValueIndex}
     import graft.operators.{IndexOperator, TimerContext}
-    val schema = s.read.parquet(stagedDir).schema // metadata-only
-    val typed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+    val typed = stagedStream(s, stagedDir)
       .withWatermark("ts", s"$delayDays days")
       .select(col("user_id"), col("event_id"),
         col("ts")) // the watermark column rides along for the late filter

@@ -23,6 +23,36 @@ class HarnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("src/main names no spark.graft key; only stagedStream sets maxFilesPerTrigger; only the stager publishes") {
+    // code lines of src/main, each with the name of the def it sits in
+    // (the nearest `def` above it)
+    val root = java.nio.file.Paths.get("src/main")
+    val comment = """^\s*(\*|/\*|//)""".r
+    val defName = """\bdef (\w+)""".r
+    val walk = java.nio.file.Files.walk(root)
+    val code = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        var owner = ""
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.flatMap {
+          case (line, _) if comment.findFirstIn(line).isDefined => None
+          case (line, i) =>
+            defName.findFirstMatchIn(line).foreach(m => owner = m.group(1))
+            Some((s"${p.getFileName}:${i + 1}: ${line.trim}", owner, line))
+        }
+      }.toList
+    finally walk.close()
+    // the defs whose code uses `pattern` (its own def line excluded)
+    def onlyIn(pattern: String, defs: List[String]): Unit = {
+      val uses = code.filter(c => c._3.contains(pattern) && !c._3.contains(s"def $pattern"))
+      assert(uses.map(_._2) == defs, uses.map(_._1).mkString("\n"))
+    }
+    onlyIn("\"spark.graft.", Nil)
+    onlyIn("maxFilesPerTrigger", List("stagedStream"))
+    onlyIn("publishStaged", List("stage"))
+    onlyIn("sourceFingerprint", List("stage"))
+  }
+
   test("Verify's log filter drops only the missing-checksum line") {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.LoggerContext

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The driver-visible streaming oracle row (w1_streaming) must actually
   * execute the STATEFUL streaming path — not silently fall back to a
@@ -36,7 +37,7 @@ class StreamingRunSpec extends SparkTestBase {
     assert(plan.contains("SessionWindowStateStoreSave"), plan)
     assert(plan.contains("MergingSessions"), plan)
     // drains enable map-side session pre-merge (StreamingRun
-    // .drainSessionLocalMerge, r22): sessions merge once per input
+    // .DrainConfs, r22): sessions merge once per input
     // partition BEFORE the keyed exchange and once after restore — two
     // MergingSessions execs, so the exchange carries pre-merged
     // sessions instead of every event
@@ -1034,31 +1035,108 @@ class StreamingRunSpec extends SparkTestBase {
     }
   }
 
-  test("an invalid spark.graft.* drain setting throws before any session conf changes") {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition")
-    def confs = keys.map(spark.conf.getOption)
+  test("every drain runs under the constant drain confs and leaves every session conf unchanged") {
+    val drainKeys = Map("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true")
     // a value no drain uses, so a leaked drain setting shows
-    val prevSp = spark.conf.get(keys.head)
-    spark.conf.set(keys.head, "3")
-    val before = confs
+    val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    var during = Map.empty[String, String]
     // one entry per drain primitive: memory sink, foreachBatch, parquet sink
     val drains: Seq[(String, () => Any)] = Seq(
       "drainComplete" -> (() => StreamingRun.drainComplete(spark,
-        StreamingRun.eventsStream(spark, sfDir).groupBy(col("event_type")).count())),
+        StreamingRun.eventsStream(spark, sfDir).groupBy(col("event_type")).count(),
+        inspect = _ => during = drainKeys.map { case (k, _) => k -> spark.conf.get(k) })),
       "emissionLatency" -> (() => StreamingRun.emissionLatency(spark, sfDir)),
       "tumblingDailyWatermarkedRestored" ->
         (() => StreamingRun.tumblingDailyWatermarkedRestored(spark, sfDir)))
-    spark.conf.set("spark.graft.drainCheckpointChecksum", "maybe")
     try drains.foreach { case (name, drain) =>
-      val e = intercept[IllegalArgumentException](drain())
-      assert(e.getMessage.contains("drainCheckpointChecksum"), s"$name: ${e.getMessage}")
-      assert(confs == before, s"$name leaked a drain conf")
+      val before = spark.conf.getAll
+      drain()
+      assert(spark.conf.getAll == before, s"$name leaked a drain conf")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
+    assert(during == drainKeys)
+  }
+
+  test("stage: a stale partial root (no _STAGED marker, a file missing) is cleared and republished at the same path") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft-stale-root")
+    Files.copy(Paths.get(sfDir, "events.parquet"), dir.resolve("events.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val staged = Paths.get(StreamingRun.stageEventsOrdered(spark, dir.toString, 5, 97, 89))
+    def layout = scala.util.Using.resource(Files.list(staged))(
+      _.iterator().asScala.map(_.getFileName.toString).toSet)
+    val complete = layout
+    try {
+      assert(complete == (0 until 5).map(StreamingRun.stagedFile).toSet + "_STAGED")
+      // a builder that crashed mid-publish leaves exactly this: no marker
+      Files.delete(staged.resolve("_STAGED"))
+      Files.delete(staged.resolve(StreamingRun.stagedFile(2)))
+      assert(StreamingRun.stageEventsOrdered(spark, dir.toString, 5, 97, 89) ==
+        staged.toString)
+      assert(layout == complete)
+      assert(scala.util.Using.resource(Files.list(staged.getParent))(_.iterator()
+        .asScala.count(_.getFileName.toString.startsWith(
+          s"${staged.getFileName}.build-"))) == 0, "a build dir was left behind")
     } finally {
-      spark.conf.unset("spark.graft.drainCheckpointChecksum")
-      spark.conf.set(keys.head, prevSp)
+      StreamingRun.deleteTree(staged)
+      StreamingRun.deleteTree(dir)
     }
+  }
+
+  test("stage: every kind writes nonempty bNNN.parquet files in mtime order whose rows are the kind's source projection") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import java.nio.file.{Files, Paths}
+    def files(staged: String, n: Int): Seq[java.nio.file.Path] = {
+      val names = scala.util.Using.resource(Files.list(Paths.get(staged)))(
+        _.iterator().asScala.map(_.getFileName.toString).toSet)
+      assert(names == (0 until n).map(StreamingRun.stagedFile).toSet + "_STAGED", staged)
+      (0 until n).map(k => Paths.get(staged, StreamingRun.stagedFile(k)))
+    }
+    def read(staged: String, n: Int): DataFrame = {
+      val fs = files(staged, n)
+      val mtimes = fs.map(Files.getLastModifiedTime(_).toMillis)
+      assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b }, s"$staged: $mtimes")
+      fs.foreach(f => assert(spark.read.parquet(f.toString).count() > 0, s"$f is empty"))
+      spark.read.parquet(fs.map(_.toString): _*)
+    }
+    def sameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+      assert(got.count() == want.count(), what)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, what)
+    }
+    val ev = graft.Tables.events(spark, sfDir)
+
+    val evCols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
+    sameRows(read(StreamingRun.stageEventsOrdered(spark, sfDir, 5, 97, 89), 5)
+      .select(evCols: _*), ev.select(evCols: _*), "events")
+
+    sameRows(read(StreamingRun.stageEmbOrdered(spark, sfDir, 4), 4),
+      graft.Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding")),
+      "emb")
+
+    val docs = read(StreamingRun.stageDocsOrdered(spark, sfDir, 4), 5)
+    val sentinel = docs.filter(col("doc_id") === StreamingRun.CurationSentinelId)
+    assert(sentinel.count() == 1)
+    sameRows(docs.filter(col("doc_id") =!= StreamingRun.CurationSentinelId)
+      .select(col("doc_id"), col("text"), col("source")),
+      graft.Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("text"), col("source")), "docs")
+
+    // dedup: every event once at its own ts, plus +1 day copies of the
+    // near set (id % 7, not from the last file) and +5 day copies of the
+    // far set (id % 11 but not % 7, from the first nFiles − 3 files)
+    val dd = read(StreamingRun.stageDedupOrdered(spark, sfDir, 5, 7, 11), 5)
+    val b0 = ev.select(col("event_id"), col("ts"),
+      (ntile(5).over(Window.orderBy(col("event_id"))) - 1).as("b0"))
+    val near = b0.filter(col("event_id") % 7 === 0 && col("b0") <= 3)
+    val far = b0.filter(col("event_id") % 11 === 0 && col("event_id") % 7 =!= 0 &&
+      col("b0") <= 1)
+    assert(near.count() > 0 && far.count() > 0)
+    sameRows(dd, ev.select(col("event_id"), col("ts"))
+      .union(near.select(col("event_id"), col("ts") + expr("INTERVAL 1 DAY")))
+      .union(far.select(col("event_id"), col("ts") + expr("INTERVAL 5 DAY"))), "dedup")
   }
 
   test("a drain that fails at start() leaves every session conf unchanged") {
