@@ -30,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen instead of falling back to interpreted rows.
   */
 object NativeText {
-  /** Modulus shared with [[TextFunctions.P]]. */
+  /** Large prime modulus of every polynomial hash and the MinHash family
+    * (fits products in i64: acc < P, acc*31 + 0x10FFFF < 2^63). */
   final val P: Long = 1000000007L
 
   /** Second fold (multiplier/modulus) for the LOW 31 bits of the 61-bit
@@ -282,7 +283,11 @@ case class AHash61Expr(child: Expression) extends UnaryExpression {
 
 /** text → shingles → MinHash signature → per-band poly-fold keys, one
   * pass; null for texts with no shingles (empty docs never band-match —
-  * same contract as `array_min` over an empty array). */
+  * same contract as `array_min` over an empty array). The library's one
+  * Scala home of the MinHash family — signature element i is the min
+  * over shingle hashes h of (h·(2i+1) + 7919i + 13) mod P — and of the
+  * band-parameter check every MinHash operator relies on (the oracle
+  * SQL's twin is `TrainingDataQueries.bandSql`). */
 case class MinHashBandKeysExpr(child: Expression, k: Int, numHashes: Int, bands: Int)
     extends UnaryExpression with CodegenFallback {
   require(numHashes % bands == 0, "bands must divide numHashes")

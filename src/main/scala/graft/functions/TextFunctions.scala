@@ -14,10 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Large prime modulus for the polynomial hashes (fits products in i64:
-    * acc < P, acc*31 + 0x10FFFF < 2^63). */
-  val P: Long = 1000000007L
-
   /** Whitespace tokens. The corpus is single-space separated; for general
     * text swap the delimiter for "\\s+". */
   def tokens(text: Column): Column = split(text, " ")
@@ -157,21 +153,6 @@ object TextFunctions {
     * Jaccard input. Native expression ([[ShingleHashesExpr]]). */
   def shingleHashes(text: Column, k: Int): Column =
     ncol(ShingleHashesExpr(nexpr(text), k))
-
-  /** MinHash signature from a shingle-hash array: element i = min over
-    * shingle hashes h of (a_i*h + b_i) mod P with a_i = 2i+1,
-    * b_i = 7919i+13. `hsExpr` is [[bind]]-materialized, so it is
-    * evaluated exactly once however this composes. Empty shingle sets
-    * yield an all-null signature (matching `array_min` of an empty
-    * array), so empty docs never band-match each other. */
-  def minHashFromHashes(hsExpr: Column, numHashes: Int): Column =
-    bind(hsExpr, hs =>
-      transform(sequence(lit(0), lit(numHashes - 1)), i =>
-        array_min(transform(hs, h => (h * (i * 2L + 1L) + (i * 7919L + 13L)) % P))))
-
-  /** MinHash signature of a text column (convenience wrapper). */
-  def minHashSignature(text: Column, k: Int, numHashes: Int): Column =
-    minHashFromHashes(shingleHashes(text, k), numHashes)
 
   /** LSH band keys straight from the text column: shingles → MinHash
     * signature → per-band poly-fold keys in one compiled pass

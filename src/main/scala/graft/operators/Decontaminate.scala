@@ -168,7 +168,24 @@ object Decontaminate {
       numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5,
       maxBenchBroadcastBytes: Long = 2L * 1024 * 1024 * 1024): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    // both sides first: the band-key expression checks its parameters
+    // before the budget job below runs
+    val benchSide = bench
+      .select(col(idCol).as("__bid"),
+        minHashBandKeys(col(textCol), k, numHashes, bands).as("__bkeys"),
+        coalesce(shingleHashes(col(textCol), k),
+          array().cast("array<long>")).as("__bsh"))
+      .select(col("__bid"), col("__bsh"),
+        posexplode_outer(col("__bkeys")).as(Seq("__band", "__key")))
+      .filter(col("__key").isNotNull)
+    val trainSide = train
+      .select(col(idCol),
+        minHashBandKeys(col(textCol), k, numHashes, bands).as("__tkeys"),
+        coalesce(shingleHashes(col(textCol), k),
+          array().cast("array<long>")).as("__tsh"))
+      .select(col(idCol), col("__tsh"),
+        posexplode_outer(col("__tkeys")).as(Seq("__band", "__key")))
+      .filter(col("__key").isNotNull)
     if (maxBenchBroadcastBytes < Long.MaxValue) {
       // one column-pruned pass over the SMALL side only; 8 B per shingle
       // hash, duplicated once per band, + ~64 B per exploded row overhead
@@ -186,22 +203,6 @@ object Decontaminate {
             s"budget $maxBenchBroadcastBytes. Shard the benchmark suite " +
             "and union the per-shard results, or reduce numHashes.")
     }
-    val benchSide = bench
-      .select(col(idCol).as("__bid"),
-        minHashBandKeys(col(textCol), k, numHashes, bands).as("__bkeys"),
-        coalesce(shingleHashes(col(textCol), k),
-          array().cast("array<long>")).as("__bsh"))
-      .select(col("__bid"), col("__bsh"),
-        posexplode_outer(col("__bkeys")).as(Seq("__band", "__key")))
-      .filter(col("__key").isNotNull)
-    val trainSide = train
-      .select(col(idCol),
-        minHashBandKeys(col(textCol), k, numHashes, bands).as("__tkeys"),
-        coalesce(shingleHashes(col(textCol), k),
-          array().cast("array<long>")).as("__tsh"))
-      .select(col(idCol), col("__tsh"),
-        posexplode_outer(col("__tkeys")).as(Seq("__band", "__key")))
-      .filter(col("__key").isNotNull)
     val pairs = trainSide
       .join(broadcast(benchSide), Seq("__band", "__key"))
       .select(col(idCol), col("__bid"),

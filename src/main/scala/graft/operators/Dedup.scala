@@ -116,10 +116,7 @@ object Dedup {
       idCol: String, textCol: String, shingleK: Int = 3,
       numHashes: Int = 32, bands: Int = 8,
       threshold: Double = IngestGateThreshold): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     import org.apache.spark.sql.expressions.Window
-    def clean(df: DataFrame) =
-      df.filter(col(textCol).isNotNull && col(idCol).isNotNull)
     def bandRows(df: DataFrame, as: String) =
       incrBandRows(df, idCol, textCol, shingleK, numHashes, bands, as)
     // localCheckpoint: the candidate table feeds BOTH the verify join
@@ -134,11 +131,11 @@ object Dedup {
     // (broadcast semi join — the candidate set is batch-sized), one
     // shingle set per touched doc on either side
     val pids = cands.select(col("pid")).distinct()
-    val priorSh = clean(prior)
+    val priorSh = lshInput(prior, idCol, textCol)
       .select(col(idCol).as("pid"), col(textCol))
       .join(broadcast(pids), Seq("pid"), "left_semi")
       .select(col("pid"), shingleHashes(col(textCol), shingleK).as("psh"))
-    val batchSh = clean(batch)
+    val batchSh = lshInput(batch, idCol, textCol)
       .select(col(idCol).as("bid"),
         shingleHashes(col(textCol), shingleK).as("bsh"))
     val verified = cands
@@ -582,7 +579,6 @@ object Dedup {
   def minHashLsh(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.6): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     // Null-id docs are excluded up front — the per-document formulation
     // dropped them implicitly (null propagates through the doc_a < doc_b
     // pair filter), and a synthetic sentinel id would collapse distinct
@@ -592,14 +588,11 @@ object Dedup {
     // exchange; its fallback is cast to the id column's own type so no
     // coercion is forced on non-long ids.
     val idNull = lit(-1L).cast(docs.schema(idCol).dataType)
-    val clean = docs.filter(col(textCol).isNotNull && col(idCol).isNotNull)
-    def contentKey(first: Column): Seq[Column] = Seq(first,
-      coalesce(fingerprint64(col(textCol)), lit(0L)).as("fp"),
-      coalesce(length(col(textCol)), lit(0)).as("ln"))
+    val clean = lshInput(docs, idCol, textCol)
     // (1) membership: the ONE corpus-wide exchange, shared by all four
     // expansion joins below (ReusedExchange, plan-audited).
     val members = clean
-      .select(contentKey(coalesce(col(idCol), idNull).as("id")): _*)
+      .select(contentKey(textCol, coalesce(col(idCol), idNull).as("id")): _*)
       .repartition(col("fp"), col("ln"))
     // (2) intra-text pairs from group membership. `has_sh` (≥ k tokens)
     // is a cheap narrow predicate — identical texts agree on it, and it
@@ -608,7 +601,7 @@ object Dedup {
     // non-empty shingle sets is exactly 1.0, so the threshold filter
     // constant-folds at plan time.
     val groups = clean
-      .select(contentKey(
+      .select(contentKey(textCol,
         (size(split(col(textCol), " ")) >= shingleK).as("has_sh")): _*)
       .groupBy(col("fp"), col("ln"))
       .agg(count(lit(1)).as("n"), max(col("has_sh")).as("has_sh"))
@@ -621,15 +614,8 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    // (3) band rows at distinct-text granularity: posexplode emits no
-    // rows for shingle-less texts (null band-key array), and the
-    // distinct's partial aggregate collapses identical texts map-side.
-    val banded = clean
-      .select(contentKey(posexplode(
-        minHashBandKeys(col(textCol), shingleK, numHashes, bands))
-        .as(Seq("band", "band_key"))): _*)
-      .select(col("band"), col("band_key"), col("fp"), col("ln"))
-      .distinct()
+    // (3) band rows at distinct-text granularity ([[contentBands]])
+    val banded = contentBands(docs, idCol, textCol, shingleK, numHashes, bands)
     val textPairs = banded
       .select(col("band"), col("band_key"), col("fp").as("fp_a"), col("ln").as("ln_a"))
       .join(banded.select(col("band"), col("band_key"),
@@ -642,7 +628,7 @@ object Dedup {
     // membership expansion — each document belongs to exactly one text
     // group, so every cross pair is emitted exactly once.
     val textSh = clean
-      .select(contentKey(shingleHashes(col(textCol), shingleK).as("sh")): _*)
+      .select(contentKey(textCol, shingleHashes(col(textCol), shingleK).as("sh")): _*)
       .select(col("fp"), col("ln"), col("sh"))
       .dropDuplicates("fp", "ln")
     val verified = textPairs
@@ -662,6 +648,35 @@ object Dedup {
         greatest(col("ma"), col("mb")).as("doc_b"), col("jaccard"))
     intra.union(inter)
   }
+
+  /** The non-null-text, non-null-id rows every MinHash-LSH operator and
+    * canary bands: [[minHashLsh]], [[incrementalMinHash]] and their
+    * volumes. */
+  private[graft] def lshInput(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.filter(col(textCol).isNotNull && col(idCol).isNotNull)
+
+  /** `first`, then [[minHashLsh]]'s 16-byte (fingerprint64, length)
+    * content key of `textCol` as (fp, ln). */
+  private def contentKey(textCol: String, first: Column): Seq[Column] =
+    Seq(first,
+      coalesce(fingerprint64(col(textCol)), lit(0L)).as("fp"),
+      coalesce(length(col(textCol)), lit(0)).as("ln"))
+
+  /** The distinct (band, band_key, fp, ln) rows [[minHashLsh]]'s band
+    * self-join reads, over [[lshInput]]: posexplode emits no rows for
+    * shingle-less texts (null band-key array), and the distinct's
+    * partial aggregate collapses identical texts map-side. ONE
+    * definition shared with [[minHashBandVolume]], so the canary counts
+    * exactly the buckets the join reads. */
+  private def contentBands(docs: DataFrame, idCol: String, textCol: String,
+      shingleK: Int, numHashes: Int, bands: Int): DataFrame =
+    lshInput(docs, idCol, textCol)
+      .select(contentKey(textCol, posexplode(
+        minHashBandKeys(col(textCol), shingleK, numHashes, bands))
+        .as(Seq("band", "band_key"))): _*)
+      .select(col("band"), col("band_key"), col("fp"), col("ln"))
+      .distinct()
 
   /** Band keys for [[simHashDup]] — the Manku-style combinatorial
     * blocking scheme (Manku, Jain & Das Sarma, WWW'07 §3): split the
@@ -779,29 +794,11 @@ object Dedup {
     * join/exchange key is prefixed with it) are the ONLY things the
     * modalities disagree on. */
   private def signatureDup(docs: DataFrame, idCol: String, srcCol: String,
-      sigExpr: org.apache.spark.sql.Column, maxHamming: Int,
+      sigExpr: Column, maxHamming: Int,
       groupCols: Seq[String] = Nil,
       materializeMembers: Boolean = false): DataFrame = {
-    // NULL-source rows can never band-match (null keys don't equi-join);
-    // drop them BEFORE the signature and mark the signature non-nullable
-    // (coalesce with a non-null literal). Without this the optimizer
-    // infers `isnotnull(simhashexpr(text))` from the join keys and the
-    // full signature scan runs TWICE per row — once in the inferred
-    // Filter, once in the projection (caught by PlanAuditSpec).
-    // Both projected columns are marked non-nullable (coalesce): a
-    // nullable id lets InferFiltersFromConstraints push branch-specific
-    // isnotnull filters BELOW the shared exchange, splitting it into
-    // independently recomputed signature scans (ReuseExchange matches
-    // canonical subtrees exactly).
-    // Null-id docs are dropped (same contract as [[minHashLsh]]); the
-    // id coalesce can then never fire and survives only as the
-    // non-nullability marker described above, typed to the id column.
     val gc = groupCols.map(col)
-    val members0 = docs
-      .filter(col(srcCol).isNotNull && col(idCol).isNotNull)
-      .select(gc ++ Seq(
-        coalesce(col(idCol), lit(-1L).cast(docs.schema(idCol).dataType)).as("id"),
-        coalesce(sigExpr, lit(0L)).as("sig")): _*)
+    val members0 = signatures(docs, idCol, srcCol, sigExpr, groupCols)
       // the ONE corpus-wide exchange, shared below
       .repartition(gc :+ col("sig"): _*)
     val members =
@@ -825,10 +822,7 @@ object Dedup {
       .select(gc ++ Seq(col("doc_a"), col("doc_b"),
         lit(0L).as("hamming")): _*)
     // (3) inter-signature pairs: band one row per distinct signature.
-    val banded = sigs.select(gc ++ Seq(col("sig"),
-      posexplode(simHashBandKeys(col("sig"), maxHamming))): _*)
-      .withColumnRenamed("pos", "tbl")
-      .withColumnRenamed("col", "band_key")
+    val banded = mankuBands(sigs, groupCols, maxHamming)
     val bandKey = groupCols ++ Seq("tbl", "band_key")
     val sigPairs = banded
       .select(bandKey.map(col) :+ col("sig").as("sig_a"): _*)
@@ -856,6 +850,40 @@ object Dedup {
         greatest(col("ma"), col("mb")).as("doc_b"), col("hamming")): _*)
     intra.union(inter)
   }
+
+  /** (groupCols…, id, sig) of every doc with a non-null id and source —
+    * [[signatureDup]]'s input, shared with [[signatureBandVolume]]. */
+  private def signatures(docs: DataFrame, idCol: String, srcCol: String,
+      sigExpr: Column, groupCols: Seq[String]): DataFrame =
+    // NULL-source rows can never band-match (null keys don't equi-join);
+    // drop them BEFORE the signature and mark the signature non-nullable
+    // (coalesce with a non-null literal). Without this the optimizer
+    // infers `isnotnull(simhashexpr(text))` from the join keys and the
+    // full signature scan runs TWICE per row — once in the inferred
+    // Filter, once in the projection (caught by PlanAuditSpec).
+    // Both projected columns are marked non-nullable (coalesce): a
+    // nullable id lets InferFiltersFromConstraints push branch-specific
+    // isnotnull filters BELOW the shared exchange, splitting it into
+    // independently recomputed signature scans (ReuseExchange matches
+    // canonical subtrees exactly).
+    // Null-id docs are dropped (same contract as [[minHashLsh]]); the
+    // id coalesce can then never fire and survives only as the
+    // non-nullability marker described above, typed to the id column.
+    docs.filter(col(srcCol).isNotNull && col(idCol).isNotNull)
+      .select(groupCols.map(col) ++ Seq(
+        coalesce(col(idCol), lit(-1L).cast(docs.schema(idCol).dataType)).as("id"),
+        coalesce(sigExpr, lit(0L)).as("sig")): _*)
+
+  /** The Manku table rows (groupCols…, sig, tbl, band_key) of distinct
+    * (groupCols…, sig) rows — the buckets [[signatureDup]]'s band
+    * self-join reads; ONE definition shared with
+    * [[signatureBandVolume]]. */
+  private def mankuBands(sigs: DataFrame, groupCols: Seq[String],
+      maxHamming: Int): DataFrame =
+    sigs.select(groupCols.map(col) ++ Seq(col("sig"),
+      posexplode(simHashBandKeys(col("sig"), maxHamming))): _*)
+      .withColumnRenamed("pos", "tbl")
+      .withColumnRenamed("col", "band_key")
 
   /** Pair volume of a blocking scheme: number of blocks, the largest
     * block, and Σ c·(c−1)/2 over the block-size histogram — the exact
@@ -933,7 +961,6 @@ object Dedup {
   def incrementalBandVolume(batch: DataFrame, prior: DataFrame,
       idCol: String, textCol: String, shingleK: Int = 3,
       numHashes: Int = 32, bands: Int = 8): BlockVolume = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     def bandRows(df: DataFrame) =
       incrBandRows(df, idCol, textCol, shingleK, numHashes, bands, "id")
         .select(col("band"), col("band_key"))
@@ -942,12 +969,13 @@ object Dedup {
   }
 
   /** The (band, band_key, id) rows of [[incrementalMinHash]]'s band
-    * join — ONE definition shared by the operator and the
-    * [[incrementalBandVolume]] bench canary, so the canary can never
-    * drift from the join it measures. */
-  private def incrBandRows(df: DataFrame, idCol: String, textCol: String,
+    * join, over [[lshInput]] — ONE definition shared by the operator,
+    * the [[incrementalBandVolume]] bench canary and the streaming gate's
+    * prior index ([[graft.streaming.StreamingRun.ingestGate]]), so
+    * neither can drift from the join it measures or replays. */
+  private[graft] def incrBandRows(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int, bands: Int, as: String): DataFrame =
-    df.filter(col(textCol).isNotNull && col(idCol).isNotNull)
+    lshInput(df, idCol, textCol)
       .select(col(idCol).as(as), posexplode(
         minHashBandKeys(col(textCol), shingleK, numHashes, bands))
         .as(Seq("band", "band_key")))
@@ -955,67 +983,45 @@ object Dedup {
 
   /** [[blockVolume]] over the LSH band buckets a [[minHashLsh]] call
     * joins on — the exact candidate-pair count the band self-join
-    * generates (pre-distinct), measured over DISTINCT texts exactly as
-    * the operator bands them after text-identical compaction. One
-    * signature pass + one count shuffle. */
+    * generates (pre-distinct): [[blockVolume]] over [[contentBands]],
+    * the very rows the join reads (distinct texts of non-null-id docs).
+    * One signature pass + one count shuffle. */
   def minHashBandVolume(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numHashes: Int, bands: Int): BlockVolume = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    blockVolume(
-      docs.filter(col(textCol).isNotNull)
-        .select(
-          posexplode(minHashBandKeys(col(textCol), shingleK, numHashes, bands))
-            .as(Seq("band", "band_key")),
-          coalesce(fingerprint64(col(textCol)), lit(0L)).as("fp"),
-          coalesce(length(col(textCol)), lit(0)).as("ln"))
-        .distinct(),
+      shingleK: Int, numHashes: Int, bands: Int): BlockVolume =
+    blockVolume(contentBands(docs, idCol, textCol, shingleK, numHashes, bands),
       Seq("band", "band_key"))
-  }
 
   /** [[blockVolume]] over [[simHashDup]]'s Manku combinatorial tables —
-    * measured over DISTINCT signatures, exactly as the operator bands
-    * them after signature-identical compaction. */
+    * [[signatureBandVolume]]. */
   def simHashBandVolume(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): BlockVolume =
-    signatureBandVolume(docs, idCol, textCol, simHash(col(textCol)),
-      maxHamming)
+    signatureBandVolume(docs, idCol, textCol, simHash(col(textCol)), maxHamming)
 
   /** [[simHashBandVolume]] for [[perceptualHashDup]]'s media
     * average-hash banding — the dd15 bench canary. */
   def perceptualBandVolume(docs: DataFrame, idCol: String,
       mediaCol: String, maxHamming: Int): BlockVolume =
-    signatureBandVolume(docs, idCol, mediaCol, aHash61(col(mediaCol)),
-      maxHamming)
+    signatureBandVolume(docs, idCol, mediaCol, aHash61(col(mediaCol)), maxHamming)
 
   /** [[perceptualBandVolume]] at FRAME granularity — the pl9 bench
-    * canary: the Manku band buckets of [[perceptualFrameDup]]'s grouped
-    * self-join, measured over DISTINCT (frame_no, signature) rows
-    * exactly as the operator bands them (the frame group key multiplies
-    * the bucket space, never the per-bucket population). */
+    * canary over [[perceptualFrameDup]]'s grouped tables (the frame
+    * group key multiplies the bucket space, never the per-bucket
+    * population). */
   def frameBandVolume(frames: DataFrame, idCol: String,
       frameNoCol: String, mediaCol: String, maxHamming: Int): BlockVolume =
-    blockVolume(
-      frames.filter(col(mediaCol).isNotNull && col(idCol).isNotNull)
-        .select(col(frameNoCol), col(idCol).as("id"),
-          coalesce(aHash61(col(mediaCol)), lit(0L)).as("sig"))
-        .dropDuplicates(frameNoCol, "sig")
-        .select(col(frameNoCol), col("sig"),
-          posexplode(simHashBandKeys(col("sig"), maxHamming)))
-        .withColumnRenamed("pos", "tbl")
-        .withColumnRenamed("col", "band_key"),
-      Seq(frameNoCol, "tbl", "band_key"))
+    signatureBandVolume(frames, idCol, mediaCol, aHash61(col(mediaCol)),
+      maxHamming, Seq(frameNoCol))
 
+  /** [[blockVolume]] over [[signatureDup]]'s Manku tables: [[mankuBands]]
+    * over the DISTINCT (groupCols…, sig) rows of [[signatures]] — exactly
+    * the rows the operator bands after signature-identical compaction. */
   private def signatureBandVolume(docs: DataFrame, idCol: String,
-      srcCol: String, sigExpr: org.apache.spark.sql.Column,
-      maxHamming: Int): BlockVolume =
-    blockVolume(
-      docs.filter(col(srcCol).isNotNull && col(idCol).isNotNull)
-        .select(col(idCol).as("id"), coalesce(sigExpr, lit(0L)).as("sig"))
-        .dropDuplicates("sig")
-        .select(col("sig"), posexplode(simHashBandKeys(col("sig"), maxHamming)))
-        .withColumnRenamed("pos", "tbl")
-        .withColumnRenamed("col", "band_key"),
-      Seq("tbl", "band_key"))
+      srcCol: String, sigExpr: Column, maxHamming: Int,
+      groupCols: Seq[String] = Nil): BlockVolume =
+    blockVolume(mankuBands(
+      signatures(docs, idCol, srcCol, sigExpr, groupCols)
+        .select((groupCols :+ "sig").map(col): _*).distinct(),
+      groupCols, maxHamming), groupCols ++ Seq("tbl", "band_key"))
 
   /** [[blockVolume]] over [[semanticDedup]]'s cells under `centroids` —
     * single-sourced with the dedup itself via [[assignCells]] AND

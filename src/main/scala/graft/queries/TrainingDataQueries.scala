@@ -27,18 +27,18 @@ object TrainingDataQueries extends QueryModule {
 
   /** 4/5-token-prefix copies of every `mod`-th doc with an id offset —
     * the ONE truncation rule every planted near-dup / changed-page /
-    * benchmark-item derivation shares. Every oracle CTE pins the same
-    * arithmetic (`greatest(floor(n*4/5), 1)`); change them in lockstep
-    * or the bit-exact compares break. A 1-token doc "truncates" to
+    * benchmark-item derivation shares. The oracle SQL spells the same
+    * arithmetic once (`prefixTextSql`); change the two in lockstep or
+    * the bit-exact compares break. A 1-token doc "truncates" to
     * itself (the greatest(...,1) floor), so derived corpora only plant
     * CHANGED pages for multi-token docs. */
   private def prefixTruncated(docs: DataFrame, mod: Int,
-      idOffset: Long): DataFrame = {
+      idOffset: Long, extras: Seq[Column] = Nil): DataFrame = {
     val ts = split(col("text"), " ")
     val nKeep = greatest(floor(size(ts) * 4 / 5), lit(1)).cast("int")
     docs.filter(col("doc_id") % mod === 0)
-      .select((col("doc_id") + idOffset).as("doc_id"),
-        array_join(slice(ts, lit(1), nKeep), " ").as("text"))
+      .select((col("doc_id") + idOffset).as("doc_id") +:
+        array_join(slice(ts, lit(1), nKeep), " ").as("text") +: extras: _*)
   }
 
   /** documents ∪ same-LENGTH single-byte-perturbed copies of every 16th
@@ -198,13 +198,9 @@ object TrainingDataQueries extends QueryModule {
   private[graft] def incrBatchKeeping(docs: DataFrame,
       extraCols: Seq[String]): DataFrame = {
     val extras = extraCols.map(col)
-    val ts = split(col("text"), " ")
-    val nKeep = greatest(floor(size(ts) * 4 / 5), lit(1)).cast("int")
     val exact = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id") +: col("text") +: extras: _*)
-    val changed = docs.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 2000000L).as("doc_id") +:
-        array_join(slice(ts, lit(1), nKeep), " ").as("text") +: extras: _*)
+    val changed = prefixTruncated(docs, mod = 10, idOffset = 2000000L, extras)
     val novel = docs.filter(col("doc_id") % 13 === 0)
       .select((col("doc_id") + 4000000L).as("doc_id") +:
         array_join(reverse(split(col("text"), " ")), " ").as("text") +: extras: _*)
@@ -2196,18 +2192,22 @@ object TrainingDataQueries extends QueryModule {
   private val bm25K1 = 1.2
   private val bm25B = 0.75
 
+  /** [[prefixTruncated]]'s 4/5-token prefix of column `text` — the
+    * oracle SQL's one spelling of the planted-near-dup rule. */
+  private lazy val prefixTextSql: String =
+    "array_to_string(list_slice(string_split(text, ' '), 1, " +
+      "greatest((len(string_split(text, ' ')) * 4) // 5, 1)), ' ')"
+
   /** dd14's oracle — also w14's verbatim: the streaming gate must
     * agree with the batch gate verdict for verdict, bit for bit. */
   /** The ingest-batch derivation as a CTE — the SQL twin of
     * [[incrBatchOf]], shared by the dd14 and pl7 oracles (one
     * definition; a batch-derivation change hits every consumer). */
   private lazy val ingestBatchCte: String =
-    """batch AS (
+    s"""batch AS (
       |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
       |  UNION ALL
-      |  SELECT doc_id + 2000000 AS doc_id,
-      |    array_to_string(list_slice(string_split(text, ' '), 1,
-      |      greatest((len(string_split(text, ' ')) * 4) // 5, 1)), ' ') AS text
+      |  SELECT doc_id + 2000000 AS doc_id, $prefixTextSql AS text
       |  FROM documents WHERE doc_id % 10 = 0
       |  UNION ALL
       |  SELECT doc_id + 4000000 AS doc_id,
@@ -2278,12 +2278,10 @@ object TrainingDataQueries extends QueryModule {
        |FROM contrib GROUP BY doc_id)""".stripMargin
   }
 
-  private val nearDupDocsSql =
-    """SELECT doc_id, text FROM documents
+  private lazy val nearDupDocsSql =
+    s"""SELECT doc_id, text FROM documents
       |UNION ALL
-      |SELECT doc_id + 1000000 AS doc_id,
-      |  array_to_string(list_slice(string_split(text, ' '), 1,
-      |    greatest((len(string_split(text, ' ')) * 4) // 5, 1)), ' ') AS text
+      |SELECT doc_id + 1000000 AS doc_id, $prefixTextSql AS text
       |FROM documents WHERE doc_id % 10 = 0""".stripMargin
 
   private val exactDupDocsSql =
@@ -2397,7 +2395,10 @@ object TrainingDataQueries extends QueryModule {
 
   /** sig + band CTE pair replaying `minHashBandKeys` (k = 3, 32 hashes,
     * 8 bands) over CTE/table `src` carrying (`idCol`, text) — emits
-    * `<pfx>band(idCol, shs, band, band_key)`. Shared by x17 and pl3. */
+    * `<pfx>band(idCol, shs, band, band_key)`. The oracle SQL's one home
+    * of the MinHash family (the Scala one is `MinHashBandKeysExpr`),
+    * shared by dd2 (and the dd6/pl2/sp3 clusters built on it), the
+    * dd14/pl7/pl10 gate CTEs, x17 and pl3. */
   private def bandSql(pfx: String, src: String, idCol: String): String =
     s"""${pfx}sig AS (SELECT $idCol, ${sh3("text")} AS shs,
        |    list_transform(range(32), i -> CAST(list_min(list_transform(${sh3("text")},
@@ -2410,10 +2411,8 @@ object TrainingDataQueries extends QueryModule {
 
   /** The x17/pl3 benchmark stand-ins: 80%-prefix truncations of every
     * 97th document. */
-  private val fuzzyBenchSql: String =
-    """SELECT doc_id + 2000000 AS bid,
-      |    array_to_string(list_slice(string_split(text, ' '), 1,
-      |      greatest((len(string_split(text, ' ')) * 4) // 5, 1)), ' ') AS text
+  private lazy val fuzzyBenchSql: String =
+    s"""SELECT doc_id + 2000000 AS bid, $prefixTextSql AS text
       |  FROM documents WHERE doc_id % 97 = 0""".stripMargin
 
   /** Shared connected-components prelude (dd2 pairs → recursive
@@ -2436,21 +2435,12 @@ object TrainingDataQueries extends QueryModule {
     * connected-components oracle. */
   private lazy val dd2Sql: String =
     s"""WITH cand AS ($nearDupDocsSql),
-       |sig AS (
-       |  SELECT doc_id AS id, ${sh3("text")} AS shs,
-       |    list_transform(range(32), i -> CAST(list_min(list_transform(${sh3("text")},
-       |      h -> (h * (2*i + 1) + (7919*i + 13)) % 1000000007)) AS BIGINT)) AS mh
-       |  FROM cand),
-       |banded AS (
-       |  SELECT id, shs, t.b AS band,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(mh, t.b*4 + 1, t.b*4 + 4)),
-       |      (a, v) -> (a*31 + v) % 1000000007) AS band_key
-       |  FROM sig CROSS JOIN range(8) AS t(b)),
+       |${bandSql("d", "cand", "doc_id")},
        |pairs AS (
-       |  SELECT DISTINCT l.id AS doc_a, r.id AS doc_b,
+       |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
        |    ${jac("l.shs", "r.shs")} AS jaccard
-       |  FROM banded l JOIN banded r
-       |    ON l.band = r.band AND l.band_key = r.band_key AND l.id < r.id)
+       |  FROM dband l JOIN dband r
+       |    ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id)
        |SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5""".stripMargin
 
   private val nearDupEmbSql =
@@ -3165,12 +3155,10 @@ object TrainingDataQueries extends QueryModule {
 
     // Raw-text anti join; the 16-byte-key plan must reproduce it.
     "dd12_incremental" ->
-      """WITH newc AS (
+      s"""WITH newc AS (
         |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
         |  UNION ALL
-        |  SELECT doc_id + 2000000 AS doc_id,
-        |    array_to_string(list_slice(string_split(text, ' '), 1,
-        |      greatest((len(string_split(text, ' ')) * 4) // 5, 1)), ' ') AS text
+        |  SELECT doc_id + 2000000 AS doc_id, $prefixTextSql AS text
         |  FROM documents WHERE doc_id % 10 = 0)
         |SELECT n.doc_id, CAST(length(n.text) AS BIGINT) AS n_chars
         |FROM newc n WHERE NOT EXISTS (
@@ -3797,10 +3785,7 @@ object TrainingDataQueries extends QueryModule {
          |  SELECT doc_id + 1000000 AS doc_id, text, source, b
          |  FROM base WHERE doc_id % 10 = 0
          |  UNION ALL
-         |  SELECT doc_id + 2000000 AS doc_id,
-         |    array_to_string(list_slice(string_split(text, ' '), 1,
-         |      greatest((len(string_split(text, ' ')) * 4) // 5, 1)), ' ')
-         |      AS text,
+         |  SELECT doc_id + 2000000 AS doc_id, $prefixTextSql AS text,
          |    source, b
          |  FROM base WHERE doc_id % 10 = 0
          |  UNION ALL

@@ -547,7 +547,6 @@ object StreamingRun {
       threshold: Double = graft.operators.Dedup.IngestGateThreshold,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     import graft.functions.TextFunctions.{minHashBandKeys, shingleHashes}
-    require(numHashes % bands == 0, "bands must divide numHashes")
     // the BATCH side keeps null-text docs: their band-key array is null,
     // posexplode_outer emits the one null-band row, the null key matches
     // no index row, and the verdict is keep = true — the same fate the
@@ -589,14 +588,12 @@ object StreamingRun {
   private def gateAgainstPrior(bandRows: DataFrame, prior: DataFrame,
       idCol: String, textCol: String, shingleK: Int, numHashes: Int,
       bands: Int): DataFrame = {
-    import graft.functions.TextFunctions.{jaccardShingles, minHashBandKeys, shingleHashes}
-    val clean = prior.filter(col(textCol).isNotNull && col(idCol).isNotNull)
-    val index = clean.select(col(idCol).as("pid"), posexplode(
-        minHashBandKeys(col(textCol), shingleK, numHashes, bands))
-        .as(Seq("band", "band_key")))
-      .select(col("band"), col("band_key"), col("pid"))
+    import graft.functions.TextFunctions.{jaccardShingles, shingleHashes}
+    import graft.operators.Dedup.{incrBandRows, lshInput}
+    val index = incrBandRows(prior, idCol, textCol, shingleK, numHashes,
+        bands, "pid")
       .localCheckpoint()
-    val shingles = clean.select(col(idCol).as("pid"),
+    val shingles = lshInput(prior, idCol, textCol).select(col(idCol).as("pid"),
       shingleHashes(col(textCol), shingleK).as("psh"))
       .localCheckpoint()
     bandRows.join(index, Seq("band", "band_key"), "left_outer")
@@ -1424,7 +1421,9 @@ object StreamingRun {
       threshold: Double = 0.5,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     import graft.functions.TextFunctions.{minHashBandKeys, shingleHashes}
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    // built first: its constructor checks the band parameters before
+    // the staged source is touched
+    val bandKeys = minHashBandKeys(col("text"), shingleK, numHashes, bands)
     // watermark ABOVE the derivation union: one tracker fed by every
     // derived row (declaring it on the source would let Catalyst push
     // the derivation filters below the watermark node and split the
@@ -1435,9 +1434,7 @@ object StreamingRun {
       .select(col("arrival_ts"), col("source"), gopherKeep.as("gq"),
         col("doc_id").as("bid"),
         shingleHashes(col("text"), shingleK).as("bsh"),
-        posexplode_outer(
-          minHashBandKeys(col("text"), shingleK, numHashes, bands))
-          .as(Seq("band", "band_key")))
+        posexplode_outer(bandKeys).as(Seq("band", "band_key")))
     val verdicts = gateAgainstPrior(bandRows, prior, "doc_id", "text",
         shingleK, numHashes, bands)
       .select(col("arrival_ts"), col("source"), col("gq"), col("bid"),

@@ -23,14 +23,15 @@ class HarnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
-  test("src/main names no spark.graft key; only stagedStream sets maxFilesPerTrigger; only the stager publishes") {
-    // code lines of src/main, each with the name of the def it sits in
-    // (the nearest `def` above it)
+  /** Code lines of src/main (comment lines dropped), each as
+    * ("File.scala:line: text", the name of the def it sits in — the
+    * nearest `def` above it — and the raw line). */
+  private lazy val mainCode: List[(String, String, String)] = {
     val root = java.nio.file.Paths.get("src/main")
     val comment = """^\s*(\*|/\*|//)""".r
     val defName = """\bdef (\w+)""".r
     val walk = java.nio.file.Files.walk(root)
-    val code = try walk.iterator().asScala
+    try walk.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         var owner = ""
@@ -42,15 +43,37 @@ class HarnessSpec extends AnyFunSuite {
         }
       }.toList
     finally walk.close()
-    // the defs whose code uses `pattern` (its own def line excluded)
-    def onlyIn(pattern: String, defs: List[String]): Unit = {
-      val uses = code.filter(c => c._3.contains(pattern) && !c._3.contains(s"def $pattern"))
-      assert(uses.map(_._2) == defs, uses.map(_._1).mkString("\n"))
-    }
+  }
+
+  /** Asserts that the defs whose code uses `pattern` (its own def line
+    * excluded) are exactly `defs`, one per use. */
+  private def onlyIn(pattern: String, defs: List[String]): Unit = {
+    val uses = mainCode.filter(c => c._3.contains(pattern) && !c._3.contains(s"def $pattern"))
+    assert(uses.map(_._2) == defs, uses.map(_._1).mkString("\n"))
+  }
+
+  test("src/main names no spark.graft key; only stagedStream sets maxFilesPerTrigger; only the stager publishes") {
     onlyIn("\"spark.graft.", Nil)
     onlyIn("maxFilesPerTrigger", List("stagedStream"))
     onlyIn("publishStaged", List("stage"))
     onlyIn("sourceFingerprint", List("stage"))
+  }
+
+  test("src/main gives each LSH decision one home: Manku tables, MinHash band check and family, 4/5-prefix rule") {
+    // `pattern` sits on exactly one code line, in `file`
+    def onceIn(pattern: String, file: String): Unit = {
+      val uses = mainCode.filter(_._3.contains(pattern)).map(_._1)
+      assert(uses.map(_.takeWhile(_ != ':')) == List(file), uses.mkString("\n"))
+    }
+    onlyIn("posexplode(simHashBandKeys", List("mankuBands"))
+    onceIn("\"bands must divide numHashes\"", "NativeTextExprs.scala")
+    // the MinHash permutation, once per engine
+    onceIn("7919L * i + 13L", "NativeTextExprs.scala")
+    onlyIn("7919*i + 13", List("bandSql"))
+    // the planted 4/5-prefix rule, once per engine
+    onlyIn("size(ts) * 4 / 5", List("prefixTruncated"))
+    onceIn("greatest((len(string_split(text, ' ')) * 4) // 5, 1)",
+      "TrainingDataQueries.scala")
   }
 
   test("Verify's log filter drops only the missing-checksum line") {

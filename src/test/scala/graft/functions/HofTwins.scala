@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions.{P, bind, shingles, tokens}
-import graft.functions.VectorFunctions.{dot, hyperplaneBit, l2Norm}
+import graft.functions.NativeText.P
+import graft.functions.TextFunctions.{bind, shingles, tokens}
 
 /** Declarative (HOF) twins of the native text and vector expressions —
   * the executable specification `NativeExprParitySpec` holds each
@@ -105,6 +105,34 @@ object HofTwins {
     val inter = size(array_intersect(aHashes, bHashes)).cast("double")
     val uni = size(array_distinct(concat(aHashes, bHashes))).cast("double")
     when(uni === 0.0, lit(0.0)).otherwise(inter / uni)
+  }
+
+  /** Ordered-fold dot product in double precision, in index order. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** L2 norm (IEEE sqrt of the ordered self-dot — bit-deterministic). */
+  def l2Norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Sign-of-dot-product bit for one deterministic pseudo-random
+    * hyperplane — the random-hyperplane LSH primitive. Hyperplane
+    * component j of plane p derives from a QUADRATICALLY-mixed integer
+    * sequence so any engine can reproduce it, with idx = p·dim + j + 1:
+    *   c(p, j) = ((idx² mod 1000003)·427799 + idx·653 + 7919) mod 1000003
+    *             / 1000003 − 0.5
+    * (non-linear in idx on purpose — a linear form makes the planes
+    * windows of one sequence and collapses signature entropy; see
+    * [[graft.functions.NativeVector.lshSignature]]). */
+  def hyperplaneBit(a: Column, plane: Int, dim: Int): Column = {
+    val prods = (0 until dim).map { j =>
+      val idx = plane.toLong * dim + j + 1
+      val c = ((idx * idx % 1000003L * 427799L + idx * 653L + 7919L)
+        % 1000003L).toDouble / 1000003.0 - 0.5
+      element_at(a, j + 1).cast("double") * lit(c)
+    }
+    val d = prods.reduce(_ + _)
+    when(d > 0, lit(1L)).otherwise(lit(0L))
   }
 
   /** Declarative twin of [[VectorFunctions.cosine]]. */

@@ -1018,6 +1018,81 @@ class DedupSpec extends SparkTestBase {
     assert(empty == Dedup.BlockVolume(0L, 0L, 0L))
   }
 
+  // ---- the volume canaries count the operators' own buckets ----
+
+  /** Near-dup corpus with the LSH input filter's edge rows: a null-id
+    * doc whose (distinct) text shares MinHash bands with doc 1, a
+    * null-text doc, a verbatim copy and a shingle-less doc. The media
+    * column is the text's bytes; frames alternate between 0 and 1. */
+  private lazy val canaryCorpus = {
+    val base = (0 until 30).map(i => s"w$i").mkString(" ")
+    Seq[(java.lang.Long, String)](
+      (1L, base), (2L, base + " tail"), (3L, base.replace("w7 ", "v7 ")),
+      (4L, base), (5L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (6L, "alpha beta"), (7L, null), (null, base.replace("w29", "v29")))
+      .toDF("doc_id", "text")
+      .withColumn("media", encode(col("text"), "UTF-8"))
+      .withColumn("frame_no", coalesce(col("doc_id") % 2, lit(0L)).cast("int"))
+  }
+
+  test("band volume canaries equal blockVolume over the buckets their operators band (null ids and texts filtered)") {
+    import graft.functions.TextFunctions.{aHash61, minHashBandKeys, simHash}
+    val (k, nh, bands, maxH) = (3, 32, 8, 3)
+    val docs = canaryCorpus
+    val input = docs.filter(col("text").isNotNull && col("doc_id").isNotNull)
+    // precondition: the null-id doc's text is distinct AND shares a band
+    // with a doc the operator does band, so dropping it moves the count
+    val keys = docs.select(col("doc_id"), col("text"),
+      minHashBandKeys(col("text"), k, nh, bands).as("ks")).collect()
+    val (nullId, banded) = keys.partition(_.isNullAt(0))
+    assert(!banded.map(_.getString(1)).contains(nullId.head.getString(1)))
+    assert(banded.exists(r => !r.isNullAt(2) && r.getSeq[Long](2)
+      .zip(nullId.head.getSeq[Long](2)).exists { case (a, b) => a == b }))
+    // MinHash: one row per (band, band key) of each distinct text
+    val mh = input.select(col("text"),
+        posexplode(minHashBandKeys(col("text"), k, nh, bands)).as(Seq("band", "band_key")))
+      .distinct()
+    val mhWant = Dedup.blockVolume(mh, Seq("band", "band_key"))
+    assert(mhWant.totalPairs > 0, mhWant)
+    assert(Dedup.minHashBandVolume(docs, "doc_id", "text", k, nh, bands) == mhWant)
+    // Manku: one row per (table, key) of each distinct (group, signature)
+    def manku(sig: org.apache.spark.sql.Column, groups: Seq[String]) = {
+      val sigs = input.select(groups.map(col) :+ sig.as("sig"): _*).distinct()
+      val rows = sigs.select(groups.map(col) :+
+        posexplode(Dedup.simHashBandKeys(col("sig"), maxH)).as(Seq("tbl", "band_key")): _*)
+      Dedup.blockVolume(rows, groups ++ Seq("tbl", "band_key"))
+    }
+    val shWant = manku(simHash(col("text")), Nil)
+    assert(shWant.totalPairs > 0, shWant)
+    assert(Dedup.simHashBandVolume(docs, "doc_id", "text", maxH) == shWant)
+    assert(Dedup.perceptualBandVolume(docs, "doc_id", "media", maxH) ==
+      manku(aHash61(col("media")), Nil))
+    assert(Dedup.frameBandVolume(docs, "doc_id", "frame_no", "media", maxH) ==
+      manku(aHash61(col("media")), Seq("frame_no")))
+  }
+
+  test("a band count that does not divide numHashes fails in every MinHash operator before any Spark job") {
+    val docs = canaryCorpus.select(col("doc_id"), col("text"))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "minHashLsh" -> (() => Dedup.minHashLsh(docs, "doc_id", "text",
+        numHashes = 32, bands = 5)),
+      "incrementalMinHash" -> (() => Dedup.incrementalMinHash(docs, docs,
+        "doc_id", "text", numHashes = 32, bands = 5)),
+      "minHashBandVolume" -> (() => Dedup.minHashBandVolume(docs, "doc_id",
+        "text", 3, 32, 5)),
+      "incrementalBandVolume" -> (() => Dedup.incrementalBandVolume(docs,
+        docs, "doc_id", "text", numHashes = 32, bands = 5)),
+      "ingestGate" -> (() => graft.streaming.StreamingRun.ingestGate(spark,
+        docs, docs, "doc_id", "text", numHashes = 32, bands = 5)),
+      "fuzzyLshOverlap" -> (() => Decontaminate.fuzzyLshOverlap(docs, docs,
+        "doc_id", "text", numHashes = 32, bands = 5)))
+    calls.foreach { case (name, call) =>
+      val (e, jobs) = jobsOf(intercept[IllegalArgumentException](call()))
+      assert(e.getMessage.contains("bands must divide numHashes"), s"$name: $e")
+      assert(jobs == 0, s"$name started $jobs job(s) before its band check")
+    }
+  }
+
   // ---- passage-level exact dedup ----
 
   test("passageExactDedup reports duplicated 10-token passages with the min-doc keeper") {

@@ -627,25 +627,33 @@ class StreamingRunSpec extends SparkTestBase {
     val ev = dir.resolve("events.parquet")
     Files.copy(Paths.get(sfDir, "events.parquet"), ev,
       StandardCopyOption.REPLACE_EXISTING)
-    val fp1 = StreamingRun.sourceFingerprint(dir.toString)
-    val staged1 = StreamingRun.stageEventsOrdered(spark, dir.toString,
-      nFiles = 5, bumpMod = 97, dropMod = 89)
-    // same content -> same fingerprint, same staged dir (cache hit)
-    assert(StreamingRun.sourceFingerprint(dir.toString) == fp1)
-    assert(StreamingRun.stageEventsOrdered(spark, dir.toString,
-      5, 97, 89) == staged1)
-    // "regenerate" the table in place (mtime moves, as any writer's
-    // would) -> fingerprint changes -> a DIFFERENT staged dir is built,
-    // so a stream can never replay stale files against a fresh oracle
-    Files.setLastModifiedTime(ev,
-      java.nio.file.attribute.FileTime.fromMillis(
-        Files.getLastModifiedTime(ev).toMillis + 60000L))
-    val fp2 = StreamingRun.sourceFingerprint(dir.toString)
-    assert(fp2 != fp1)
-    val staged2 = StreamingRun.stageEventsOrdered(spark, dir.toString,
-      5, 97, 89)
-    assert(staged2 != staged1,
-      s"stale staged dir adopted after source regeneration: $staged1")
+    var staged = List.empty[String]
+    try {
+      val fp1 = StreamingRun.sourceFingerprint(dir.toString)
+      val staged1 = StreamingRun.stageEventsOrdered(spark, dir.toString,
+        nFiles = 5, bumpMod = 97, dropMod = 89)
+      staged ::= staged1
+      // same content -> same fingerprint, same staged dir (cache hit)
+      assert(StreamingRun.sourceFingerprint(dir.toString) == fp1)
+      assert(StreamingRun.stageEventsOrdered(spark, dir.toString,
+        5, 97, 89) == staged1)
+      // "regenerate" the table in place (mtime moves, as any writer's
+      // would) -> fingerprint changes -> a DIFFERENT staged dir is built,
+      // so a stream can never replay stale files against a fresh oracle
+      Files.setLastModifiedTime(ev,
+        java.nio.file.attribute.FileTime.fromMillis(
+          Files.getLastModifiedTime(ev).toMillis + 60000L))
+      val fp2 = StreamingRun.sourceFingerprint(dir.toString)
+      assert(fp2 != fp1)
+      val staged2 = StreamingRun.stageEventsOrdered(spark, dir.toString,
+        5, 97, 89)
+      staged ::= staged2
+      assert(staged2 != staged1,
+        s"stale staged dir adopted after source regeneration: $staged1")
+    } finally {
+      staged.foreach(d => StreamingRun.deleteTree(Paths.get(d)))
+      StreamingRun.deleteTree(dir)
+    }
   }
 
   test("w18 restore: a query killed mid-protocol and restarted from its checkpoint reproduces w15's single-run output") {
