@@ -8,8 +8,10 @@ Reads <verifyOutDir>/oracle_sql.json + per-query parquet dumps written by
 graft.Verify, runs each oracle SQL in DuckDB against the same tables, and
 compares: schema (sorted column names), row count, and values (rows sorted,
 columns sorted by name, float compared bit-exact then with 1e-9 rel tol).
+A dump with no oracle fails as "no oracle"; an oracle with no dump fails on
+its read.
 """
-import sys, json, math
+import sys, json, math, os
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -67,6 +69,11 @@ def main():
         n_pass += ok; n_fail += (not ok)
         extra = ("  " + "; ".join(msgs)) if msgs else ""
         print(f"{status} {name} ({len(s) if 's' in dir() else '?'} rows){extra}")
+    for name in sorted(os.listdir(out_dir)):
+        if (os.path.isdir(os.path.join(out_dir, name)) and name not in oracles
+                and not (only and name not in only)):
+            print(f"FAIL {name}: no oracle")
+            n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail, {len(oracles)} oracles")
     sys.exit(1 if n_fail else 0)
 

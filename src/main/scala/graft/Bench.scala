@@ -708,14 +708,14 @@ object Bench {
           taskFailures.current = "block_volume"
           def volJson(v: graft.operators.Dedup.BlockVolume): String =
             s"""{"n_blocks":${v.nBlocks},"max_block":${v.maxBlock},"total_pairs":${v.totalPairs}}"""
-          val v1 = graft.queries.TrainingDataQueries
+          val v1 = graft.queries.DedupQueries
             .blockedQueryVolumesAt(spark, sfDir, copies = 1)
           val vols = v1.toSeq.sortBy(_._1)
             .map { case (q, v) => "\"" + q + "\":" + volJson(v) }
             .mkString("{", ",", "}")
           val scaling =
             try {
-              val v10 = graft.queries.TrainingDataQueries
+              val v10 = graft.queries.DedupQueries
                 .blockedQueryVolumesAt(spark, sfDir, copies = 10)
               // the THIRD curve point, headline realistic canaries only
               // (the 100× corpus is 100× the documents table; the other
@@ -723,7 +723,7 @@ object Bench {
               // OWN Try: a 100×-only failure must degrade those two
               // entries to their 2-point form, not blind the whole
               // block_volume_scaling tripwire — and it must be LOUD.
-              val v100 = scala.util.Try(graft.queries.TrainingDataQueries
+              val v100 = scala.util.Try(graft.queries.DedupQueries
                   .realisticBlockedVolumes100(spark, sfDir))
                 .recover { case e =>
                   System.err.println(s"[bench] 100x curve point FAILED " +

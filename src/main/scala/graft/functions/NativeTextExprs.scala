@@ -287,7 +287,7 @@ case class AHash61Expr(child: Expression) extends UnaryExpression {
   * Scala home of the MinHash family — signature element i is the min
   * over shingle hashes h of (h·(2i+1) + 7919i + 13) mod P — and of the
   * band-parameter check every MinHash operator relies on (the oracle
-  * SQL's twin is `TrainingDataQueries.bandSql`). */
+  * SQL's twin is `OracleSql.bandSql`). */
 case class MinHashBandKeysExpr(child: Expression, k: Int, numHashes: Int, bands: Int)
     extends UnaryExpression with CodegenFallback {
   require(numHashes % bands == 0, "bands must divide numHashes")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * pipeline (query-aware filtering, topic labeling, boilerplate term
   * discovery complement the frequency-only signals in
   * [[graft.functions.TextFunctions]] and the unigram-LM score in
-  * `TrainingDataQueries.x11`).
+  * `TextQueries`' x11).
   *
   * Scale shape (both operators): the token stream is the only
   * corpus-sized intermediate and it is reduced IMMEDIATELY by a

@@ -31,17 +31,17 @@ import graft.Tables
   * (key, time), no per-row range probe, no equi-join explosion — the
   * formulation that survives skewed keys at 100 TB.
   */
-object EventTimeQueries extends QueryModule {
+object EventTimeQueries {
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  lazy val queries: Seq[Query] = Seq(
     // W1 tumbling window (Assigner::Tumbling{length}).
-    "w1_tumbling" -> ((s, d) =>
+    Query("w1_tumbling", (s, d) =>
       Tables.events(s, d)
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
         .select(col("window.start").as("window_start"), col("event_type"),
-          col("n"), col("sum_value"))),
+          col("n"), col("sum_value")),
+      tumblingDailySql),
 
     // W1 tumbling window through the ACTUAL Structured Streaming path:
     // parquet file streaming source → StateStoreSaveExec → memory sink,
@@ -51,8 +51,9 @@ object EventTimeQueries extends QueryModule {
     // the green row proves batch and streaming execution agree on
     // window assignment AND that the stateful path computes the same
     // aggregate.
-    "w1_streaming" -> ((s, d) =>
-      graft.streaming.StreamingRun.tumblingDaily(s, d)),
+    Query("w1_streaming", (s, d) =>
+      graft.streaming.StreamingRun.tumblingDaily(s, d),
+      tumblingDailySql),
 
     // W9 row: session windows (SURVEY §2 item W8) through the ACTUAL
     // streaming session-state path — the SECOND stateful exec this
@@ -73,15 +74,23 @@ object EventTimeQueries extends QueryModule {
     // exact match set under any micro-batching, so the oracle is the
     // plain batch join (see StreamingRun.attributionJoin for the
     // watermark/state-eviction at-scale note).
-    "w10_streaming_join" -> ((s, d) =>
-      graft.streaming.StreamingRun.attributionJoin(s, d)),
+    Query("w10_streaming_join", (s, d) =>
+      graft.streaming.StreamingRun.attributionJoin(s, d),
+      // the streaming inner join's exact match set = the batch join
+      """SELECT a.user_id, a.event_id AS view_id, b.event_id AS purchase_id,
+        |  a.ts AS view_ts, b.ts AS purchase_ts, b.value AS purchase_value
+        |FROM events a JOIN events b
+        |  ON a.user_id = b.user_id
+        | AND a.event_type = 'view' AND b.event_type = 'purchase'
+        | AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 12 HOUR""".stripMargin),
 
     // W11: streaming key dedup through StreamingDeduplicateExec — the
     // FOURTH stateful streaming exec under a driver-visible oracle.
     // Key-only projection makes the emitted set exactly DISTINCT
     // (user_id, event_type), independent of arrival order.
-    "w11_streaming_dedup" -> ((s, d) =>
-      graft.streaming.StreamingRun.distinctPairs(s, d)),
+    Query("w11_streaming_dedup", (s, d) =>
+      graft.streaming.StreamingRun.distinctPairs(s, d),
+      "SELECT DISTINCT user_id, event_type FROM events"),
 
     // W12: the DSL's custom StatefulOperator (T6) through the ACTUAL
     // streaming path — FlatMapGroupsWithStateExec, the FIFTH stateful
@@ -90,16 +99,30 @@ object EventTimeQueries extends QueryModule {
     // row per key), integer-scaled (micro-unit) state — deterministic
     // under any batch split or order, exact (not FP-tolerant)
     // cross-engine.
-    "w12_streaming_operator" -> ((s, d) =>
-      graft.streaming.StreamingRun.operatorRunningAgg(s, d)),
+    Query("w12_streaming_operator", (s, d) =>
+      graft.streaming.StreamingRun.operatorRunningAgg(s, d),
+      // final running state per key = the plain per-key aggregate; the
+      // state is integer micro-units (floor(value·1e6) per row — per-row
+      // double math is bit-identical cross-engine, the BIGINT sum
+      // order-free), so the match is exact by construction, not up to FP
+      // associativity. DuckDB sum(BIGINT) widens to HUGEINT — cast back.
+      """SELECT user_id, count(*) AS n_events,
+        |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
+        |    AS sum_value_micros
+        |FROM events GROUP BY user_id""".stripMargin),
 
     // W13: the DSL's IndexOperator (declared state indexes, T6/W6
     // modern path) through TransformWithStateExec — the SIXTH stateful
     // streaming exec under a driver-visible oracle. Integer-only
     // running state (count, sum of event ids) via a declared
     // ValueIndex; same final-state readout discipline as w12.
-    "w13_streaming_index_operator" -> ((s, d) =>
-      graft.streaming.StreamingRun.indexOperatorRunningAgg(s, d)),
+    Query("w13_streaming_index_operator", (s, d) =>
+      graft.streaming.StreamingRun.indexOperatorRunningAgg(s, d),
+      // integer-only state: bit-exact cross-engine (DuckDB sum(BIGINT)
+      // widens to HUGEINT — cast back)
+      """SELECT user_id, count(*) AS n_events,
+        |  CAST(sum(event_id) AS BIGINT) AS sum_ids
+        |FROM events GROUP BY user_id""".stripMargin),
 
     // W15: the tumbling aggregation in APPEND mode under a REAL
     // advancing watermark — the allowed-lateness/eviction oracle row.
@@ -110,10 +133,19 @@ object EventTimeQueries extends QueryModule {
     // row for row, so the drop/evict/emit decisions themselves are
     // driver-checked. Trailing windows the final watermark never
     // passes are held in state and never appear.
-    "w15_streaming_watermark" -> ((s, d) =>
+    Query("w15_streaming_watermark", (s, d) =>
       graft.streaming.StreamingRun.tumblingDailyWatermarked(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // w15: replay of the staged watermark run, constants single-sourced
+      // with StreamingRun.tumblingDailyWatermarked's defaults (5 files,
+      // 2-day delay, %97 one-file stragglers, %89 three-file stragglers
+      // from the first two files). b = the staged batch index
+      // (watermarkBatchIndex); a row survives the late filter iff its
+      // window end exceeds the LAGGED watermark (data through batch b-2,
+      // ms floor, minus delay — SPARK-40925's two-value contract); a
+      // window appears iff its end <= the final eviction watermark.
+      w15Sql),
 
     // W18: CHECKPOINT RESTORE under the driver oracle — w15's staged
     // protocol killed after batch nFiles−2 and restarted from its own
@@ -124,10 +156,16 @@ object EventTimeQueries extends QueryModule {
     // input, double-emits, or mis-recovers the watermark hash-fails.
     // The reference's exactly-once epoch-snapshotting headline
     // (arcon/src/lib.rs:16-19) as a driver-checked row.
-    "w18_streaming_restore" -> ((s, d) =>
+    Query("w18_streaming_restore", (s, d) =>
       graft.streaming.StreamingRun.tumblingDailyWatermarkedRestored(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // w18: the oracle is w15's replay VERBATIM — restore must be
+      // output-invisible (the protocol restarts before the last file,
+      // the one point where the restart's event-time-stats loss cannot
+      // shift any late-filter decision; derivation in
+      // StreamingRun.tumblingDailyWatermarkedRestored's scaladoc).
+      w15Sql),
 
     // K11: TIME-TRAVEL state read — the statestore reader pinned to
     // mid-protocol batch 2 of w15's staged run (k9/k10 read the LAST
@@ -135,10 +173,27 @@ object EventTimeQueries extends QueryModule {
     // SnapshotManager catalog semantics). Oracle = the accepted rows of
     // batches ≤ 2 whose windows batch 2's eviction horizon had not yet
     // passed (derivation in StreamingRun.stateTimeTravel's scaladoc).
-    "k11_state_time_travel" -> ((s, d) =>
+    Query("k11_state_time_travel", (s, d) =>
       graft.streaming.StreamingRun.stateTimeTravel(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod, batchId = k11BatchId.toLong)),
+        dropMod = wmDropMod, batchId = k11BatchId.toLong),
+      // k11: the state as committed by batch 2 — accepted rows of
+      // batches ≤ 2 (per-batch two-value late filter, same wm CTE as
+      // w15) whose window end exceeds batch 2's eviction horizon
+      // wm(data ≤ 1). "Accepted ⇒ still open" (the one-batch filter lag)
+      // guarantees held state = accepted minus emitted with no overlap.
+      s"""WITH $stagedEvWmCtes,
+         |hor AS (SELECT max(ts_ms) - $wmDelayMs AS evict_ms
+         |        FROM ev WHERE b <= ${k11BatchId - 1})
+         |SELECT make_timestamp((wend_ms - 86400000) * 1000) AS window_start,
+         |  event_type, count(*) AS n,
+         |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
+         |    AS sum_value_micros
+         |FROM ev JOIN wm USING (b), hor
+         |WHERE ev.b <= $k11BatchId
+         |  AND (wm.late_wm_ms IS NULL OR ev.wend_ms > wm.late_wm_ms)
+         |  AND ev.wend_ms > hor.evict_ms
+         |GROUP BY 1, 2""".stripMargin),
 
     // K12: the SNAPSHOT CATALOG — every committed state version of
     // w15's staged run (5 data epochs + the trailing no-data eviction
@@ -147,10 +202,17 @@ object EventTimeQueries extends QueryModule {
     // the registry itself (the reference's SnapshotManager epoch →
     // snapshot catalog). Oracle = the k11 derivation replayed at ALL
     // six epochs from one ev/wm CTE pair.
-    "k12_snapshot_catalog" -> ((s, d) =>
+    Query("k12_snapshot_catalog", (s, d) =>
       graft.streaming.StreamingRun.snapshotCatalog(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // k12: the catalog replay — state version k holds the accepted
+      // rows of batches ≤ k (per-batch two-value late filter, w15's wm
+      // CTE) in windows the epoch-k eviction horizon wm(data ≤ k−1) has
+      // not passed (NULL horizon at k=0 evicts nothing); epoch 5 is the
+      // trailing no-data batch (no new rows, final horizon = k10's).
+      // Summarized per epoch: buffer count, row count, micro-unit total.
+      k12Sql),
 
     // K13: the state CHANGELOG — the same staged run's state store read
     // as a per-epoch change feed (readChangeFeed): batch k emits one
@@ -159,10 +221,20 @@ object EventTimeQueries extends QueryModule {
     // per buffer whose window the epoch-k eviction horizon newly
     // passed. The deltas between k12's snapshots, driver-checked row
     // for row.
-    "k13_state_change_feed" -> ((s, d) =>
+    Query("k13_state_change_feed", (s, d) =>
       graft.streaming.StreamingRun.stateChangeFeed(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // k13: the changelog replay. An `update` at batch k exists for each
+      // buffer with >= 1 accepted row ARRIVING in k, valued at the
+      // running aggregate over accepted rows of batches <= k ("accepted
+      // => still open" rules out evict-then-recreate, so the running
+      // total is the committed buffer). A `delete` at batch k exists for
+      // each buffer that ever existed (>= 1 accepted row, b <= k) whose
+      // window end the epoch-k horizon wm(data <= k-1) passed but the
+      // epoch-(k-1) horizon had not. Deletes carry null values (the
+      // reader does not resurrect the removed buffer).
+      k13Sql),
 
     // K14/K15: the snapshot catalog and the change feed under the
     // ROCKSDB provider (k12/k13 drain under the session default,
@@ -183,23 +255,31 @@ object EventTimeQueries extends QueryModule {
     // regardless of the state backend — the reference's claim that the
     // epoch protocol is backend-agnostic
     // (arcon/src/manager/snapshot.rs: one protocol over any Backend).
-    "w21_streaming_restore_rocksdb" -> ((s, d) =>
+    Query("w21_streaming_restore_rocksdb", (s, d) =>
       graft.streaming.StreamingRun.tumblingDailyWatermarkedRestored(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
         dropMod = wmDropMod,
-        provider = Some(graft.api.Application.RocksDbProvider))),
+        provider = Some(graft.api.Application.RocksDbProvider)),
+      // w21: w15's replay verbatim — restore is output-invisible on ANY
+      // state backend (the w18 geometry argument is provider-free).
+      w15Sql),
 
-    "k14_snapshot_catalog_rocksdb" -> ((s, d) =>
+    Query("k14_snapshot_catalog_rocksdb", (s, d) =>
       graft.streaming.StreamingRun.snapshotCatalog(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
         dropMod = wmDropMod,
-        provider = Some(graft.api.Application.RocksDbProvider))),
+        provider = Some(graft.api.Application.RocksDbProvider)),
+      // k14/k15: the k12/k13 oracles VERBATIM — the epoch catalog and
+      // delta stream are provider-independent contracts, so the RocksDB
+      // drains must serve byte-identical rows.
+      k12Sql),
 
-    "k15_change_feed_rocksdb" -> ((s, d) =>
+    Query("k15_change_feed_rocksdb", (s, d) =>
       graft.streaming.StreamingRun.stateChangeFeed(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
         dropMod = wmDropMod,
-        provider = Some(graft.api.Application.RocksDbProvider))),
+        provider = Some(graft.api.Application.RocksDbProvider)),
+      k13Sql),
 
     // W16: SESSION windows in APPEND mode under the same staged
     // advancing watermark — MergingSessions eviction under the driver
@@ -209,10 +289,20 @@ object EventTimeQueries extends QueryModule {
     // oracle replays the two-value watermark contract over batch
     // gaps-and-islands (exact under this geometry — see
     // StreamingRun.sessionWatermarked's scaladoc for the proof).
-    "w16_streaming_session_watermark" -> ((s, d) =>
+    Query("w16_streaming_session_watermark", (s, d) =>
       graft.streaming.StreamingRun.sessionWatermarked(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod, gapMinutes = wmGapMinutes)),
+        dropMod = wmDropMod, gapMinutes = wmGapMinutes),
+      // w16: the session analog of w15's replay, same staged batches and
+      // per-batch two-value watermarks but µs-precision timestamps (the
+      // session boundary compare ts - lag >= gap must match the exec's µs
+      // arithmetic; only the WATERMARK floors to ms). accepted = candidate
+      // session end (ts+gap) survives the lagged late watermark; sessions
+      // = gaps-and-islands per user over accepted rows; a session appears
+      // iff the final eviction watermark passed its end. Exactness of the
+      // flat replay vs the exec's incremental merge/evict is the geometry
+      // argument in StreamingRun.sessionWatermarked's scaladoc.
+      w16Sql),
 
     // W22: CHECKPOINT RESTORE FOR SESSION STATE — w16's staged protocol
     // killed before the last drop and restarted from its checkpoint:
@@ -223,10 +313,15 @@ object EventTimeQueries extends QueryModule {
     // geometry carries over because it is a watermark-protocol
     // argument, not a state-layout one (derivation in
     // StreamingRun.sessionWatermarkedRestored's scaladoc).
-    "w22_streaming_session_restore" -> ((s, d) =>
+    Query("w22_streaming_session_restore", (s, d) =>
       graft.streaming.StreamingRun.sessionWatermarkedRestored(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod, gapMinutes = wmGapMinutes)),
+        dropMod = wmDropMod, gapMinutes = wmGapMinutes),
+      // w22: w16's replay VERBATIM — session-state restore must be
+      // output-invisible (the w18 restart-geometry argument is about the
+      // watermark protocol, not the state layout; derivation in
+      // StreamingRun.sessionWatermarkedRestored's scaladoc).
+      w16Sql),
 
     // W26: THE TWO FAILURE MODES COMPOSED — w18's kill-and-restart with
     // w24's one-shot task fault injected into the RECOVERED run: crash
@@ -237,10 +332,14 @@ object EventTimeQueries extends QueryModule {
     // partition exactly once (the sink side of exactly-once, which
     // w24's memory sink could not exercise). Oracle = w15's replay
     // VERBATIM; the run asserts the fault fired post-restart.
-    "w26_exactly_once_restore_retry" -> ((s, d) =>
+    Query("w26_exactly_once_restore_retry", (s, d) =>
       graft.streaming.StreamingRun.tumblingDailyWatermarkedRestoredFaulted(
         s, d, nFiles = wmFiles, delayDays = wmDelayDays,
-        bumpMod = wmBumpMod, dropMod = wmDropMod)),
+        bumpMod = wmBumpMod, dropMod = wmDropMod),
+      // w26: w15's replay VERBATIM — checkpoint restore COMPOSED with a
+      // mid-batch task retry inside the recovered run (state abort at
+      // the recovered version + file-sink manifest exactly-once).
+      w15Sql),
 
     // W25: EVENT-TIME EMISSION LATENCY — the reference measure() sink's
     // latency-percentile metric as an oracle row: w15's staged run
@@ -250,10 +349,41 @@ object EventTimeQueries extends QueryModule {
     // max in integer ms. The oracle replays horizon and emission epoch
     // per window, so emission timing itself is driver-checked
     // (derivation in StreamingRun.emissionLatency's scaladoc).
-    "w25_emission_latency" -> ((s, d) =>
+    Query("w25_emission_latency", (s, d) =>
       graft.streaming.StreamingRun.emissionLatency(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // w25: the latency replay — per emitted (window, event_type), the
+      // emission epoch is the first whose eviction horizon passed the
+      // window end (hor(k) = max ts(b ≤ k−1) − delay, the k12/k13 epoch
+      // spine); latency = that horizon − window end; then the same
+      // integer nearest-rank percentiles the Spark side computes.
+      s"""WITH $stagedEvWmCtes,
+         |$stagedEpochCtes,
+         |emitw AS (
+         |  SELECT w.wend_ms, w.event_type, min(hor.batch_id) AS kb
+         |  FROM (SELECT DISTINCT wend_ms, event_type FROM acc) w
+         |  JOIN hor ON hor.evict_ms IS NOT NULL
+         |    AND w.wend_ms <= hor.evict_ms
+         |  GROUP BY 1, 2),
+         |lat AS (
+         |  SELECT hor.evict_ms - emitw.wend_ms AS latency_ms
+         |  FROM emitw JOIN hor ON hor.batch_id = emitw.kb),
+         |ranked AS (
+         |  SELECT latency_ms,
+         |    row_number() OVER (ORDER BY latency_ms) AS rn,
+         |    count(*) OVER () AS n
+         |  FROM lat)
+         |SELECT 'p50' AS pct, CAST(min(latency_ms) AS BIGINT) AS latency_ms
+         |FROM ranked WHERE rn * 100 >= n * 50
+         |UNION ALL
+         |SELECT 'p90', CAST(min(latency_ms) AS BIGINT)
+         |FROM ranked WHERE rn * 100 >= n * 90
+         |UNION ALL
+         |SELECT 'p99', CAST(min(latency_ms) AS BIGINT)
+         |FROM ranked WHERE rn * 100 >= n * 99
+         |UNION ALL
+         |SELECT 'max', CAST(max(latency_ms) AS BIGINT) FROM lat""".stripMargin),
 
     // W24: EXACTLY-ONCE UNDER A MID-BATCH TASK FAILURE — w15's staged
     // protocol with a one-shot fault injected INTO the StateStoreSave
@@ -265,10 +395,14 @@ object EventTimeQueries extends QueryModule {
     // mid-epoch recovery claim (arcon node/mod.rs:406-453) as a
     // driver-checked row; the clean restore rows (w18/w20-w23) cover
     // the between-epochs half.
-    "w24_exactly_once_task_failure" -> ((s, d) =>
+    Query("w24_exactly_once_task_failure", (s, d) =>
       graft.streaming.StreamingRun.tumblingDailyWatermarkedFaulted(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // w24: w15's replay VERBATIM — a mid-batch task failure + retry
+      // must be output-invisible too (the exactly-once contract at TASK
+      // granularity; the run itself asserts the fault fired).
+      w15Sql),
 
     // W23: CHECKPOINT RESTORE FOR THE TransformWithStateExec LAYOUT —
     // the restore matrix's last hole. w13's modern state API (declared
@@ -280,10 +414,32 @@ object EventTimeQueries extends QueryModule {
     // StreamingRun.indexOperatorTimerRestored's scaladoc). Oracle =
     // the accepted-row batch replay: per-user count/sum(event_id) plus
     // the DISTINCT day-ends the final eviction watermark passed.
-    "w23_streaming_tws_restore" -> ((s, d) =>
+    Query("w23_streaming_tws_restore", (s, d) =>
       graft.streaming.StreamingRun.indexOperatorTimerRestored(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // w23: the TransformWithState restore replay. Restore is
+      // output-invisible, so the oracle is the single-run batch replay:
+      // the exec's row-level late filter is w19's strict `ts > late_wm`
+      // rule (WatermarkSupport's predicate, not the aggregation's
+      // window-end rule); 'state' rows are the per-user running
+      // (count, sum(event_id)) the final max-count emission carries;
+      // 'timer' rows are the DISTINCT (user, day-end) instants the FINAL
+      // eviction watermark passed — armed per element with SET
+      // coalescing, so re-arms collapse exactly like the DISTINCT.
+      s"""WITH $stagedEvWmCtes,
+         |accr AS (
+         |  SELECT ev.* FROM ev JOIN wm USING (b)
+         |  WHERE wm.late_wm_ms IS NULL OR ev.ts_ms > wm.late_wm_ms),
+         |fin AS (SELECT max(ts_ms) - $wmDelayMs AS wm_ms FROM ev)
+         |SELECT user_id, 'state' AS row_kind,
+         |  CAST(count(*) AS BIGINT) AS a,
+         |  CAST(sum(event_id) AS BIGINT) AS b
+         |FROM accr GROUP BY 1
+         |UNION ALL
+         |SELECT DISTINCT user_id, 'timer' AS row_kind,
+         |  wend_ms AS a, CAST(0 AS BIGINT) AS b
+         |FROM accr, fin WHERE accr.wend_ms <= fin.wm_ms""".stripMargin),
 
     // W17: the stream-stream interval join WITH watermarks on both
     // sides (w10 runs append without one, by pre-w15 design) — LEFT
@@ -293,8 +449,63 @@ object EventTimeQueries extends QueryModule {
     // beyond-lateness stragglers drop on both sides. The oracle is the
     // batch interval join over late-filter-accepted rows plus the
     // final-horizon rule for the null-extended set.
-    "w17_streaming_interval_join_watermark" -> ((s, d) =>
-      graft.streaming.StreamingRun.intervalJoinWatermarked(s, d)),
+    Query("w17_streaming_interval_join_watermark", (s, d) =>
+      graft.streaming.StreamingRun.intervalJoinWatermarked(s, d),
+      // w17: replay of the watermarked symmetric join. The watermark is
+      // PER-SIDE (Catalyst pushes the event-type filter below each
+      // EventTimeWatermark node, so each side's tracker advances on its
+      // own rows and the global value is the MIN of the two — verified
+      // against the exec's per-batch progress trace). accepted = raw ts
+      // survives the lagged late watermark (a plain-column watermark, so
+      // the predicate is on ts itself, unlike w15/w16's window-end);
+      // matched = accepted views x accepted purchases under the interval
+      // condition (µs-exact integer arithmetic); null-extended = accepted
+      // views with no accepted match whose horizon (ts + 12h) the final
+      // eviction watermark passed — Spark's per-side state watermarks are
+      // sized from the range condition so an evicted row's would-be
+      // partner is always itself late-dropped (proof in
+      // StreamingRun.intervalJoinWatermarked's scaladoc), which is what
+      // makes this flat join exact.
+      """WITH ev AS (
+        |  SELECT event_id, user_id, event_type, ts, epoch_us(ts) AS ts_us,
+        |    least(4, ntile(5) OVER (ORDER BY event_id) - 1
+        |      + CASE WHEN event_id % 97 = 0 THEN 1 ELSE 0 END
+        |      + CASE WHEN ntile(5) OVER (ORDER BY event_id) - 1 <= 1
+        |             AND event_id % 89 = 0 THEN 3 ELSE 0 END) AS b
+        |  FROM events),
+        |bm AS (
+        |  SELECT b,
+        |    max(CASE WHEN event_type = 'view' THEN ts_us // 1000 END) AS vmx,
+        |    max(CASE WHEN event_type = 'purchase' THEN ts_us // 1000 END)
+        |      AS pmx
+        |  FROM ev GROUP BY b),
+        |wm AS (
+        |  SELECT b,
+        |    CASE WHEN vrun IS NULL OR prun IS NULL THEN NULL
+        |         ELSE (least(vrun, prun) - 172800000) * 1000 END
+        |      AS late_wm_us
+        |  FROM (SELECT b,
+        |      max(vmx) OVER (ORDER BY b
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING) AS vrun,
+        |      max(pmx) OVER (ORDER BY b
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING) AS prun
+        |    FROM bm)),
+        |fin AS (SELECT (least(
+        |    max(CASE WHEN event_type = 'view' THEN ts_us // 1000 END),
+        |    max(CASE WHEN event_type = 'purchase' THEN ts_us // 1000 END))
+        |    - 172800000) * 1000 AS wm_us FROM ev),
+        |acc AS (
+        |  SELECT ev.* FROM ev JOIN wm USING (b)
+        |  WHERE wm.late_wm_us IS NULL OR ev.ts_us > wm.late_wm_us)
+        |SELECT v.event_id AS view_id, v.user_id, v.ts AS view_ts,
+        |  p.event_id AS purchase_id, p.ts AS purchase_ts
+        |FROM (SELECT * FROM acc WHERE event_type = 'view') v
+        |LEFT JOIN (SELECT * FROM acc WHERE event_type = 'purchase') p
+        |  ON v.user_id = p.user_id AND p.ts_us > v.ts_us
+        | AND p.ts_us <= v.ts_us + 43200000000
+        |, fin
+        |WHERE p.event_id IS NOT NULL
+        |   OR v.ts_us + 43200000000 < fin.wm_us""".stripMargin),
 
     // W19: streaming dedup with BOUNDED state
     // (dropDuplicatesWithinWatermark) — planted retransmissions inside
@@ -302,8 +513,50 @@ object EventTimeQueries extends QueryModule {
     // exactly when the original's state expired behind the eviction
     // watermark; the oracle replays both decisions per row (see
     // StreamingRun.dedupWithinWatermark).
-    "w19_streaming_dedup_within_watermark" -> ((s, d) =>
-      graft.streaming.StreamingRun.dedupWithinWatermark(s, d)),
+    Query("w19_streaming_dedup_within_watermark", (s, d) =>
+      graft.streaming.StreamingRun.dedupWithinWatermark(s, d),
+      // w19: the within-watermark dedup replay. Staged rows = originals
+      // (event_id ntile, file b0) + near retransmissions (+1 day, file
+      // b0+1, b0 ≤ 3) + far ones (+5 days, file b0+3, b0 ≤ 1, not also
+      // near). Per batch: late filter at µs vs the LAGGED watermark
+      // (data ≤ b−2, SPARK-40925); per key: the first accepted occurrence
+      // emits and arms expiry = its event time + delay; a second accepted
+      // occurrence emits iff that expiry fell strictly behind ITS batch's
+      // eviction watermark (data ≤ b−1) — otherwise the state entry is
+      // live and the exec suppresses it.
+      """WITH base AS (
+        |  SELECT event_id, ts,
+        |    ntile(5) OVER (ORDER BY event_id) - 1 AS b0
+        |  FROM events),
+        |rows0 AS (
+        |  SELECT event_id, ts, b0 AS b FROM base
+        |  UNION ALL
+        |  SELECT event_id, ts + INTERVAL 1 DAY, b0 + 1 FROM base
+        |  WHERE event_id % 7 = 0 AND b0 <= 3
+        |  UNION ALL
+        |  SELECT event_id, ts + INTERVAL 5 DAY, b0 + 3 FROM base
+        |  WHERE event_id % 11 = 0 AND event_id % 7 <> 0 AND b0 <= 1),
+        |r AS (SELECT event_id, ts, b, epoch_us(ts) AS ts_us FROM rows0),
+        |wm AS (
+        |  SELECT b,
+        |    (max(mx_ms) OVER (ORDER BY b
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
+        |      - 172800000) * 1000 AS late_wm_us,
+        |    (max(mx_ms) OVER (ORDER BY b
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
+        |      - 172800000) * 1000 AS evict_wm_us
+        |  FROM (SELECT b, max(ts_us // 1000) AS mx_ms FROM r GROUP BY b)),
+        |acc AS (
+        |  SELECT r.*, wm.evict_wm_us FROM r JOIN wm USING (b)
+        |  WHERE wm.late_wm_us IS NULL OR r.ts_us > wm.late_wm_us),
+        |ranked AS (
+        |  SELECT *,
+        |    row_number() OVER (PARTITION BY event_id ORDER BY b) AS rk,
+        |    lag(ts_us) OVER (PARTITION BY event_id ORDER BY b) AS prev_ts_us
+        |  FROM acc)
+        |SELECT event_id, ts FROM ranked
+        |WHERE rk = 1
+        |   OR prev_ts_us + 172800000000 < evict_wm_us""".stripMargin),
 
     // K10: the HOLDBACK half of the allowed-lateness contract, read
     // from state: after w15's staged watermarked append run, the
@@ -311,10 +564,23 @@ object EventTimeQueries extends QueryModule {
     // final eviction watermark never passed (w15's output is the
     // emitted complement). Oracle = w15's accepted-row replay with the
     // final-horizon filter flipped.
-    "k10_watermark_held_state" -> ((s, d) =>
+    Query("k10_watermark_held_state", (s, d) =>
       graft.streaming.StreamingRun.watermarkHeldState(s, d,
         nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod)),
+        dropMod = wmDropMod),
+      // k10: w15's oracle with the final-horizon filter FLIPPED — the
+      // state after the final batch holds the accepted rows of windows
+      // the final eviction watermark never passed (w15 emits the others)
+      s"""WITH $stagedEvWmCtes,
+         |fin AS (SELECT max(ts_ms) - $wmDelayMs AS wm_ms FROM ev)
+         |SELECT make_timestamp((wend_ms - 86400000) * 1000) AS window_start,
+         |  event_type, count(*) AS n,
+         |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
+         |    AS sum_value_micros
+         |FROM ev JOIN wm USING (b), fin
+         |WHERE (wm.late_wm_ms IS NULL OR ev.wend_ms > wm.late_wm_ms)
+         |  AND ev.wend_ms > fin.wm_ms
+         |GROUP BY 1, 2""".stripMargin),
 
     // K9: QUERYABLE STATE — the tumbling aggregation's state store read
     // back as a table through Spark's statestore data source (the
@@ -322,10 +588,19 @@ object EventTimeQueries extends QueryModule {
     // checkpoint's state files directly instead of exporting). Oracle =
     // the plain batch aggregate: state ≡ recompute IS the state store's
     // correctness contract.
-    "k9_queryable_state" -> ((s, d) =>
-      graft.streaming.StreamingRun.queryableState(s, d)),
+    Query("k9_queryable_state", (s, d) =>
+      graft.streaming.StreamingRun.queryableState(s, d),
+      // k9: the state store's aggregation buffers must equal the batch
+      // recompute, buffer-for-buffer (integer micro-unit sums, exact)
+      """SELECT make_timestamp(
+        |    ((epoch_us(ts) // 1000) // 86400000) * 86400000 * 1000)
+        |    AS window_start,
+        |  event_type, count(*) AS n,
+        |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
+        |    AS sum_value_micros
+        |FROM events GROUP BY 1, 2""".stripMargin),
 
-    "w9_streaming_sessions" -> ((s, d) =>
+    Query("w9_streaming_sessions", (s, d) =>
       graft.streaming.StreamingRun.drainComplete(s,
         graft.streaming.StreamingRun.eventsStream(s, d)
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
@@ -333,16 +608,44 @@ object EventTimeQueries extends QueryModule {
         .select(col("user_id"),
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"),
-          col("n_events"), col("sum_value"))),
+          col("n_events"), col("sum_value")),
+      // Spark session_window semantics exactly: STRICT microsecond
+      // overlap (break iff ts >= prev + gap — unlike w3's floor-seconds
+      // inclusive-1800 rule), session_end = last event + gap.
+      """WITH flagged AS (
+        |  SELECT user_id, event_id, ts, value,
+        |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
+        |         WHEN ts >= lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1
+        |         ELSE 0 END AS is_new
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |), numbered AS (
+        |  SELECT user_id, ts, value,
+        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |  FROM flagged)
+        |SELECT user_id, min(ts) AS session_start,
+        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
+        |  count(*) AS n_events, sum(value) AS sum_value
+        |FROM numbered GROUP BY user_id, sid""".stripMargin),
 
     // W1 sliding window (Assigner::Sliding{length: 1h, slide: 30m}) — each
     // event lands in length/slide = 2 windows.
-    "w2_sliding" -> ((s, d) =>
+    Query("w2_sliding", (s, d) =>
       Tables.events(s, d)
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
         .select(col("window.start").as("window_start"), col("event_type"),
-          col("n"), col("sum_value"))),
+          col("n"), col("sum_value")),
+      // Sliding windows: enumerate both 30-min-aligned starts covering each
+      // event via epoch-millisecond integer arithmetic (timezone-free).
+      """SELECT ws AS window_start, event_type, count(*) AS n, sum(value) AS sum_value
+        |FROM (
+        |  SELECT event_type, value,
+        |    unnest([make_timestamp((epoch_ms(ts) // 1800000) * 1800000 * 1000),
+        |            make_timestamp(((epoch_ms(ts) // 1800000) - 1) * 1800000 * 1000)]) AS ws
+        |  FROM events)
+        |GROUP BY 1, 2""".stripMargin),
 
     // SURVEY §2 row W8, session windows (absent in the reference —
     // superset capability; the query key is w3, streaming twin is w9):
@@ -351,7 +654,7 @@ object EventTimeQueries extends QueryModule {
     // Hot-key escape hatch at 100×: graft.operators.ScalableWindows
     // .sessionize — same semantics two-phase over time buckets, many
     // tasks per key (equivalence-tested in ScalableWindowsSpec).
-    "w3_sessionize" -> ((s, d) => {
+    Query("w3_sessionize", (s, d) => {
       val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val newSess = when(
         col("ts").cast("long") - lag(col("ts").cast("long"), 1).over(byUser) > 1800, 1L)
@@ -363,13 +666,14 @@ object EventTimeQueries extends QueryModule {
       withSess.groupBy(col("user_id"), col("session_no"))
         .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
           count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-    }),
+    },
+      sessionizeSql),
 
     // The skew-safe two-phase sessionize producing the SAME session
     // aggregate as w3 — per-key work splits across day buckets (many
     // tasks per key), equivalence additionally pinned by the shared
     // oracle SQL.
-    "w7_sessionize_twophase" -> ((s, d) =>
+    Query("w7_sessionize_twophase", (s, d) =>
       graft.operators.ScalableWindows.sessionize(
         Tables.events(s, d),
         key = col("user_id"),
@@ -377,13 +681,15 @@ object EventTimeQueries extends QueryModule {
         time = col("ts"), tieBreak = col("event_id"), gapSeconds = 1800)
         .groupBy(col("user_id"), col("session_no"))
         .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))),
+          count(lit(1)).as("n_events"), sum(col("value")).as("sum_value")),
+      // identical sessions must fall out of the two-phase plan
+      sessionizeSql),
 
     // W3 AppenderWindow (arcon/src/index/window/appender.rs:10-91), run
     // through the actual DSL appender path: buffer the whole (user, hour)
     // window, materialize order-insensitive stats from the buffered
     // elements.
-    "w5_appender" -> ((s, d) => {
+    Query("w5_appender", (s, d) => {
       import org.apache.spark.sql.Encoders
       val ds = Tables.events(s, d)
         .select(col("event_id"), expr("unix_millis(ts)").as("tms"), col("user_id"))
@@ -403,7 +709,14 @@ object EventTimeQueries extends QueryModule {
           col("_3").as("window_end"), col("_4._1").as("n_events"),
           col("_4._2").as("sum_ids"), col("_4._3").as("min_id"),
           col("_4._4").as("max_id"))
-    }),
+    },
+      """SELECT user_id,
+        |  (epoch_ms(ts) // 3600000) * 3600000 AS window_start,
+        |  (epoch_ms(ts) // 3600000) * 3600000 + 3600000 AS window_end,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(event_id) AS BIGINT) AS sum_ids,
+        |  min(event_id) AS min_id, max(event_id) AS max_id
+        |FROM events GROUP BY 1, 2, 3""".stripMargin),
 
     // W5 ArrowWindow (arcon/src/index/window/arrow.rs:17-122), run
     // through the DSL arrowBatch path: the whole (user, hour) window
@@ -413,7 +726,7 @@ object EventTimeQueries extends QueryModule {
     // trigger. The batch fn here is a one-pass count/sum/max — an
     // order-insensitive computation, as arrowBatch delivers the group
     // unordered.
-    "w8_arrow_batch" -> ((s, d) => {
+    Query("w8_arrow_batch", (s, d) => {
       import org.apache.spark.sql.Encoders
       val ds = Tables.events(s, d)
         .select(col("event_id"), expr("unix_millis(ts)").as("tms"), col("user_id"))
@@ -435,7 +748,14 @@ object EventTimeQueries extends QueryModule {
         .select(col("_1").as("user_id"), col("_2").as("window_start"),
           col("_3").as("window_end"), col("_4._1").as("n_events"),
           col("_4._2").as("sum_ids"), col("_4._3").as("max_id"))
-    }),
+    },
+      """SELECT user_id,
+        |  (epoch_ms(ts) // 3600000) * 3600000 AS window_start,
+        |  (epoch_ms(ts) // 3600000) * 3600000 + 3600000 AS window_end,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(event_id) AS BIGINT) AS sum_ids,
+        |  max(event_id) AS max_id
+        |FROM events GROUP BY 1, 2, 3""".stripMargin),
 
     // Interval (range) join — the other half of SURVEY §2.6's
     // "as-of/interval" row: re-orders within 7 days by the same customer
@@ -444,7 +764,7 @@ object EventTimeQueries extends QueryModule {
     // shuffle; the range predicate evaluates inside the join — at 100×
     // the key-hash exchange is the plan's only wide edge, and AQE's
     // skew handling covers hot customers.
-    "w6_interval_join" -> ((s, d) => {
+    Query("w6_interval_join", (s, d) => {
       val o = Tables.orders(s, d)
       val a = o.select(col("o_custkey").as("custkey"),
         col("o_orderkey").as("first_orderkey"), col("o_orderdate").as("first_date"))
@@ -456,13 +776,21 @@ object EventTimeQueries extends QueryModule {
           col("next_date") <= col("first_date") + expr("INTERVAL 7 DAYS"))
         .select(col("custkey"), col("first_orderkey"), col("next_orderkey"),
           col("first_date"), col("next_date"))
-    }),
+    },
+      """SELECT a.o_custkey AS custkey,
+        |  a.o_orderkey AS first_orderkey, b.o_orderkey AS next_orderkey,
+        |  a.o_orderdate AS first_date, b.o_orderdate AS next_date
+        |FROM orders a JOIN orders b
+        |  ON a.o_custkey = b.o_custkey
+        | AND a.o_orderkey < b.o_orderkey
+        | AND b.o_orderdate >= a.o_orderdate
+        | AND b.o_orderdate <= a.o_orderdate + INTERVAL 7 DAY""".stripMargin),
 
     // As-of join (SURVEY §2.6 "as-of/interval" row): for every event, the
     // latest order of that user at-or-before the event time. Implemented as
     // merge-union + last(ignoreNulls) over an ordered window: right rows
     // sort before left rows at equal timestamps (inclusive >= semantics).
-    "w4_asof_join" -> ((s, d) => {
+    Query("w4_asof_join", (s, d) => {
       // Deduplicate the right side to one row per (key, time) so the pick
       // among simultaneous orders is deterministic (highest orderkey).
       val right = Tables.orders(s, d)
@@ -485,7 +813,15 @@ object EventTimeQueries extends QueryModule {
         .filter(col("side") === 1)
         .select(col("event_id"), col("k").as("user_id"),
           col("asof_orderkey"), col("asof_totalprice"))
-    })
+    },
+      """WITH r AS (
+        |  SELECT o_custkey AS k, o_orderdate AS t,
+        |    max(o_orderkey) AS r_orderkey,
+        |    arg_max(o_totalprice, o_orderkey) AS r_totalprice
+        |  FROM orders GROUP BY 1, 2)
+        |SELECT e.event_id, e.user_id,
+        |  r.r_orderkey AS asof_orderkey, r.r_totalprice AS asof_totalprice
+        |FROM events e ASOF LEFT JOIN r ON e.user_id = r.k AND e.ts >= r.t""".stripMargin)
   )
 
   /** Shared by w3 (single-partition window) and w7 (two-phase skew-safe)
@@ -522,7 +858,7 @@ object EventTimeQueries extends QueryModule {
       |FROM events GROUP BY 1, 2""".stripMargin
 
   /** Staged watermark-protocol constants — ONE source of truth for the
-    * StreamingRun call sites in `defs` AND every ms-precision oracle
+    * StreamingRun call sites in the queries AND every ms-precision oracle
     * CTE below. wmFiles staged drops, a wmDelayDays allowed-lateness
     * delay, %wmBumpMod one-file stragglers, %wmDropMod three-file
     * stragglers from the first two files. */
@@ -550,7 +886,7 @@ object EventTimeQueries extends QueryModule {
     * is the per-batch LAGGED late-filter watermark (data ≤ b−2,
     * SPARK-40925's two-value contract). The protocol constants
     * interpolate from [[wmFiles]]/[[wmDelayMs]]/[[wmBumpMod]]/
-    * [[wmDropMod]] — the same vals `defs` passes to StreamingRun — so
+    * [[wmDropMod]] — the same vals the queries pass to StreamingRun — so
     * a constant change lands in the runner and every oracle at once.
     * The µs-precision oracles (w16 sessions, w17 join, w19 dedup) keep
     * their own preludes: they compare at microsecond precision over
@@ -708,391 +1044,4 @@ object EventTimeQueries extends QueryModule {
         |GROUP BY user_id, island, fin.wm_us
         |HAVING max(ts_us) + 1800000000 <= fin.wm_us""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "w1_tumbling" -> tumblingDailySql,
-
-    "w1_streaming" -> tumblingDailySql,
-
-    // Sliding windows: enumerate both 30-min-aligned starts covering each
-    // event via epoch-millisecond integer arithmetic (timezone-free).
-    "w2_sliding" ->
-      """SELECT ws AS window_start, event_type, count(*) AS n, sum(value) AS sum_value
-        |FROM (
-        |  SELECT event_type, value,
-        |    unnest([make_timestamp((epoch_ms(ts) // 1800000) * 1800000 * 1000),
-        |            make_timestamp(((epoch_ms(ts) // 1800000) - 1) * 1800000 * 1000)]) AS ws
-        |  FROM events)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "w3_sessionize" -> sessionizeSql,
-
-    // Spark session_window semantics exactly: STRICT microsecond
-    // overlap (break iff ts >= prev + gap — unlike w3's floor-seconds
-    // inclusive-1800 rule), session_end = last event + gap.
-    "w9_streaming_sessions" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
-        |         WHEN ts >= lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1
-        |         ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), numbered AS (
-        |  SELECT user_id, ts, value,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events, sum(value) AS sum_value
-        |FROM numbered GROUP BY user_id, sid""".stripMargin,
-
-    // identical sessions must fall out of the two-phase plan
-    "w7_sessionize_twophase" -> sessionizeSql,
-
-    // the streaming inner join's exact match set = the batch join
-    "w10_streaming_join" ->
-      """SELECT a.user_id, a.event_id AS view_id, b.event_id AS purchase_id,
-        |  a.ts AS view_ts, b.ts AS purchase_ts, b.value AS purchase_value
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id
-        | AND a.event_type = 'view' AND b.event_type = 'purchase'
-        | AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 12 HOUR""".stripMargin,
-
-    "w11_streaming_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-
-    // w19: the within-watermark dedup replay. Staged rows = originals
-    // (event_id ntile, file b0) + near retransmissions (+1 day, file
-    // b0+1, b0 ≤ 3) + far ones (+5 days, file b0+3, b0 ≤ 1, not also
-    // near). Per batch: late filter at µs vs the LAGGED watermark
-    // (data ≤ b−2, SPARK-40925); per key: the first accepted occurrence
-    // emits and arms expiry = its event time + delay; a second accepted
-    // occurrence emits iff that expiry fell strictly behind ITS batch's
-    // eviction watermark (data ≤ b−1) — otherwise the state entry is
-    // live and the exec suppresses it.
-    "w19_streaming_dedup_within_watermark" ->
-      """WITH base AS (
-        |  SELECT event_id, ts,
-        |    ntile(5) OVER (ORDER BY event_id) - 1 AS b0
-        |  FROM events),
-        |rows0 AS (
-        |  SELECT event_id, ts, b0 AS b FROM base
-        |  UNION ALL
-        |  SELECT event_id, ts + INTERVAL 1 DAY, b0 + 1 FROM base
-        |  WHERE event_id % 7 = 0 AND b0 <= 3
-        |  UNION ALL
-        |  SELECT event_id, ts + INTERVAL 5 DAY, b0 + 3 FROM base
-        |  WHERE event_id % 11 = 0 AND event_id % 7 <> 0 AND b0 <= 1),
-        |r AS (SELECT event_id, ts, b, epoch_us(ts) AS ts_us FROM rows0),
-        |wm AS (
-        |  SELECT b,
-        |    (max(mx_ms) OVER (ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |      - 172800000) * 1000 AS late_wm_us,
-        |    (max(mx_ms) OVER (ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |      - 172800000) * 1000 AS evict_wm_us
-        |  FROM (SELECT b, max(ts_us // 1000) AS mx_ms FROM r GROUP BY b)),
-        |acc AS (
-        |  SELECT r.*, wm.evict_wm_us FROM r JOIN wm USING (b)
-        |  WHERE wm.late_wm_us IS NULL OR r.ts_us > wm.late_wm_us),
-        |ranked AS (
-        |  SELECT *,
-        |    row_number() OVER (PARTITION BY event_id ORDER BY b) AS rk,
-        |    lag(ts_us) OVER (PARTITION BY event_id ORDER BY b) AS prev_ts_us
-        |  FROM acc)
-        |SELECT event_id, ts FROM ranked
-        |WHERE rk = 1
-        |   OR prev_ts_us + 172800000000 < evict_wm_us""".stripMargin,
-
-    // k10: w15's oracle with the final-horizon filter FLIPPED — the
-    // state after the final batch holds the accepted rows of windows
-    // the final eviction watermark never passed (w15 emits the others)
-    "k10_watermark_held_state" ->
-      s"""WITH $stagedEvWmCtes,
-         |fin AS (SELECT max(ts_ms) - $wmDelayMs AS wm_ms FROM ev)
-         |SELECT make_timestamp((wend_ms - 86400000) * 1000) AS window_start,
-         |  event_type, count(*) AS n,
-         |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
-         |    AS sum_value_micros
-         |FROM ev JOIN wm USING (b), fin
-         |WHERE (wm.late_wm_ms IS NULL OR ev.wend_ms > wm.late_wm_ms)
-         |  AND ev.wend_ms > fin.wm_ms
-         |GROUP BY 1, 2""".stripMargin,
-
-    // k9: the state store's aggregation buffers must equal the batch
-    // recompute, buffer-for-buffer (integer micro-unit sums, exact)
-    "k9_queryable_state" ->
-      """SELECT make_timestamp(
-        |    ((epoch_us(ts) // 1000) // 86400000) * 86400000 * 1000)
-        |    AS window_start,
-        |  event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
-        |    AS sum_value_micros
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // w15: replay of the staged watermark run, constants single-sourced
-    // with StreamingRun.tumblingDailyWatermarked's defaults (5 files,
-    // 2-day delay, %97 one-file stragglers, %89 three-file stragglers
-    // from the first two files). b = the staged batch index
-    // (watermarkBatchIndex); a row survives the late filter iff its
-    // window end exceeds the LAGGED watermark (data through batch b-2,
-    // ms floor, minus delay — SPARK-40925's two-value contract); a
-    // window appears iff its end <= the final eviction watermark.
-    "w15_streaming_watermark" -> w15Sql,
-
-    // w18: the oracle is w15's replay VERBATIM — restore must be
-    // output-invisible (the protocol restarts before the last file,
-    // the one point where the restart's event-time-stats loss cannot
-    // shift any late-filter decision; derivation in
-    // StreamingRun.tumblingDailyWatermarkedRestored's scaladoc).
-    "w18_streaming_restore" -> w15Sql,
-
-    // k11: the state as committed by batch 2 — accepted rows of
-    // batches ≤ 2 (per-batch two-value late filter, same wm CTE as
-    // w15) whose window end exceeds batch 2's eviction horizon
-    // wm(data ≤ 1). "Accepted ⇒ still open" (the one-batch filter lag)
-    // guarantees held state = accepted minus emitted with no overlap.
-    "k11_state_time_travel" ->
-      s"""WITH $stagedEvWmCtes,
-         |hor AS (SELECT max(ts_ms) - $wmDelayMs AS evict_ms
-         |        FROM ev WHERE b <= ${k11BatchId - 1})
-         |SELECT make_timestamp((wend_ms - 86400000) * 1000) AS window_start,
-         |  event_type, count(*) AS n,
-         |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
-         |    AS sum_value_micros
-         |FROM ev JOIN wm USING (b), hor
-         |WHERE ev.b <= $k11BatchId
-         |  AND (wm.late_wm_ms IS NULL OR ev.wend_ms > wm.late_wm_ms)
-         |  AND ev.wend_ms > hor.evict_ms
-         |GROUP BY 1, 2""".stripMargin,
-
-    // k12: the catalog replay — state version k holds the accepted
-    // rows of batches ≤ k (per-batch two-value late filter, w15's wm
-    // CTE) in windows the epoch-k eviction horizon wm(data ≤ k−1) has
-    // not passed (NULL horizon at k=0 evicts nothing); epoch 5 is the
-    // trailing no-data batch (no new rows, final horizon = k10's).
-    // Summarized per epoch: buffer count, row count, micro-unit total.
-    "k12_snapshot_catalog" -> k12Sql,
-
-    // k13: the changelog replay. An `update` at batch k exists for each
-    // buffer with >= 1 accepted row ARRIVING in k, valued at the
-    // running aggregate over accepted rows of batches <= k ("accepted
-    // => still open" rules out evict-then-recreate, so the running
-    // total is the committed buffer). A `delete` at batch k exists for
-    // each buffer that ever existed (>= 1 accepted row, b <= k) whose
-    // window end the epoch-k horizon wm(data <= k-1) passed but the
-    // epoch-(k-1) horizon had not. Deletes carry null values (the
-    // reader does not resurrect the removed buffer).
-    "k13_state_change_feed" -> k13Sql,
-
-    // k14/k15: the k12/k13 oracles VERBATIM — the epoch catalog and
-    // delta stream are provider-independent contracts, so the RocksDB
-    // drains must serve byte-identical rows.
-    "k14_snapshot_catalog_rocksdb" -> k12Sql,
-    "k15_change_feed_rocksdb" -> k13Sql,
-
-    // w21: w15's replay verbatim — restore is output-invisible on ANY
-    // state backend (the w18 geometry argument is provider-free).
-    "w21_streaming_restore_rocksdb" -> w15Sql,
-
-    // w24: w15's replay VERBATIM — a mid-batch task failure + retry
-    // must be output-invisible too (the exactly-once contract at TASK
-    // granularity; the run itself asserts the fault fired).
-    "w24_exactly_once_task_failure" -> w15Sql,
-
-    // w26: w15's replay VERBATIM — checkpoint restore COMPOSED with a
-    // mid-batch task retry inside the recovered run (state abort at
-    // the recovered version + file-sink manifest exactly-once).
-    "w26_exactly_once_restore_retry" -> w15Sql,
-
-    // w25: the latency replay — per emitted (window, event_type), the
-    // emission epoch is the first whose eviction horizon passed the
-    // window end (hor(k) = max ts(b ≤ k−1) − delay, the k12/k13 epoch
-    // spine); latency = that horizon − window end; then the same
-    // integer nearest-rank percentiles the Spark side computes.
-    "w25_emission_latency" ->
-      s"""WITH $stagedEvWmCtes,
-         |$stagedEpochCtes,
-         |emitw AS (
-         |  SELECT w.wend_ms, w.event_type, min(hor.batch_id) AS kb
-         |  FROM (SELECT DISTINCT wend_ms, event_type FROM acc) w
-         |  JOIN hor ON hor.evict_ms IS NOT NULL
-         |    AND w.wend_ms <= hor.evict_ms
-         |  GROUP BY 1, 2),
-         |lat AS (
-         |  SELECT hor.evict_ms - emitw.wend_ms AS latency_ms
-         |  FROM emitw JOIN hor ON hor.batch_id = emitw.kb),
-         |ranked AS (
-         |  SELECT latency_ms,
-         |    row_number() OVER (ORDER BY latency_ms) AS rn,
-         |    count(*) OVER () AS n
-         |  FROM lat)
-         |SELECT 'p50' AS pct, CAST(min(latency_ms) AS BIGINT) AS latency_ms
-         |FROM ranked WHERE rn * 100 >= n * 50
-         |UNION ALL
-         |SELECT 'p90', CAST(min(latency_ms) AS BIGINT)
-         |FROM ranked WHERE rn * 100 >= n * 90
-         |UNION ALL
-         |SELECT 'p99', CAST(min(latency_ms) AS BIGINT)
-         |FROM ranked WHERE rn * 100 >= n * 99
-         |UNION ALL
-         |SELECT 'max', CAST(max(latency_ms) AS BIGINT) FROM lat""".stripMargin,
-
-    // w16: the session analog of w15's replay, same staged batches and
-    // per-batch two-value watermarks but µs-precision timestamps (the
-    // session boundary compare ts - lag >= gap must match the exec's µs
-    // arithmetic; only the WATERMARK floors to ms). accepted = candidate
-    // session end (ts+gap) survives the lagged late watermark; sessions
-    // = gaps-and-islands per user over accepted rows; a session appears
-    // iff the final eviction watermark passed its end. Exactness of the
-    // flat replay vs the exec's incremental merge/evict is the geometry
-    // argument in StreamingRun.sessionWatermarked's scaladoc.
-    "w16_streaming_session_watermark" -> w16Sql,
-
-    // w22: w16's replay VERBATIM — session-state restore must be
-    // output-invisible (the w18 restart-geometry argument is about the
-    // watermark protocol, not the state layout; derivation in
-    // StreamingRun.sessionWatermarkedRestored's scaladoc).
-    "w22_streaming_session_restore" -> w16Sql,
-
-    // w23: the TransformWithState restore replay. Restore is
-    // output-invisible, so the oracle is the single-run batch replay:
-    // the exec's row-level late filter is w19's strict `ts > late_wm`
-    // rule (WatermarkSupport's predicate, not the aggregation's
-    // window-end rule); 'state' rows are the per-user running
-    // (count, sum(event_id)) the final max-count emission carries;
-    // 'timer' rows are the DISTINCT (user, day-end) instants the FINAL
-    // eviction watermark passed — armed per element with SET
-    // coalescing, so re-arms collapse exactly like the DISTINCT.
-    "w23_streaming_tws_restore" ->
-      s"""WITH $stagedEvWmCtes,
-         |accr AS (
-         |  SELECT ev.* FROM ev JOIN wm USING (b)
-         |  WHERE wm.late_wm_ms IS NULL OR ev.ts_ms > wm.late_wm_ms),
-         |fin AS (SELECT max(ts_ms) - $wmDelayMs AS wm_ms FROM ev)
-         |SELECT user_id, 'state' AS row_kind,
-         |  CAST(count(*) AS BIGINT) AS a,
-         |  CAST(sum(event_id) AS BIGINT) AS b
-         |FROM accr GROUP BY 1
-         |UNION ALL
-         |SELECT DISTINCT user_id, 'timer' AS row_kind,
-         |  wend_ms AS a, CAST(0 AS BIGINT) AS b
-         |FROM accr, fin WHERE accr.wend_ms <= fin.wm_ms""".stripMargin,
-
-
-    // w17: replay of the watermarked symmetric join. The watermark is
-    // PER-SIDE (Catalyst pushes the event-type filter below each
-    // EventTimeWatermark node, so each side's tracker advances on its
-    // own rows and the global value is the MIN of the two — verified
-    // against the exec's per-batch progress trace). accepted = raw ts
-    // survives the lagged late watermark (a plain-column watermark, so
-    // the predicate is on ts itself, unlike w15/w16's window-end);
-    // matched = accepted views x accepted purchases under the interval
-    // condition (µs-exact integer arithmetic); null-extended = accepted
-    // views with no accepted match whose horizon (ts + 12h) the final
-    // eviction watermark passed — Spark's per-side state watermarks are
-    // sized from the range condition so an evicted row's would-be
-    // partner is always itself late-dropped (proof in
-    // StreamingRun.intervalJoinWatermarked's scaladoc), which is what
-    // makes this flat join exact.
-    "w17_streaming_interval_join_watermark" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, ts, epoch_us(ts) AS ts_us,
-        |    least(4, ntile(5) OVER (ORDER BY event_id) - 1
-        |      + CASE WHEN event_id % 97 = 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN ntile(5) OVER (ORDER BY event_id) - 1 <= 1
-        |             AND event_id % 89 = 0 THEN 3 ELSE 0 END) AS b
-        |  FROM events),
-        |bm AS (
-        |  SELECT b,
-        |    max(CASE WHEN event_type = 'view' THEN ts_us // 1000 END) AS vmx,
-        |    max(CASE WHEN event_type = 'purchase' THEN ts_us // 1000 END)
-        |      AS pmx
-        |  FROM ev GROUP BY b),
-        |wm AS (
-        |  SELECT b,
-        |    CASE WHEN vrun IS NULL OR prun IS NULL THEN NULL
-        |         ELSE (least(vrun, prun) - 172800000) * 1000 END
-        |      AS late_wm_us
-        |  FROM (SELECT b,
-        |      max(vmx) OVER (ORDER BY b
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING) AS vrun,
-        |      max(pmx) OVER (ORDER BY b
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING) AS prun
-        |    FROM bm)),
-        |fin AS (SELECT (least(
-        |    max(CASE WHEN event_type = 'view' THEN ts_us // 1000 END),
-        |    max(CASE WHEN event_type = 'purchase' THEN ts_us // 1000 END))
-        |    - 172800000) * 1000 AS wm_us FROM ev),
-        |acc AS (
-        |  SELECT ev.* FROM ev JOIN wm USING (b)
-        |  WHERE wm.late_wm_us IS NULL OR ev.ts_us > wm.late_wm_us)
-        |SELECT v.event_id AS view_id, v.user_id, v.ts AS view_ts,
-        |  p.event_id AS purchase_id, p.ts AS purchase_ts
-        |FROM (SELECT * FROM acc WHERE event_type = 'view') v
-        |LEFT JOIN (SELECT * FROM acc WHERE event_type = 'purchase') p
-        |  ON v.user_id = p.user_id AND p.ts_us > v.ts_us
-        | AND p.ts_us <= v.ts_us + 43200000000
-        |, fin
-        |WHERE p.event_id IS NOT NULL
-        |   OR v.ts_us + 43200000000 < fin.wm_us""".stripMargin,
-
-    // final running state per key = the plain per-key aggregate; the
-    // state is integer micro-units (floor(value·1e6) per row — per-row
-    // double math is bit-identical cross-engine, the BIGINT sum
-    // order-free), so the match is exact by construction, not up to FP
-    // associativity. DuckDB sum(BIGINT) widens to HUGEINT — cast back.
-    "w12_streaming_operator" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
-        |    AS sum_value_micros
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    // integer-only state: bit-exact cross-engine (DuckDB sum(BIGINT)
-    // widens to HUGEINT — cast back)
-    "w13_streaming_index_operator" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(event_id) AS BIGINT) AS sum_ids
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "w5_appender" ->
-      """SELECT user_id,
-        |  (epoch_ms(ts) // 3600000) * 3600000 AS window_start,
-        |  (epoch_ms(ts) // 3600000) * 3600000 + 3600000 AS window_end,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(event_id) AS BIGINT) AS sum_ids,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
-
-    "w8_arrow_batch" ->
-      """SELECT user_id,
-        |  (epoch_ms(ts) // 3600000) * 3600000 AS window_start,
-        |  (epoch_ms(ts) // 3600000) * 3600000 + 3600000 AS window_end,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(event_id) AS BIGINT) AS sum_ids,
-        |  max(event_id) AS max_id
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
-
-    "w6_interval_join" ->
-      """SELECT a.o_custkey AS custkey,
-        |  a.o_orderkey AS first_orderkey, b.o_orderkey AS next_orderkey,
-        |  a.o_orderdate AS first_date, b.o_orderdate AS next_date
-        |FROM orders a JOIN orders b
-        |  ON a.o_custkey = b.o_custkey
-        | AND a.o_orderkey < b.o_orderkey
-        | AND b.o_orderdate >= a.o_orderdate
-        | AND b.o_orderdate <= a.o_orderdate + INTERVAL 7 DAY""".stripMargin,
-
-    "w4_asof_join" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS k, o_orderdate AS t,
-        |    max(o_orderkey) AS r_orderkey,
-        |    arg_max(o_totalprice, o_orderkey) AS r_totalprice
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id,
-        |  r.r_orderkey AS asof_orderkey, r.r_totalprice AS asof_totalprice
-        |FROM events e ASOF LEFT JOIN r ON e.user_id = r.k AND e.ts >= r.t""".stripMargin
-  )
 }

@@ -1172,15 +1172,19 @@ object StreamingRun {
     * holding the rows whose `__b` is k (`__b` dropped), with strictly
     * increasing modification times so FileStreamSource delivers them in
     * exactly this order. Staged once per (`kind`, `dir`, source
-    * fingerprint, `key`) and reused: the fingerprint
-    * ([[sourceFingerprint]]) follows the CONTENT of the source table, so
-    * regenerating it in place invalidates the cache instead of silently
-    * replaying stale data against a fresh oracle, and `key` carries the
-    * kind's parameters and projected columns. `rows` is built only on a
-    * miss: ONE sort checkpoint, then one filtered write per file, into a
-    * process-private build dir published with ONE atomic rename
-    * ([[publishStaged]]) — a concurrent reader sees the complete dir or
-    * none.
+    * fingerprint, `key`) and reused, under the root
+    * `graft-stream-<kind>-<idTag>-<fpTag>` in `java.io.tmpdir`: `idTag`
+    * hashes (`kind`, `dir`, `key`), where `key` carries the kind's
+    * parameters and projected columns, and `fpTag` is the fingerprint
+    * ([[sourceFingerprint]]), which follows the CONTENT of the source
+    * table, so regenerating it in place invalidates the cache instead
+    * of silently replaying stale data against a fresh oracle. `rows` is
+    * built only on a miss: ONE sort checkpoint, then one filtered write
+    * per file, into a process-private build dir published with ONE
+    * atomic rename ([[publishStaged]]) — a concurrent reader sees the
+    * complete dir or none. Once published, every other complete root of
+    * the same `<kind>-<idTag>` (a superseded fingerprint) is deleted;
+    * roots of other sources are never touched.
     *
     * Every staged file is asserted NON-EMPTY: the oracles replay
     * per-batch watermarks and drop assignments, so an empty file (a
@@ -1190,11 +1194,12 @@ object StreamingRun {
       key: Seq[Any], nBatches: Int)(rows: => DataFrame): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    val tag = java.lang.Integer.toHexString(
+    val idTag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(
-        (Seq(kind, dir, sourceFingerprint(dir)) ++ key).mkString("|")))
+        (Seq(kind, dir) ++ key).mkString("|")))
+    val prefix = s"graft-stream-$kind-$idTag-"
     val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-$kind-$tag")
+      prefix + sourceFingerprint(dir))
     if (Files.exists(root.resolve("_STAGED"))) return root.toString
     val build = Paths.get(s"$root.build-${java.lang.ProcessHandle.current().pid()}")
     val tmp = build.resolve("tmp")
@@ -1215,6 +1220,11 @@ object StreamingRun {
     }
     deleteTree(tmp)
     publishStaged(build, root)
+    val sibling = (java.util.regex.Pattern.quote(prefix) + "[0-9a-f]+").r
+    scala.util.Using.resource(Files.list(root.getParent))(_.iterator().asScala
+      .filter(p => p != root && sibling.matches(p.getFileName.toString) &&
+        Files.exists(p.resolve("_STAGED"))).toList)
+      .foreach(deleteTree)
     root.toString
   }
 
@@ -1406,9 +1416,10 @@ object StreamingRun {
     * composition in SQL (same ntile drop assignment, dd14's band CTEs,
     * x15's battery) grouped by (day, source, fate).
     *
-    * Derivation and gates arrive as ARGUMENTS (the ingest-batch rule
-    * lives with its oracle CTE in TrainingDataQueries; the Gopher gate
-    * is [[graft.operators.GopherRules.keep]]) so each stays
+    * Derivation and gates arrive as ARGUMENTS (the ingest-batch rule is
+    * `DedupQueries.incrBatchKeeping`, its oracle CTE
+    * `OracleSql.ingestBatchCte`; the Gopher gate is
+    * [[graft.operators.GopherRules.keep]]) so each stays
     * single-sourced. At 100 TB: the stream side shuffles band keys and
     * day×doc verdicts (day-sized, never corpus-sized); the prior's two
     * static tables are the materialized index a production gate keeps

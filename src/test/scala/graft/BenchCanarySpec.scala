@@ -11,7 +11,7 @@ class BenchCanarySpec extends SparkTestBase {
   import CanaryHealth._
 
   test("every emitted canary has a declared health rule, and every rule names an emitted canary") {
-    val emitted = graft.queries.TrainingDataQueries
+    val emitted = graft.queries.DedupQueries
       .blockedQueryVolumesAt(spark, "/root/testdata/sf0.001", copies = 1)
       .keySet
     assert(rules.keySet == emitted,
@@ -60,12 +60,12 @@ class BenchCanarySpec extends SparkTestBase {
 
   test("the 100x third point is real: decade-over-decade exponent of the headline realistic canaries stays linear") {
     val sf = "/root/testdata/sf0.001"
-    val v100 = graft.queries.TrainingDataQueries
+    val v100 = graft.queries.DedupQueries
       .realisticBlockedVolumes100(spark, sf)
     // every 100x entry names a declared canary (the bench emits its
     // health through the same rules map)
     assert(v100.nonEmpty && v100.keySet.subsetOf(rules.keySet), v100.keySet)
-    val v10 = graft.queries.TrainingDataQueries
+    val v10 = graft.queries.DedupQueries
       .blockedQueryVolumesAt(spark, sf, copies = 10)
     v100.foreach { case (q, c) =>
       val b = v10(q)

@@ -73,7 +73,14 @@ class HarnessSpec extends AnyFunSuite {
     // the planted 4/5-prefix rule, once per engine
     onlyIn("size(ts) * 4 / 5", List("prefixTruncated"))
     onceIn("greatest((len(string_split(text, ' ')) * 4) // 5, 1)",
-      "TrainingDataQueries.scala")
+      "OracleSql.scala")
+  }
+
+  test("src/main keeps one record per query and one home per repeated oracle block: top-k rank, IVF centroids") {
+    onlyIn("ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS \"rank\"", List("topKSql"))
+    onlyIn("WHERE vec_id < 8 AND embedding IS NOT NULL", List("ivfCentsCte"))
+    onlyIn("def defs", Nil)
+    onlyIn("def oracles", Nil)
   }
 
   test("Verify's log filter drops only the missing-checksum line") {

@@ -1325,9 +1325,9 @@ class DedupSpec extends SparkTestBase {
     // crosses documents only through true (planted) duplication, so the
     // 1x -> 10x pair-growth exponent must stay far below the saturated
     // dd13 row's 2.6+, and the hottest bucket must not track corpus size
-    val a = graft.queries.TrainingDataQueries
+    val a = graft.queries.DedupQueries
       .dd13RealisticVolume(spark, "/root/testdata/sf0.01", copies = 1)
-    val b = graft.queries.TrainingDataQueries
+    val b = graft.queries.DedupQueries
       .dd13RealisticVolume(spark, "/root/testdata/sf0.01", copies = 10)
     assert(a.totalPairs > 0 && b.totalPairs > 0, s"degenerate: $a / $b")
     val exp = math.log(b.totalPairs.toDouble / a.totalPairs.toDouble) /
@@ -1346,9 +1346,9 @@ class DedupSpec extends SparkTestBase {
     // the prior index only through a true planted re-crawl, so organic
     // 10x growth of BOTH sides must grow collisions ~linearly and the
     // hottest (band, band_key) bucket stays one planted pair's bands
-    val a = graft.queries.TrainingDataQueries
+    val a = graft.queries.DedupQueries
       .dd14RealisticVolume(spark, "/root/testdata/sf0.01", copies = 1)
-    val b = graft.queries.TrainingDataQueries
+    val b = graft.queries.DedupQueries
       .dd14RealisticVolume(spark, "/root/testdata/sf0.01", copies = 10)
     assert(a.totalPairs > 0 && b.totalPairs > 0, s"degenerate: $a / $b")
     val exp = math.log(b.totalPairs.toDouble / a.totalPairs.toDouble) /

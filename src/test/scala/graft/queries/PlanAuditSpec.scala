@@ -255,7 +255,7 @@ class PlanAuditSpec extends SparkTestBase {
         val df = graft.operators.Dedup.perceptualHashDup(
           graft.operators.Multimodal.resizeNearest(
             graft.operators.Multimodal.decodeLumaGrid(
-              TrainingDataQueries.imagePngPairDocs(spark, sf),
+              MultimodalQueries.imagePngPairDocs(spark, sf),
               "doc_id", "media"),
             "doc_id", targetW = 8, targetH = 8),
           "doc_id", "grid", maxHamming = 3)

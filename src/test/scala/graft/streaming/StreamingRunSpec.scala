@@ -46,8 +46,7 @@ class StreamingRunSpec extends SparkTestBase {
   }
 
   test("w9_streaming_sessions equals the batch session_window aggregation exactly") {
-    val streaming = graft.queries.EventTimeQueries
-      .defs("w9_streaming_sessions")(spark, sfDir)
+    val streaming = graft.SparkEntry.queries("w9_streaming_sessions")(spark, sfDir)
       .collect().map(_.toSeq).toSet
     val batch = graft.Tables.events(spark, sfDir)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
@@ -272,7 +271,7 @@ class StreamingRunSpec extends SparkTestBase {
 
   test("w14_streaming_ingest_gate runs the stateful agg over stream-static joins and equals batch dd14 exactly") {
     var plan = ""
-    val batch = graft.queries.TrainingDataQueries.incrBatchOf(
+    val batch = graft.queries.DedupQueries.incrBatchOf(
       StreamingRun.tableStream(spark, sfDir, "documents")
         .select(col("doc_id"), col("text")))
     val streaming = StreamingRun.ingestGate(spark, batch,
@@ -288,7 +287,7 @@ class StreamingRunSpec extends SparkTestBase {
     assert(!plan.contains("StreamingSymmetricHashJoin"), plan)
     val got = streaming.collect().map(_.toSeq).toSet
     val want = graft.operators.Dedup.incrementalMinHash(
-      graft.queries.TrainingDataQueries.incrBatchOf(
+      graft.queries.DedupQueries.incrBatchOf(
         graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))),
       graft.Tables.documents(spark, sfDir), "doc_id", "text",
       shingleK = 3, numHashes = 32, bands = 8, threshold = 0.5)
@@ -451,8 +450,7 @@ class StreamingRunSpec extends SparkTestBase {
     assert(got.nonEmpty)
     // semantics actually exercised: differs from the full batch sessions
     // (late drops + trailing open sessions held back)
-    val full = graft.queries.EventTimeQueries
-      .defs("w9_streaming_sessions")(spark, sfDir)
+    val full = graft.SparkEntry.queries("w9_streaming_sessions")(spark, sfDir)
       .collect().map(_.toSeq).toSet
     assert(got.size < full.size,
       "watermark run must hold back/drop relative to the complete-mode sessions")
@@ -582,8 +580,7 @@ class StreamingRunSpec extends SparkTestBase {
 
   test("k10: held state and w15's emitted output partition the accepted windows exactly") {
     import org.apache.spark.sql.expressions.Window
-    val emitted = graft.queries.EventTimeQueries
-      .defs("w15_streaming_watermark")(spark, sfDir)
+    val emitted = graft.SparkEntry.queries("w15_streaming_watermark")(spark, sfDir)
       .collect().map(_.toSeq).toSet
     val held = StreamingRun.watermarkHeldState(spark, sfDir)
       .collect().map(_.toSeq).toSet
@@ -653,6 +650,39 @@ class StreamingRunSpec extends SparkTestBase {
     } finally {
       staged.foreach(d => StreamingRun.deleteTree(Paths.get(d)))
       StreamingRun.deleteTree(dir)
+    }
+  }
+
+  test("stage: re-staging a regenerated source deletes its superseded root, and no other source's") {
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    // two private copies of the events table: A is regenerated, B is not
+    def copy(): Path = {
+      val dir = Files.createTempDirectory("graft-fp-test")
+      Files.copy(Paths.get(sfDir, "events.parquet"), dir.resolve("events.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      dir
+    }
+    val dirs = List(copy(), copy())
+    val Seq(a, b) = dirs.map(_.toString)
+    def stage(dir: String): Path =
+      Paths.get(StreamingRun.stageEventsOrdered(spark, dir, 5, 97, 89))
+    var staged = List.empty[Path]
+    try {
+      val a1 = stage(a)
+      val b1 = stage(b)
+      staged = List(a1, b1)
+      val ev = Paths.get(a, "events.parquet")
+      Files.setLastModifiedTime(ev, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(ev).toMillis + 60000L))
+      val a2 = stage(a)
+      staged ::= a2
+      assert(a2 != a1)
+      assert(Files.exists(a2.resolve("_STAGED")))
+      assert(!Files.exists(a1), s"superseded root survived: $a1")
+      assert(Files.exists(b1.resolve("_STAGED")), s"another source's root was reaped: $b1")
+    } finally {
+      staged.foreach(StreamingRun.deleteTree)
+      dirs.foreach(StreamingRun.deleteTree)
     }
   }
 
@@ -764,7 +794,7 @@ class StreamingRunSpec extends SparkTestBase {
     StreamingRun.curationPipeline(spark, staged,
       prior = graft.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text")),
-      deriveBatch = docs => graft.queries.TrainingDataQueries
+      deriveBatch = docs => graft.queries.DedupQueries
         .incrBatchKeeping(docs, Seq("source", "arrival_ts")),
       gopherKeep = graft.operators.GopherRules.keep(col("text")),
       inspect = q => plan = planOf(q))
@@ -1175,11 +1205,9 @@ class StreamingRunSpec extends SparkTestBase {
   }
 
   test("w1_streaming result equals the batch w1_tumbling plan exactly") {
-    val streaming = graft.queries.EventTimeQueries
-      .defs("w1_streaming")(spark, sfDir)
+    val streaming = graft.SparkEntry.queries("w1_streaming")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    val batch = graft.queries.EventTimeQueries
-      .defs("w1_tumbling")(spark, sfDir)
+    val batch = graft.SparkEntry.queries("w1_tumbling")(spark, sfDir)
       .collect().map(_.toSeq).toSet
     assert(streaming == batch)
     assert(streaming.nonEmpty)
