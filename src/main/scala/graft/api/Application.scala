@@ -1,6 +1,9 @@
 package graft.api
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's `ApplicationConf`
@@ -62,20 +65,48 @@ object Application {
   }
 
   /** Every setting [[session]] gives the builder. Sessions run in UTC
-    * with the web UI off. */
+    * with the web UI off, and checkpoint files go through
+    * [[graft.streaming.LocalCheckpointFs]], which creates and renames
+    * them without starting a process per file. */
   def sessionConfs(conf: AppConf): Seq[(String, String)] = Seq(
     "spark.master" -> conf.master,
     "spark.app.name" -> conf.appName,
     "spark.sql.shuffle.partitions" -> conf.parallelism.toString,
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false") ++ backendConfs(conf.stateBackend)
+    "spark.ui.enabled" -> "false",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.streaming.LocalCheckpointFs].getName) ++
+    backendConfs(conf.stateBackend)
 
   /** The one session factory: every `SparkSession` in this repository is
-    * built here. */
-  def session(conf: AppConf): SparkSession =
-    sessionConfs(conf).foldLeft(SparkSession.builder()) {
+    * built here. Its context releases the state stores when it stops
+    * (see [[stateStoreReleaser]]). */
+  def session(conf: AppConf): SparkSession = {
+    val s = sessionConfs(conf).foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
+    stateStoreReleaser(s.sparkContext)
+    s
+  }
+
+  private val releasers = new java.util.WeakHashMap[SparkContext, SparkListener]
+
+  /** The listener that stops every state store when `sc` ends,
+    * registered once per context however often [[session]] returns it.
+    * Spark itself never stops the state stores: without it, each
+    * RocksDB instance a run loaded, and RocksDB's background threads,
+    * would still be live when the JVM exits. */
+  private[graft] def stateStoreReleaser(sc: SparkContext): SparkListener =
+    releasers.synchronized {
+      releasers.computeIfAbsent(sc, _ => {
+        val l = new SparkListener {
+          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+            StateStore.stop()
+        }
+        sc.addSparkListener(l)
+        l
+      })
+    }
 
   /** Run `body` with each `kvs` pair set on the session, then put every
     * key back as it was. The restore contract:

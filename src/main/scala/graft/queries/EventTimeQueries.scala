@@ -681,7 +681,10 @@ object EventTimeQueries {
         time = col("ts"), tieBreak = col("event_id"), gapSeconds = 1800)
         .groupBy(col("user_id"), col("session_no"))
         .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"), sum(col("value")).as("sum_value")),
+          count(lit(1)).as("n_events"),
+          // a double sum follows the shuffle's fetch order; the decimal
+          // sum is exact, so every run returns the same double
+          sum(col("value").cast("decimal(38,18)")).cast("double").as("sum_value")),
       // identical sessions must fall out of the two-phase plan
       sessionizeSql),
 

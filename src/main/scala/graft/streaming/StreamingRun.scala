@@ -102,8 +102,6 @@ object StreamingRun {
   private val DrainConfs = Seq(
     // one state store per partition, committed every batch: 4 ≤ 8 on all drains (r22)
     "spark.sql.shuffle.partitions" -> "4",
-    // scratch checkpoints need no checksum sidecars: 3–12% of cell wall (r21)
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
     // map-side session pre-merge, same sessions out: −3% to −15% on w9/w16/w22
     "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true")
 

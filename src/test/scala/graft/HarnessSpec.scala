@@ -59,6 +59,10 @@ class HarnessSpec extends AnyFunSuite {
     onlyIn("sourceFingerprint", List("stage"))
   }
 
+  test("src/main binds the checkpoint file system only in Application.sessionConfs") {
+    onlyIn("fs.AbstractFileSystem.file.impl", List("sessionConfs"))
+  }
+
   test("src/main gives each LSH decision one home: Manku tables, MinHash band check and family, 4/5-prefix rule") {
     // `pattern` sits on exactly one code line, in `file`
     def onceIn(pattern: String, file: String): Unit = {

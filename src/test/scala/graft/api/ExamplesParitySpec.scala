@@ -21,11 +21,12 @@ class ExamplesParitySpec extends SparkTestBase {
     val f = java.nio.file.Files.createTempFile("graft-file-example", ".txt")
     val lines = (1 to 100).map(_.toString) ++ Seq("not-a-number", "", "60")
     java.nio.file.Files.write(f, String.join("\n", lines: _*).getBytes)
-    val out = Stream
+    val out = try Stream
       .fromLocalFile[Int](spark, f.toString, l => l.toIntOption)(Encoders.scalaInt)
       .filter(_ > 50)
       .map(_ * 10)(Encoders.scalaInt)
       .ds.collect()
+    finally java.nio.file.Files.delete(f)
     // 51..100 plus the extra valid "60"; parse failures dropped silently
     assert(out.sorted.toSeq == ((51 to 100).map(_ * 10) :+ 600).sorted)
   }

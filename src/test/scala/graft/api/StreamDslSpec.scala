@@ -39,33 +39,40 @@ class StreamDslSpec extends SparkTestBase {
   }
 
   test("local file source parses lines and drops errors (local_file.rs:17-62)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-src").toFile
-    val f = new java.io.File(dir, "in.txt")
+    val dir = java.nio.file.Files.createTempDirectory("graft-src")
+    val f = new java.io.File(dir.toFile, "in.txt")
     java.nio.file.Files.writeString(f.toPath, "1\n2\nnope\n4\n")
-    val out = Stream.fromLocalFile[Long](spark, f.getPath, l => l.toLongOption)
+    val out = try Stream.fromLocalFile[Long](spark, f.getPath, l => l.toLongOption)
       .debug()
+    finally graft.streaming.StreamingRun.deleteTree(dir)
     assert(out.sorted == Seq(1L, 2L, 4L))
   }
 
   test("local file sink writes one line per record (K5 local_file.rs:67-109 golden check)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString + "/out"
-    Stream.fromCollection(spark, Seq(6L, 2L, 15L)).toLocalFile(dir)
-    val lines = spark.read.textFile(dir).collect().toSeq.sorted
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sink")
+    val dir = tmp.toString + "/out"
+    val lines = try {
+      Stream.fromCollection(spark, Seq(6L, 2L, 15L)).toLocalFile(dir)
+      spark.read.textFile(dir).collect().toSeq.sorted
+    } finally graft.streaming.StreamingRun.deleteTree(tmp)
     assert(lines == Seq("15", "2", "6"))
   }
 
   test("arrow IPC file round-trip (table/mod.rs:343-418 round-trip tests)") {
-    val path = java.nio.file.Files.createTempDirectory("graft-arrow").toString + "/t.arrow"
-    val df = spark.range(100).selectExpr("id", "concat('v', id) AS s",
-      "CAST(id * 1.5 AS DOUBLE) AS d")
-    new Stream(df.toDF(), SourceConf[org.apache.spark.sql.Row]()).toArrowFile(path)
-    val back = Stream.fromArrowFile(spark, path).debug()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    val orig = df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(back == orig)
-    // any Arrow reader opens it: check the stream magic is parseable by
-    // re-reading through the converters (done above) and non-empty file
-    assert(new java.io.File(path).length() > 0)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-arrow")
+    val path = tmp.toString + "/t.arrow"
+    try {
+      val df = spark.range(100).selectExpr("id", "concat('v', id) AS s",
+        "CAST(id * 1.5 AS DOUBLE) AS d")
+      new Stream(df.toDF(), SourceConf[org.apache.spark.sql.Row]()).toArrowFile(path)
+      val back = Stream.fromArrowFile(spark, path).debug()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+      val orig = df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+      assert(back == orig)
+      // any Arrow reader opens it: check the stream magic is parseable by
+      // re-reading through the converters (done above) and non-empty file
+      assert(new java.io.File(path).length() > 0)
+    } finally graft.streaming.StreamingRun.deleteTree(tmp)
   }
 
   test("print and ignore sinks materialize without error (K1/K2)") {
@@ -85,7 +92,8 @@ class StreamDslSpec extends SparkTestBase {
     // the pairs session() hands the builder, per backend
     val common = Map("spark.master" -> "local[3]", "spark.app.name" -> "graft",
       "spark.sql.shuffle.partitions" -> "6",
-      "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false")
+      "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.streaming.LocalCheckpointFs")
     def derived(backend: String) = Application.sessionConfs(AppConf(
       master = "local[3]", parallelism = 6, stateBackend = backend)).toMap
     assert(derived("hdfs") == common)
@@ -100,6 +108,36 @@ class StreamDslSpec extends SparkTestBase {
     val conf = AppConf(parallelism = 4, stateBackend = "hdfs", epochInterval = "1 seconds")
     val s = Stream.fromCollection(spark, (0L until 10L))
     assert(Application.run(s, conf).isEmpty) // bounded: executed + discarded
+  }
+
+  test("the session's context stops every state store when it ends") {
+    import org.apache.spark.scheduler.SparkListenerApplicationEnd
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.graftbridge.StateStoreBridge
+    implicit val sqlCtx = spark.sqlContext
+    // one listener per context, however often session() returns it
+    val releaser = Application.stateStoreReleaser(spark.sparkContext)
+    assert(Application.session(graft.Harness.conf(4)).sparkContext eq spark.sparkContext)
+    assert(Application.stateStoreReleaser(spark.sparkContext) eq releaser)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-release")
+    val input = MemoryStream[Long]
+    val q = Application.withConfs(spark, Application.providerConfs(Application.RocksDbProvider)) {
+      input.toDF().groupBy("value").count().writeStream.outputMode("complete")
+        .format("noop").option("checkpointLocation", ckpt.toString).start()
+    }
+    try {
+      input.addData(1L, 2L, 1L)
+      q.processAllAvailable()
+      val ids = StateStoreBridge.providerIds(q)
+      assert(ids.exists(StateStoreBridge.isLoaded), ids)
+      assert(StateStoreBridge.isMaintenanceRunning)
+      releaser.onApplicationEnd(SparkListenerApplicationEnd(System.currentTimeMillis()))
+      assert(!ids.exists(StateStoreBridge.isLoaded), ids)
+      assert(!StateStoreBridge.isMaintenanceRunning)
+    } finally {
+      q.stop()
+      graft.streaming.StreamingRun.deleteTree(ckpt)
+    }
   }
 
   test("an unknown state backend is rejected before any session is built") {

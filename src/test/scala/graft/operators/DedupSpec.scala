@@ -321,17 +321,19 @@ class DedupSpec extends SparkTestBase {
     // the same count.
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
       .toDF("doc_a", "doc_b")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString)
-    val itersByPath = for ((path, bound) <- clusterPaths;
-        reliable <- Seq(false, true)) yield {
-      val (labels, iters) = clustersOn(bound, chain, reliable = reliable)
-      val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == (1L to 6L).map((_, 1L)).toSet, s"$path reliable=$reliable")
-      assert(iters == 4, s"$path reliable=$reliable: expected 2 + ceil((5-3)/2) + 1 = 4 rounds, got $iters")
-      iters
-    }
-    assert(itersByPath.distinct.size == 1, itersByPath)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")
+    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    try {
+      val itersByPath = for ((path, bound) <- clusterPaths;
+          reliable <- Seq(false, true)) yield {
+        val (labels, iters) = clustersOn(bound, chain, reliable = reliable)
+        val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got == (1L to 6L).map((_, 1L)).toSet, s"$path reliable=$reliable")
+        assert(iters == 4, s"$path reliable=$reliable: expected 2 + ceil((5-3)/2) + 1 = 4 rounds, got $iters")
+        iters
+      }
+      assert(itersByPath.distinct.size == 1, itersByPath)
+    } finally graft.streaming.StreamingRun.deleteTree(ckpt)
   }
 
   test("clusters: star-shaped (diameter <= 2) components keep the single-hop round counts") {

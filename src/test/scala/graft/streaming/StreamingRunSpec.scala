@@ -1075,7 +1075,6 @@ class StreamingRunSpec extends SparkTestBase {
 
   test("every drain runs under the constant drain confs and leaves every session conf unchanged") {
     val drainKeys = Map("spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true")
     // a value no drain uses, so a leaked drain setting shows
     val prevSp = spark.conf.get("spark.sql.shuffle.partitions")

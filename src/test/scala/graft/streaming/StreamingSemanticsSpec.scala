@@ -283,7 +283,10 @@ class StreamingSemanticsSpec extends SparkTestBase {
       val all = Snapshots.readAll(spark, dir)
       assert(all.columns.contains("epoch"))
       assert(all.count() >= first.size + 1)
-    } finally q.stop()
+    } finally {
+      q.stop()
+      Seq(dir, ckpt).foreach(d => StreamingRun.deleteTree(java.nio.file.Paths.get(d)))
+    }
   }
 
   test("event-time timers fire via watermark; multiple timers per key (timer.rs quad-wheel analog)") {
@@ -353,7 +356,10 @@ class StreamingSemanticsSpec extends SparkTestBase {
       // 8 = 5 (restored state) + 3 (new) — 13 would mean replayed batch
       // (duplication), 3 would mean lost state.
       assert(rows == Map(1 -> 8L, 2 -> 7L))
-    } finally q2.stop()
+    } finally {
+      q2.stop()
+      StreamingRun.deleteTree(java.nio.file.Paths.get(ckpt))
+    }
   }
 
   test("streaming dedup state survives checkpoint restart (no re-emission of seen keys)") {
@@ -384,7 +390,10 @@ class StreamingSemanticsSpec extends SparkTestBase {
       q2.processAllAvailable()
       // dedup state restored: 10/20 NOT re-emitted, 30 emitted once
       assert(RestoreProbe.rows().map(_._2) == Set(10L, 20L, 30L))
-    } finally q2.stop()
+    } finally {
+      q2.stop()
+      StreamingRun.deleteTree(java.nio.file.Paths.get(ckpt))
+    }
   }
 
   test("custom operator state AND pending timers survive checkpoint restart") {
@@ -429,7 +438,10 @@ class StreamingSemanticsSpec extends SparkTestBase {
       input.addData((ts(20), 2, 1L)) // watermark → 20s: restored timer fires
       q2.processAllAvailable()
       assert(RestoreProbe.rows().contains((1, 10L)))
-    } finally q2.stop()
+    } finally {
+      q2.stop()
+      StreamingRun.deleteTree(java.nio.file.Paths.get(ckpt))
+    }
   }
 
   test("watermark is the MIN over sources — a silent source holds it back (node watermark alignment)") {
