@@ -395,14 +395,11 @@ object Bench {
       graft.streaming.Measure.remove(spark, m)
     }
     val wallSec = (System.nanoTime() - wall0) / 1e9
-    // Unload every state-store provider NOW (local mode: same JVM). The
-    // default unload path is the 60 s maintenance cycle after the
-    // coordinator deactivates the stopped query — until then, up to 32
-    // stale RocksDB providers keep snapshotting into a checkpoint we are
-    // about to delete, and that background churn lands inside the NEXT
-    // run's measured window (observed as transient 3-5× slow runs).
-    scala.util.Try(
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop())
+    // unload the leg's up to 32 RocksDB providers before its checkpoint
+    // is deleted: left to the 60 s maintenance cycle, their snapshots
+    // landed inside the NEXT run's measured window (transient 3-5× slow
+    // runs)
+    Application.releaseStateStores()
     // the per-run checkpoint (RocksDB SSTs + changelogs) is dead after
     // the run — delete so repeats don't accumulate in /tmp
     graft.streaming.StreamingRun.deleteTree(ckptDir)

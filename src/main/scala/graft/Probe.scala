@@ -27,8 +27,8 @@ import graft.api.Application
   *    function: eager driver work — streaming cells drain here), plan
   *    (analysis + optimization + physical planning, serial driver work
   *    the bench cell pays on every repeat) and execute, one warm run
-  *    plus `reps`, each with its digest. `$SPARK_GRAFT_PROBE_JOBS=1`
-  *    adds per-stage task counts and per-job wall time.
+  *    plus `reps`, each with its digest; every job's wall time and
+  *    every stage's task count print as they finish.
   *  - `drain` prints, for every micro-batch of a STREAMING cell, the
   *    engine's phase split (addBatch, queryPlanning, walCommit +
   *    commitOffsets, getBatch + latestOffset) and each stateful
@@ -112,23 +112,22 @@ object Probe {
   }
 
   private def profile(spark: SparkSession, args: Args): Unit = {
-    if (sys.env.get("SPARK_GRAFT_PROBE_JOBS").contains("1"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            t0.put(e.jobId, System.nanoTime())
-          override def onStageCompleted(
-              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val s = e.stageInfo
-            println(f"    stage ${s.stageId}%4d tasks=${s.numTasks}%4d " +
-              s"name=${s.name.take(70)}")
-          }
-          override def onJobEnd(
-              e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            println(f"  job ${e.jobId}%4d ${secs(t0.getOrDefault(e.jobId, 0L)) * 1e3}%8.1f ms")
-        })
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          t0.put(e.jobId, System.nanoTime())
+        override def onStageCompleted(
+            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+          val s = e.stageInfo
+          println(f"    stage ${s.stageId}%4d tasks=${s.numTasks}%4d " +
+            s"name=${s.name.take(70)}")
+        }
+        override def onJobEnd(
+            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          println(f"  job ${e.jobId}%4d ${secs(t0.getOrDefault(e.jobId, 0L)) * 1e3}%8.1f ms")
+      })
     args.queries.foreach { name =>
       val fn = SparkEntry.queries(name)
       (0 to args.reps.getOrElse(3)).foreach { i =>

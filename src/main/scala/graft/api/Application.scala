@@ -101,12 +101,30 @@ object Application {
       releasers.computeIfAbsent(sc, _ => {
         val l = new SparkListener {
           override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-            StateStore.stop()
+            releaseStateStores()
         }
         sc.addSparkListener(l)
         l
       })
     }
+
+  /** The one place state stores are stopped: unload every loaded
+    * state-store provider in this JVM (local mode: the only JVM), a
+    * failure to stop ignored. Called at application end
+    * ([[stateStoreReleaser]]), after every drain, and after each bench
+    * streaming run. A stopped query's providers otherwise stay loaded
+    * until the ~60 s maintenance cycle deactivates them, snapshotting in
+    * the background against a checkpoint the caller is about to delete;
+    * with dozens of drains per session that churn lands inside later
+    * cells' measured windows (the r21 A/B probe measured the resulting
+    * per-cell drift). Statestore READER providers (SPARK-45511) register
+    * in the same JVM-wide registry and are covered too. Safe between
+    * drains: the next query start reloads from its checkpoint, which is
+    * exactly the restore path the w18-w26 rows exercise. */
+  private[graft] def releaseStateStores(): Unit = {
+    scala.util.Try(StateStore.stop())
+    ()
+  }
 
   /** Run `body` with each `kvs` pair set on the session, then put every
     * key back as it was. The restore contract:

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.streaming.StreamingRun.Protocol.{batchIndexSql, DelayMs, FarMod,
+  Files, GapUs, NearMod, TimeTravelBatch, WindowUs}
 
 /** Event-time windowing semantics from the reference's WindowAssigner
   * (`/root/reference/arcon/src/stream/operator/window/assigner.rs:61-229`,
@@ -134,13 +136,10 @@ object EventTimeQueries {
     // driver-checked. Trailing windows the final watermark never
     // passes are held in state and never appear.
     Query("w15_streaming_watermark", (s, d) =>
-      graft.streaming.StreamingRun.tumblingDailyWatermarked(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
-      // w15: replay of the staged watermark run, constants single-sourced
-      // with StreamingRun.tumblingDailyWatermarked's defaults (5 files,
-      // 2-day delay, %97 one-file stragglers, %89 three-file stragglers
-      // from the first two files). b = the staged batch index
+      graft.streaming.StreamingRun.tumblingDailyWatermarked(s, d),
+      // w15: replay of the staged watermark run, constants from
+      // StreamingRun.Protocol (5 files, 2-day delay, one-file and
+      // three-file straggler sets). b = the staged batch index
       // (watermarkBatchIndex); a row survives the late filter iff its
       // window end exceeds the LAGGED watermark (data through batch b-2,
       // ms floor, minus delay — SPARK-40925's two-value contract); a
@@ -157,9 +156,7 @@ object EventTimeQueries {
     // The reference's exactly-once epoch-snapshotting headline
     // (arcon/src/lib.rs:16-19) as a driver-checked row.
     Query("w18_streaming_restore", (s, d) =>
-      graft.streaming.StreamingRun.tumblingDailyWatermarkedRestored(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
+      graft.streaming.StreamingRun.tumblingDailyWatermarkedRestored(s, d),
       // w18: the oracle is w15's replay VERBATIM — restore must be
       // output-invisible (the protocol restarts before the last file,
       // the one point where the restart's event-time-stats loss cannot
@@ -174,23 +171,21 @@ object EventTimeQueries {
     // batches ≤ 2 whose windows batch 2's eviction horizon had not yet
     // passed (derivation in StreamingRun.stateTimeTravel's scaladoc).
     Query("k11_state_time_travel", (s, d) =>
-      graft.streaming.StreamingRun.stateTimeTravel(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod, batchId = k11BatchId.toLong),
+      graft.streaming.StreamingRun.stateTimeTravel(s, d),
       // k11: the state as committed by batch 2 — accepted rows of
       // batches ≤ 2 (per-batch two-value late filter, same wm CTE as
       // w15) whose window end exceeds batch 2's eviction horizon
       // wm(data ≤ 1). "Accepted ⇒ still open" (the one-batch filter lag)
       // guarantees held state = accepted minus emitted with no overlap.
       s"""WITH $stagedEvWmCtes,
-         |hor AS (SELECT max(ts_ms) - $wmDelayMs AS evict_ms
-         |        FROM ev WHERE b <= ${k11BatchId - 1})
+         |hor AS (SELECT max(ts_ms) - $DelayMs AS evict_ms
+         |        FROM ev WHERE b <= ${TimeTravelBatch - 1})
          |SELECT make_timestamp((wend_ms - 86400000) * 1000) AS window_start,
          |  event_type, count(*) AS n,
          |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
          |    AS sum_value_micros
          |FROM ev JOIN wm USING (b), hor
-         |WHERE ev.b <= $k11BatchId
+         |WHERE ev.b <= $TimeTravelBatch
          |  AND (wm.late_wm_ms IS NULL OR ev.wend_ms > wm.late_wm_ms)
          |  AND ev.wend_ms > hor.evict_ms
          |GROUP BY 1, 2""".stripMargin),
@@ -203,9 +198,7 @@ object EventTimeQueries {
     // snapshot catalog). Oracle = the k11 derivation replayed at ALL
     // six epochs from one ev/wm CTE pair.
     Query("k12_snapshot_catalog", (s, d) =>
-      graft.streaming.StreamingRun.snapshotCatalog(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
+      graft.streaming.StreamingRun.snapshotCatalog(s, d),
       // k12: the catalog replay — state version k holds the accepted
       // rows of batches ≤ k (per-batch two-value late filter, w15's wm
       // CTE) in windows the epoch-k eviction horizon wm(data ≤ k−1) has
@@ -222,9 +215,7 @@ object EventTimeQueries {
     // passed. The deltas between k12's snapshots, driver-checked row
     // for row.
     Query("k13_state_change_feed", (s, d) =>
-      graft.streaming.StreamingRun.stateChangeFeed(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
+      graft.streaming.StreamingRun.stateChangeFeed(s, d),
       // k13: the changelog replay. An `update` at batch k exists for each
       // buffer with >= 1 accepted row ARRIVING in k, valued at the
       // running aggregate over accepted rows of batches <= k ("accepted
@@ -257,8 +248,6 @@ object EventTimeQueries {
     // (arcon/src/manager/snapshot.rs: one protocol over any Backend).
     Query("w21_streaming_restore_rocksdb", (s, d) =>
       graft.streaming.StreamingRun.tumblingDailyWatermarkedRestored(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod,
         provider = Some(graft.api.Application.RocksDbProvider)),
       // w21: w15's replay verbatim — restore is output-invisible on ANY
       // state backend (the w18 geometry argument is provider-free).
@@ -266,8 +255,6 @@ object EventTimeQueries {
 
     Query("k14_snapshot_catalog_rocksdb", (s, d) =>
       graft.streaming.StreamingRun.snapshotCatalog(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod,
         provider = Some(graft.api.Application.RocksDbProvider)),
       // k14/k15: the k12/k13 oracles VERBATIM — the epoch catalog and
       // delta stream are provider-independent contracts, so the RocksDB
@@ -276,8 +263,6 @@ object EventTimeQueries {
 
     Query("k15_change_feed_rocksdb", (s, d) =>
       graft.streaming.StreamingRun.stateChangeFeed(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod,
         provider = Some(graft.api.Application.RocksDbProvider)),
       k13Sql),
 
@@ -290,9 +275,7 @@ object EventTimeQueries {
     // gaps-and-islands (exact under this geometry — see
     // StreamingRun.sessionWatermarked's scaladoc for the proof).
     Query("w16_streaming_session_watermark", (s, d) =>
-      graft.streaming.StreamingRun.sessionWatermarked(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod, gapMinutes = wmGapMinutes),
+      graft.streaming.StreamingRun.sessionWatermarked(s, d),
       // w16: the session analog of w15's replay, same staged batches and
       // per-batch two-value watermarks but µs-precision timestamps (the
       // session boundary compare ts - lag >= gap must match the exec's µs
@@ -314,9 +297,7 @@ object EventTimeQueries {
     // argument, not a state-layout one (derivation in
     // StreamingRun.sessionWatermarkedRestored's scaladoc).
     Query("w22_streaming_session_restore", (s, d) =>
-      graft.streaming.StreamingRun.sessionWatermarkedRestored(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod, gapMinutes = wmGapMinutes),
+      graft.streaming.StreamingRun.sessionWatermarkedRestored(s, d),
       // w22: w16's replay VERBATIM — session-state restore must be
       // output-invisible (the w18 restart-geometry argument is about the
       // watermark protocol, not the state layout; derivation in
@@ -333,9 +314,7 @@ object EventTimeQueries {
     // w24's memory sink could not exercise). Oracle = w15's replay
     // VERBATIM; the run asserts the fault fired post-restart.
     Query("w26_exactly_once_restore_retry", (s, d) =>
-      graft.streaming.StreamingRun.tumblingDailyWatermarkedRestoredFaulted(
-        s, d, nFiles = wmFiles, delayDays = wmDelayDays,
-        bumpMod = wmBumpMod, dropMod = wmDropMod),
+      graft.streaming.StreamingRun.tumblingDailyWatermarkedRestoredFaulted(s, d),
       // w26: w15's replay VERBATIM — checkpoint restore COMPOSED with a
       // mid-batch task retry inside the recovered run (state abort at
       // the recovered version + file-sink manifest exactly-once).
@@ -350,9 +329,7 @@ object EventTimeQueries {
     // per window, so emission timing itself is driver-checked
     // (derivation in StreamingRun.emissionLatency's scaladoc).
     Query("w25_emission_latency", (s, d) =>
-      graft.streaming.StreamingRun.emissionLatency(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
+      graft.streaming.StreamingRun.emissionLatency(s, d),
       // w25: the latency replay — per emitted (window, event_type), the
       // emission epoch is the first whose eviction horizon passed the
       // window end (hor(k) = max ts(b ≤ k−1) − delay, the k12/k13 epoch
@@ -396,9 +373,7 @@ object EventTimeQueries {
     // driver-checked row; the clean restore rows (w18/w20-w23) cover
     // the between-epochs half.
     Query("w24_exactly_once_task_failure", (s, d) =>
-      graft.streaming.StreamingRun.tumblingDailyWatermarkedFaulted(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
+      graft.streaming.StreamingRun.tumblingDailyWatermarkedFaulted(s, d),
       // w24: w15's replay VERBATIM — a mid-batch task failure + retry
       // must be output-invisible too (the exactly-once contract at TASK
       // granularity; the run itself asserts the fault fired).
@@ -415,9 +390,7 @@ object EventTimeQueries {
     // the accepted-row batch replay: per-user count/sum(event_id) plus
     // the DISTINCT day-ends the final eviction watermark passed.
     Query("w23_streaming_tws_restore", (s, d) =>
-      graft.streaming.StreamingRun.indexOperatorTimerRestored(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
+      graft.streaming.StreamingRun.indexOperatorTimerRestored(s, d),
       // w23: the TransformWithState restore replay. Restore is
       // output-invisible, so the oracle is the single-run batch replay:
       // the exec's row-level late filter is w19's strict `ts > late_wm`
@@ -431,7 +404,7 @@ object EventTimeQueries {
          |accr AS (
          |  SELECT ev.* FROM ev JOIN wm USING (b)
          |  WHERE wm.late_wm_ms IS NULL OR ev.ts_ms > wm.late_wm_ms),
-         |fin AS (SELECT max(ts_ms) - $wmDelayMs AS wm_ms FROM ev)
+         |fin AS (SELECT max(ts_ms) - $DelayMs AS wm_ms FROM ev)
          |SELECT user_id, 'state' AS row_kind,
          |  CAST(count(*) AS BIGINT) AS a,
          |  CAST(sum(event_id) AS BIGINT) AS b
@@ -466,23 +439,16 @@ object EventTimeQueries {
       // partner is always itself late-dropped (proof in
       // StreamingRun.intervalJoinWatermarked's scaladoc), which is what
       // makes this flat join exact.
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, ts, epoch_us(ts) AS ts_us,
-        |    least(4, ntile(5) OVER (ORDER BY event_id) - 1
-        |      + CASE WHEN event_id % 97 = 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN ntile(5) OVER (ORDER BY event_id) - 1 <= 1
-        |             AND event_id % 89 = 0 THEN 3 ELSE 0 END) AS b
-        |  FROM events),
+      s"""WITH $stagedEvCte,
         |bm AS (
         |  SELECT b,
-        |    max(CASE WHEN event_type = 'view' THEN ts_us // 1000 END) AS vmx,
-        |    max(CASE WHEN event_type = 'purchase' THEN ts_us // 1000 END)
-        |      AS pmx
+        |    max(CASE WHEN event_type = 'view' THEN ts_ms END) AS vmx,
+        |    max(CASE WHEN event_type = 'purchase' THEN ts_ms END) AS pmx
         |  FROM ev GROUP BY b),
         |wm AS (
         |  SELECT b,
         |    CASE WHEN vrun IS NULL OR prun IS NULL THEN NULL
-        |         ELSE (least(vrun, prun) - 172800000) * 1000 END
+        |         ELSE (least(vrun, prun) - $DelayMs) * 1000 END
         |      AS late_wm_us
         |  FROM (SELECT b,
         |      max(vmx) OVER (ORDER BY b
@@ -491,9 +457,9 @@ object EventTimeQueries {
         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING) AS prun
         |    FROM bm)),
         |fin AS (SELECT (least(
-        |    max(CASE WHEN event_type = 'view' THEN ts_us // 1000 END),
-        |    max(CASE WHEN event_type = 'purchase' THEN ts_us // 1000 END))
-        |    - 172800000) * 1000 AS wm_us FROM ev),
+        |    max(CASE WHEN event_type = 'view' THEN ts_ms END),
+        |    max(CASE WHEN event_type = 'purchase' THEN ts_ms END))
+        |    - $DelayMs) * 1000 AS wm_us FROM ev),
         |acc AS (
         |  SELECT ev.* FROM ev JOIN wm USING (b)
         |  WHERE wm.late_wm_us IS NULL OR ev.ts_us > wm.late_wm_us)
@@ -502,10 +468,10 @@ object EventTimeQueries {
         |FROM (SELECT * FROM acc WHERE event_type = 'view') v
         |LEFT JOIN (SELECT * FROM acc WHERE event_type = 'purchase') p
         |  ON v.user_id = p.user_id AND p.ts_us > v.ts_us
-        | AND p.ts_us <= v.ts_us + 43200000000
+        | AND p.ts_us <= v.ts_us + $WindowUs
         |, fin
         |WHERE p.event_id IS NOT NULL
-        |   OR v.ts_us + 43200000000 < fin.wm_us""".stripMargin),
+        |   OR v.ts_us + $WindowUs < fin.wm_us""".stripMargin),
 
     // W19: streaming dedup with BOUNDED state
     // (dropDuplicatesWithinWatermark) — planted retransmissions inside
@@ -524,27 +490,28 @@ object EventTimeQueries {
       // occurrence emits iff that expiry fell strictly behind ITS batch's
       // eviction watermark (data ≤ b−1) — otherwise the state entry is
       // live and the exec suppresses it.
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT event_id, ts,
-        |    ntile(5) OVER (ORDER BY event_id) - 1 AS b0
+        |    ntile($Files) OVER (ORDER BY event_id) - 1 AS b0
         |  FROM events),
         |rows0 AS (
         |  SELECT event_id, ts, b0 AS b FROM base
         |  UNION ALL
         |  SELECT event_id, ts + INTERVAL 1 DAY, b0 + 1 FROM base
-        |  WHERE event_id % 7 = 0 AND b0 <= 3
+        |  WHERE event_id % $NearMod = 0 AND b0 <= ${Files - 2}
         |  UNION ALL
         |  SELECT event_id, ts + INTERVAL 5 DAY, b0 + 3 FROM base
-        |  WHERE event_id % 11 = 0 AND event_id % 7 <> 0 AND b0 <= 1),
+        |  WHERE event_id % $FarMod = 0 AND event_id % $NearMod <> 0
+        |    AND b0 <= ${Files - 4}),
         |r AS (SELECT event_id, ts, b, epoch_us(ts) AS ts_us FROM rows0),
         |wm AS (
         |  SELECT b,
         |    (max(mx_ms) OVER (ORDER BY b
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |      - 172800000) * 1000 AS late_wm_us,
+        |      - $DelayMs) * 1000 AS late_wm_us,
         |    (max(mx_ms) OVER (ORDER BY b
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |      - 172800000) * 1000 AS evict_wm_us
+        |      - $DelayMs) * 1000 AS evict_wm_us
         |  FROM (SELECT b, max(ts_us // 1000) AS mx_ms FROM r GROUP BY b)),
         |acc AS (
         |  SELECT r.*, wm.evict_wm_us FROM r JOIN wm USING (b)
@@ -556,7 +523,7 @@ object EventTimeQueries {
         |  FROM acc)
         |SELECT event_id, ts FROM ranked
         |WHERE rk = 1
-        |   OR prev_ts_us + 172800000000 < evict_wm_us""".stripMargin),
+        |   OR prev_ts_us + ${DelayMs * 1000} < evict_wm_us""".stripMargin),
 
     // K10: the HOLDBACK half of the allowed-lateness contract, read
     // from state: after w15's staged watermarked append run, the
@@ -565,14 +532,12 @@ object EventTimeQueries {
     // emitted complement). Oracle = w15's accepted-row replay with the
     // final-horizon filter flipped.
     Query("k10_watermark_held_state", (s, d) =>
-      graft.streaming.StreamingRun.watermarkHeldState(s, d,
-        nFiles = wmFiles, delayDays = wmDelayDays, bumpMod = wmBumpMod,
-        dropMod = wmDropMod),
+      graft.streaming.StreamingRun.watermarkHeldState(s, d),
       // k10: w15's oracle with the final-horizon filter FLIPPED — the
       // state after the final batch holds the accepted rows of windows
       // the final eviction watermark never passed (w15 emits the others)
       s"""WITH $stagedEvWmCtes,
-         |fin AS (SELECT max(ts_ms) - $wmDelayMs AS wm_ms FROM ev)
+         |fin AS (SELECT max(ts_ms) - $DelayMs AS wm_ms FROM ev)
          |SELECT make_timestamp((wend_ms - 86400000) * 1000) AS window_start,
          |  event_type, count(*) AS n,
          |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
@@ -860,65 +825,44 @@ object EventTimeQueries {
       |  count(*) AS n, sum(value) AS sum_value
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** Staged watermark-protocol constants — ONE source of truth for the
-    * StreamingRun call sites in the queries AND every ms-precision oracle
-    * CTE below. wmFiles staged drops, a wmDelayDays allowed-lateness
-    * delay, %wmBumpMod one-file stragglers, %wmDropMod three-file
-    * stragglers from the first two files. */
-  private val wmFiles = 5
-  private val wmDelayDays = 2
-  private val wmBumpMod = 97
-  private val wmDropMod = 89
-  private val wmDelayMs: Long = wmDelayDays * 86400000L
-
-  /** Session gap for the w16/w22 merging-session rows — passed to
-    * StreamingRun.sessionWatermarked AND interpolated into [[w16Sql]]
-    * so the gap cannot desynchronize between runner and oracle. */
-  private val wmGapMinutes = 30
-  private val wmGapUs: Long = wmGapMinutes * 60000000L
-
-  /** k11's pinned mid-protocol epoch (an interior committed version). */
-  private val k11BatchId = 2
-
   /** The staged-protocol replay prelude shared VERBATIM by every
-    * ms-precision watermark oracle below (w15/w18 emission, k10
-    * holdback, k11 time travel, k12 catalog, k13 changelog — previously
-    * ~6 hand-kept copies): `ev` assigns each event its staged batch
-    * index b (ntile + straggler bumps, the mirror of
-    * StreamingRun.watermarkBatchIndex) and its daily window end; `wm`
-    * is the per-batch LAGGED late-filter watermark (data ≤ b−2,
-    * SPARK-40925's two-value contract). The protocol constants
-    * interpolate from [[wmFiles]]/[[wmDelayMs]]/[[wmBumpMod]]/
-    * [[wmDropMod]] — the same vals the queries pass to StreamingRun — so
-    * a constant change lands in the runner and every oracle at once.
-    * The µs-precision oracles (w16 sessions, w17 join, w19 dedup) keep
-    * their own preludes: they compare at microsecond precision over
-    * different staged protocols. */
-  private val stagedEvWmCtes: String =
+    * watermark oracle below but w19's (which replays its own staged
+    * protocol): `ev` carries each event's staged batch index b
+    * ([[graft.streaming.StreamingRun.Protocol.batchIndexSql]]), its event
+    * time at µs and at ms precision, and its daily window end. The
+    * protocol constants interpolate from
+    * [[graft.streaming.StreamingRun.Protocol]], the values the staged
+    * rows run with, so a constant change lands in the runner and every
+    * oracle at once. */
+  private val stagedEvCte: String =
     s"""ev AS (
-       |  SELECT user_id, event_id, event_type, value,
+       |  SELECT user_id, event_id, event_type, value, ts,
+       |    epoch_us(ts) AS ts_us,
        |    epoch_us(ts) // 1000 AS ts_ms,
        |    ((epoch_us(ts) // 1000) // 86400000 + 1) * 86400000 AS wend_ms,
-       |    least(${wmFiles - 1}, ntile($wmFiles) OVER (ORDER BY event_id) - 1
-       |      + CASE WHEN event_id % $wmBumpMod = 0 THEN 1 ELSE 0 END
-       |      + CASE WHEN ntile($wmFiles) OVER (ORDER BY event_id) - 1 <= 1
-       |             AND event_id % $wmDropMod = 0 THEN 3 ELSE 0 END) AS b
-       |  FROM events),
+       |    $batchIndexSql AS b
+       |  FROM events)""".stripMargin
+
+  /** [[stagedEvCte]] plus `wm`, the per-batch LAGGED late-filter
+    * watermark in ms (data ≤ b−2, SPARK-40925's two-value contract) —
+    * the prelude of every single-tracker oracle (all but w17's per-side
+    * join). */
+  private val stagedEvWmCtes: String =
+    s"""$stagedEvCte,
        |wm AS (
        |  SELECT b,
        |    max(mx) OVER (ORDER BY b
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-       |      - $wmDelayMs AS late_wm_ms
+       |      - $DelayMs AS late_wm_ms
        |  FROM (SELECT b, max(ts_ms) AS mx FROM ev GROUP BY b))""".stripMargin
 
-  /** w15's replay: the staged batch index (same ntile + straggler mods
-    * as StreamingRun.watermarkBatchIndex), the per-batch two-value
+  /** w15's replay: the staged batch index, the per-batch two-value
     * watermark (late filter lags eviction by one batch, SPARK-40925),
     * emission iff the final eviction watermark passed the window end.
     * Shared VERBATIM by w18 (restore must be output-invisible). */
   private val w15Sql: String =
     s"""WITH $stagedEvWmCtes,
-       |fin AS (SELECT max(ts_ms) - $wmDelayMs AS wm_ms FROM ev)
+       |fin AS (SELECT max(ts_ms) - $DelayMs AS wm_ms FROM ev)
        |SELECT make_timestamp((wend_ms - 86400000) * 1000) AS window_start,
        |  event_type, count(*) AS n,
        |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
@@ -930,19 +874,19 @@ object EventTimeQueries {
 
   /** The per-epoch replay prelude shared by the k12 catalog and k13
     * changelog oracles (on top of [[stagedEvWmCtes]]): `ks` enumerates
-    * the committed state versions 0..wmFiles (wmFiles data epochs + the
+    * the committed state versions 0..Files (Files data epochs + the
     * trailing no-data eviction epoch), `acc` is the late-filter-
     * accepted row set, `hor` the per-epoch eviction horizon
     * wm(data ≤ k−1). */
   private val stagedEpochCtes: String =
-    s"""ks AS (SELECT unnest(range(${wmFiles + 1})) AS batch_id),
+    s"""ks AS (SELECT unnest(range(${Files + 1})) AS batch_id),
        |acc AS (
        |  SELECT ev.* FROM ev JOIN wm USING (b)
        |  WHERE wm.late_wm_ms IS NULL OR ev.wend_ms > wm.late_wm_ms),
        |hor AS (
        |  SELECT batch_id,
        |    (SELECT max(ts_ms) FROM ev WHERE ev.b <= ks.batch_id - 1)
-       |      - $wmDelayMs AS evict_ms
+       |      - $DelayMs AS evict_ms
        |  FROM ks)""".stripMargin
 
   /** k12's catalog replay — state version k summarized per epoch. The
@@ -1005,33 +949,18 @@ object EventTimeQueries {
        |FROM dels""".stripMargin
 
   /** w16's session replay — shared VERBATIM by w22 (session-state
-    * restore must be output-invisible). Protocol constants interpolate
-    * from the same wm* vals the `defs` call sites pass to
-    * StreamingRun, so a constant change lands in the runner and this
-    * oracle at once (the stagedEvWmCtes discipline; this prelude stays
-    * separate only because it compares at MICROSECOND precision). */
+    * restore must be output-invisible). Sessions compare at MICROSECOND
+    * precision (`ts_us`); only the watermark floors to ms. */
   private val w16Sql: String =
-    s"""WITH ev AS (
-        |  SELECT user_id, value, epoch_us(ts) AS ts_us,
-        |    least(${wmFiles - 1}, ntile($wmFiles) OVER (ORDER BY event_id) - 1
-        |      + CASE WHEN event_id % $wmBumpMod = 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN ntile($wmFiles) OVER (ORDER BY event_id) - 1 <= 1
-        |             AND event_id % $wmDropMod = 0 THEN 3 ELSE 0 END) AS b
-        |  FROM events),
-        |wm AS (
-        |  SELECT b,
-        |    (max(mx_ms) OVER (ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |      - $wmDelayMs) * 1000 AS late_wm_us
-        |  FROM (SELECT b, max(ts_us // 1000) AS mx_ms FROM ev GROUP BY b)),
-        |fin AS (SELECT (max(ts_us // 1000) - $wmDelayMs) * 1000 AS wm_us
-        |        FROM ev),
+    s"""WITH $stagedEvWmCtes,
+        |fin AS (SELECT (max(ts_ms) - $DelayMs) * 1000 AS wm_us FROM ev),
         |acc AS (
         |  SELECT ev.user_id, ev.value, ev.ts_us FROM ev JOIN wm USING (b)
-        |  WHERE wm.late_wm_us IS NULL OR ev.ts_us + $wmGapUs > wm.late_wm_us),
+        |  WHERE wm.late_wm_ms IS NULL
+        |     OR ev.ts_us + $GapUs > wm.late_wm_ms * 1000),
         |flagged AS (
         |  SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-        |      OR ts_us - lag(ts_us) OVER w >= $wmGapUs THEN 1 ELSE 0 END AS nf
+        |      OR ts_us - lag(ts_us) OVER w >= $GapUs THEN 1 ELSE 0 END AS nf
         |  FROM acc WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
         |isl AS (
         |  SELECT *, sum(nf) OVER (PARTITION BY user_id ORDER BY ts_us
@@ -1039,12 +968,12 @@ object EventTimeQueries {
         |  FROM flagged)
         |SELECT user_id,
         |  make_timestamp(min(ts_us)) AS session_start,
-        |  make_timestamp(max(ts_us) + $wmGapUs) AS session_end,
+        |  make_timestamp(max(ts_us) + $GapUs) AS session_end,
         |  count(*) AS n_events,
         |  CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
         |    AS sum_value_micros
         |FROM isl, fin
         |GROUP BY user_id, island, fin.wm_us
-        |HAVING max(ts_us) + 1800000000 <= fin.wm_us""".stripMargin
+        |HAVING max(ts_us) + $GapUs <= fin.wm_us""".stripMargin
 
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.StreamingRun.Protocol.{Budget, Drops}
 import graft.functions.{TextFunctions => T}
 import graft.operators.{Bpe, Chunker, Decontaminate, Dedup, GopherRules,
   Relevance, Similarity, Splits}
@@ -433,7 +434,7 @@ object PipelineQueries {
     // StreamingRun.curationPipeline's scaladoc.
     Query("pl10_streaming_curation", (s, d) => {
       val staged =
-        graft.streaming.StreamingRun.stageDocsOrdered(s, d, pl10Files)
+        graft.streaming.StreamingRun.stageDocsOrdered(s, d)
       graft.streaming.StreamingRun.curationPipeline(s, staged,
         prior = Tables.documents(s, d).select(col("doc_id"), col("text")),
         deriveBatch = docs =>
@@ -443,12 +444,12 @@ object PipelineQueries {
       // pl10: the streaming curation pipeline's per-(day, source, fate)
       // counts — the batch composition of the dd14 gate CTEs + x15's
       // battery over the SAME derived ingest batch, grouped by the staged
-      // drop index (ntile(4) by doc_id, the stageDocsOrdered assignment)
+      // drop index (ntile by doc_id, the stageDocsOrdered assignment)
       // and its day window (day k of 2020-01-01 UTC). near_dup = any gate
       // candidate verified at jaccard ≥ 0.5 (EXISTS ≡ best non-null).
       s"""WITH base AS (
          |  SELECT doc_id, text, source,
-         |    ntile($pl10Files) OVER (ORDER BY doc_id) - 1 AS b
+         |    ntile($Drops) OVER (ORDER BY doc_id) - 1 AS b
          |  FROM documents),
          |batch AS (
          |  SELECT doc_id + 1000000 AS doc_id, text, source, b
@@ -490,8 +491,7 @@ object PipelineQueries {
     // contract + at-scale shape in StreamingRun.tokenBudgetAdmission's
     // scaladoc; oracle = one window cumsum per source.
     Query("pl11_streaming_token_budget", (s, d) =>
-      graft.streaming.StreamingRun.tokenBudgetAdmission(s, d,
-        nFiles = pl10Files, budget = pl11Budget),
+      graft.streaming.StreamingRun.tokenBudgetAdmission(s, d),
       // pl11: admitted = the rows whose INCLUSIVE running token total per
       // source (in doc_id order — the staged drops partition ascending
       // doc_id ranges, so arrival order IS doc_id order) fits the budget;
@@ -514,8 +514,7 @@ object PipelineQueries {
     // state does (the reference snapshots both through the same epoch
     // barrier — arcon/src/stream/node/mod.rs:461-507).
     Query("w20_streaming_operator_restore", (s, d) =>
-      graft.streaming.StreamingRun.tokenBudgetAdmissionRestored(s, d,
-        nFiles = pl10Files, budget = pl11Budget),
+      graft.streaming.StreamingRun.tokenBudgetAdmissionRestored(s, d),
       // w20: the oracle is pl11's replay VERBATIM — operator-state
       // restore must be output-invisible (FMGWS recovery is exact at any
       // epoch boundary: no watermark, no event-time stats to lose).
@@ -530,8 +529,7 @@ object PipelineQueries {
     // (sum_vec_ids). The retrieval index's build job as a stream;
     // oracle = the batch argmax assignment + census.
     Query("pl13_streaming_ann_ingest", (s, d) =>
-      graft.streaming.StreamingRun.ivfCellIngest(s, d,
-        nFiles = pl10Files, nCells = 8),
+      graft.streaming.StreamingRun.ivfCellIngest(s, d),
       // pl13: batch replay of the streaming cell census — stub centroids
       // (first 8 corpus vectors, sim3's contract), argmax assignment by
       // (cosine DESC, cell) — ties keep the smallest cell, the fold's
@@ -557,24 +555,13 @@ object PipelineQueries {
     // Oracle = sim3's batch IVF replay VERBATIM: build-on-stream /
     // serve-after must equal batch retrieval end to end.
     Query("pl15_streaming_ann_serve", (s, d) =>
-      graft.streaming.StreamingRun.ivfServeFromStream(s, d,
-        nFiles = pl10Files, nCells = 8, nProbe = 2, k = 5),
+      graft.streaming.StreamingRun.ivfServeFromStream(s, d),
       // pl15: sim3's batch replay VERBATIM — serving from the
       // stream-built index must be indistinguishable from batch IVF
       // (every vector rides exactly one ingest drop; the streaming
       // fold's tie rule IS the batch argmax rule).
       sim3Sql)
   )
-
-  /** pl11's per-source token budget — interpolated into the oracle's
-    * cumsum filter and passed to the operator (one source of truth).
-    * ~60% of a source's sf0.01 total, so every source exhausts
-    * mid-protocol and the cross-batch state is load-bearing. */
-  private val pl11Budget = 800L
-
-  /** pl10's staged crawl-drop count — interpolated into the oracle's
-    * ntile and passed to the stager (one source of truth). */
-  private val pl10Files = 4
 
   /** pl11's cumsum replay — shared VERBATIM by w20 (operator-state
     * restore must be output-invisible). */
@@ -587,5 +574,5 @@ object PipelineQueries {
        |      AS cum_tokens
        |  FROM documents
        |  WHERE doc_id IS NOT NULL AND text IS NOT NULL)
-       |WHERE cum_tokens <= $pl11Budget""".stripMargin
+       |WHERE cum_tokens <= $Budget""".stripMargin
 }

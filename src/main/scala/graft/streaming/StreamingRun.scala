@@ -137,24 +137,6 @@ object StreamingRun {
     s.table(name)
   }
 
-  /** Unload every loaded state-store provider in this JVM (local mode:
-    * the only JVM). A stopped streaming query's providers stay loaded
-    * until the ~60 s maintenance cycle deactivates them, snapshotting
-    * in the background against a checkpoint the caller is about to
-    * delete — with dozens of bench/verify drains per session that
-    * churn lands inside LATER cells' measured windows (the same
-    * observation that put StateStore.stop() in Bench.streamingBench;
-    * the r21 A/B probe measured the resulting monotone per-cell drift
-    * within one session). Statestore READER providers (SPARK-45511)
-    * register in the same JVM-wide registry and are covered too. Safe
-    * between drains: the next query start reloads from its checkpoint
-    * — which is exactly the restore path the w18-w26 rows exercise. */
-  private def releaseStateStores(): Unit = {
-    scala.util.Try(
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop())
-    ()
-  }
-
   /** A drain's sink setup: output mode, format and sink options. */
   private[streaming] type Sink = DataStreamWriter[Row] => DataStreamWriter[Row]
 
@@ -193,7 +175,7 @@ object StreamingRun {
         inspect(q)
       } finally {
         if (q != null) q.stop()
-        releaseStateStores()
+        Application.releaseStateStores()
       }
     }
 
@@ -245,7 +227,7 @@ object StreamingRun {
       drive(s, plan, ckpt.toString, memorySink(mode, name))(inspect)
       read(ckpt.toString).localCheckpoint()
     } finally {
-      releaseStateStores() // the statestore READER's providers
+      Application.releaseStateStores() // the statestore READER's providers
       deleteTree(ckpt)
       scala.util.Try(s.catalog.dropTempView(name))
       ()
@@ -290,10 +272,10 @@ object StreamingRun {
     * every consumer, so the k10 "held ∪ emitted = accepted" and k11/w18
     * prefix contracts break loudly in their specs instead of silently
     * desynchronizing (advisor r17). */
-  private def watermarkedTumblingPlan(s: SparkSession, stagedDir: String,
-      delayDays: Int): DataFrame =
+  private def watermarkedTumblingPlan(s: SparkSession,
+      stagedDir: String): DataFrame =
     stagedStream(s, stagedDir)
-      .withWatermark("ts", s"$delayDays days")
+      .withWatermark("ts", s"${Protocol.DelayDays} days")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * lit(1e6)).cast("long"))
@@ -312,11 +294,9 @@ object StreamingRun {
     * final-horizon filter FLIPPED (`end > final wm`). State buffers are
     * integer micro-units, exact cross-engine. */
   def watermarkHeldState(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
+    val staged = stageEventsOrdered(s, dir)
+    drainToState(s, watermarkedTumblingPlan(s, staged), "append",
       inspect)(windowBuffers(s, None))
   }
 
@@ -342,12 +322,10 @@ object StreamingRun {
     * make "accepted ⇒ still open" airtight, and this query is that
     * invariant made driver-visible at an interior epoch. */
   def stateTimeTravel(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89, batchId: Long = 2L,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
-      inspect)(windowBuffers(s, Some(batchId)))
+    val staged = stageEventsOrdered(s, dir)
+    drainToState(s, watermarkedTumblingPlan(s, staged), "append",
+      inspect)(windowBuffers(s, Some(Protocol.TimeTravelBatch)))
   }
 
   /** The SNAPSHOT CATALOG (k12) — every committed state version of the
@@ -360,14 +338,14 @@ object StreamingRun {
     * (`/root/reference/arcon/src/manager/snapshot.rs:39-135`), so the
     * catalog listing itself is reference surface, not just its lookups.
     *
-    * Protocol: the nFiles staged drops commit state versions
-    * 0..nFiles−1, then the trailing no-data micro-batch (the final
+    * Protocol: the Files staged drops commit state versions
+    * 0..Files−1, then the trailing no-data micro-batch (the final
     * eviction pass append mode needs — its existence is load-bearing
     * for k10's "held = accepted − emitted" and is asserted here, not
-    * assumed) commits version nFiles. Version k's contents are the
+    * assumed) commits version Files. Version k's contents are the
     * k11 derivation at epoch k: accepted rows of batches ≤ k (per-batch
     * two-value late filter) in windows the eviction horizon
-    * wm(data ≤ k−1) has not passed. The oracle replays all nFiles+1
+    * wm(data ≤ k−1) has not passed. The oracle replays all Files+1
     * epochs from one ev/wm CTE pair.
     *
     * All catalog values are Longs over integer micro-unit state —
@@ -376,16 +354,16 @@ object StreamingRun {
     * (#epochs rows), localCheckpoint'd so the checkpoint dir can be
     * reaped before returning (the k9/k10 leak discipline). */
   def snapshotCatalog(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89, provider: Option[String] = None,
+      provider: Option[String] = None,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
       withStateProvider(s, provider) {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
+    val staged = stageEventsOrdered(s, dir)
+    drainToState(s, watermarkedTumblingPlan(s, staged), "append",
         inspect) { ckpt =>
       val commits = Snapshots.committedBatches(s, ckpt)
-      require(commits.nonEmpty && commits.max == nFiles.toLong,
-        s"expected versions 0..$nFiles ($nFiles data batches + the " +
+      val n = Protocol.Files
+      require(commits.nonEmpty && commits.max == n.toLong,
+        s"expected versions 0..$n ($n data batches + the " +
           s"trailing no-data eviction batch), found max " +
           s"${if (commits.isEmpty) "none" else commits.max.toString} — " +
           "the no-data batch the append-mode eviction contract relies " +
@@ -418,12 +396,11 @@ object StreamingRun {
     * k-horizon immediately evicts — possible because the late filter
     * lags eviction by one batch). */
   def stateChangeFeed(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89, provider: Option[String] = None,
+      provider: Option[String] = None,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
       withStateProvider(s, provider) {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    drainToState(s, watermarkedTumblingPlan(s, staged, delayDays), "append",
+    val staged = stageEventsOrdered(s, dir)
+    drainToState(s, watermarkedTumblingPlan(s, staged), "append",
         inspect) { ckpt =>
       Snapshots.changeFeed(s, ckpt)
         .select(col("batch_id"), col("change_type"),
@@ -609,15 +586,15 @@ object StreamingRun {
     * run complete mode on bounded input (a watermark can never pass the
     * final window) or append without a watermark; this one makes the
     * watermark itself deterministic by staging the events table as
-    * `nFiles` event-time-ordered files and driving ONE file per
+    * `Protocol.Files` event-time-ordered files and driving ONE file per
     * micro-batch (`maxFilesPerTrigger = 1` under AvailableNow):
     *
     *  - file k holds the k-th ntile of events by event_id (≈ event
     *    time; the ntile staging is test scaffolding — production files
-    *    simply arrive in order), except every `bumpMod`-th event is
+    *    simply arrive in order), except every `BumpMod`-th event is
     *    BUMPED one file later (a straggler WITHIN the allowed lateness:
     *    it aggregates into its still-open window) and every
-    *    `dropMod`-th event from the first nFiles−3 files is bumped
+    *    `DropMod`-th event from the first Files−3 files is bumped
     *    THREE files later (provably beyond the lateness bound under
     *    this geometry: its window end precedes even the lagged
     *    late-event watermark, so the exec must DROP it — and, never
@@ -648,11 +625,9 @@ object StreamingRun {
     * by the window calendar × keys behind the watermark horizon), and
     * the emitted stream is final-on-arrival. */
   def tumblingDailyWatermarked(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    drainAppend(s, watermarkedTumblingPlan(s, staged, delayDays), inspect)
+    val staged = stageEventsOrdered(s, dir)
+    drainAppend(s, watermarkedTumblingPlan(s, staged), inspect)
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value_micros"))
   }
@@ -674,11 +649,9 @@ object StreamingRun {
     * end), so the ENGINE's choice of emission batch and reported
     * watermark are both pinned — an early emission, a late one, or a
     * wrong watermark all shift a percentile and hash-fail. */
-  def emissionLatency(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89): DataFrame = {
+  def emissionLatency(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     val outDir = Scratch.dir("graft-latency-out")
     val ckpt = Scratch.dir("graft-latency-ckpt")
     // outDir holds per-batch data parquet — it must not survive ANY
@@ -687,7 +660,7 @@ object StreamingRun {
     val lat =
       try {
         var wmByBatch = Map.empty[Long, Long]
-        try drive(s, watermarkedTumblingPlan(s, staged, delayDays),
+        try drive(s, watermarkedTumblingPlan(s, staged),
             ckpt.toString, _.outputMode("append")
               .foreachBatch { (df: DataFrame, bid: Long) =>
                 df.select(col("window.end").as("wend"), col("event_type"))
@@ -761,10 +734,8 @@ object StreamingRun {
     * that elides the probe fails loudly instead of passing as a
     * silently-clean run. */
   def tumblingDailyWatermarkedFaulted(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     // the tag prefix is the QUERY NAME: the bench ledger attributes
     // injected faults by parsing it out of the exception text, which is
     // race-free against the listener bus (the bench's section marker is
@@ -772,7 +743,7 @@ object StreamingRun {
     // event is delivered)
     val tag = FaultInjection.freshTag("w24_exactly_once_task_failure")
     val out = drainAppend(s,
-      watermarkedTumblingPlan(s, staged, delayDays)
+      watermarkedTumblingPlan(s, staged)
         .filter(FaultInjection.failOnce(tag, col("n"))), inspect)
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value_micros"))
@@ -788,10 +759,10 @@ object StreamingRun {
     * protocol `/root/reference/arcon/src/stream/node/mod.rs:406-453`)
     * driven through a real kill-and-restart: [[tumblingDailyWatermarked]]'s
     * exact plan is run over the staged files with only the first
-    * `nFiles − 1` visible, stopped after they drain (run 1 commits
-    * batches 0..nFiles−2), the last file is then revealed and a NEW
+    * `Files − 1` visible, stopped after they drain (run 1 commits
+    * batches 0..Files−2), the last file is then revealed and a NEW
     * query started on the SAME checkpoint (run 2 — its first executed
-    * batch is asserted ≥ nFiles−1, so it provably resumed rather than
+    * batch is asserted ≥ Files−1, so it provably resumed rather than
     * reprocessed). The emitted union of the two runs must equal w15's
     * single-run output row for row — the oracle is w15's replay
     * VERBATIM, which makes the restore itself the thing under test:
@@ -803,12 +774,12 @@ object StreamingRun {
     *
     * Why the oracle can be verbatim (the protocol's one geometric
     * choice): run 1 is driven with no-data micro-batches DISABLED, so
-    * it stops exactly where a crash after batch nFiles−2's commit would
+    * it stops exactly where a crash after batch Files−2's commit would
     * — the checkpoint's last offset entry carries watermark
-    * wm(data ≤ nFiles−3). Spark cannot recover the in-memory event-time
+    * wm(data ≤ Files−3). Spark cannot recover the in-memory event-time
     * stats of the last pre-stop batch, so the restarted batch runs with
-    * late filter = that recovered value — which, for batch nFiles−1, is
-    * exactly the two-value contract's wm(data ≤ (nFiles−1)−2) from the
+    * late filter = that recovered value — which, for batch Files−1, is
+    * exactly the two-value contract's wm(data ≤ (Files−1)−2) from the
     * uninterrupted run. Restarting anywhere EARLIER would leave some
     * later file filtered against a one-batch-stale watermark (the
     * stats-loss shifts that file's late decisions); restarting before
@@ -819,14 +790,13 @@ object StreamingRun {
     * SET is identical — emission timing is not part of the output
     * contract. */
   def tumblingDailyWatermarkedRestored(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89, provider: Option[String] = None,
+      provider: Option[String] = None,
       inspectRestored: StreamingQuery => Unit = _ => ()): DataFrame =
       withStateProvider(s, provider) {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     runRestored(s, staged,
-      dir2 => watermarkedTumblingPlan(s, dir2, delayDays),
-      runOneFiles = nFiles - 1, totalFiles = nFiles,
+      dir2 => watermarkedTumblingPlan(s, dir2),
+      runOneFiles = Protocol.Files - 1, totalFiles = Protocol.Files,
       noDataBatchesRun1 = Some(false), inspectRestored = inspectRestored)
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value_micros"))
@@ -848,15 +818,13 @@ object StreamingRun {
     * 1 is the unmodified w18 geometry and ONLY the recovered run
     * carries the probe; the run REQUIRES the fault fired. */
   def tumblingDailyWatermarkedRestoredFaulted(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89,
       inspectRestored: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     val tag = FaultInjection.freshTag("w26_exactly_once_restore_retry")
     val calls = new java.util.concurrent.atomic.AtomicInteger()
     val out = runRestored(s, staged,
       dir2 => {
-        val plan = watermarkedTumblingPlan(s, dir2, delayDays)
+        val plan = watermarkedTumblingPlan(s, dir2)
         if (calls.incrementAndGet() >= 2) {
           // run 1 has fully drained by the time run 2's plan is built —
           // the fault must not have fired yet, or the probe leaked into
@@ -867,7 +835,7 @@ object StreamingRun {
           plan.filter(FaultInjection.failOnce(tag, col("n")))
         } else plan
       },
-      runOneFiles = nFiles - 1, totalFiles = nFiles,
+      runOneFiles = Protocol.Files - 1, totalFiles = Protocol.Files,
       noDataBatchesRun1 = Some(false), inspectRestored = inspectRestored)
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value_micros"))
@@ -934,7 +902,7 @@ object StreamingRun {
         })
       s.read.parquet(out.toString).localCheckpoint()
     } finally {
-      releaseStateStores()
+      Application.releaseStateStores()
       deleteTree(ckpt)
       deleteTree(reveal)
       deleteTree(out)
@@ -979,36 +947,24 @@ object StreamingRun {
     * of the lateness window, not history), emitted sessions final on
     * arrival. */
   def sessionWatermarked(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89, gapMinutes: Int = 30,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     sessionReadout(
-      drainAppend(s, sessionPlan(s, staged, delayDays, gapMinutes), inspect))
+      drainAppend(s, sessionPlan(s, staged), inspect))
   }
 
   /** The staged watermarked SESSION aggregation — ONE plan definition
     * shared by w16 (single run) and w22 (kill-and-restart), the
-    * watermarkedTumblingPlan discipline. The gap ≪ delay guard lives
-    * HERE, with the plan whose flat-oracle exactness argument needs it
-    * (an accepted straggler's distance to any evicted session's end is
-    * ≥ the delay; it must exceed the merge gap by a wide margin — see
-    * [[sessionWatermarked]]'s scaladoc), so both consumers fail loud
-    * identically if a caller erodes the geometry. */
-  private def sessionPlan(s: SparkSession, stagedDir: String,
-      delayDays: Int, gapMinutes: Int): DataFrame = {
-    require(gapMinutes.toLong * 60000L * 8L <= delayDays.toLong * 86400000L,
-      s"sessionWatermarked's flat oracle requires gap << delay " +
-        s"(got gap ${gapMinutes}m vs delay ${delayDays}d); see the " +
-        "scaladoc's exactness argument")
+    * watermarkedTumblingPlan discipline. Its flat oracle needs gap ≪
+    * delay, which [[Protocol]] checks. */
+  private def sessionPlan(s: SparkSession, stagedDir: String): DataFrame =
     stagedStream(s, stagedDir)
-      .withWatermark("ts", s"$delayDays days")
+      .withWatermark("ts", s"${Protocol.DelayDays} days")
       .groupBy(col("user_id"),
-        session_window(col("ts"), s"$gapMinutes minutes"))
+        session_window(col("ts"), s"${Protocol.GapMinutes} minutes"))
       .agg(count(lit(1)).as("n_events"),
         sum(floor(col("value") * lit(1e6)).cast("long"))
           .as("sum_value_micros"))
-  }
 
   /** The w16/w22 output contract — one projection for both the single
     * run and the restored run, so the "restore is output-invisible"
@@ -1021,7 +977,7 @@ object StreamingRun {
 
   /** W22: CHECKPOINT RESTORE FOR SESSION STATE — [[sessionWatermarked]]
     * through the [[runRestored]] kill-and-restart: run 1 drains the
-    * first nFiles−1 staged drops (no-data batches off), committing the
+    * first Files−1 staged drops (no-data batches off), committing the
     * OPEN sessions — gap-merged, variable-extent state rows, a
     * different recovery surface from w18's calendar buffers and w20's
     * scalar GroupState — then a NEW query on the same checkpoint
@@ -1030,20 +986,18 @@ object StreamingRun {
     * into one), and the trailing no-data batch evicts with wm(all).
     * Oracle = w16's replay VERBATIM. The w18 restart-geometry argument
     * carries over unchanged: the late filter of the restarted batch
-    * runs with the recovered watermark wm(data ≤ nFiles−3), which for
-    * batch nFiles−1 IS the two-value contract's value, so restarting
+    * runs with the recovered watermark wm(data ≤ Files−3), which for
+    * batch Files−1 IS the two-value contract's value, so restarting
     * before the LAST file is the one output-invisible restart point —
     * the argument is about the watermark protocol, not the state
     * layout, which is exactly what makes it reusable across the
     * stateful execs (`MergingSessionsExec` here). */
   def sessionWatermarkedRestored(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89, gapMinutes: Int = 30,
       inspectRestored: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     sessionReadout(runRestored(s, staged,
-      dir2 => sessionPlan(s, dir2, delayDays, gapMinutes),
-      runOneFiles = nFiles - 1, totalFiles = nFiles,
+      dir2 => sessionPlan(s, dir2),
+      runOneFiles = Protocol.Files - 1, totalFiles = Protocol.Files,
       noDataBatchesRun1 = Some(false), inspectRestored = inspectRestored))
   }
 
@@ -1099,10 +1053,8 @@ object StreamingRun {
     * protocol-bound adjudication as the wave leg's stateCommit bound
     * (r14 receipt). */
   def intervalJoinWatermarked(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89, windowHours: Int = 12,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     // each side through the DSL's withPerSideWatermark — the API
     // contract for the executed per-side tracker (the event-type filter
     // lands below the watermark node, so each side advances on its own
@@ -1110,7 +1062,7 @@ object StreamingRun {
     def side(pred: org.apache.spark.sql.Column) =
       new graft.api.Stream(stagedStream(s, staged),
         graft.api.SourceConf[org.apache.spark.sql.Row]())
-        .withPerSideWatermark("ts", s"$delayDays days", pred).ds
+        .withPerSideWatermark("ts", s"${Protocol.DelayDays} days", pred).ds
     val views = side(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id"),
         col("ts").as("view_ts"))
@@ -1121,44 +1073,102 @@ object StreamingRun {
       col("user_id") === col("p_user_id") &&
         col("purchase_ts") > col("view_ts") &&
         col("purchase_ts") <=
-          col("view_ts") + expr(s"INTERVAL $windowHours HOURS"),
+          col("view_ts") + expr(s"INTERVAL ${Protocol.WindowHours} HOURS"),
       "left_outer")
     drainAppend(s, joined, inspect)
       .select(col("view_id"), col("user_id"), col("view_ts"),
         col("purchase_id"), col("purchase_ts"))
   }
 
-  /** The staged batch index of [[tumblingDailyWatermarked]] — ONE
-    * definition shared by the staging writer, the replay spec, and
-    * (inlined as SQL) the DuckDB oracle, so the oracle can never drift
-    * from the files the stream actually reads: base file = event_id
-    * ntile, +1 for the allowed-late stragglers, +3 (from the first
-    * nFiles−3 files only, so the cap cannot soften their lateness) for
-    * the beyond-lateness set, capped at the last file. */
-  def watermarkBatchIndex(nFiles: Int, bumpMod: Int,
-      dropMod: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.expressions.Window
-    val b0 = ntile(nFiles).over(Window.orderBy(col("event_id"))) - 1
-    least(lit(nFiles - 1),
-      b0 + when(pmod(col("event_id"), lit(bumpMod)) === 0, 1).otherwise(0)
-        + when(b0 <= nFiles - 4 &&
-            pmod(col("event_id"), lit(dropMod)) === 0, 3).otherwise(0))
+  /** The staged replay protocol's geometry: the one home of every value
+    * the stagers, the staged rows and their DuckDB oracles share (the
+    * oracles in `graft.queries` interpolate these, and [[batchIndexSql]]
+    * is the SQL twin of [[watermarkBatchIndex]]).
+    *
+    *  - Staged events (w15–w26, k10–k15): `Files` drops by event_id
+    *    ntile under a `DelayDays` watermark delay; every `BumpMod`-th
+    *    event arrives one drop late, every `DropMod`-th event of the
+    *    first `Files − 3` drops three late. w16/w22 merge sessions at a
+    *    `GapMinutes` gap, w17 joins within `WindowHours`, k11 reads the
+    *    state committed by batch `TimeTravelBatch`.
+    *  - w19's dedup drops: every `NearMod`-th event re-sent one drop
+    *    later, every `FarMod`-th (not also `NearMod`-th) three later.
+    *  - Staged documents and embeddings (pl10–pl15, w20): `Drops` drops;
+    *    pl11/w20 admit `Budget` tokens per source; pl13/pl15 assign
+    *    `Cells` IVF cells, and pl15 serves the top `K` from `NProbe`
+    *    probed cells.
+    *
+    * The geometry's preconditions are checked once, here. */
+  object Protocol {
+    val Files = 5
+    val DelayDays = 2
+    val DelayMs: Long = DelayDays * 86400000L
+    val BumpMod = 97
+    val DropMod = 89
+    val GapMinutes = 30
+    val GapUs: Long = GapMinutes * 60000000L
+    val WindowHours = 12
+    val WindowUs: Long = WindowHours * 3600000000L
+    val NearMod = 7
+    val FarMod = 11
+    val TimeTravelBatch = 2L
+
+    val Drops = 4
+    // ~60% of a source's sf0.01 token total: every source exhausts its
+    // budget mid-protocol, so the cross-batch state is load-bearing
+    val Budget = 800L
+    val Cells = 8
+    val NProbe = 2
+    val K = 5
+
+    require(Files > 4,
+      "need Files > 4 so the +3 stragglers and the far retransmissions exist")
+    // sessionWatermarked's flat oracle: an accepted straggler's distance
+    // to any evicted session's end is >= the delay, which must exceed the
+    // merge gap by a wide margin (see its scaladoc)
+    require(GapMinutes * 60000L * 8L <= DelayMs,
+      s"the w16 flat oracle requires gap << delay (got gap ${GapMinutes}m " +
+        s"vs delay ${DelayDays}d)")
+
+    /** [[watermarkBatchIndex]] in SQL: the one spelling every oracle's
+      * `ev` interpolates, valid in DuckDB and Spark SQL alike. */
+    val batchIndexSql: String =
+      s"""least(${Files - 1}, ntile($Files) OVER (ORDER BY event_id) - 1
+         |      + CASE WHEN event_id % $BumpMod = 0 THEN 1 ELSE 0 END
+         |      + CASE WHEN ntile($Files) OVER (ORDER BY event_id) - 1 <= ${Files - 4}
+         |             AND event_id % $DropMod = 0 THEN 3 ELSE 0 END)""".stripMargin
   }
 
-  /** Stage the events table as `nFiles` files in batch order
+  /** The staged batch index of [[tumblingDailyWatermarked]] — ONE
+    * definition shared by the staging writer and the replay specs, with
+    * [[Protocol.batchIndexSql]] its DuckDB twin, so the oracle can never
+    * drift from the files the stream actually reads: base file = event_id
+    * ntile, +1 for the allowed-late stragglers, +3 (from the first
+    * `Files − 3` files only, so the cap cannot soften their lateness) for
+    * the beyond-lateness set, capped at the last file. */
+  def watermarkBatchIndex: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.expressions.Window
+    import Protocol.{BumpMod, DropMod, Files}
+    val b0 = ntile(Files).over(Window.orderBy(col("event_id"))) - 1
+    least(lit(Files - 1),
+      b0 + when(pmod(col("event_id"), lit(BumpMod)) === 0, 1).otherwise(0)
+        + when(b0 <= Files - 4 &&
+            pmod(col("event_id"), lit(DropMod)) === 0, 3).otherwise(0))
+  }
+
+  /** Stage the events table as `Protocol.Files` files in batch order
     * ([[watermarkBatchIndex]]) — the input of every staged watermark
     * row but w19 (w15–w26, k10–k15).
     * The ntile needs a global sort: test scaffolding only. */
-  private[streaming] def stageEventsOrdered(s: SparkSession, dir: String,
-      nFiles: Int, bumpMod: Int, dropMod: Int): String = {
-    require(nFiles > 4, "need nFiles > 4 so the +3 straggler set exists")
+  private[streaming] def stageEventsOrdered(s: SparkSession, dir: String): String = {
+    import Protocol.{BumpMod, DropMod, Files}
     // the staged projection — part of the cache key, so widening it
     // (w16 added user_id for the session drain) invalidates stale dirs
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    stage(s, "events", dir, Seq(nFiles, bumpMod, dropMod, cols.mkString(",")),
-        nFiles)(
+    stage(s, "events", dir, Seq(Files, BumpMod, DropMod, cols.mkString(",")),
+        Files)(
       graft.Tables.events(s, dir).select(cols.map(col): _*)
-        .withColumn("__b", watermarkBatchIndex(nFiles, bumpMod, dropMod)))
+        .withColumn("__b", watermarkBatchIndex))
   }
 
   /** The staged file name of batch `k` — what the file source delivers
@@ -1269,10 +1279,10 @@ object StreamingRun {
     * in event_id-ntile order (file k = k-th ntile, every row "on time"
     * in its own file), plus planted RETRANSMISSIONS of the dedup key:
     *
-    *  - every `nearMod`-th event re-sent ONE file later at ts + 1 day —
+    *  - every `NearMod`-th event re-sent ONE file later at ts + 1 day —
     *    inside the 2-day dedup horizon, so its key is still in state
     *    and the exec must DROP it;
-    *  - every `farMod`-th event (not also `nearMod`-divisible) re-sent
+    *  - every `FarMod`-th event (not also `NearMod`-divisible) re-sent
     *    THREE files later at ts + 5 days — far enough that the
     *    original's state entry (expiry = ts + delay) may have been
     *    evicted by that batch's watermark, in which case the key
@@ -1286,22 +1296,21 @@ object StreamingRun {
     * oracle replays per key: first accepted occurrence emits; a second
     * accepted occurrence emits iff the first's expiry fell behind its
     * batch's eviction watermark. */
-  private[graft] def stageDedupOrdered(s: SparkSession, dir: String,
-      nFiles: Int, nearMod: Int, farMod: Int): String = {
+  private[graft] def stageDedupOrdered(s: SparkSession, dir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    require(nFiles > 4, "need nFiles > 4 so the far retransmissions exist")
-    stage(s, "dedup", dir, Seq(nFiles, nearMod, farMod, "event_id,ts"), nFiles) {
+    import Protocol.{FarMod, Files, NearMod}
+    stage(s, "dedup", dir, Seq(Files, NearMod, FarMod, "event_id,ts"), Files) {
       val base = graft.Tables.events(s, dir)
         .select(col("event_id"), col("ts"))
-        .withColumn("b0", ntile(nFiles).over(Window.orderBy(col("event_id"))) - 1)
+        .withColumn("b0", ntile(Files).over(Window.orderBy(col("event_id"))) - 1)
       val near = base
-        .filter(col("event_id") % nearMod === 0 && col("b0") <= nFiles - 2)
+        .filter(col("event_id") % NearMod === 0 && col("b0") <= Files - 2)
         .select(col("event_id"),
           (col("ts") + expr("INTERVAL 1 DAY")).as("ts"),
           (col("b0") + 1).as("__b"))
       val far = base
-        .filter(col("event_id") % farMod === 0 &&
-          col("event_id") % nearMod =!= 0 && col("b0") <= nFiles - 4)
+        .filter(col("event_id") % FarMod === 0 &&
+          col("event_id") % NearMod =!= 0 && col("b0") <= Files - 4)
         .select(col("event_id"),
           (col("ts") + expr("INTERVAL 5 DAY")).as("ts"),
           (col("b0") + 3).as("__b"))
@@ -1338,12 +1347,10 @@ object StreamingRun {
     * first replay attempt with the aggregate rule admitted 37 phantom
     * re-emissions at sf0.001; the lagged rule matches hash-exactly. */
   def dedupWithinWatermark(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, nearMod: Int = 7,
-      farMod: Int = 11,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageDedupOrdered(s, dir, nFiles, nearMod, farMod)
+    val staged = stageDedupOrdered(s, dir)
     val plan = stagedStream(s, staged)
-      .withWatermark("ts", s"$delayDays days")
+      .withWatermark("ts", s"${Protocol.DelayDays} days")
       .dropDuplicatesWithinWatermark("event_id")
     drainAppend(s, plan, inspect)
       .select(col("event_id"), col("ts"))
@@ -1361,7 +1368,7 @@ object StreamingRun {
   private def curationArrival(k: org.apache.spark.sql.Column) =
     timestamp_seconds(lit(1577880000L) + lit(86400L) * k)
 
-  /** Stage the documents table as `nFiles` single-parquet crawl drops
+  /** Stage the documents table as `Protocol.Drops` single-parquet crawl drops
     * by doc_id ntile — file k carrying `arrival_ts` = day k noon — plus
     * ONE far-future sentinel row (day 1000) as a final file. The
     * sentinel's only job is to advance the watermark past every real
@@ -1370,17 +1377,17 @@ object StreamingRun {
     * are held in state forever and never emitted, so it is invisible in
     * the output — the day-close punctuation a production feed gets from
     * the next day's first arrival. */
-  private[graft] def stageDocsOrdered(s: SparkSession, dir: String,
-      nFiles: Int): String = {
+  private[graft] def stageDocsOrdered(s: SparkSession, dir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    stage(s, "docs", dir, Seq(nFiles, "doc_id,text,source,arrival_ts"),
-        nFiles + 1) {
+    import Protocol.Drops
+    stage(s, "docs", dir, Seq(Drops, "doc_id,text,source,arrival_ts"),
+        Drops + 1) {
       val sentinel = s.range(1).select(lit(CurationSentinelId).as("doc_id"),
         lit("sentinel close of feed").as("text"), lit("sentinel").as("source"),
-        lit(nFiles).as("__b"), curationArrival(lit(1000)).as("arrival_ts"))
+        lit(Drops).as("__b"), curationArrival(lit(1000)).as("arrival_ts"))
       graft.Tables.documents(s, dir)
         .select(col("doc_id"), col("text"), col("source"))
-        .withColumn("__b", ntile(nFiles).over(Window.orderBy(col("doc_id"))) - 1)
+        .withColumn("__b", ntile(Drops).over(Window.orderBy(col("doc_id"))) - 1)
         .withColumn("arrival_ts", curationArrival(col("__b")))
         .union(sentinel)
     }
@@ -1500,10 +1507,9 @@ object StreamingRun {
     * cross-engine. The staged sentinel row (far-future feed-close
     * punctuation, not a document) is excluded by id. */
   def tokenBudgetAdmission(s: SparkSession, dir: String,
-      nFiles: Int = 4, budget: Long = 800L,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageDocsOrdered(s, dir, nFiles)
-    drainAppend(s, tokenBudgetPlan(s, staged, budget), inspect)
+    val staged = stageDocsOrdered(s, dir)
+    drainAppend(s, tokenBudgetPlan(s, staged, Protocol.Budget), inspect)
   }
 
   /** The pl11 admission plan over an already-staged drop directory —
@@ -1564,11 +1570,11 @@ object StreamingRun {
     * `/root/reference/arcon/src/stream/node/mod.rs:461-507` snapshots
     * every registered state backend at the epoch marker). The pl11
     * token-budget admission runs over the staged crawl drops with only
-    * the first `nFiles − 1` data files visible, stops (run 1 commits
+    * the first `Drops − 1` data files visible, stops (run 1 commits
     * each source's mid-protocol running total as GroupState), then the
     * remaining files are revealed and a NEW query starts on the SAME
     * checkpoint through the durable parquet sink — asserted to resume
-    * (first executed batch ≥ nFiles − 1), so every post-restart
+    * (first executed batch ≥ Drops − 1), so every post-restart
     * admission is gated by a RECOVERED running total, not a recomputed
     * one. The emitted union of both runs must equal pl11's single-run
     * output row for row — the oracle is pl11's cumsum replay VERBATIM:
@@ -1584,9 +1590,8 @@ object StreamingRun {
     * provably gates further admissions (every source's budget exhausts
     * mid-protocol by construction). */
   def tokenBudgetAdmissionRestored(s: SparkSession, dir: String,
-      nFiles: Int = 4, budget: Long = 800L,
       inspectRestored: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageDocsOrdered(s, dir, nFiles)
+    val staged = stageDocsOrdered(s, dir)
     // run 1 drains all but the last data drop (committing each source's
     // running token total as GroupState); run 2 reveals the last drop
     // AND the sentinel file (batch parity with pl11's single run; the
@@ -1594,21 +1599,21 @@ object StreamingRun {
     // operator has no watermark, so FMGWS recovery is exact at any
     // epoch boundary (see scaladoc).
     runRestored(s, staged,
-      dir2 => tokenBudgetPlan(s, dir2, budget),
-      runOneFiles = nFiles - 1, totalFiles = nFiles + 1,
+      dir2 => tokenBudgetPlan(s, dir2, Protocol.Budget),
+      runOneFiles = Protocol.Drops - 1, totalFiles = Protocol.Drops + 1,
       noDataBatchesRun1 = None, inspectRestored = inspectRestored)
   }
 
-  /** Stage the embeddings table as `nFiles` single-parquet ingest drops
+  /** Stage the embeddings table as `Protocol.Drops` single-parquet ingest drops
     * by vec_id ntile — the pl13 ANN-ingest protocol (no sentinel: the
     * cell-census aggregation runs in complete mode, which needs no
     * watermark punctuation). */
-  private[graft] def stageEmbOrdered(s: SparkSession, dir: String,
-      nFiles: Int): String = {
+  private[graft] def stageEmbOrdered(s: SparkSession, dir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    stage(s, "emb", dir, Seq(nFiles, "vec_id,embedding"), nFiles)(
+    import Protocol.Drops
+    stage(s, "emb", dir, Seq(Drops, "vec_id,embedding"), Drops)(
       graft.Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        .withColumn("__b", ntile(nFiles).over(Window.orderBy(col("vec_id"))) - 1))
+        .withColumn("__b", ntile(Drops).over(Window.orderBy(col("vec_id"))) - 1))
   }
 
   /** PL13: STREAMING ANN-INDEX INGEST — the retrieval index's coarse
@@ -1616,7 +1621,7 @@ object StreamingRun {
     * no streaming twin: staged embedding drops arrive one file per
     * micro-batch, each vector is assigned its nearest IVF cell by a
     * pure PROJECTION against the broadcast centroid set (the sim3
-    * deterministic stub centroids — the first `nCells` corpus vectors,
+    * deterministic stub centroids — the first `Protocol.Cells` corpus vectors,
     * collected once before the stream starts; production swaps k-means
     * centroids in and nothing else changes,
     * [[graft.operators.Similarity.ivfTopK]]'s contract), and ONE
@@ -1633,10 +1638,9 @@ object StreamingRun {
     * one drop, so the complete-mode final state equals the batch
     * aggregate under any micro-batching. */
   def ivfCellIngest(s: SparkSession, dir: String,
-      nFiles: Int = 4, nCells: Int = 8,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
     drainComplete(s,
-      ivfAssignedStream(s, stageEmbOrdered(s, dir, nFiles), dir, nCells)
+      ivfAssignedStream(s, stageEmbOrdered(s, dir), dir)
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"),
           sum(col("vec_id")).as("sum_vec_ids")),
@@ -1650,17 +1654,18 @@ object StreamingRun {
     * streaming (vec_id, embedding, cell) frame; pl13 folds it into the
     * census, pl15 materializes it as the serving index. */
   private def ivfAssignedStream(s: SparkSession, staged: String,
-      dir: String, nCells: Int): DataFrame = {
+      dir: String): DataFrame = {
     import graft.functions.VectorFunctions.cosine
-    // the coarse centroids: nCells rows, driver-safe by construction
-    // (the broadcast a production assignment ships to every executor)
+    // the coarse centroids: Protocol.Cells rows, driver-safe by
+    // construction (the broadcast a production assignment ships to every
+    // executor)
     val cents = graft.Tables.embeddings(s, dir)
-      .filter(col("vec_id") < nCells && col("embedding").isNotNull)
+      .filter(col("vec_id") < Protocol.Cells && col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
       .sortBy(_._1)
-    require(cents.nonEmpty, s"no centroid vectors below id $nCells")
+    require(cents.nonEmpty, s"no centroid vectors below id ${Protocol.Cells}")
     val centArr = array(cents.map { case (cell, v) =>
       struct(lit(cell).as("cell"), typedLit(v).as("centroid"))
     }: _*)
@@ -1696,20 +1701,19 @@ object StreamingRun {
     * holds exactly because every vector rides exactly one drop and the
     * fold's tie rule IS the batch argmax rule. */
   def ivfServeFromStream(s: SparkSession, dir: String,
-      nFiles: Int = 4, nCells: Int = 8, nProbe: Int = 2, k: Int = 5,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val staged = stageEmbOrdered(s, dir, nFiles)
+    val staged = stageEmbOrdered(s, dir)
     val idx = drainAppend(s,
-      ivfAssignedStream(s, staged, dir, nCells), inspect)
+      ivfAssignedStream(s, staged, dir), inspect)
       .select(col("cell"), col("vec_id").as("neighbor_id"),
         col("embedding").as("cv"))
     val centroids = graft.Tables.embeddings(s, dir)
-      .filter(col("vec_id") < nCells && col("embedding").isNotNull)
+      .filter(col("vec_id") < Protocol.Cells && col("embedding").isNotNull)
       .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
     val queries = graft.Tables.embeddings(s, dir)
       .filter(col("vec_id") < 20)
     graft.operators.Similarity.ivfTopKServe(queries, idx, centroids,
-      "vec_id", "embedding", k = k, nProbe = nProbe)
+      "vec_id", "embedding", k = Protocol.K, nProbe = Protocol.NProbe)
   }
 
   /** Cheap content fingerprint of a source table directory: murmur over
@@ -1841,13 +1845,13 @@ object StreamingRun {
     * `ts > late_wm` predicate — the w19 boundary, two-value contract
     * SPARK-40925). Output rows: (user_id, 'elem', running_n, running_sum)
     * per element and (user_id, 'timer', fired_at_ms, 0) per firing. */
-  private[streaming] def twsTimerPlan(s: SparkSession, stagedDir: String,
-      delayDays: Int): DataFrame = {
+  private[streaming] def twsTimerPlan(s: SparkSession,
+      stagedDir: String): DataFrame = {
     import org.apache.spark.sql.Encoders
     import graft.api.{IndexState, ValueIndex}
     import graft.operators.{IndexOperator, TimerContext}
     val typed = stagedStream(s, stagedDir)
-      .withWatermark("ts", s"$delayDays days")
+      .withWatermark("ts", s"${Protocol.DelayDays} days")
       .select(col("user_id"), col("event_id"),
         col("ts")) // the watermark column rides along for the late filter
       .as[(Long, Long, java.sql.Timestamp)](Encoders.tuple(
@@ -1906,7 +1910,7 @@ object StreamingRun {
     * state API (declared ValueState + NATIVE per-key timers,
     * `TransformWithStateExec`) recovers both its state variables and
     * its timer registry from the checkpoint. The staged w15 protocol
-    * runs with only the first nFiles−1 drops visible, stops at the
+    * runs with only the first Files−1 drops visible, stops at the
     * post-commit crash point (noDataBatches off, the w18 geometry),
     * then a NEW query resumes the SAME checkpoint with the last drop
     * revealed:
@@ -1928,14 +1932,12 @@ object StreamingRun {
     * timer state registered like any backend:
     * arcon/src/stream/node/timer.rs:61-274). */
   def indexOperatorTimerRestored(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89,
       inspectRestored: StreamingQuery => Unit = _ => ()): DataFrame =
       withStateProvider(s, Some(Application.RocksDbProvider)) {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
+    val staged = stageEventsOrdered(s, dir)
     twsTimerReadout(runRestored(s, staged,
-      dir2 => twsTimerPlan(s, dir2, delayDays),
-      runOneFiles = nFiles - 1, totalFiles = nFiles,
+      dir2 => twsTimerPlan(s, dir2),
+      runOneFiles = Protocol.Files - 1, totalFiles = Protocol.Files,
       noDataBatchesRun1 = Some(false), inspectRestored = inspectRestored))
   }
 
@@ -1943,12 +1945,10 @@ object StreamingRun {
     * by the spec to pin that the restored union equals the single run
     * — the same plan, one uninterrupted drain. */
   def indexOperatorTimerSingle(s: SparkSession, dir: String,
-      nFiles: Int = 5, delayDays: Int = 2, bumpMod: Int = 97,
-      dropMod: Int = 89,
       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
       withStateProvider(s, Some(Application.RocksDbProvider)) {
-    val staged = stageEventsOrdered(s, dir, nFiles, bumpMod, dropMod)
-    twsTimerReadout(drainAppend(s, twsTimerPlan(s, staged, delayDays),
+    val staged = stageEventsOrdered(s, dir)
+    twsTimerReadout(drainAppend(s, twsTimerPlan(s, staged),
       inspect))
   }
 }

@@ -52,6 +52,12 @@ class HarnessSpec extends AnyFunSuite {
     assert(uses.map(_._2) == defs, uses.map(_._1).mkString("\n"))
   }
 
+  /** Asserts that `pattern` sits on exactly one code line, in `file`. */
+  private def onceIn(pattern: String, file: String): Unit = {
+    val uses = mainCode.filter(_._3.contains(pattern)).map(_._1)
+    assert(uses.map(_.takeWhile(_ != ':')) == List(file), uses.mkString("\n"))
+  }
+
   test("src/main names no spark.graft key; only stagedStream sets maxFilesPerTrigger; only the stager publishes") {
     onlyIn("\"spark.graft.", Nil)
     onlyIn("maxFilesPerTrigger", List("stagedStream"))
@@ -64,11 +70,6 @@ class HarnessSpec extends AnyFunSuite {
   }
 
   test("src/main gives each LSH decision one home: Manku tables, MinHash band check and family, 4/5-prefix rule") {
-    // `pattern` sits on exactly one code line, in `file`
-    def onceIn(pattern: String, file: String): Unit = {
-      val uses = mainCode.filter(_._3.contains(pattern)).map(_._1)
-      assert(uses.map(_.takeWhile(_ != ':')) == List(file), uses.mkString("\n"))
-    }
     onlyIn("posexplode(simHashBandKeys", List("mankuBands"))
     onceIn("\"bands must divide numHashes\"", "NativeTextExprs.scala")
     // the MinHash permutation, once per engine
@@ -85,6 +86,19 @@ class HarnessSpec extends AnyFunSuite {
     onlyIn("WHERE vec_id < 8 AND embedding IS NOT NULL", List("ivfCentsCte"))
     onlyIn("def defs", Nil)
     onlyIn("def oracles", Nil)
+  }
+
+  test("src/main gives the staged replay protocol one home: its geometry, one Scala and one SQL batch-index rule, one state-store release") {
+    // the geometry is spelled only as StreamingRun.Protocol's constants
+    Seq("event_id % 97", "event_id % 89", "event_id % 7", "event_id % 11",
+      "ntile(5)", "ntile(4)", "172800000", "43200000000", "1800000000",
+      "nFiles: Int =", "bumpMod").foreach(onlyIn(_, Nil))
+    // the batch-index rule: watermarkBatchIndex and its SQL twin
+    onlyIn("lit(BumpMod)", List("watermarkBatchIndex"))
+    onceIn("event_id % $BumpMod", "StreamingRun.scala")
+    // ...which every staged-events oracle reads through one shared `ev`
+    onceIn("$batchIndexSql", "EventTimeQueries.scala")
+    onlyIn("StateStore.stop(", List("releaseStateStores"))
   }
 
   test("Verify's log filter drops only the missing-checksum line") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import graft.streaming.StreamingRun.Protocol
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -134,15 +135,15 @@ class StreamingRunSpec extends SparkTestBase {
       s"TWS restore is output-visible; only-restored: " +
         s"${(restored -- single).take(3)}, only-single: ${(single -- restored).take(3)}")
     assert(restored.nonEmpty)
-    assert(run2Batches.nonEmpty && run2Batches.min >= 4, s"$run2Batches")
+    assert(run2Batches.nonEmpty && run2Batches.min >= Protocol.Files - 1, s"$run2Batches")
     // The timer registry's recovery is LOAD-BEARING: find (user, dayEnd)
     // instants armed ONLY by run-1 elements (no accepted batch-4 element
     // re-arms them), past run 1's fire horizon (batch 3's timer pass
     // uses wm(data <= 2)) but within the final one — those markers can
     // only come from timers the restarted query recovered.
-    val delayMs = 2L * 86400000L
+    val delayMs = Protocol.DelayMs
     val ev = graft.Tables.events(spark, sfDir)
-      .withColumn("b", StreamingRun.watermarkBatchIndex(5, 97, 89))
+      .withColumn("b", StreamingRun.watermarkBatchIndex)
       .select(col("user_id"), col("b"),
         expr("unix_millis(ts)").as("ts_ms"))
       .collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2)))
@@ -151,9 +152,9 @@ class StreamingRunSpec extends SparkTestBase {
       if (b < 2) Long.MinValue else maxTsUpTo(b - 2) - delayMs
     val accepted = ev.filter { case (_, b, ts) => ts > lateWm(b) }
     val wendOf = (ts: Long) => (ts / 86400000L + 1L) * 86400000L
-    val run1Horizon = maxTsUpTo(2) - delayMs
-    val finalHorizon = maxTsUpTo(4) - delayMs
-    val run2Armed = accepted.filter(_._2 == 4)
+    val run1Horizon = maxTsUpTo(Protocol.Files - 3) - delayMs
+    val finalHorizon = maxTsUpTo(Protocol.Files - 1) - delayMs
+    val run2Armed = accepted.filter(_._2 == Protocol.Files - 1)
       .map { case (u, _, ts) => (u, wendOf(ts)) }.toSet
     val recoveredOnly = accepted
       .map { case (u, _, ts) => (u, wendOf(ts)) }
@@ -181,7 +182,7 @@ class StreamingRunSpec extends SparkTestBase {
     val span = graft.Tables.events(spark, sfDir)
       .agg(max(expr("unix_millis(ts)")) - min(expr("unix_millis(ts)")))
       .collect()(0).getLong(0)
-    assert(rows("max") <= span + 2L * 86400000L, s"$rows vs span $span")
+    assert(rows("max") <= span + Protocol.DelayMs, s"$rows vs span $span")
   }
 
   test("w24 mid-batch task failure: the injected fault is retried, output equals the clean run, and the ledger books it as INJECTED") {
@@ -233,7 +234,7 @@ class StreamingRunSpec extends SparkTestBase {
       // the restart resumed (no early batch re-ran) — so the fault,
       // which exists only in run 2's plan, fired inside the RECOVERED
       // query, against recovered state and the recovered sink manifest
-      assert(run2Batches.nonEmpty && run2Batches.min >= 4, s"$run2Batches")
+      assert(run2Batches.nonEmpty && run2Batches.min >= Protocol.Files - 1, s"$run2Batches")
       val marker = classOf[InjectedTaskFault].getName
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (!tracker.injectedJson.contains(marker) &&
@@ -328,12 +329,33 @@ class StreamingRunSpec extends SparkTestBase {
       keepById(13L) == true && keepById(14L) == true)
   }
 
+  test("watermarkBatchIndex and its SQL twin Protocol.batchIndexSql give every event the same staged batch") {
+    val ev = graft.Tables.events(spark, sfDir).select(col("event_id"))
+    ev.createOrReplaceTempView("graft_batch_index_parity")
+    try {
+      def byId(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val scala = byId(ev.select(col("event_id"), StreamingRun.watermarkBatchIndex))
+      val sql = byId(spark.sql(s"SELECT event_id, ${Protocol.batchIndexSql} " +
+        "FROM graft_batch_index_parity"))
+      assert(scala.size == ev.count(), "event_id is not a key")
+      val differ = scala.keySet.filter(id => !sql.get(id).contains(scala(id)))
+      assert(sql.size == scala.size && differ.isEmpty,
+        s"${differ.size} events differ, e.g. " +
+          differ.take(3).map(id => s"$id: ${scala(id)} vs ${sql.get(id)}").mkString(", "))
+      // every staged file is reached, and both straggler sets exist
+      assert(scala.values.toSet == (0 until Protocol.Files).toSet)
+      assert(scala.exists { case (id, _) => id % Protocol.BumpMod == 0 })
+      assert(scala.exists { case (id, b) =>
+        id % Protocol.DropMod == 0 && id % Protocol.BumpMod != 0 && b >= 3 })
+    } finally spark.catalog.dropTempView("graft_batch_index_parity")
+  }
+
   test("w15 watermarked append drain: StateStoreSaveExec evicts/emits/drops exactly as the batch replay predicts") {
     import org.apache.spark.sql.expressions.Window
     var plan = ""
     var dropped = 0L
     val got = StreamingRun.tumblingDailyWatermarked(spark, sfDir,
-        nFiles = 5, delayDays = 2, bumpMod = 97, dropMod = 89,
         inspect = q => {
           plan = planOf(q)
           dropped = q.recentProgress.toSeq
@@ -349,10 +371,10 @@ class StreamingRunSpec extends SparkTestBase {
     // watermark): late-event filtering in batch k uses the watermark
     // from data through k-2, eviction/emission through k-1; a window
     // appears iff its end <= the final eviction watermark
-    val n = 5; val delayMs = 2L * 86400000L
+    val delayMs = Protocol.DelayMs
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .withColumn("b", StreamingRun.watermarkBatchIndex(n, 97, 89))
+      .withColumn("b", StreamingRun.watermarkBatchIndex)
       .withColumn("ts_ms", floor(unix_micros(col("ts")) / 1000))
       .withColumn("wend_ms",
         (floor(col("ts_ms") / 86400000L) + 1) * 86400000L)
@@ -391,8 +413,6 @@ class StreamingRunSpec extends SparkTestBase {
     var plan = ""
     var dropped = 0L
     val got = StreamingRun.sessionWatermarked(spark, sfDir,
-        nFiles = 5, delayDays = 2, bumpMod = 97, dropMod = 89,
-        gapMinutes = 30,
         inspect = q => {
           plan = planOf(q)
           dropped = q.recentProgress.toSeq
@@ -409,11 +429,11 @@ class StreamingRunSpec extends SparkTestBase {
     // session end survives the LAGGED late-event watermark; sessions =
     // gaps-and-islands over accepted rows; emitted = islands whose end
     // the final eviction watermark passed
-    val n = 5; val delayMs = 2L * 86400000L
-    val gapUs = 30L * 60L * 1000000L
+    val delayMs = Protocol.DelayMs
+    val gapUs = Protocol.GapUs
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      .withColumn("b", StreamingRun.watermarkBatchIndex(n, 97, 89))
+      .withColumn("b", StreamingRun.watermarkBatchIndex)
       .withColumn("ts_us", unix_micros(col("ts")))
     val wm = ev.groupBy(col("b"))
       .agg(max(floor(col("ts_us") / 1000)).as("mx_ms"))
@@ -463,8 +483,6 @@ class StreamingRunSpec extends SparkTestBase {
     var removed = 0L
     var traceWms = Seq.empty[String]
     val got = StreamingRun.intervalJoinWatermarked(spark, sfDir,
-        nFiles = 5, delayDays = 2, bumpMod = 97, dropMod = 89,
-        windowHours = 12,
         inspect = q => {
           plan = planOf(q)
           val ops = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
@@ -487,11 +505,11 @@ class StreamingRunSpec extends SparkTestBase {
     // accepted purchases under the interval condition; null-extended =
     // accepted views with no accepted match whose horizon (ts + 12h)
     // the FINAL eviction watermark passed
-    val n = 5; val delayMs = 2L * 86400000L
-    val winUs = 12L * 3600L * 1000000L
+    val delayMs = Protocol.DelayMs
+    val winUs = Protocol.WindowUs
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      .withColumn("b", StreamingRun.watermarkBatchIndex(n, 97, 89))
+      .withColumn("b", StreamingRun.watermarkBatchIndex)
       .withColumn("ts_us", unix_micros(col("ts")))
     val wWin = Window.orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -2)
@@ -591,10 +609,10 @@ class StreamingRunSpec extends SparkTestBase {
     // their union = the aggregate over ALL accepted rows (the w15
     // replay with no final-horizon filter): nothing accepted is lost,
     // nothing dropped sneaks into state
-    val n = 5; val delayMs = 2L * 86400000L
+    val delayMs = Protocol.DelayMs
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .withColumn("b", StreamingRun.watermarkBatchIndex(n, 97, 89))
+      .withColumn("b", StreamingRun.watermarkBatchIndex)
       .withColumn("ts_ms", floor(unix_micros(col("ts")) / 1000))
       .withColumn("wend_ms",
         (floor(col("ts_ms") / 86400000L) + 1) * 86400000L)
@@ -627,13 +645,11 @@ class StreamingRunSpec extends SparkTestBase {
     var staged = List.empty[String]
     try {
       val fp1 = StreamingRun.sourceFingerprint(dir.toString)
-      val staged1 = StreamingRun.stageEventsOrdered(spark, dir.toString,
-        nFiles = 5, bumpMod = 97, dropMod = 89)
+      val staged1 = StreamingRun.stageEventsOrdered(spark, dir.toString)
       staged ::= staged1
       // same content -> same fingerprint, same staged dir (cache hit)
       assert(StreamingRun.sourceFingerprint(dir.toString) == fp1)
-      assert(StreamingRun.stageEventsOrdered(spark, dir.toString,
-        5, 97, 89) == staged1)
+      assert(StreamingRun.stageEventsOrdered(spark, dir.toString) == staged1)
       // "regenerate" the table in place (mtime moves, as any writer's
       // would) -> fingerprint changes -> a DIFFERENT staged dir is built,
       // so a stream can never replay stale files against a fresh oracle
@@ -642,8 +658,7 @@ class StreamingRunSpec extends SparkTestBase {
           Files.getLastModifiedTime(ev).toMillis + 60000L))
       val fp2 = StreamingRun.sourceFingerprint(dir.toString)
       assert(fp2 != fp1)
-      val staged2 = StreamingRun.stageEventsOrdered(spark, dir.toString,
-        5, 97, 89)
+      val staged2 = StreamingRun.stageEventsOrdered(spark, dir.toString)
       staged ::= staged2
       assert(staged2 != staged1,
         s"stale staged dir adopted after source regeneration: $staged1")
@@ -665,7 +680,7 @@ class StreamingRunSpec extends SparkTestBase {
     val dirs = List(copy(), copy())
     val Seq(a, b) = dirs.map(_.toString)
     def stage(dir: String): Path =
-      Paths.get(StreamingRun.stageEventsOrdered(spark, dir, 5, 97, 89))
+      Paths.get(StreamingRun.stageEventsOrdered(spark, dir))
     var staged = List.empty[Path]
     try {
       val a1 = stage(a)
@@ -705,7 +720,7 @@ class StreamingRunSpec extends SparkTestBase {
         s"only-single: ${(single -- restored).take(3)}")
     assert(restored.nonEmpty)
     // the second query provably RESUMED (no batch re-ran)...
-    assert(run2Batches.nonEmpty && run2Batches.min >= 4, s"$run2Batches")
+    assert(run2Batches.nonEmpty && run2Batches.min >= Protocol.Files - 1, s"$run2Batches")
     // ...and emission is split across the runs: run 2 evicted (emitted)
     // from RECOVERED state, but not everything (run 1 emitted its prefix)
     assert(run2Evicted > 0 && run2Evicted < restored.size,
@@ -715,12 +730,12 @@ class StreamingRunSpec extends SparkTestBase {
 
   test("k11 time travel: the state at batch 2 equals the prefix replay (accepted rows, eviction horizon of batch 2)") {
     import org.apache.spark.sql.expressions.Window
-    val got = StreamingRun.stateTimeTravel(spark, sfDir, batchId = 2L)
+    val got = StreamingRun.stateTimeTravel(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    val n = 5; val delayMs = 2L * 86400000L
+    val delayMs = Protocol.DelayMs
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .withColumn("b", StreamingRun.watermarkBatchIndex(n, 97, 89))
+      .withColumn("b", StreamingRun.watermarkBatchIndex)
       .withColumn("ts_ms", floor(unix_micros(col("ts")) / 1000))
       .withColumn("wend_ms",
         (floor(col("ts_ms") / 86400000L) + 1) * 86400000L)
@@ -729,10 +744,10 @@ class StreamingRunSpec extends SparkTestBase {
         max(col("mx")).over(Window.orderBy(col("b"))
           .rowsBetween(Window.unboundedPreceding, -2)) - delayMs)
       .select(col("b"), col("late_wm_ms"))
-    val evictMs = ev.filter(col("b") <= 1)
+    val evictMs = ev.filter(col("b") <= Protocol.TimeTravelBatch - 1)
       .agg(max(col("ts_ms"))).collect()(0).getLong(0) - delayMs
     val want = ev.join(wm, Seq("b"))
-      .filter(col("b") <= 2)
+      .filter(col("b") <= Protocol.TimeTravelBatch)
       .filter(col("late_wm_ms").isNull || col("wend_ms") > col("late_wm_ms"))
       .filter(col("wend_ms") > evictMs)
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -790,7 +805,7 @@ class StreamingRunSpec extends SparkTestBase {
 
   test("pl10 executed plan: two chained stateful aggregations, prior index read from the materialized checkpoint") {
     var plan = ""
-    val staged = StreamingRun.stageDocsOrdered(spark, sfDir, 4)
+    val staged = StreamingRun.stageDocsOrdered(spark, sfDir)
     StreamingRun.curationPipeline(spark, staged,
       prior = graft.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text")),
@@ -814,26 +829,27 @@ class StreamingRunSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     // 5 data epochs + the trailing no-data eviction epoch, no gaps
-    assert(cat.keySet == (0L to 5L).toSet, cat.keySet.toString)
+    assert(cat.keySet == (0L to Protocol.Files).toSet, cat.keySet.toString)
     def summarize(df: org.apache.spark.sql.DataFrame) = {
       val rows = df.collect()
       (rows.length.toLong,
         rows.map(_.getLong(2)).sum, rows.map(_.getLong(3)).sum)
     }
     // epoch 2 = k11's time-travel read, epoch 5 = k10's final held state
-    assert(cat(2L) == summarize(
-      StreamingRun.stateTimeTravel(spark, sfDir, batchId = 2L)),
-      s"epoch 2 ${cat(2L)} != k11 aggregate")
-    assert(cat(5L) == summarize(
+    val (k11, last) = (Protocol.TimeTravelBatch, Protocol.Files.toLong)
+    assert(cat(k11) == summarize(
+      StreamingRun.stateTimeTravel(spark, sfDir)),
+      s"epoch $k11 ${cat(k11)} != k11 aggregate")
+    assert(cat(last) == summarize(
       StreamingRun.watermarkHeldState(spark, sfDir)),
-      s"epoch 5 ${cat(5L)} != k10 aggregate")
+      s"epoch $last ${cat(last)} != k10 aggregate")
     // epoch 0 accepts everything in drop 0 and evicts nothing
     val b0 = graft.Tables.events(spark, sfDir)
-      .withColumn("b", StreamingRun.watermarkBatchIndex(5, 97, 89))
+      .withColumn("b", StreamingRun.watermarkBatchIndex)
       .filter(col("b") === 0).count()
     assert(cat(0L)._2 == b0, s"epoch 0 rows ${cat(0L)._2} != drop 0 $b0")
     // history is not the head: at least one interior epoch differs
-    assert((0L to 4L).exists(k => cat(k) != cat(5L)))
+    assert((0L until last).exists(k => cat(k) != cat(last)))
   }
 
   test("k13 change feed: folding the changelog reconstructs every snapshot (epochs 2 and 5 tie to k11 and k10 buffer-for-buffer)") {
@@ -861,14 +877,15 @@ class StreamingRunSpec extends SparkTestBase {
       }
       m.map { case ((w, e), (n, sm)) => Seq[Any](w, e, n, sm) }.toSet
     }
-    val at2 = StreamingRun.stateTimeTravel(spark, sfDir, batchId = 2L)
+    val k11 = Protocol.TimeTravelBatch
+    val atK11 = StreamingRun.stateTimeTravel(spark, sfDir)
       .collect().map(_.toSeq.toSeq.asInstanceOf[Seq[Any]]).toSet
-    assert(foldThrough(2L) == at2,
-      s"fold(feed <= 2) != snapshot@2; diff: ${(foldThrough(2L) -- at2).take(3)}")
+    assert(foldThrough(k11) == atK11,
+      s"fold(feed <= $k11) != snapshot@$k11; diff: ${(foldThrough(k11) -- atK11).take(3)}")
     val at5 = StreamingRun.watermarkHeldState(spark, sfDir)
       .collect().map(_.toSeq.toSeq.asInstanceOf[Seq[Any]]).toSet
-    assert(foldThrough(5L) == at5,
-      s"fold(feed) != final snapshot; diff: ${(foldThrough(5L) -- at5).take(3)}")
+    assert(foldThrough(Protocol.Files) == at5,
+      s"fold(feed) != final snapshot; diff: ${(foldThrough(Protocol.Files) -- at5).take(3)}")
     // eviction is visible in the feed itself, not just its folds
     assert(feed.exists(_._2 == "delete"))
   }
@@ -888,7 +905,7 @@ class StreamingRunSpec extends SparkTestBase {
         sum(graft.functions.TextFunctions.tokenCount(col("text")))
           .over(Window.partitionBy(col("source")).orderBy(col("doc_id")))
           .as("cum_tokens"))
-    val want = scored.filter(col("cum_tokens") <= 800L)
+    val want = scored.filter(col("cum_tokens") <= Protocol.Budget)
       .collect().map(_.toSeq).toSet
     assert(got == want,
       s"only-got: ${(got -- want).take(3)}, only-want: ${(want -- got).take(3)}")
@@ -896,16 +913,16 @@ class StreamingRunSpec extends SparkTestBase {
     // the budget BINDS: every source also has rejected documents
     val perSource = scored.groupBy(col("source"))
       .agg(count(lit(1)).as("all_docs"),
-        sum((col("cum_tokens") <= 800L).cast("long")).as("admitted"))
+        sum((col("cum_tokens") <= Protocol.Budget).cast("long")).as("admitted"))
       .collect()
     assert(perSource.forall(r => r.getLong(2) < r.getLong(1)),
       "some source admitted every document — the budget never bound")
     // cross-batch state: some source's admissions span >= 2 staged
-    // drops (ntile(4) over doc_id = the stageDocsOrdered assignment)
+    // drops (ntile(Drops) over doc_id = the stageDocsOrdered assignment)
     val admittedDrops = scored
       .withColumn("drop",
-        ntile(4).over(Window.orderBy(col("doc_id"))) - 1)
-      .filter(col("cum_tokens") <= 800L)
+        ntile(Protocol.Drops).over(Window.orderBy(col("doc_id"))) - 1)
+      .filter(col("cum_tokens") <= Protocol.Budget)
       .groupBy(col("source"))
       .agg(countDistinct(col("drop")).as("n_drops"))
       .collect().map(_.getLong(1))
@@ -929,7 +946,7 @@ class StreamingRunSpec extends SparkTestBase {
       s"session restore is output-visible; only-restored: " +
         s"${(restored -- single).take(3)}, only-single: ${(single -- restored).take(3)}")
     assert(restored.nonEmpty)
-    assert(run2Batches.nonEmpty && run2Batches.min >= 4, s"$run2Batches")
+    assert(run2Batches.nonEmpty && run2Batches.min >= Protocol.Files - 1, s"$run2Batches")
     // emission split across the runs: run 2 evicted (emitted) sessions
     // from RECOVERED merge state, but run 1 emitted its prefix
     assert(run2Evicted > 0 && run2Evicted < restored.size,
@@ -952,7 +969,7 @@ class StreamingRunSpec extends SparkTestBase {
       !plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("BroadcastHashJoin"), plan)
     val cents = graft.Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") < 8).select(col("vec_id").as("cell"),
+      .filter(col("vec_id") < Protocol.Cells).select(col("vec_id").as("cell"),
         col("embedding").as("centroid"))
     val want = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
@@ -983,7 +1000,7 @@ class StreamingRunSpec extends SparkTestBase {
     val e = graft.Tables.embeddings(spark, sfDir)
     val want = graft.operators.Similarity.ivfTopK(
         e.filter(col("vec_id") < 20), e, "vec_id", "embedding",
-        k = 5, nCells = 8, nProbe = 2)
+        k = Protocol.K, nCells = Protocol.Cells, nProbe = Protocol.NProbe)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
     assert(got == want,
       s"serve-from-stream diverges from batch IVF; only-served: " +
@@ -1005,7 +1022,7 @@ class StreamingRunSpec extends SparkTestBase {
         s"${(restored -- single).take(3)}, only-single: ${(single -- restored).take(3)}")
     assert(restored.nonEmpty)
     // the second query provably RESUMED (no batch re-ran)
-    assert(run2Batches.nonEmpty && run2Batches.min >= 3, s"$run2Batches")
+    assert(run2Batches.nonEmpty && run2Batches.min >= Protocol.Drops - 1, s"$run2Batches")
     // recovered state is LOAD-BEARING: some source's last-drop slice
     // would fit the budget on its own, so a restore that lost the
     // GroupState running totals would have re-admitted those docs —
@@ -1016,13 +1033,13 @@ class StreamingRunSpec extends SparkTestBase {
         graft.functions.TextFunctions.tokenCount(col("text")).as("n_tokens"))
       .withColumn("cum", sum(col("n_tokens"))
         .over(Window.partitionBy(col("source")).orderBy(col("doc_id"))))
-      .withColumn("drop", ntile(4).over(Window.orderBy(col("doc_id"))) - 1)
-    val lastDrop = scored.filter(col("drop") === 3)
+      .withColumn("drop", ntile(Protocol.Drops).over(Window.orderBy(col("doc_id"))) - 1)
+    val lastDrop = scored.filter(col("drop") === Protocol.Drops - 1)
       .groupBy(col("source"))
       .agg(sum(col("n_tokens")).as("standalone"),
-        sum((col("cum") <= 800L).cast("long")).as("admitted"))
+        sum((col("cum") <= Protocol.Budget).cast("long")).as("admitted"))
       .collect()
-    assert(lastDrop.exists(r => r.getLong(1) <= 800L && r.getLong(2) == 0L),
+    assert(lastDrop.exists(r => r.getLong(1) <= Protocol.Budget && r.getLong(2) == 0L),
       "no source had a budget-fitting last-drop slice that the " +
         "recovered totals rejected — a lossy restore would be invisible " +
         s"here: ${lastDrop.mkString(",")}")
@@ -1101,16 +1118,16 @@ class StreamingRunSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-stale-root")
     Files.copy(Paths.get(sfDir, "events.parquet"), dir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-    val staged = Paths.get(StreamingRun.stageEventsOrdered(spark, dir.toString, 5, 97, 89))
+    val staged = Paths.get(StreamingRun.stageEventsOrdered(spark, dir.toString))
     def layout = scala.util.Using.resource(Files.list(staged))(
       _.iterator().asScala.map(_.getFileName.toString).toSet)
     val complete = layout
     try {
-      assert(complete == (0 until 5).map(StreamingRun.stagedFile).toSet + "_STAGED")
+      assert(complete == (0 until Protocol.Files).map(StreamingRun.stagedFile).toSet + "_STAGED")
       // a builder that crashed mid-publish leaves exactly this: no marker
       Files.delete(staged.resolve("_STAGED"))
       Files.delete(staged.resolve(StreamingRun.stagedFile(2)))
-      assert(StreamingRun.stageEventsOrdered(spark, dir.toString, 5, 97, 89) ==
+      assert(StreamingRun.stageEventsOrdered(spark, dir.toString) ==
         staged.toString)
       assert(layout == complete)
       assert(scala.util.Using.resource(Files.list(staged.getParent))(_.iterator()
@@ -1146,14 +1163,14 @@ class StreamingRunSpec extends SparkTestBase {
     val ev = graft.Tables.events(spark, sfDir)
 
     val evCols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
-    sameRows(read(StreamingRun.stageEventsOrdered(spark, sfDir, 5, 97, 89), 5)
+    sameRows(read(StreamingRun.stageEventsOrdered(spark, sfDir), Protocol.Files)
       .select(evCols: _*), ev.select(evCols: _*), "events")
 
-    sameRows(read(StreamingRun.stageEmbOrdered(spark, sfDir, 4), 4),
+    sameRows(read(StreamingRun.stageEmbOrdered(spark, sfDir), Protocol.Drops),
       graft.Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding")),
       "emb")
 
-    val docs = read(StreamingRun.stageDocsOrdered(spark, sfDir, 4), 5)
+    val docs = read(StreamingRun.stageDocsOrdered(spark, sfDir), Protocol.Drops + 1)
     val sentinel = docs.filter(col("doc_id") === StreamingRun.CurationSentinelId)
     assert(sentinel.count() == 1)
     sameRows(docs.filter(col("doc_id") =!= StreamingRun.CurationSentinelId)
@@ -1163,13 +1180,14 @@ class StreamingRunSpec extends SparkTestBase {
 
     // dedup: every event once at its own ts, plus +1 day copies of the
     // near set (id % 7, not from the last file) and +5 day copies of the
-    // far set (id % 11 but not % 7, from the first nFiles − 3 files)
-    val dd = read(StreamingRun.stageDedupOrdered(spark, sfDir, 5, 7, 11), 5)
+    // far set (id % 11 but not % 7, from the first Files − 3 files)
+    val dd = read(StreamingRun.stageDedupOrdered(spark, sfDir), Protocol.Files)
     val b0 = ev.select(col("event_id"), col("ts"),
-      (ntile(5).over(Window.orderBy(col("event_id"))) - 1).as("b0"))
-    val near = b0.filter(col("event_id") % 7 === 0 && col("b0") <= 3)
-    val far = b0.filter(col("event_id") % 11 === 0 && col("event_id") % 7 =!= 0 &&
-      col("b0") <= 1)
+      (ntile(Protocol.Files).over(Window.orderBy(col("event_id"))) - 1).as("b0"))
+    import Protocol.{FarMod, NearMod}
+    val near = b0.filter(col("event_id") % NearMod === 0 && col("b0") <= Protocol.Files - 2)
+    val far = b0.filter(col("event_id") % FarMod === 0 && col("event_id") % NearMod =!= 0 &&
+      col("b0") <= Protocol.Files - 4)
     assert(near.count() > 0 && far.count() > 0)
     sameRows(dd, ev.select(col("event_id"), col("ts"))
       .union(near.select(col("event_id"), col("ts") + expr("INTERVAL 1 DAY")))
